@@ -1,57 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE deliberately unconfigured: adaptive execution + skew-join split
-    // run at Spark's default-on posture (see Verify.scala for the full
-    // note; PlanSpec pins it).
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Broadcast blocks (dim tables, packed edge sets, Bloom bit
-      // arrays, ANN matrices) are freed ONLY by the ContextCleaner,
-      // which waits for a GC to clear weak references — and a 24g
-      // ParallelGC heap may not old-gen-collect for the whole run, so
-      // ~350 queries' broadcasts pile up in storage memory (round-12:
-      // g5 crept 14 -> 44 s across full runs while staying ~14 s
-      // isolated). Spark's own remedy is this periodic System.gc()
-      // on the cleaner thread; the default 30min never fires inside a
-      // ~13min run.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // Whole-stage-codegen compile cache (STATIC conf, default 100
-      // entries): one pass over the 383-row board generates ~4-5k
-      // distinct codegen units, so at the default the cache is fully
-      // thrashed between a query's pass-1 and pass-2 visits and EVERY
-      // unit Janino-recompiles in both passes (round-18 opt
-      // measurement, CodegenCacheProbe cross-JVM A/B over 49 rows:
-      // pass-2 recompiles 645 units under the default vs 31-33 under
-      // 8192, ~23 ms each, pass-2 sum 20.4/26.4 s vs 25.9/27.0 s).
-      // 8192 covers the whole board's units; the cached GeneratedClass
-      // objects are driver-side compiled code, NOT data or results —
-      // every execution still scans the parquet inputs. A long-running
-      // production session re-running structurally similar queries
-      // wants the same posture at any scale.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Optional dev filter: `runMain graft.Bench d7_jaccard_dfcap d8_...`
     // times only the named queries (driver invokes with no args → all).
     val only = args.toSet
     val queries = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-    // Semantics-proof rows (real streaming micro-batch runs) report
-    // trigger/checkpoint latency, not engine throughput. They used to
-    // be timed once (pass 2 only); since round 12 both executions are
-    // recorded (see the pass-1 note below) — Registry.timeOnceNames
-    // remains the documentation of which rows are proofs.
     // Accumulated state the emitter reads — kept up to date as passes
     // complete so a late crash still reports everything measured so far.
     val results = new java.util.concurrent.ConcurrentHashMap[String, Double]()
@@ -100,82 +56,38 @@ object Bench {
     }
     val hook = new Thread(() => emit(), "bench-emit-hook")
     Runtime.getRuntime.addShutdownHook(hook)
-    // Leftover streaming state between passes is the prime suspect for
-    // the round-7 thread-pool shutdown cascade: stop anything a proof
-    // row left running and drop its memory-sink temp views.
-    def drainStreaming(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      try spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
-    }
     try {
       // Two executions per query, BOTH timed, min recorded (since
-      // round 12 — see the pass-1 note below) — down from the original
-      // warmup+2 passes, which at 256 registry queries cost ~45 min
-      // wall (the round-7 driver bench hit a 33-min thread-pool death
-      // mid-run). Pass 1 doubles as the warmup (its number carries
-      // one-time codegen compile / stream-setup cost); the min almost
-      // always lands on the warm pass 2, matching the old warm-min
-      // semantics at 2/3 the wall, and the second sample protects
-      // every row — including the streaming semantics proofs — from a
-      // one-off ambient trough.
-      //
-      // clearCache after every query: Dataset.persist registers the plan
-      // with the session CacheManager, which holds a strong reference
-      // until unpersist()/clearCache() — the ContextCleaner never
-      // reclaims CacheManager entries. Without this the per-query
-      // persists accumulate for the JVM lifetime of the run, evicting hot
-      // data and spilling (measured round 4: d8 2.5→10 s, m1 3→10 s from
-      // cache pressure alone). The clear runs OUTSIDE the timed region.
+      // round 12) — down from the original warmup+2 passes, which at
+      // 256 registry queries cost ~45 min wall (the round-7 full
+      // bench hit a 33-min thread-pool death mid-run). Pass 1 doubles
+      // as the warmup (its number carries one-time codegen compile /
+      // stream-setup cost); the min almost always lands on the warm
+      // pass 2, and the second sample protects every row — including
+      // the streaming semantics proofs, once timed in pass 2 only —
+      // from a one-off ambient trough (the round-11 full bench ran
+      // during a disk-throughput trough and every single-sample
+      // streaming proof inflated 10-40×).
       //
       // Failures must be VISIBLE, not silently timed: a broken query's
       // time-to-exception must neither appear as its per-query number nor
       // contribute to the headline total — only successful passes count.
-      def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-          timed: Boolean): Unit = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => if (timed) failed.add(name); false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // clearCache only releases SQL-cached plans. localCheckpoint()
-        // — which the iterative/graph/dedup queries call per round —
-        // persists RDD blocks (MEMORY_AND_DISK) that are otherwise
-        // freed only when the GC collects the RDD object and the
-        // ContextCleaner notices: on a 24g heap old-gen collections
-        // are rare, so hundreds of dead checkpoint RDDs pile up in
-        // unified memory, squeezing execution memory and forcing later
-        // queries to spill (round-12 full-run measurement: the same
-        // streaming rows ran 3× slower after ~300 queries than in a
-        // 16-query session; block-manager logs showed rdd ids past
-        // 16k still resident). Unpersist them deterministically —
-        // nothing outside the finished query references them.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        if (ok && timed) {
-          val prev = Option(results.get(name))
-          results.put(name, prev.fold(dt)(math.min(_, dt)))
+      // Runner's release runs OUTSIDE the timed region.
+      for (_ <- 1 to 2) {
+        queries.foreach { case (name, fn) =>
+          Runner.run(spark) {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          } match {
+            case Right(dt) => results.merge(name, dt, math.min(_, _))
+            case Left(why) =>
+              failed.add(name)
+              System.err.println(s"[bench] $name failed: $why")
+          }
         }
+        Runner.drainStreams(spark)
       }
-      // pass 1: timed for everyone since round 12 — semantics-proof
-      // (timeOnce) rows were previously warm-run UNTIMED here, which
-      // left their single recorded number exposed to whatever ambient
-      // slowness hits pass 2 (the round-11 driver bench ran during a
-      // disk-throughput trough and every streaming proof inflated
-      // 10-40× with no second sample to save it). They execute in this
-      // pass either way, so recording the time costs zero extra wall;
-      // the min still lands on the warm pass-2 number in normal runs,
-      // preserving the historical warm-latency semantics.
-      queries.foreach { case (name, fn) =>
-        runOne(name, fn, timed = true)
-      }
-      drainStreaming()
-      // pass 2: timed for everyone; min applies to throughput rows
-      queries.foreach { case (name, fn) => runOne(name, fn, timed = true) }
-      drainStreaming()
     } finally {
       emit()
     }

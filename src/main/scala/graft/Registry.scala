@@ -13,14 +13,7 @@ final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String = "",
-    // Semantics-proof rows (the real-micro-batch streaming equivalence
-    // queries) measure Structured Streaming LATENCY — checkpoint commits,
-    // watermark eviction rounds, sink setup — not engine throughput, and
-    // their timings are trigger-bound, not data-bound. Bench times them
-    // ONCE instead of warmup+2 passes (~80 s of the round-7 bench was
-    // re-running these proofs), keeping the correctness surface intact.
-    timeOnce: Boolean = false)
+    doc: String = "")
 
 object Registry {
   /** All registered queries, in stable declaration order. */
@@ -49,7 +42,4 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     ListMap(all.flatMap(q => q.oracle.map(q.name -> _)): _*)
-
-  /** Names of semantics-proof rows Bench times once (no warmup/re-pass). */
-  def timeOnceNames: Set[String] = all.filter(_.timeOnce).map(_.name).toSet
 }

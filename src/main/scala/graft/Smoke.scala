@@ -1,22 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Mirrors the driver's t1 smoke: run SparkEntry.entry on sf0.001 and
   * require rows > 0. Dev aid; the driver runs its own copy of this. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, false)

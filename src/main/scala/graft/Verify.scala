@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,30 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional query-name filter for dev iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE posture: deliberately NOT configured — adaptive execution and
-    // its skew-join split stay at Spark's defaults (on) here and in every
-    // other session builder in this repo, so runtime re-planning (skew
-    // split, partition coalescing, join-strategy flips) is always armed.
-    // PlanSpec asserts this and proves the skew split engages;
-    // ScaleProbe's `skew` mode measures what it buys.
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Periodic cleaner GC so accumulated broadcast blocks release
-      // mid-run (see the note in Bench.scala).
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // Codegen compile cache sized for the 383-row board (see the
-      // measured note in Bench.scala; compiled-code cache, not data).
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Loud failure manifest: a crashed query writes no parquet, and the
     // driver then emits no correctness row at all — 56 silently-missing
@@ -40,23 +16,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed(name) = s"${e.getClass.getSimpleName}: " +
-          Option(e.getMessage).getOrElse("").linesIterator
-            .take(3).mkString(" | ").take(500)
+        Runner.run(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")).left.foreach { why =>
+          System.err.println(s"[verify] $name failed: $why")
+          failed(name) = why
+        }
       }
-      // Release per-query persists: the CacheManager holds them until an
-      // explicit clear, and 93 queries' caches would otherwise accumulate.
-      spark.catalog.clearCache()
-      // ... and the localCheckpoint RDD blocks, which clearCache does
-      // not touch and the GC-driven ContextCleaner frees too late on a
-      // big heap (see the identical note in Bench.scala).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

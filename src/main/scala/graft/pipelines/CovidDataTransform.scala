@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.GraftSession
 import graft.ops.Sequential
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -49,6 +50,19 @@ object CovidDataTransform {
         dateCols.map(c => col(colToYmd(c).toString)),
         "date", measure)
       .withColumn("date", col("date").cast("int"))
+  }
+
+  /** Stages 1+4-5: melt the JHU wide tables (in `measures` order) and
+    * join them on (province_state, country_region, date). A
+    * country-level row's blank province_state reads as null, and the
+    * reference's pandas merge matches NaN keys, so the joins are
+    * null-safe (`<=>`); a plain equi-join drops every such series. */
+  private[graft] def joinJhu(wide: Seq[DataFrame]): DataFrame = {
+    val keys = Seq("province_state", "country_region", "date")
+    measures.zip(wide).map { case (m, df) => meltJhu(df, m) }.reduce { (l, r) =>
+      l.join(r, keys.map(k => l(k) <=> r(k)).reduce(_ && _))
+        .select(l.columns.map(l(_)) ++ r.columns.diff(keys).map(r(_)): _*)
+    }
   }
 
   /** rename_location (covid_data_transform.py:14-21): two sequential
@@ -103,14 +117,8 @@ object CovidDataTransform {
     val exclude = Seq("latitude", "longitude", "location_geom")
     val lookup = csv("data/covid_data/location_match.csv")
 
-    // stages 1+4-5: JHU wide scans -> drop geo -> melt -> 3-key joins
-    val Seq(conf, reco, death) =
-      Seq("confirmed", "recovered", "death").map { m =>
-        meltJhu(csv(s"data/covid_data/jhu_${m}_covid.csv")
-          .drop(exclude: _*), m)
-      }
-    val keys = Seq("province_state", "country_region", "date")
-    var interCovid = conf.join(reco, keys, "inner").join(death, keys, "inner")
+    var interCovid = joinJhu(measures.map(m =>
+        csv(s"data/covid_data/jhu_${m}_covid.csv").drop(exclude: _*)))
       .withColumn("country_region",
         when(col("country_region") === "US", "United States")
           .otherwise(col("country_region")))
@@ -196,17 +204,7 @@ object CovidDataTransform {
   /** Runnable: writes the dataset_full parquet + prints summary. */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_pipelines/dataset_full")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val ds = run(spark)
     ds.write.mode("overwrite").parquet(out)
     val locs = ds.select("location_name").distinct().count()

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.GraftSession
 import graft.ops.MixedLm
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -271,17 +272,7 @@ object CovidSimulator {
 
   /** Runnable: transform → features → coefficients → simulation. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // integration: the transform's dataset_full builds and is non-empty
     val dsf = CovidDataTransform.run(spark)
     println(s"PIPELINE transform rows=${dsf.count()}")

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -207,17 +208,7 @@ object WeatherForecast {
   /** Runnable: drives the protocol with the committed forecast series
     * as input (the raw GHCN observations are not committed). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val src = spark.read.option("header", true).option("inferSchema", true)
       .csv("/root/reference/scripts/output/weather_output/future_pred.csv")
       .select(concat(col("country"), lit(" : "), col("state")).as("series"),

@@ -1573,21 +1573,6 @@ object EventQueries {
             FROM seq WHERE t3 IS NOT NULL
             GROUP BY 1 ORDER BY n DESC, trigram LIMIT 15"""))
 
-  /** The rows that execute REAL Structured Streaming micro-batches
-    * (memory/foreachBatch sinks, checkpoints, watermark eviction). Their
-    * wall-time is streaming-machinery latency, not engine throughput, so
-    * Bench times them once (see [[graft.Q.timeOnce]]).
-    */
-  private val streamingProofs = Set(
-    "e10_stream_batch_equiv", "e11_stream_session_equiv",
-    "e14_stream_tws_equiv", "e15_foreachbatch_sink_equiv",
-    "e16_stream_checkpoint_resume", "e17_watermark_late_drop",
-    "e18_stream_fmgws_equiv", "e19_stream_stream_join",
-    "e20_stream_dedup_equiv", "e21_stream_static_enrich",
-    "e23_stream_rate_limit", "e24_stream_stream_left_outer",
-    "e37_file_sink_txn_log", "e38_append_window_file_sink",
-    "e39_stream_quantile_sketch", "e40_stream_bloom_dedup")
-
   /** E34 (X213, beyond the reference): TIME-TO-CONVERT distribution —
     * per user, latency from the FIRST view to the first purchase
     * STRICTLY after it, summarized as exact-integer order statistics.
@@ -2172,5 +2157,4 @@ object EventQueries {
     Seq(e1, e2, e3, e4, e5, e6, e7, e8, e9, e10, e11, e12, e13, e14, e15,
       e16, e17, e18, e19, e20, e21, e22, e23, e24, e25, e26, e27, e28,
       e29, e30, e31, e32, e33, e34, e35, e36, e37, e38, e39, e40)
-      .map(q => if (streamingProofs(q.name)) q.copy(timeOnce = true) else q)
 }

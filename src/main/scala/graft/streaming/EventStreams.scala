@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -308,18 +309,7 @@ object EventStreams {
     */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // file-source stream needs an explicit schema; reuse the batch
     // reader's (with the same nanos->micros ts normalization)
     val batch = graft.ops.Tables.load(spark, sfDir, "events")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.AsOf
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,14 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("asof-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 

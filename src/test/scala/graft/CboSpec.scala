@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,16 +14,10 @@ class CboSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
+  // a private warehouse: the spec creates and ANALYZEs catalog tables
+  private lazy val spark = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_cbo_wh").toString)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("cbo-spec")
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -23,14 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DedupTopkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("dedup-topk-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 

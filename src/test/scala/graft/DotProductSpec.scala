@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DotProductSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("dotproduct-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(2)
 
   test("graft_dot matches the interpreted HOF fold bit-for-bit") {
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Unit pins for the graph kernels that aren't covered by a closed-form
@@ -10,13 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class GraphOpsSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession(2)
 
   /** Count triangles of an undirected edge list with the same
     * degree-ordered orientation g3 uses. */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.ImageHeader
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ImageHeaderSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.ui.enabled", "false")
-    .appName("image-header-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(2)
 
   override def afterAll(): Unit = spark.stop()
 

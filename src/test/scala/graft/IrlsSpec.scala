@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{Irls, Tables}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,17 +16,7 @@ class IrlsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("irls-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -21,12 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LstmTrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.ui.enabled", "false")
-    .appName("lstm-training-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(8)
 
   override def afterAll(): Unit = spark.stop()
 

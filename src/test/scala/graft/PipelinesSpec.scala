@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipelines.{CovidDataTransform, CovidSimulator, WeatherForecast}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,16 +15,7 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val refDir = "/root/reference/scripts"
 
-  private lazy val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", 8)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("pipelines-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(8)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -47,6 +37,31 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("minpop") <= 0)
       .count()
     assert(bad == 0)
+  }
+
+  test("JHU 3-key join keeps country-level rows (blank province_state)") {
+    // the reference's pandas merge matches NaN keys; an equi-join on a
+    // null province_state silently dropped every country-level series
+    val dir = java.nio.file.Files.createTempDirectory("graft_jhu")
+    val wide = Seq("confirmed" -> 10, "recovered" -> 20, "death" -> 30)
+      .map { case (m, base) =>
+        val f = dir.resolve(s"$m.csv")
+        java.nio.file.Files.writeString(f,
+          "province_state,country_region,_4_1_20,_4_2_20\n" +
+            s",Italy,$base,${base + 1}\n" +
+            s"Ontario,Canada,${base + 2},${base + 3}\n")
+        spark.read.option("header", true).option("inferSchema", true)
+          .csv(f.toString)
+      }
+    val rows = CovidDataTransform.joinJhu(wide)
+      .select("province_state", "country_region", "date", "confirmed",
+        "recovered", "death")
+      .orderBy("country_region", "date").collect().map(_.toSeq).toSeq
+    assert(rows == Seq(
+      Seq("Ontario", "Canada", 20200401, 12, 22, 32),
+      Seq("Ontario", "Canada", 20200402, 13, 23, 33),
+      Seq(null, "Italy", 20200401, 10, 20, 30),
+      Seq(null, "Italy", 20200402, 11, 21, 31)))
   }
 
   private lazy val feats =

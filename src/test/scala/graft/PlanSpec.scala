@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,17 +13,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("plan-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -204,12 +193,24 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("AQE stays default-on and its skew-join rule splits an " +
       "adversarially skewed shuffle join") {
     import org.apache.spark.sql.functions._
-    // Posture assertion: no session builder in this repo pins AQE or its
-    // skew-join rule off — both must sit at their Spark defaults (on).
+    // Posture assertion: GraftSession pins neither AQE nor its skew-join
+    // rule off — both must sit at their Spark defaults (on).
     // j9 is the MANUAL salting defense; this automatic split is the
     // first line of defense at 100× scale.
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true")
+    // ... and the spec session runs the posture Bench measures: every
+    // GraftSession conf
+    Map(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false",
+      "spark.cleaner.periodicGC.interval" -> "2min",
+      "spark.sql.codegen.cache.maxEntries" -> "8192"
+    ).foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    assert(spark.conf.get("spark.sql.warehouse.dir").endsWith("/graft_warehouse"))
     val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes")

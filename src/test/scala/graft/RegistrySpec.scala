@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,17 +13,7 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("registry-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -52,17 +41,36 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("every session is built by GraftSession, the only reader of the core-count env var") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    def sitesOf(needle: String): Seq[String] = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+        .collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
+    }
+    val home = "src/main/scala/graft/GraftSession.scala"
+    val builders = sitesOf("SparkSession" + ".builder(")
+    assert(builders.size == 1 && builders.head.startsWith(home + ":"),
+      builders.mkString("\n"))
+    val envReads = sitesOf("SPARK_GRAFT" + "_CPUS").filterNot(_.startsWith(home + ":"))
+    assert(envReads.isEmpty, envReads.mkString("\n"))
+  }
+
   Registry.all.foreach { q =>
     test(s"${q.name} executes on sf0.001") {
-      val df = q.fn(spark, sfDir)
-      val n = df.count()
-      assert(n >= 0)
+      // Runner releases the row's caches and checkpoint blocks, as in
+      // Bench and Verify
+      val p = Runner.run(spark) {
+        val df = q.fn(spark, sfDir)
+        df.count()
+        df.queryExecution.executedPlan.toString
+      }.fold(why => fail(s"${q.name} failed: $why"), identity)
       // Blanket plan audit (round 9): NO query's final plan may contain
       // an unkeyed CartesianProduct — the quadratic-blowup operator a
       // dropped join key silently buys. (Deliberate 1-row scalar
       // crossJoins plan as BroadcastNestedLoopJoin over a broadcast
       // single row, not CartesianProduct, so they stay allowed.)
-      val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"),
         s"${q.name} plans a CartesianProduct:\n" + p.take(1500))
     }

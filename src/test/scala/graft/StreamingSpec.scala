@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
@@ -15,16 +14,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("streaming-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,14 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("substring-dedup-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 

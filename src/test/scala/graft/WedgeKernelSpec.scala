@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.WedgeKernel
 
@@ -17,16 +16,7 @@ import graft.ops.WedgeKernel
   */
 class WedgeKernelSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    // extensions matter even for a kernel spec: getOrCreate shares the
-    // JVM-wide session across suites, and a session created WITHOUT
-    // graft extensions breaks any later suite needing graft_dot
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", 2)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession(2)
 
   /** Brute-force multiset of packed pairs per center. */
   private def brute(nbr: Seq[(Long, Long)]): Map[Long, Long] =

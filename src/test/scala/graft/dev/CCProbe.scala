@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Probe: rounds + wall time of the pointer-jumping CC
@@ -13,13 +13,7 @@ import org.apache.spark.sql.functions._
 object CCProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

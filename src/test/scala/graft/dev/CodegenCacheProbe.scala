@@ -1,5 +1,5 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Dev-only: measures what Spark's whole-stage-codegen compile cache
@@ -19,18 +19,8 @@ object CodegenCacheProbe {
     val sfDir = args(0)
     val maxEntries = args(1)
     val rows = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", maxEntries)
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
+    val spark = GraftSession.builder()
+      .config("spark.sql.codegen.cache.maxEntries", maxEntries) // the A/B arm
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount

@@ -1,5 +1,5 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev-only: interleaved A/B of a runtime SQL conf over registry rows
   * inside ONE JVM — the only valid perf methodology on hosts with
@@ -14,18 +14,7 @@ object ConfProbe {
     val valA = args(2)
     val valB = args(3)
     val rows = args.drop(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     def runOne(name: String): Double = {
       val fn = graft.SparkEntry.queries(name)

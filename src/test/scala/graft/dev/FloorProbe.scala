@@ -1,5 +1,5 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev-only: isolate the per-execution FIXED floor every registry row
   * pays (round-17 "Not yet optimized" item: ~0.1-0.2 s/row × 383 rows
@@ -18,17 +18,7 @@ object FloorProbe {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 20
     val rows = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     def bench(label: String, n: Int)(body: => Unit): Unit = {

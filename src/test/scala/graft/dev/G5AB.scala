@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** A/B probe for the round-16 g5 kernel change at decade scale: the
@@ -15,15 +15,7 @@ object G5AB {
     val dir = args.headOption.getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_decade_m30")
     val order = args.drop(1).headOption.getOrElse("BA")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage timing of the g5 plan's pieces, for drift forensics
@@ -12,14 +12,7 @@ import org.apache.spark.sql.functions._
 object G5Anatomy {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -1,5 +1,6 @@
 package graft.dev
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -37,17 +38,7 @@ object GraphAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     auditG7(spark, dir)

@@ -1,6 +1,6 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Step-count experiment for the robust M5 band misses: Keras
@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object M5Epochs {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val refDir = "/root/reference/scripts"

@@ -1,5 +1,5 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev-only: write `explain("formatted")` for selected registry
   * queries to files — the round-17 optimization evidence trail
@@ -15,17 +15,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -1,17 +1,8 @@
 package graft.dev
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args.drop(1)) {
       val df = graft.SparkEntry.queries(n)(spark, args(0))

@@ -1,5 +1,6 @@
 package graft.dev
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
@@ -39,14 +40,7 @@ object ScaleProbe {
       if (args.nonEmpty) args.toSeq
       else Seq("d2_exact_dedup", "d4_minhash_lsh", "d5_simhash",
         "t1_token_count", "pl4_corpus_prep")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
@@ -94,14 +88,7 @@ object ScaleProbe {
     * linkage is a 2-key equi-join whose candidate set grows linearly.
     */
   private def graphProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
@@ -160,14 +147,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe asof
     */
   private def asofProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     // Deep histories, not wide user counts: same 1500 users, m× more
@@ -268,14 +248,7 @@ object ScaleProbe {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.hadoop.fs.Path
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
@@ -380,14 +353,7 @@ object ScaleProbe {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.hadoop.fs.Path
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 8)) {
@@ -474,14 +440,7 @@ object ScaleProbe {
     * measures both so the gap, not just the trend, is on record.
     */
   private def bandProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 4, 8)) {
@@ -523,14 +482,7 @@ object ScaleProbe {
   }
 
   private def wedgeProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
@@ -578,14 +530,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe sf1
     */
   private def sf1Probe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 10)) {
@@ -637,14 +582,7 @@ object ScaleProbe {
     */
   private def sketchProbe(): Unit = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -722,17 +660,10 @@ object ScaleProbe {
     */
   private def e24FixedProbe(args: Seq[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(30)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
+    // 8 shuffle partitions on 32 cores: the streaming state-store
+    // sizing rule (state-store commits are per partition per batch)
+    val spark = GraftSession.builder(32)
       .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir =
@@ -851,18 +782,7 @@ object ScaleProbe {
   private def decadeProbe(args: Seq[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(30)
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_decade_m$m"
     buildScaled(spark, "/root/testdata/sf0.1", m, dir)
@@ -975,18 +895,7 @@ object ScaleProbe {
   private def g5WavesProbe(args: Seq[String]): Unit = {
     val m = args.headOption.map(_.toInt).getOrElse(100)
     val waves = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_decade_m$m"
     buildScaled(spark, "/root/testdata/sf0.1", m, dir)
@@ -1115,18 +1024,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe sf1full [q...]
     */
   private def sf1FullProbe(only: Seq[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val m = 10
@@ -1267,18 +1165,7 @@ object ScaleProbe {
     var cur = spark
     def freshSession(): SparkSession = {
       try cur.stop() catch { case _: Throwable => () }
-      SparkSession.builder()
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.sql.warehouse.dir",
-          System.getProperty("java.io.tmpdir") + "/graft_warehouse")
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", 32)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.cleaner.periodicGC.interval", "2min")
-        .config("spark.sql.codegen.cache.maxEntries", "8192")
-        .getOrCreate()
+      GraftSession(32)
     }
     for ((name, fn) <- queries) {
       def attempt(): (Long, Double) = {
@@ -1334,14 +1221,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe substr
     */
   private def substrProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val fn = graft.SparkEntry.queries("d24_substring_dedup")
@@ -1378,14 +1258,7 @@ object ScaleProbe {
   }
 
   private def tpchProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
@@ -1434,17 +1307,11 @@ object ScaleProbe {
     * down with the data (production defaults, factor 5 / 256 MB, target
     * real executor-sized partitions) so the probe exercises the same
     * rule the cluster would. AQE itself stays at its default-on
-    * posture everywhere in this repo — no session builder pins it.
+    * posture everywhere in this repo — GraftSession does not pin it.
     * usage: Test/runMain graft.dev.ScaleProbe skew
     */
   private def skewProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     // incompressible per-row payload (md5 hex) that SURVIVES into the
     // join output: skew detection is shuffle-BYTES-based, and a pruned
@@ -1486,14 +1353,7 @@ object ScaleProbe {
     * across the limit. usage: Test/runMain graft.dev.ScaleProbe sf1wide
     */
   private def sf1WideProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 10)) {
@@ -1549,12 +1409,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe mixedlm
     */
   private def mixedLmProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.ops.MixedLm
@@ -1599,14 +1454,7 @@ object ScaleProbe {
     * usage: Test/runMain graft.dev.ScaleProbe semantic
     */
   private def semanticProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import graft.queries.KMeansOps
     val src = "/root/testdata/sf0.1"
@@ -1684,14 +1532,7 @@ object ScaleProbe {
     * the per-scale brute-force truth.
     */
   private def annProbe(): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     for (m <- Seq(1, 2, 4, 8)) {
