@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Runner {
   /** `Right(action's result)`, or `Left("Class: first 3 message lines")`
-    * if it threw. The release runs either way. */
+    * if it threw. The release runs either way, unless the action killed
+    * the context: a stopped context holds nothing and would throw. */
   def run[A](spark: SparkSession)(action: => A): Either[String, A] = {
     val out =
       try Right(action)
       catch { case e: Throwable => Left(reason(e)) }
-    release(spark)
+    if (!spark.sparkContext.isStopped) release(spark)
     out
   }
 

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
+import graft.streaming.StreamReplay
+import graft.streaming.StreamReplay.{withRocksDbStateStore, withShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -294,30 +296,11 @@ object EventQueries {
 
   private val streamRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run `body` with spark.sql.shuffle.partitions pinned to `n`,
-    * restoring the session value after. The streaming-proof rows stage
-    * ~60k-row micro-batches, but every stateful operator materializes
-    * one state store PER shuffle partition PER run — e24's three
-    * AvailableNow runs × 4 join state stores × 32 partitions was 384
-    * store load/commit cycles of pure fixed overhead (measured round
-    * 12: 29 s → single digits at n=8 with identical hashed output; the
-    * partition count is recorded in the checkpoint at first start, so
-    * it must be set BEFORE the first runOnce). Parallelism is a plan
-    * property, not a semantics one: results are order-enforced by each
-    * row's final orderBy. A real cluster sizes streaming shuffle
-    * partitions to expected state, exactly like this. */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** The production spelling of the pin above: DERIVE the partition
-    * count from the state volume the query's stores are expected to
-    * carry (keys × windows in the watermark horizon, or buffered join
-    * rows in the time-range bound), via the measured
-    * [[graft.streaming.StatePartitioning]] rule. Since round 14 the
+  /** The production spelling of [[StreamReplay.withShufflePartitions]]:
+    * DERIVE the partition count from the state volume the query's
+    * stores are expected to carry (keys × windows in the watermark
+    * horizon, or buffered join rows in the time-range bound), via the
+    * measured [[graft.streaming.StatePartitioning]] rule. Since round 14 the
     * expected-state input itself is COMPUTED from the replayed batch
     * table by the estimator matching each operator's state shape
     * ([[graft.streaming.StateEstimates]]) — no hand-supplied counts
@@ -426,10 +409,7 @@ object EventQueries {
   private val e14 = Q(
     "e14_stream_tws_equiv",
     (s, dir) => {
-      // transformWithState requires the RocksDB state store provider
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withRocksDbStateStore(s) {
         val sink = replayToMemorySink(s, dir, "stream_tws", "update",
           stateRows = est.approxKeys(s, dir, "user_id"))(
           ev => graft.streaming.EventStreams.runningUserTotalsTws(ev).toDF())
@@ -439,8 +419,7 @@ object EventQueries {
           .select(col("user_id"), col("n_events"),
             round(col("total_value"), 4).as("total_value"))
           .orderBy("user_id")
-      } finally
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     },
     Some("""SELECT user_id, count(*) AS n_events,
                    round(sum(value), 4) AS total_value
@@ -509,52 +488,24 @@ object EventQueries {
     // stateless passthrough: offsets only, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_ckpt_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_ckpt_${streamRun.incrementAndGet()}")
       val proj = Seq("event_id", "user_id", "event_type", "value")
       val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      // stage one half as one flat file the file-source can list.
-      // coalesce(1) is TEST-HARNESS staging of a micro-batch fixture —
-      // never copy it into a real sink: one task would serialize the
-      // whole write (the real sinks here are the partitioned
-      // writeBatchIdempotent outputs).
-      def stage(half: DataFrame, name: String): Unit = {
-        val tmp = s"$base/stage_$name"
-        half.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$inDir/$name.parquet"))
-      }
-      def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(inDir)
-        val q = stream.writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                batchId: Long) =>
-              graft.streaming.EventStreams
-                .writeBatchIdempotent(batch, batchId, outDir)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      stage(ev.filter(col("event_id") % 2 === 0), "half0")
+      def runOnce(): Unit = graft.streaming.EventStreams
+        .sinkViaForeachBatch(s.readStream.schema(ev.schema).parquet(d.in), d.out)
+        .option("checkpointLocation", d.ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      StreamReplay.stage(ev.filter(col("event_id") % 2 === 0), s"${d.in}/half0.parquet")
       runOnce() // processes half0 as batch 0, commits offsets
-      stage(ev.filter(col("event_id") % 2 =!= 0), "half1")
+      StreamReplay.stage(ev.filter(col("event_id") % 2 =!= 0), s"${d.in}/half1.parquet")
       runOnce() // RESUMES: only half1, as batch 1
       // partition-dir inference types batch_id as int on read-back
-      val bids = s.read.parquet(outDir)
+      val bids = s.read.parquet(d.out)
         .select(col("batch_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
       require(bids == Set(0L, 1L),
         s"checkpoint resume broken: batch ids $bids (expected {0, 1})")
-      s.read.parquet(outDir)
+      s.read.parquet(d.out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
         .orderBy("event_type")
@@ -580,14 +531,7 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.hourWindowKeys(s, dir)) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_late_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_late_${streamRun.incrementAndGet()}")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val cutoff = ev.agg((min(col("ts"))
@@ -610,34 +554,20 @@ object EventQueries {
         s"late-drop proof precondition broken: watermark " +
           s"${maxTs.getTime - hourMs} ms < latest late window end " +
           s"$ceilCutoffMs ms — the events fixture must span ≥ 3 hours")
-      def stage(half: DataFrame, name: String): Unit = {
-        val tmp = s"$base/stage_$name"
-        half.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$inDir/$name.parquet"))
-      }
       def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(inDir)
-        val q = graft.streaming.EventStreams.tumblingCounts(stream)
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                batchId: Long) =>
-              graft.streaming.EventStreams
-                .writeBatchIdempotent(batch, batchId, outDir)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        val stream = s.readStream.schema(ev.schema).parquet(d.in)
+        graft.streaming.EventStreams.sinkViaForeachBatch(
+            graft.streaming.EventStreams.tumblingCounts(stream), d.out)
+          .option("checkpointLocation", d.ckpt)
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
       }
-      stage(onTime, "a_ontime")
+      StreamReplay.stage(onTime, s"${d.in}/a_ontime.parquet")
       runOnce() // batch 0: on-time; commits watermark = max(ts) - 1h
-      stage(late, "b_late")
+      StreamReplay.stage(late, s"${d.in}/b_late.parquet")
       runOnce() // batch 1: every row is below the watermark -> dropped
       val w = Window.partitionBy("event_type", "window_start")
         .orderBy(col("batch_id").cast("long").desc)
-      s.read.parquet(outDir)
+      s.read.parquet(d.out)
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1) // last update per window (batch 0's)
         .select(col("event_type"),
@@ -704,20 +634,9 @@ object EventQueries {
         s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet")
           .parquet(dir))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts").as("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("click_ts") &&
-          col("p_ts") <= col("click_ts") + expr("interval 30 minutes"))
       val name = s"stream_ss_join_${streamRun.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(name)
+      val q = StreamReplay.attributionJoin(ev)
+        .writeStream.format("memory").queryName(name)
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .start()
@@ -994,42 +913,23 @@ object EventQueries {
     // stateless passthrough: pacing proof, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_rate_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_rate_${streamRun.incrementAndGet()}")
       val proj = Seq("event_id", "user_id", "event_type", "value")
       val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      // stage 4 quarter-files (test-harness staging, see e16's note)
-      for (i <- 0 to 3) {
-        val tmp = s"$base/stage_$i"
-        ev.filter(col("event_id") % 4 === i).coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$inDir/q$i.parquet"))
-      }
-      val q = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(inDir)
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              batchId: Long) =>
-            graft.streaming.EventStreams
-              .writeBatchIdempotent(batch, batchId, outDir)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val bids = s.read.parquet(outDir)
+      for (i <- 0 to 3)
+        StreamReplay.stage(ev.filter(col("event_id") % 4 === i), s"${d.in}/q$i.parquet")
+      graft.streaming.EventStreams.sinkViaForeachBatch(
+          s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(d.in), d.out)
+        .option("checkpointLocation", d.ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val bids = s.read.parquet(d.out)
         .select(col("batch_id").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSet
       require(bids == Set(0L, 1L, 2L, 3L),
         s"rate limit broken: batch ids $bids (expected {0,1,2,3} — " +
           "one micro-batch per staged file)")
-      s.read.parquet(outDir)
+      s.read.parquet(d.out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
         .orderBy("event_type")
@@ -1062,14 +962,7 @@ object EventQueries {
         expectedStateRows = est.joinBufferRows(s, dir,
           Seq("click", "purchase"))) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_sslo_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_sslo_${streamRun.incrementAndGet()}")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
@@ -1080,46 +973,19 @@ object EventQueries {
         Seq((-1L, t, -1L, "click"), (-2L, t, -1L, "purchase"))
           .toDF("event_id", "ts", "user_id", "event_type")
       }
-      def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val tmp = s"$base/stage_$name"
-        df.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$inDir/$name.parquet"))
-      }
-      def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(inDir)
-        val clicks = stream.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts"))
-          .withWatermark("click_ts", "1 hour")
-        val purchases = stream.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "1 hour")
-        val joined = clicks.join(purchases,
-          col("user_id") === col("p_user") &&
-            col("p_ts") >= col("click_ts") &&
-            col("p_ts") <= col("click_ts") + expr("interval 30 minutes"),
-          "left_outer")
-        val q = joined.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                batchId: Long) =>
-              graft.streaming.EventStreams
-                .writeBatchIdempotent(batch, batchId, outDir)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      stage(ev, "a_events")
+      def runOnce(): Unit = graft.streaming.EventStreams
+        .sinkViaForeachBatch(StreamReplay.attributionJoin(
+          s.readStream.schema(ev.schema).parquet(d.in), "left_outer"), d.out)
+        .outputMode("append") // stream-stream joins run only in append
+        .option("checkpointLocation", d.ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      StreamReplay.stage(ev, s"${d.in}/a_events.parquet")
       runOnce() // inner matches emit as found; outer rows still held
-      stage(sentinels(10), "b_sentinel1")
+      StreamReplay.stage(sentinels(10), s"${d.in}/b_sentinel1.parquet")
       runOnce() // advances max event time; watermark commits behind it
-      stage(sentinels(20), "c_sentinel2")
+      StreamReplay.stage(sentinels(20), s"${d.in}/c_sentinel2.parquet")
       runOnce() // eviction batch: every real unmatched click emits null
-      s.read.parquet(outDir)
+      s.read.parquet(d.out)
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
@@ -1767,43 +1633,32 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_fsink_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_fsink_${streamRun.incrementAndGet()}")
       val proj = Seq("event_id", "user_id", "event_type", "value")
       val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      def stage(half: DataFrame, name: String, into: String): Unit = {
-        val tmp = s"$base/stage_$name"
-        half.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$into/$name.parquet"))
-      }
       def runOnce(): Unit = {
-        val q = s.readStream.schema(ev.schema).parquet(inDir)
+        val q = s.readStream.schema(ev.schema).parquet(d.in)
           .writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
+          .option("path", d.out)
+          .option("checkpointLocation", d.ckpt)
           .outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       }
       val half0 = ev.filter(col("event_id") % 2 === 0)
-      stage(half0, "half0", inDir)
+      StreamReplay.stage(half0, s"${d.in}/half0.parquet")
       runOnce() // batch 0 commits half0 into the sink's metadata log
-      stage(ev.filter(col("event_id") % 2 =!= 0), "half1", inDir)
+      StreamReplay.stage(ev.filter(col("event_id") % 2 =!= 0), s"${d.in}/half1.parquet")
       runOnce() // resume: batch 1 appends only half1
       // Simulate a failed task's leftover: a VALID duplicate data file
       // in the sink dir that no batch ever committed.
-      stage(half0, "orphan_uncommitted", outDir)
-      require(fs.exists(new Path(s"$outDir/_spark_metadata")),
+      StreamReplay.stage(half0, s"${d.out}/orphan_uncommitted.parquet")
+      val meta = new Path(s"${d.out}/_spark_metadata")
+      require(meta.getFileSystem(s.sparkContext.hadoopConfiguration).exists(meta),
         "file sink wrote no _spark_metadata commit log")
       // Read THROUGH the sink (Spark detects _spark_metadata and lists
       // from the log, not the directory) — the orphan must not count.
-      s.read.parquet(outDir)
+      s.read.parquet(d.out)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
         .orderBy("event_type")
@@ -1841,14 +1696,7 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.hourWindowKeys(s, dir)) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      val base = System.getProperty("java.io.tmpdir") +
-        s"/graft_append_${streamRun.incrementAndGet()}"
-      val fs = new Path(base).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(base), true)
-      val inDir = s"$base/in"; val outDir = s"$base/out"
-      val ckpt = s"$base/ckpt"
-      fs.mkdirs(new Path(inDir))
+      val d = StreamReplay.dirs(s, s"graft_append_${streamRun.incrementAndGet()}")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val b = ev.agg(min("ts").as("mn"), max("ts").as("mx")).first()
@@ -1866,26 +1714,21 @@ object EventQueries {
       require(nonEmpty.getLong(0) > 0 && nonEmpty.getLong(1) > 0 &&
         nonEmpty.getLong(2) > 0,
         "append-withhold proof is vacuous: need all three deliveries")
-      def stage(half: DataFrame, name: String): Unit = {
-        val tmp = s"$base/stage_$name"
-        half.coalesce(1).write.parquet(tmp)
-        val part = fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-        fs.rename(part, new Path(s"$inDir/$name.parquet"))
-      }
-      def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(inDir)
+      def stageAndRun(part: DataFrame, name: String): Unit = {
+        StreamReplay.stage(part, s"${d.in}/$name.parquet")
+        val stream = s.readStream.schema(ev.schema).parquet(d.in)
         val q = graft.streaming.EventStreams.tumblingCounts(stream)
           .writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
+          .option("path", d.out)
+          .option("checkpointLocation", d.ckpt)
           .outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       }
-      stage(early, "a_early"); runOnce()
-      stage(mid, "b_mid"); runOnce()
-      stage(sentinel, "c_sentinel"); runOnce()
-      val sink = s.read.parquet(outDir)
+      stageAndRun(early, "a_early")
+      stageAndRun(mid, "b_mid")
+      stageAndRun(sentinel, "c_sentinel")
+      val sink = s.read.parquet(d.out)
       // The withhold half of the proof: open tail windows must be absent.
       val nAll = ev.select(date_trunc("hour", col("ts")), col("event_type"))
         .distinct().count()
@@ -1946,36 +1789,21 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.approxKeys(s, dir, "event_type")) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val base = System.getProperty("java.io.tmpdir") +
-          s"/graft_e39_${streamRun.incrementAndGet()}"
-        val fs = new Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(base), true)
-        val inDir = s"$base/in"
-        fs.mkdirs(new Path(inDir))
+      withRocksDbStateStore(s) {
+        val d = StreamReplay.dirs(s, s"graft_e39_${streamRun.incrementAndGet()}")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_type"), col("value").cast("double").as("v"),
             col("ts"), col("event_id"))
-        // three time-ordered chunks; sequential writes give strictly
-        // increasing mod-times so the file source replays them in order
+        // three time-ordered chunks, replayed in staging order
         val chunked = ev.withColumn("chunk",
           ntile(3).over(Window.orderBy("ts", "event_id")))
-        for (c <- 1 to 3) {
-          val tmp = s"$base/stage_$c"
-          chunked.filter(col("chunk") === c).select("event_type", "v")
-            .coalesce(1).write.parquet(tmp)
-          val part =
-            fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(f"$inDir/chunk_$c%02d.parquet"))
-        }
-        val schema = s.read.parquet(s"$inDir/chunk_01.parquet").schema
+        for (c <- 1 to 3)
+          StreamReplay.stage(chunked.filter(col("chunk") === c)
+            .select("event_type", "v"), f"${d.in}/chunk_$c%02d.parquet")
+        val schema = s.read.parquet(s"${d.in}/chunk_01.parquet").schema
         val name = s"e39_sink_${streamRun.incrementAndGet()}"
         val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+          .option("maxFilesPerTrigger", "1").parquet(d.in)
         val q = graft.streaming.EventStreams.streamingTypeQuantiles(stream)
           .toDF().writeStream.format("memory").queryName(name)
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
@@ -2014,8 +1842,7 @@ object EventQueries {
                 - ceil(lit(0.02) * col("n")))
               .cast("int").as("stream_within_eps"))
           .orderBy("event_type", "phi")
-      } finally
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     },
     Some("""WITH o AS (SELECT event_type, CAST(value AS DOUBLE) AS v
                        FROM events),
@@ -2070,35 +1897,20 @@ object EventQueries {
         expectedStateRows = est.approxKeys(s, dir, "source",
           table = "documents")) {
       import org.apache.spark.sql.streaming.Trigger
-      import org.apache.hadoop.fs.Path
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val base = System.getProperty("java.io.tmpdir") +
-          s"/graft_e40_${streamRun.incrementAndGet()}"
-        val fs = new Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(base), true)
-        val inDir = s"$base/in"
-        fs.mkdirs(new Path(inDir))
+      withRocksDbStateStore(s) {
+        val in = StreamReplay.dirs(s, s"graft_e40_${streamRun.incrementAndGet()}").in
         val d = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             graft.ops.Corpus.fingerprint(col("text")).as("fp"))
         val chunked = d.withColumn("chunk",
           ntile(3).over(Window.orderBy("doc_id")))
-        for (c <- 1 to 3) {
-          val tmp = s"$base/stage_$c"
-          chunked.filter(col("chunk") === c)
-            .select("source", "doc_id", "fp")
-            .coalesce(1).write.parquet(tmp)
-          val part =
-            fs.globStatus(new Path(s"$tmp/part-*.parquet"))(0).getPath
-          fs.rename(part, new Path(f"$inDir/chunk_$c%02d.parquet"))
-        }
-        val schema = s.read.parquet(s"$inDir/chunk_01.parquet").schema
+        for (c <- 1 to 3)
+          StreamReplay.stage(chunked.filter(col("chunk") === c)
+            .select("source", "doc_id", "fp"), f"$in/chunk_$c%02d.parquet")
+        val schema = s.read.parquet(s"$in/chunk_01.parquet").schema
         val name = s"e40_sink_${streamRun.incrementAndGet()}"
         val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+          .option("maxFilesPerTrigger", "1").parquet(in)
         val q = graft.streaming.EventStreams.streamingBloomAdmission(stream)
           .toDF().writeStream.format("memory").queryName(name)
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
@@ -2119,8 +1931,7 @@ object EventQueries {
             (col("admit") === 0 && col("doc_id") === col("ffd"))
               .cast("int").as("bloom_fp"))
           .orderBy("doc_id")
-      } finally
-        s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      }
     },
     Some("""WITH d AS (
               SELECT doc_id, source,

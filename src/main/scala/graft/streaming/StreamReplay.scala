@@ -1,0 +1,108 @@
+package graft.streaming
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The one way the streaming proofs and probes stage and replay files:
+  * a clean `in/out/ckpt` layout, fixtures staged as single flat parquet
+  * files a file-source stream lists, the click→purchase attribution
+  * join they replay, and the session confs a replay pins around its
+  * body.
+  */
+object StreamReplay {
+
+  /** `<tmpdir>/<name>`, emptied, with an empty `in/` for staged files;
+    * `out` and `ckpt` are created by the sink and the checkpoint. */
+  final case class Dirs(base: String) {
+    val in: String = s"$base/in"
+    val out: String = s"$base/out"
+    val ckpt: String = s"$base/ckpt"
+  }
+
+  def dirs(s: SparkSession, name: String): Dirs = {
+    val d = Dirs(s"${System.getProperty("java.io.tmpdir")}/$name")
+    val fs = new Path(d.base).getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(d.base), true)
+    fs.mkdirs(new Path(d.in))
+    d
+  }
+
+  /** Writes `df` as the ONE parquet file `path` (replacing it): the
+    * file-source stream lists flat files, and the testdata contract is
+    * one file per table (e15 streams with pathGlobFilter=events.parquet,
+    * which never matches part files inside a directory). coalesce(1)
+    * is fixture staging — never copy it into a real sink, where one
+    * task would serialize the whole write. Sequential calls give
+    * strictly increasing mod-times, so the file source replays staged
+    * files in staging order. `rowGroupBytes` caps the parquet row
+    * group: a corpus-sized single file with the default 128 MB row
+    * group is ONE scan split, which fed whole scans to a single task
+    * (round-13 sf1: d16 117 s → 830 s from this alone).
+    */
+  def stage(df: DataFrame, path: String, rowGroupBytes: Option[Long] = None): Unit = {
+    val target = new Path(path)
+    // '_'-prefixed: Spark's file listing skips it while it exists
+    val tmp = new Path(target.getParent, s"_stage_${target.getName}")
+    val w = df.coalesce(1).write.mode("overwrite")
+    rowGroupBytes.foreach(b => w.option("parquet.block.size", b))
+    w.parquet(tmp.toString)
+    val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val part = fs.globStatus(new Path(tmp, "part-*.parquet"))(0).getPath
+    fs.delete(target, true)
+    fs.rename(part, target)
+    fs.delete(tmp, true)
+  }
+
+  /** Clicks joined to the purchases of the same user within 30 minutes
+    * AFTER the click, both sides watermarked at 1 hour: only the
+    * watermark plus the time-range bound lets the engine drop buffered
+    * state. `joinType` "left_outer" keeps unconverted clicks, emitted
+    * null-extended once the watermark passes their deadline. Expects
+    * (event_id, ts, user_id, event_type) columns.
+    */
+  def attributionJoin(events: DataFrame, joinType: String = "inner"): DataFrame = {
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("user_id"), col("event_id").as("click_id"),
+        col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+    val purchases = events.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"),
+        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "1 hour")
+    clicks.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("p_ts") >= col("click_ts") &&
+        col("p_ts") <= col("click_ts") + expr("interval 30 minutes"),
+      joinType)
+  }
+
+  /** Runs `body` with spark.sql.shuffle.partitions pinned to `n`,
+    * restoring the session value after, also when `body` throws. The
+    * streaming proofs stage ~60k-row micro-batches, but every stateful
+    * operator materializes one state store PER shuffle partition PER
+    * run — e24's three AvailableNow runs × 4 join state stores × 32
+    * partitions was 384 store load/commit cycles of pure fixed overhead
+    * (measured round 12: 29 s → single digits at n=8 with identical
+    * hashed output; the partition count is recorded in the checkpoint
+    * at first start, so it must be set BEFORE the first run).
+    * Parallelism is a plan property, not a semantics one: results are
+    * order-enforced by each row's final orderBy. A real cluster sizes
+    * streaming shuffle partitions to expected state, exactly like this.
+    */
+  def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A =
+    withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Runs `body` on the RocksDB state store, which transformWithState
+    * requires, restoring the session's prior provider after. */
+  def withRocksDbStateStore[A](s: SparkSession)(body: => A): A =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
+    val prior = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body
+    finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+}

@@ -41,20 +41,30 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every session is built by GraftSession, the only reader of the core-count env var") {
+  /** `file:line` of every Scala line under src/ containing `needle`. */
+  private def sitesOf(needle: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
       .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    def sitesOf(needle: String): Seq[String] = files.flatMap { f =>
-      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-        .collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
-    }
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+          .collect { case (l, i) if l.contains(needle) => s"$f:${i + 1}" }
+      }
+  }
+
+  test("every session is built by GraftSession, the only reader of the core-count env var") {
     val home = "src/main/scala/graft/GraftSession.scala"
     val builders = sitesOf("SparkSession" + ".builder(")
     assert(builders.size == 1 && builders.head.startsWith(home + ":"),
       builders.mkString("\n"))
     val envReads = sitesOf("SPARK_GRAFT" + "_CPUS").filterNot(_.startsWith(home + ":"))
     assert(envReads.isEmpty, envReads.mkString("\n"))
+  }
+
+  test("stream fixtures are staged as flat files by StreamReplay alone") {
+    val home = "src/main/scala/graft/streaming/StreamReplay.scala"
+    val sites = sitesOf("part-" + "*.parquet")
+    assert(sites.size == 1 && sites.head.startsWith(home + ":"), sites.mkString("\n"))
   }
 
   Registry.all.foreach { q =>

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, StreamReplay}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
@@ -132,10 +132,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       "flatMapGroupsWithState") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    StreamReplay.withRocksDbStateStore(spark) {
       val mem = MemoryStream[Ev]
       val q = EventStreams.runningUserTotalsTws(mem.toDF()).writeStream
         .format("memory").queryName("tws_spec")
@@ -153,9 +150,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
            WHERE rk = 1 ORDER BY user_id""")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
       assert(out == Seq((1L, 3L, 7.0), (2L, 2L, 8.0)))
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+  }
+
+  test("replay conf pins restore the session's prior values, also when the body throws") {
+    val parts = "spark.sql.shuffle.partitions"
+    val store = "spark.sql.streaming.stateStore.providerClass"
+    val (priorParts, priorStore) = (spark.conf.get(parts), spark.conf.getOption(store))
+    intercept[IllegalStateException](StreamReplay.withShufflePartitions(spark, 8) {
+      assert(spark.conf.get(parts) == "8")
+      throw new IllegalStateException("row failed")
+    })
+    assert(spark.conf.get(parts) == priorParts)
+    intercept[IllegalStateException](StreamReplay.withRocksDbStateStore(spark) {
+      assert(spark.conf.get(store).endsWith("RocksDBStateStoreProvider"))
+      throw new IllegalStateException("row failed")
+    })
+    assert(spark.conf.getOption(store) == priorStore)
   }
 
   test("foreachBatch sink lands every micro-batch in parquet with batch ids") {
