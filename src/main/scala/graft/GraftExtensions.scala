@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -25,9 +26,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - [[graft.plans.AsOfJoinStrategy]]: plans the [[graft.plans.AsOfJoin]]
   *    logical node to the merge-scan [[graft.plans.AsOfJoinExec]] — the
   *    full custom-operator tier (LogicalPlan + Strategy + SparkPlan).
+  *
+  * It also gives the context the session is built on the process-free
+  * `file:` filesystem ([[graft.io.LocalFs]]): every engine session
+  * passes through here, before any `file:` filesystem is cached.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Spark applies extensions once the session's context is active;
+    // `getActive` is package-private, and `getOrCreate()` would make a
+    // context where none is being built.
+    SparkContext.getClass.getMethod("getActive").invoke(SparkContext)
+      .asInstanceOf[Option[SparkContext]]
+      .foreach(sc => graft.io.LocalFs.install(sc.hadoopConfiguration))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName,

@@ -442,11 +442,7 @@ object EventQueries {
     // stateless passthrough sink: no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       import org.apache.spark.sql.streaming.Trigger
-      val out = System.getProperty("java.io.tmpdir") +
-        s"/graft_fb_sink_${streamRun.incrementAndGet()}"
-      val outPath = new org.apache.hadoop.fs.Path(out)
-      val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(outPath, true) // clean slate across Bench re-runs
+      val out = StreamReplay.dirs(s, s"graft_fb_sink_${streamRun.incrementAndGet()}").out
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       val proj = Seq("event_id", "user_id", "event_type", "value")
       val stream = s.readStream.schema(schema)

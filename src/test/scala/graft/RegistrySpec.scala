@@ -67,6 +67,16 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sites.size == 1 && sites.head.startsWith(home + ":"), sites.mkString("\n"))
   }
 
+  test("the file: filesystem is installed by graft.io.LocalFs alone, never by a session conf") {
+    val home = "src/main/scala/graft/io/LocalFs.scala"
+    val sites = Seq("fs." + "file.impl", "fs.AbstractFileSystem." + "file.impl")
+      .flatMap(sitesOf).filter(_.startsWith("src/main/"))
+    assert(sites.nonEmpty && sites.forall(_.startsWith(home + ":")), sites.mkString("\n"))
+    val confs = sitesOf("spark.hadoop." + "fs.")
+      .filter(_.startsWith("src/main/scala/graft/GraftSession.scala:"))
+    assert(confs.isEmpty, confs.mkString("\n"))
+  }
+
   Registry.all.foreach { q =>
     test(s"${q.name} executes on sf0.001") {
       // Runner releases the row's caches and checkpoint blocks, as in
