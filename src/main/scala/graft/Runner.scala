@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** The per-row step every query loop shares (Bench, Verify, RegistrySpec):
@@ -46,12 +48,14 @@ object Runner {
   /** Stops any streaming query a proof row left running and drops its
     * `stream_*` memory-sink views: leftover streaming state between
     * passes is the prime suspect for the round-7 thread-pool shutdown
-    * cascade. */
+    * cascade. A step that fails is reported on stderr as
+    * `[drain] <query or step>: <reason>` and the drain goes on. */
   def drainStreams(spark: SparkSession): Unit = {
-    spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-    try spark.catalog.listTables().collect()
+    def attempt(what: String)(step: => Unit): Unit =
+      try step catch { case NonFatal(e) => System.err.println(s"[drain] $what: ${reason(e)}") }
+    spark.streams.active.foreach(q => attempt(s"stop ${Option(q.name).getOrElse(q.id)}")(q.stop()))
+    attempt("drop stream_* views")(spark.catalog.listTables().collect()
       .filter(t => t.isTemporary && t.name.startsWith("stream_"))
-      .foreach(t => spark.catalog.dropTempView(t.name))
-    catch { case _: Throwable => () }
+      .foreach(t => spark.catalog.dropTempView(t.name)))
   }
 }

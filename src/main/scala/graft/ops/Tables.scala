@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Test-table catalog over the driver-generated parquet star schema
   * (TESTDATA.md). All `SparkEntry.queries` read through here so every
@@ -40,6 +40,14 @@ object Tables {
     resolved.putIfAbsent(key, df)
     df
   }
+
+  /** The table's schema as the parquet file stores it, before
+    * [[normalizeTs]]: what a file-source stream of the table must
+    * declare (the normalized schema would misread an INT64-nanos `ts`).
+    * It is the schema of the file relation under the [[load]] memo's
+    * frame, so it starts no inference job. */
+  def fileSchema(spark: SparkSession, dir: String, name: String): StructType =
+    load(spark, dir, name).queryExecution.logical.collectLeaves().head.schema
 
   /** Normalize `events.ts` to a session-zone TimestampType regardless of
     * how the generator encoded it in parquet. Dispatches on the SCANNED

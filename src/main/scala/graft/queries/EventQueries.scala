@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
-import graft.streaming.StreamReplay
+import graft.streaming.{EventStreams, StreamReplay}
 import graft.streaming.StreamReplay.{withRocksDbStateStore, withShufflePartitions}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -294,8 +294,6 @@ object EventQueries {
       |FROM sess GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin
 
-  private val streamRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The production spelling of [[StreamReplay.withShufflePartitions]]:
     * DERIVE the partition count from the state volume the query's
     * stores are expected to carry (keys × windows in the watermark
@@ -317,34 +315,42 @@ object EventQueries {
 
   private def est = graft.streaming.StateEstimates
 
-  /** Shared replay harness for the stream-batch equivalence rows (e10,
-    * e11): readStream over the events parquet (file-source streams need
-    * an explicit schema and take a directory — glob-select the one
-    * table) with the same nanos→micros ts normalization as Tables.load,
-    * run the given streaming aggregate into a uniquely-named memory
-    * sink (Bench re-runs queries in one session; memory sinks are
-    * per-name) under an AvailableNow trigger, and return the sink
-    * table. Complete mode because the memory sink holds final state.
-    */
-  private def replayToMemorySink(s: SparkSession, dir: String, tag: String,
-      mode: String = "complete",
-      stateRows: Long)(
-      agg: DataFrame => DataFrame): DataFrame = withStateSizedPartitions(s, expectedStateRows = stateRows) {
-    import org.apache.spark.sql.streaming.Trigger
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = graft.ops.Tables.normalizeTs(
-      s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    val name = s"${tag}_${streamRun.incrementAndGet()}"
-    val q = agg(stream).writeStream
-      .format("memory").queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
+  /** The columns a passthrough-sink row (e15, e16, e23, e37) streams. */
+  private def passthrough(ev: DataFrame): DataFrame =
+    ev.select("event_id", "user_id", "event_type", "value")
+
+  /** What a passthrough-sink row verifies: per event type, the row count
+    * and the rounded value sum, which match the whole table's only if
+    * every row landed exactly once. */
+  private def typeRollup(landed: DataFrame): DataFrame =
+    landed.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
+      .orderBy("event_type")
+
+  private val typeRollupSql =
+    """SELECT event_type, count(*) AS n,
+                   round(sum(value), 4) AS sum_value
+            FROM events GROUP BY 1 ORDER BY 1"""
+
+  /** The last emission per `key` of an update-mode sink whose `order`
+    * column strictly increases per key across micro-batches, so the pick
+    * is deterministic: the key's final state. */
+  private def latestPerKey(sink: DataFrame, key: String, order: String): DataFrame =
+    sink.withColumn("rk", row_number().over(
+        Window.partitionBy(key).orderBy(col(order).desc)))
+      .filter(col("rk") === 1)
+
+  /** e14/e18's verified output: each user's final running totals. */
+  private def finalUserTotals(sink: DataFrame): DataFrame =
+    latestPerKey(sink, "user_id", "n_events")
+      .select(col("user_id"), col("n_events"),
+        round(col("total_value"), 4).as("total_value"))
+      .orderBy("user_id")
+
+  private val userTotalsSql =
+    """SELECT user_id, count(*) AS n_events,
+                   round(sum(value), 4) AS total_value
+            FROM events GROUP BY 1 ORDER BY 1"""
 
   /** Streaming batch-equivalence (X24 promoted into the verified
     * surface): the events parquet is replayed through Structured
@@ -359,10 +365,10 @@ object EventQueries {
     */
   private val e10 = Q(
     "e10_stream_batch_equiv",
-    (s, dir) => {
-      replayToMemorySink(s, dir, "stream_equiv",
-        stateRows = est.hourWindowKeys(s, dir))(
-        graft.streaming.EventStreams.tumblingCounts)
+    (s, dir) => withStateSizedPartitions(s,
+        expectedStateRows = est.hourWindowKeys(s, dir)) {
+      StreamReplay.toMemory(EventStreams.tumblingCounts(
+          StreamReplay.tableStream(s, dir, "events")), "equiv", "complete").rows
         .select(col("event_type"),
           col("window_start").as("hour_window"),
           col("n"), round(col("sum_value"), 4).as("sum_value"))
@@ -383,10 +389,10 @@ object EventQueries {
     */
   private val e11 = Q(
     "e11_stream_session_equiv",
-    (s, dir) => {
-      replayToMemorySink(s, dir, "stream_sess",
-        stateRows = est.sessionCount(s, dir))(
-        graft.streaming.EventStreams.sessionCounts)
+    (s, dir) => withStateSizedPartitions(s,
+        expectedStateRows = est.sessionCount(s, dir)) {
+      StreamReplay.toMemory(EventStreams.sessionCounts(
+          StreamReplay.tableStream(s, dir, "events")), "sess", "complete").rows
         .select(col("user_id"),
           unix_micros(col("session_start")).as("session_start"),
           col("n_events"), round(col("session_value"), 4).as("session_value"))
@@ -408,22 +414,14 @@ object EventQueries {
     */
   private val e14 = Q(
     "e14_stream_tws_equiv",
-    (s, dir) => {
-      withRocksDbStateStore(s) {
-        val sink = replayToMemorySink(s, dir, "stream_tws", "update",
-          stateRows = est.approxKeys(s, dir, "user_id"))(
-          ev => graft.streaming.EventStreams.runningUserTotalsTws(ev).toDF())
-        val w = Window.partitionBy("user_id").orderBy(col("n_events").desc)
-        sink.withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
-          .select(col("user_id"), col("n_events"),
-            round(col("total_value"), 4).as("total_value"))
-          .orderBy("user_id")
+    (s, dir) => withRocksDbStateStore(s) {
+      withStateSizedPartitions(s,
+          expectedStateRows = est.approxKeys(s, dir, "user_id")) {
+        finalUserTotals(StreamReplay.toMemory(EventStreams.runningUserTotalsTws(
+          StreamReplay.tableStream(s, dir, "events")).toDF(), "tws", "update").rows)
       }
     },
-    Some("""SELECT user_id, count(*) AS n_events,
-                   round(sum(value), 4) AS total_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(userTotalsSql))
 
   /** foreachBatch exactly-once sink proof (X78 promoted into the
     * verified surface): the events stream lands in partitioned parquet
@@ -441,31 +439,18 @@ object EventQueries {
     "e15_foreachbatch_sink_equiv",
     // stateless passthrough sink: no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
-      import org.apache.spark.sql.streaming.Trigger
-      val out = StreamReplay.dirs(s, s"graft_fb_sink_${streamRun.incrementAndGet()}").out
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val proj = Seq("event_id", "user_id", "event_type", "value")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir)
-        .select(proj.map(col): _*)
-      val q = graft.streaming.EventStreams.sinkViaForeachBatch(stream, out)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val out = StreamReplay.dirs(s, "graft_e15").out
+      StreamReplay.runToEnd(EventStreams.sinkViaForeachBatch(
+        passthrough(StreamReplay.tableStream(s, dir, "events")), out))
       // single-file source + AvailableNow = one micro-batch; assert it
       // so the redelivery below provably replays batch 0's exact content
-      val nb = s.read.parquet(out).select("batch_id").distinct().count()
+      val nb = StreamReplay.batchIds(s, out).count()
       require(nb == 1, s"expected a single micro-batch, got $nb")
-      val redelivered = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      graft.streaming.EventStreams.writeBatchIdempotent(redelivered, 0L, out)
-      s.read.parquet(out)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-        .orderBy("event_type")
+      EventStreams.writeBatchIdempotent(
+        passthrough(Tables.load(s, dir, "events")), 0L, out)
+      typeRollup(s.read.parquet(out))
     },
-    Some("""SELECT event_type, count(*) AS n,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(typeRollupSql))
 
   /** Checkpoint RESUME proof (the other half of exactly-once, after
     * e15's idempotent redelivery): the events table is split into two
@@ -483,32 +468,21 @@ object EventQueries {
     "e16_stream_checkpoint_resume",
     // stateless passthrough: offsets only, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
-      import org.apache.spark.sql.streaming.Trigger
-      val d = StreamReplay.dirs(s, s"graft_ckpt_${streamRun.incrementAndGet()}")
-      val proj = Seq("event_id", "user_id", "event_type", "value")
-      val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      def runOnce(): Unit = graft.streaming.EventStreams
+      val d = StreamReplay.dirs(s, "graft_e16")
+      val ev = passthrough(Tables.load(s, dir, "events"))
+      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
         .sinkViaForeachBatch(s.readStream.schema(ev.schema).parquet(d.in), d.out)
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(ev.filter(col("event_id") % 2 === 0), s"${d.in}/half0.parquet")
       runOnce() // processes half0 as batch 0, commits offsets
       StreamReplay.stage(ev.filter(col("event_id") % 2 =!= 0), s"${d.in}/half1.parquet")
       runOnce() // RESUMES: only half1, as batch 1
-      // partition-dir inference types batch_id as int on read-back
-      val bids = s.read.parquet(d.out)
-        .select(col("batch_id").cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSet
+      val bids = StreamReplay.batchIds(s, d.out).collect().toSet
       require(bids == Set(0L, 1L),
         s"checkpoint resume broken: batch ids $bids (expected {0, 1})")
-      s.read.parquet(d.out)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-        .orderBy("event_type")
+      typeRollup(s.read.parquet(d.out))
     },
-    Some("""SELECT event_type, count(*) AS n,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(typeRollupSql))
 
   /** Watermark LATE-DATA semantics proof: the oldest hour of events is
     * delivered in a SECOND micro-batch, after the on-time remainder
@@ -526,8 +500,7 @@ object EventQueries {
     "e17_watermark_late_drop",
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.hourWindowKeys(s, dir)) {
-      import org.apache.spark.sql.streaming.Trigger
-      val d = StreamReplay.dirs(s, s"graft_late_${streamRun.incrementAndGet()}")
+      val d = StreamReplay.dirs(s, "graft_e17")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val cutoff = ev.agg((min(col("ts"))
@@ -550,13 +523,10 @@ object EventQueries {
         s"late-drop proof precondition broken: watermark " +
           s"${maxTs.getTime - hourMs} ms < latest late window end " +
           s"$ceilCutoffMs ms — the events fixture must span ≥ 3 hours")
-      def runOnce(): Unit = {
-        val stream = s.readStream.schema(ev.schema).parquet(d.in)
-        graft.streaming.EventStreams.sinkViaForeachBatch(
-            graft.streaming.EventStreams.tumblingCounts(stream), d.out)
-          .option("checkpointLocation", d.ckpt)
-          .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      }
+      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
+        .sinkViaForeachBatch(EventStreams.tumblingCounts(
+          s.readStream.schema(ev.schema).parquet(d.in)), d.out)
+        .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(onTime, s"${d.in}/a_ontime.parquet")
       runOnce() // batch 0: on-time; commits watermark = max(ts) - 1h
       StreamReplay.stage(late, s"${d.in}/b_late.parquet")
@@ -593,20 +563,12 @@ object EventQueries {
     */
   private val e18 = Q(
     "e18_stream_fmgws_equiv",
-    (s, dir) => {
-      val sink = replayToMemorySink(s, dir, "stream_fmgws", "update",
-        stateRows = est.approxKeys(s, dir, "user_id"))(
-        ev => graft.streaming.EventStreams.runningUserTotals(ev).toDF())
-      val w = Window.partitionBy("user_id").orderBy(col("n_events").desc)
-      sink.withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("n_events"),
-          round(col("total_value"), 4).as("total_value"))
-        .orderBy("user_id")
+    (s, dir) => withStateSizedPartitions(s,
+        expectedStateRows = est.approxKeys(s, dir, "user_id")) {
+      finalUserTotals(StreamReplay.toMemory(EventStreams.runningUserTotals(
+        StreamReplay.tableStream(s, dir, "events")).toDF(), "fmgws", "update").rows)
     },
-    Some("""SELECT user_id, count(*) AS n_events,
-                   round(sum(value), 4) AS total_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(userTotalsSql))
 
   /** STREAM-STREAM join (the last big Structured Streaming feature
     * class, driver-verified): clicks and purchases — two watermarked
@@ -624,20 +586,8 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.joinBufferRows(s, dir,
           Seq("click", "purchase"))) {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val ev = graft.ops.Tables.normalizeTs(
-        s.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
-      val name = s"stream_ss_join_${streamRun.incrementAndGet()}"
-      val q = StreamReplay.attributionJoin(ev)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name)
+      StreamReplay.toMemory(StreamReplay.attributionJoin(
+          StreamReplay.tableStream(s, dir, "events")), "ss_join", "append").rows
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
             .as("gap_us"))
@@ -795,10 +745,10 @@ object EventQueries {
     */
   private val e20 = Q(
     "e20_stream_dedup_equiv",
-    (s, dir) => {
-      replayToMemorySink(s, dir, "stream_dedup", "append",
-        stateRows = est.approxKeys(s, dir, "concat(user_id, '|', event_type)"))(
-        graft.streaming.EventStreams.dedupWithinWatermark)
+    (s, dir) => withStateSizedPartitions(s, expectedStateRows =
+        est.approxKeys(s, dir, "concat(user_id, '|', event_type)")) {
+      StreamReplay.toMemory(EventStreams.dedupWithinWatermark(
+          StreamReplay.tableStream(s, dir, "events")), "dedup", "append").rows
         .groupBy("user_id", "event_type")
         .agg(count(lit(1)).as("n_emitted"))
         .orderBy("user_id", "event_type")
@@ -821,13 +771,13 @@ object EventQueries {
     */
   private val e21 = Q(
     "e21_stream_static_enrich",
-    (s, dir) => {
+    // broadcast join: no state store -> rule floor
+    (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       val dim = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
-      replayToMemorySink(s, dir, "stream_enrich", "append",
-        stateRows = 0L)(ev => // broadcast join: no state store
-        graft.streaming.EventStreams
-          .enrichWithDim(ev, dim, "user_id", "c_custkey"))
+      StreamReplay.toMemory(EventStreams.enrichWithDim(
+          StreamReplay.tableStream(s, dir, "events"), dim, "user_id", "c_custkey"),
+        "enrich", "append").rows
         .withColumn("segment",
           coalesce(col("c_mktsegment"), lit("UNMATCHED")))
         .groupBy("segment")
@@ -908,31 +858,21 @@ object EventQueries {
     "e23_stream_rate_limit",
     // stateless passthrough: pacing proof, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
-      import org.apache.spark.sql.streaming.Trigger
-      val d = StreamReplay.dirs(s, s"graft_rate_${streamRun.incrementAndGet()}")
-      val proj = Seq("event_id", "user_id", "event_type", "value")
-      val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
+      val d = StreamReplay.dirs(s, "graft_e23")
+      val ev = passthrough(Tables.load(s, dir, "events"))
       for (i <- 0 to 3)
         StreamReplay.stage(ev.filter(col("event_id") % 4 === i), s"${d.in}/q$i.parquet")
-      graft.streaming.EventStreams.sinkViaForeachBatch(
+      StreamReplay.runToEnd(EventStreams.sinkViaForeachBatch(
           s.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1).parquet(d.in), d.out)
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-      val bids = s.read.parquet(d.out)
-        .select(col("batch_id").cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSet
+        .option("checkpointLocation", d.ckpt))
+      val bids = StreamReplay.batchIds(s, d.out).collect().toSet
       require(bids == Set(0L, 1L, 2L, 3L),
         s"rate limit broken: batch ids $bids (expected {0,1,2,3} — " +
           "one micro-batch per staged file)")
-      s.read.parquet(d.out)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-        .orderBy("event_type")
+      typeRollup(s.read.parquet(d.out))
     },
-    Some("""SELECT event_type, count(*) AS n,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(typeRollupSql))
 
   /** E24 (X151): STREAM-STREAM LEFT OUTER join — the attribution join
     * including the clicks that never converted. Outer results are the
@@ -957,30 +897,20 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.joinBufferRows(s, dir,
           Seq("click", "purchase"))) {
-      import org.apache.spark.sql.streaming.Trigger
-      val d = StreamReplay.dirs(s, s"graft_sslo_${streamRun.incrementAndGet()}")
+      val d = StreamReplay.dirs(s, "graft_e24")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-      def sentinels(hoursAhead: Long) = {
-        import s.implicits._
-        val t = new java.sql.Timestamp(maxTs.getTime + hoursAhead * 3600000L)
-        Seq((-1L, t, -1L, "click"), (-2L, t, -1L, "purchase"))
-          .toDF("event_id", "ts", "user_id", "event_type")
-      }
-      def runOnce(): Unit = graft.streaming.EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
         .sinkViaForeachBatch(StreamReplay.attributionJoin(
           s.readStream.schema(ev.schema).parquet(d.in), "left_outer"), d.out)
         .outputMode("append") // stream-stream joins run only in append
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(ev, s"${d.in}/a_events.parquet")
       runOnce() // inner matches emit as found; outer rows still held
-      StreamReplay.stage(sentinels(10), s"${d.in}/b_sentinel1.parquet")
-      runOnce() // advances max event time; watermark commits behind it
-      StreamReplay.stage(sentinels(20), s"${d.in}/c_sentinel2.parquet")
-      runOnce() // eviction batch: every real unmatched click emits null
+      // eviction: every real unmatched click emits its null-extended row
+      StreamReplay.sentinelRounds(s, d.in, maxTs)(runOnce())
       s.read.parquet(d.out)
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("click_id"), col("purchase_id"),
@@ -1627,20 +1557,15 @@ object EventQueries {
     "e37_file_sink_txn_log",
     // stateless passthrough: commit-log proof, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
-      import org.apache.spark.sql.streaming.Trigger
       import org.apache.hadoop.fs.Path
-      val d = StreamReplay.dirs(s, s"graft_fsink_${streamRun.incrementAndGet()}")
-      val proj = Seq("event_id", "user_id", "event_type", "value")
-      val ev = Tables.load(s, dir, "events").select(proj.map(col): _*)
-      def runOnce(): Unit = {
-        val q = s.readStream.schema(ev.schema).parquet(d.in)
+      val d = StreamReplay.dirs(s, "graft_e37")
+      val ev = passthrough(Tables.load(s, dir, "events"))
+      def runOnce(): Unit = StreamReplay.runToEnd(
+        s.readStream.schema(ev.schema).parquet(d.in)
           .writeStream.format("parquet")
           .option("path", d.out)
           .option("checkpointLocation", d.ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .outputMode("append"))
       val half0 = ev.filter(col("event_id") % 2 === 0)
       StreamReplay.stage(half0, s"${d.in}/half0.parquet")
       runOnce() // batch 0 commits half0 into the sink's metadata log
@@ -1654,14 +1579,9 @@ object EventQueries {
         "file sink wrote no _spark_metadata commit log")
       // Read THROUGH the sink (Spark detects _spark_metadata and lists
       // from the log, not the directory) — the orphan must not count.
-      s.read.parquet(d.out)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-        .orderBy("event_type")
+      typeRollup(s.read.parquet(d.out))
     },
-    Some("""SELECT event_type, count(*) AS n,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1 ORDER BY 1"""))
+    Some(typeRollupSql))
 
   /** X287 e38: APPEND-MODE windowed aggregation through the FILE SINK —
     * the production pattern for landing finalized hourly aggregates in
@@ -1673,7 +1593,7 @@ object EventQueries {
     * only the max-ts rows) drive the watermark so that after the last
     * run every window ending ≤ max(ts) − 1h is finalized and emitted,
     * while the open tail remains withheld (asserted loudly). The cut is
-    * max-based, NOT one-batch-lagged: Trigger.AvailableNow runs a final
+    * max-based, NOT one-batch-lagged: an AvailableNow trigger runs a final
     * state-eviction batch after the watermark advances past the last
     * data — round-9 finding, caught by the explicit boundary assertion
     * below on the sf0.001 dataset, where the sink held exactly one more
@@ -1691,8 +1611,7 @@ object EventQueries {
     "e38_append_window_file_sink",
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.hourWindowKeys(s, dir)) {
-      import org.apache.spark.sql.streaming.Trigger
-      val d = StreamReplay.dirs(s, s"graft_append_${streamRun.incrementAndGet()}")
+      val d = StreamReplay.dirs(s, "graft_e38")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val b = ev.agg(min("ts").as("mn"), max("ts").as("mx")).first()
@@ -1712,14 +1631,12 @@ object EventQueries {
         "append-withhold proof is vacuous: need all three deliveries")
       def stageAndRun(part: DataFrame, name: String): Unit = {
         StreamReplay.stage(part, s"${d.in}/$name.parquet")
-        val stream = s.readStream.schema(ev.schema).parquet(d.in)
-        val q = graft.streaming.EventStreams.tumblingCounts(stream)
+        StreamReplay.runToEnd(EventStreams.tumblingCounts(
+            s.readStream.schema(ev.schema).parquet(d.in))
           .writeStream.format("parquet")
           .option("path", d.out)
           .option("checkpointLocation", d.ckpt)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .outputMode("append"))
       }
       stageAndRun(early, "a_early")
       stageAndRun(mid, "b_mid")
@@ -1784,34 +1701,27 @@ object EventQueries {
     // one log-sized sketch row per key
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.approxKeys(s, dir, "event_type")) {
-      import org.apache.spark.sql.streaming.Trigger
       withRocksDbStateStore(s) {
-        val d = StreamReplay.dirs(s, s"graft_e39_${streamRun.incrementAndGet()}")
+        val d = StreamReplay.dirs(s, "graft_e39")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_type"), col("value").cast("double").as("v"),
             col("ts"), col("event_id"))
         // three time-ordered chunks, replayed in staging order
         val chunked = ev.withColumn("chunk",
           ntile(3).over(Window.orderBy("ts", "event_id")))
+        val staged = chunked.select("chunk", "event_type", "v")
         for (c <- 1 to 3)
-          StreamReplay.stage(chunked.filter(col("chunk") === c)
-            .select("event_type", "v"), f"${d.in}/chunk_$c%02d.parquet")
-        val schema = s.read.parquet(s"${d.in}/chunk_01.parquet").schema
-        val name = s"e39_sink_${streamRun.incrementAndGet()}"
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(d.in)
-        val q = graft.streaming.EventStreams.streamingTypeQuantiles(stream)
-          .toDF().writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val live = q.recentProgress.count(_.numInputRows > 0)
+          StreamReplay.stage(staged.filter(col("chunk") === c).drop("chunk"),
+            f"${d.in}/chunk_$c%02d.parquet")
+        val sink = StreamReplay.toMemory(EventStreams.streamingTypeQuantiles(
+          s.readStream.schema(staged.drop("chunk").schema)
+            .option("maxFilesPerTrigger", "1").parquet(d.in)).toDF(), "e39", "update")
+        val live = sink.query.recentProgress.count(_.numInputRows > 0)
         require(live == 3,
           s"e39 expected 3 non-empty micro-batches (one per staged " +
             s"chunk), got $live — sketch-state persistence across " +
             "batches is not being exercised")
-        val w = Window.partitionBy("event_type").orderBy(col("n").desc)
-        val fin = s.table(name).withColumn("rk", row_number().over(w))
-          .filter(col("rk") === 1)
+        val fin = latestPerKey(sink.rows, "event_type", "n")
           .select(col("event_type"), col("n"), col("q50"), col("q95"))
         val est = fin.select(col("event_type"), col("n"),
           explode(map(lit(0.5), col("q50"), lit(0.95), col("q95")))
@@ -1892,31 +1802,26 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s,
         expectedStateRows = est.approxKeys(s, dir, "source",
           table = "documents")) {
-      import org.apache.spark.sql.streaming.Trigger
       withRocksDbStateStore(s) {
-        val in = StreamReplay.dirs(s, s"graft_e40_${streamRun.incrementAndGet()}").in
+        val in = StreamReplay.dirs(s, "graft_e40").in
         val d = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             graft.ops.Corpus.fingerprint(col("text")).as("fp"))
         val chunked = d.withColumn("chunk",
           ntile(3).over(Window.orderBy("doc_id")))
+        val staged = chunked.select("chunk", "source", "doc_id", "fp")
         for (c <- 1 to 3)
-          StreamReplay.stage(chunked.filter(col("chunk") === c)
-            .select("source", "doc_id", "fp"), f"$in/chunk_$c%02d.parquet")
-        val schema = s.read.parquet(s"$in/chunk_01.parquet").schema
-        val name = s"e40_sink_${streamRun.incrementAndGet()}"
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(in)
-        val q = graft.streaming.EventStreams.streamingBloomAdmission(stream)
-          .toDF().writeStream.format("memory").queryName(name)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        val live = q.recentProgress.count(_.numInputRows > 0)
+          StreamReplay.stage(staged.filter(col("chunk") === c).drop("chunk"),
+            f"$in/chunk_$c%02d.parquet")
+        val sink = StreamReplay.toMemory(EventStreams.streamingBloomAdmission(
+          s.readStream.schema(staged.drop("chunk").schema)
+            .option("maxFilesPerTrigger", "1").parquet(in)).toDF(), "e40", "update")
+        val live = sink.query.recentProgress.count(_.numInputRows > 0)
         require(live == 3,
           s"e40 expected 3 non-empty micro-batches (one per staged " +
             s"chunk), got $live — bloom-state persistence across " +
             "batches is not being exercised")
-        val admits = s.table(name)
+        val admits = sink.rows
           .select(col("doc_id"), col("source"), col("admit"))
         val firstFp = d.groupBy("source", "fp")
           .agg(min("doc_id").as("ffd"))

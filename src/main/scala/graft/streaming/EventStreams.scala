@@ -310,23 +310,10 @@ object EventStreams {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession()
-    // file-source stream needs an explicit schema; reuse the batch
-    // reader's (with the same nanos->micros ts normalization)
-    val batch = graft.ops.Tables.load(spark, sfDir, "events")
-    // file-source streams take a directory; select just the events
-    // table out of the sf dir with a glob filter
-    val stream = graft.ops.Tables.normalizeTs(spark.readStream
-      .schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir))
-    val q = tumblingCounts(stream).writeStream
-      .format("memory").queryName("tumbling")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.sql("SELECT count(*) FROM tumbling").first().getLong(0)
-    val batched = tumblingCounts(batch).count()
+    val streamed = StreamReplay.toMemory(tumblingCounts(
+      StreamReplay.tableStream(spark, sfDir, "events")), "tumbling", "complete")
+      .rows.count()
+    val batched = tumblingCounts(graft.ops.Tables.load(spark, sfDir, "events")).count()
     println(s"STREAM tumbling_rows=$streamed batch_rows=$batched " +
       (if (streamed == batched) "OK" else "MISMATCH"))
     spark.stop()

@@ -1,14 +1,19 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.ops.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** The one way the streaming proofs and probes stage and replay files:
   * a clean `in/out/ckpt` layout, fixtures staged as single flat parquet
-  * files a file-source stream lists, the click→purchase attribution
-  * join they replay, and the session confs a replay pins around its
-  * body.
+  * files a file-source stream lists, a base table as a stream, the
+  * run-to-end of a replay and its memory-sink and batch-id read-backs,
+  * the click→purchase attribution join they replay with its eviction
+  * sentinels, and the session confs a replay pins around its body.
   */
 object StreamReplay {
 
@@ -30,8 +35,8 @@ object StreamReplay {
 
   /** Writes `df` as the ONE parquet file `path` (replacing it): the
     * file-source stream lists flat files, and the testdata contract is
-    * one file per table (e15 streams with pathGlobFilter=events.parquet,
-    * which never matches part files inside a directory). coalesce(1)
+    * one file per table ([[tableStream]] selects it by file name, which
+    * never matches part files inside a directory). coalesce(1)
     * is fixture staging — never copy it into a real sink, where one
     * task would serialize the whole write. Sequential calls give
     * strictly increasing mod-times, so the file source replays staged
@@ -54,6 +59,49 @@ object StreamReplay {
     fs.delete(tmp, true)
   }
 
+  /** The base table `name` of the sf dir `dir` as a file-source stream:
+    * the stream lists the directory and `pathGlobFilter` selects the
+    * table's one flat file. It declares the file's own schema, memoized
+    * by [[Tables.load]] (no inference job), and then normalizes `ts`
+    * exactly as the batch read does. */
+  def tableStream(s: SparkSession, dir: String, name: String): DataFrame =
+    Tables.normalizeTs(s.readStream.schema(Tables.fileSchema(s, dir, name))
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir))
+
+  /** Starts `w` under an AvailableNow trigger (every file present at
+    * start, then stop) and blocks until it is done. The finished query
+    * is returned for its `recentProgress`, one entry per micro-batch. */
+  def runToEnd(w: DataStreamWriter[_]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** A finished memory-sink replay: the sink's rows and its query. */
+  final case class MemoryReplay(rows: DataFrame, query: StreamingQuery)
+
+  private val sinkRun = new AtomicInteger(0)
+
+  /** Runs `stream` to the end into a memory sink in output `mode`. The
+    * sink is named `stream_<tag>_<n>`: unique per call, because a sink's
+    * rows stay readable under its name after the query stops and a row
+    * may run again before they are read, and `stream_`-prefixed so that
+    * [[graft.Runner.drainStreams]] drops it. */
+  def toMemory(stream: DataFrame, tag: String, mode: String): MemoryReplay = {
+    val name = s"stream_${tag}_${sinkRun.incrementAndGet()}"
+    val q = runToEnd(stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode))
+    MemoryReplay(stream.sparkSession.table(name), q)
+  }
+
+  /** The distinct batch ids an idempotent foreachBatch sink under `out`
+    * holds, as longs (partition inference types `batch_id` as int on
+    * read-back). */
+  def batchIds(s: SparkSession, out: String): Dataset[Long] =
+    s.read.parquet(out).select(col("batch_id").cast("long")).distinct()
+      .as(Encoders.scalaLong)
+
   /** Clicks joined to the purchases of the same user within 30 minutes
     * AFTER the click, both sides watermarked at 1 hour: only the
     * watermark plus the time-range bound lets the engine drop buffered
@@ -75,6 +123,24 @@ object StreamReplay {
         col("p_ts") >= col("click_ts") &&
         col("p_ts") <= col("click_ts") + expr("interval 30 minutes"),
       joinType)
+  }
+
+  /** Drives the stream-stream attribution join's watermark past every
+    * real row's eviction deadline: stages a far-future click/purchase
+    * pair (user −1, ids −1/−2) `+10 h` after `maxTs` into `in` and runs
+    * `run`, then again at `+20 h`. The watermark for batch N comes from
+    * batch N−1's max event time, so one round is not enough: the second
+    * forces the eviction batch to run. Filter `user_id >= 0` on the
+    * output to drop the sentinels. */
+  def sentinelRounds(s: SparkSession, in: String,
+      maxTs: java.sql.Timestamp)(run: => Unit): Unit = {
+    import s.implicits._
+    for (h <- Seq(10L, 20L)) {
+      val t = new java.sql.Timestamp(maxTs.getTime + h * 3600000L)
+      stage(Seq((-1L, t, -1L, "click"), (-2L, t, -1L, "purchase"))
+        .toDF("event_id", "ts", "user_id", "event_type"), s"$in/sentinel_$h.parquet")
+      run
+    }
   }
 
   /** Runs `body` with spark.sql.shuffle.partitions pinned to `n`,

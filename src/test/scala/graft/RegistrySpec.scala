@@ -67,6 +67,13 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sites.size == 1 && sites.head.startsWith(home + ":"), sites.mkString("\n"))
   }
 
+  test("table streams and run-to-end triggers live in StreamReplay alone") {
+    val home = "src/main/scala/graft/streaming/StreamReplay.scala"
+    val sites = Seq("pathGlob" + "Filter", "Trigger." + "AvailableNow")
+      .flatMap(sitesOf).filter(_.startsWith("src/main/"))
+    assert(sites.nonEmpty && sites.forall(_.startsWith(home + ":")), sites.mkString("\n"))
+  }
+
   test("the file: filesystem is installed by graft.io.LocalFs alone, never by a session conf") {
     val home = "src/main/scala/graft/io/LocalFs.scala"
     val sites = Seq("fs." + "file.impl", "fs.AbstractFileSystem." + "file.impl")

@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 import graft.streaming.{EventStreams, StreamReplay}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +19,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** One registry row on sf0.001, run as Bench runs it. */
+  private def runRow(name: String): Long =
+    Runner.run(spark)(SparkEntry.queries(name)(spark, sfDir).count())
+      .fold(why => fail(s"$name failed: $why"), identity)
+
   private val events = Seq(
     Ev(1, ts("2024-01-01 00:05:00"), 1, "click", 1.0),
     Ev(2, ts("2024-01-01 00:45:00"), 1, "click", 2.0),
@@ -32,16 +36,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(events: _*)
-    val q = EventStreams.tumblingCounts(mem.toDF()).writeStream
-      .format("memory").queryName("t_spec")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.sql(
-      "SELECT window_start, event_type, n, sum_value FROM t_spec " +
-        "ORDER BY window_start, event_type")
-      .collect().map(_.toSeq).toSeq
+    val streamed = StreamReplay.toMemory(EventStreams.tumblingCounts(mem.toDF()),
+        "t_spec", "complete").rows
+      .select("window_start", "event_type", "n", "sum_value")
+      .orderBy("window_start", "event_type").collect().map(_.toSeq).toSeq
     val batched = EventStreams.tumblingCounts(events.toDF())
       .orderBy("window_start", "event_type")
       .collect().map(_.toSeq).toSeq
@@ -62,15 +60,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Ev(2, ts("2024-01-01 00:25:00"), 1, "click", 2.0),
       Ev(3, ts("2024-01-01 00:30:00"), 1, "view", 3.0),
       Ev(4, ts("2024-01-01 00:40:00"), 2, "click", 4.0))
-    val q = EventStreams.dedupWithinWatermark(mem.toDF()).writeStream
-      .format("memory").queryName("dd_spec")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val out = spark.sql(
-      "SELECT user_id, event_type, count(*) AS n FROM dd_spec GROUP BY 1, 2 " +
-        "ORDER BY 1, 2")
+    val out = StreamReplay.toMemory(EventStreams.dedupWithinWatermark(mem.toDF()),
+        "dd_spec", "append").rows
+      .groupBy("user_id", "event_type").count().orderBy("user_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     assert(out == Seq((1L, "click", 1L), (1L, "view", 1L), (2L, "click", 1L)))
   }
@@ -80,15 +72,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
     mem.addData(events: _*)
-    val q = EventStreams.slidingCounts(mem.toDF()).writeStream
-      .format("memory").queryName("sl_spec")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val streamed = spark.sql(
-      "SELECT window_start, event_type, n, sum_value FROM sl_spec " +
-        "ORDER BY window_start, event_type").collect().map(_.toSeq).toSeq
+    val streamed = StreamReplay.toMemory(EventStreams.slidingCounts(mem.toDF()),
+        "sl_spec", "complete").rows
+      .select("window_start", "event_type", "n", "sum_value")
+      .orderBy("window_start", "event_type").collect().map(_.toSeq).toSeq
     val batched = EventStreams.slidingCounts(events.toDF())
       .orderBy("window_start", "event_type").collect().map(_.toSeq).toSeq
     assert(streamed == batched)
@@ -172,8 +159,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("foreachBatch sink lands every micro-batch in parquet with batch ids") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_fb").toString + "/agg"
+    val out = StreamReplay.dirs(spark, "graft_spec_fb").out
     val mem = MemoryStream[Ev]
     val q = EventStreams.sinkViaForeachBatch(
       EventStreams.tumblingCounts(mem.toDF()), out).start()
@@ -184,7 +170,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.stop()
     val landed = spark.read.parquet(out)
     // both micro-batches landed, tagged distinctly
-    assert(landed.select("batch_id").distinct().count() == 2)
+    assert(StreamReplay.batchIds(spark, out).count() == 2)
     // the LAST update per (window, type) equals the batch answer
     val last = landed
       .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
@@ -250,6 +236,65 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // lag with which the watermark trails event time)
     assert(bounded.max <= 4L, bounded.mkString(","))
     assert(bounded.last <= 4L, bounded.mkString(","))
+  }
+
+  test("the events table stream declares the file's schema, normalizes ts " +
+      "like Tables.load, and starts no job once the table is resolved") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val resolved = graft.ops.Tables.load(spark, sfDir, "events")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("table_stream", "build the events stream")
+    val stream = StreamReplay.tableStream(spark, sfDir, "events")
+    // the bus delivers in order: the fence job's start follows every earlier one
+    sc.setJobGroup("fence", "flush the listener bus")
+    spark.range(1).count()
+    sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30000000000L
+    while (!groups.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+    sc.removeSparkListener(listener)
+    assert(groups.contains("fence") && !groups.contains("table_stream"), groups)
+    assert(stream.queryExecution.logical.collectLeaves().map(_.schema) ==
+      Seq(spark.read.parquet(s"$sfDir/events.parquet").schema))
+    assert(stream.schema == resolved.schema)
+  }
+
+  test("the events stream replayed into a memory sink equals the batch table") {
+    import org.apache.spark.sql.functions._
+    // a sum of row hashes ignores row order
+    def rowsAndHash(df: org.apache.spark.sql.DataFrame) = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toSeq.sorted.map(col): _*).cast("decimal(38,0)"))).first()
+    val replayed = StreamReplay.toMemory(
+      StreamReplay.tableStream(spark, sfDir, "events"), "spec_events", "append").rows
+    val want = rowsAndHash(graft.ops.Tables.load(spark, sfDir, "events"))
+    assert(want.getLong(0) > 0 && rowsAndHash(replayed) == want)
+    Runner.drainStreams(spark)
+  }
+
+  test("Runner.drainStreams drops the memory-sink views e39 and e40 leave") {
+    def views() = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = views()
+    Seq("e39_stream_quantile_sketch", "e40_stream_bloom_dedup").foreach(runRow)
+    val left = views() -- before
+    assert(left.size == 2, s"expected one sink view per row, got $left")
+    Runner.drainStreams(spark)
+    assert(views() == before)
+  }
+
+  test("a streaming proof row reuses one scratch dir across calls") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scratch() = tmp.list().filter(_.startsWith("graft_")).toSet
+    runRow("e16_stream_checkpoint_resume")
+    val once = scratch()
+    runRow("e16_stream_checkpoint_resume")
+    assert(once.contains("graft_e16"), once)
+    assert(scratch() == once)
   }
 
   test("data-derived state estimates reproduce the r13 hand estimates' " +

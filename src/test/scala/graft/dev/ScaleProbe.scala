@@ -5,7 +5,7 @@ import graft.ops.Tables
 import graft.streaming.{EventStreams, StreamReplay}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable.LinkedHashMap
 
@@ -700,9 +700,11 @@ object ScaleProbe {
     * the watermark advances the same amount per micro-batch at every
     * scale, so the batch COUNT grows m× while per-batch work stays
     * constant (a long-running production stream's shape, compressed).
-    * Returns the dirs and the chunk schema. */
-  private def stageChunks(spark: SparkSession, m: Int, name: String,
-      cols: String*): (StreamReplay.Dirs, org.apache.spark.sql.types.StructType) = {
+    * Returns the replay: `xform` over the chunk stream, run to the end
+    * into a noop sink checkpointed at `<name>/<ckpt>`, as its per-batch
+    * progress (nChunks <= 48 < the 100-entry cap). */
+  private def stageChunks(spark: SparkSession, m: Int, name: String, cols: String*)
+      : (String, String, DataFrame => DataFrame) => Array[StreamingQueryProgress] = {
     val d = StreamReplay.dirs(spark, name)
     val ev = events(rawEvents(spark).select(cols.map(col): _*), m)
     val mn = ev.agg(min("us")).first().getLong(0) // replica 0 is unshifted
@@ -716,7 +718,11 @@ object ScaleProbe {
       StreamReplay.stage(staged.filter(col("chunk") === cid).drop("chunk"),
         f"${d.in}/chunk_$cid%04d.parquet")
     staged.unpersist()
-    (d, spark.read.parquet(s"${d.in}/chunk_0000.parquet").schema)
+    val schema = staged.drop("chunk").schema
+    (ckpt, mode, xform) => StreamReplay.runToEnd(xform(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(d.in)).writeStream
+      .format("noop").outputMode(mode)
+      .option("checkpointLocation", s"${d.base}/$ckpt")).recentProgress
   }
 
   /** Streaming-family scaling (round-10 ask): the stream gets m× LONGER
@@ -740,19 +746,10 @@ object ScaleProbe {
     */
   private def streamProbe(): Unit = withSession { spark =>
     for (m <- Seq(1, 2, 4, 8)) {
-      val (d, schema) = stageChunks(spark, m, s"graft_scale_stream_x$m",
+      val replay = stageChunks(spark, m, s"graft_scale_stream_x$m",
         "event_id", "ts", "user_id", "event_type", "value")
       def run(name: String, mode: String)(xform: DataFrame => DataFrame): Unit = {
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(d.in)
-        val out = timed(spark, warm = false) {
-          val q = xform(stream).writeStream
-            .format("noop").outputMode(mode)
-            .option("checkpointLocation", s"${d.base}/ckpt_$name")
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          q.recentProgress // nChunks <= 48 < the 100-entry cap
-        }
+        val out = timed(spark, warm = false)(replay(s"ckpt_$name", mode, xform))
         println(out.fold(why => f"STREAM x$m%-2d $name%-14s FAILED $why",
           { case (prog, sec) =>
             val perBatch = prog.map(_.stateOperators.map(_.numRowsTotal).sum)
@@ -786,7 +783,7 @@ object ScaleProbe {
     */
   private def streamPartsProbe(): Unit = withSession { spark =>
     for (m <- Seq(1, 8)) {
-      val (d, schema) = stageChunks(spark, m, s"graft_scale_sparts_x$m",
+      val replay = stageChunks(spark, m, s"graft_scale_sparts_x$m",
         "event_id", "ts", "user_id", "event_type")
       // the rule's derivation for this workload (measured buffered join
       // rows ≈ 6.9k at 1×, grows with the watermark horizon, not m)
@@ -795,16 +792,8 @@ object ScaleProbe {
         "(expectedState=7000)")
       for (parts <- (Seq(auto) ++ Seq(4, 8, 16, 32)).distinct) {
         val out = StreamReplay.withShufflePartitions(spark, parts) {
-          timed(spark, warm = false) {
-            val stream = spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(d.in)
-            val q = StreamReplay.attributionJoin(stream).writeStream
-              .format("noop").outputMode("append")
-              .option("checkpointLocation", s"${d.base}/ckpt_p$parts")
-              .trigger(Trigger.AvailableNow()).start()
-            q.awaitTermination()
-            q.recentProgress
-          }
+          timed(spark, warm = false)(
+            replay(s"ckpt_p$parts", "append", StreamReplay.attributionJoin(_)))
         }
         println(out.fold(why => f"SPARTS x$m%-2d parts=$parts%-3d FAILED $why",
           { case (prog, sec) =>
@@ -861,28 +850,18 @@ object ScaleProbe {
         StreamReplay.stage(tsUs.filter(col("tsus") >= bounds(i) &&
           col("tsus") < bounds(i + 1)).drop("tsus"), s"${d.in}/c$i.parquet")
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-      def sentinels(hoursAhead: Long) = {
-        import spark.implicits._
-        val t = new java.sql.Timestamp(maxTs.getTime + hoursAhead * 3600000L)
-        Seq((-1L, t, -1L, "click"), (-2L, t, -1L, "purchase"))
-          .toDF("event_id", "ts", "user_id", "event_type")
-      }
-      def runOnce(): Unit = EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
         .sinkViaForeachBatch(StreamReplay.attributionJoin(spark.readStream
           .schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(d.in),
           "left_outer"), d.out)
         .outputMode("append") // stream-stream joins run only in append
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .option("checkpointLocation", d.ckpt))
       val t0 = System.nanoTime()
       runOnce() // 8 event-time-ordered micro-batches, watermark advancing
-      StreamReplay.stage(sentinels(10), s"${d.in}/s1.parquet"); runOnce()
-      StreamReplay.stage(sentinels(20), s"${d.in}/s2.parquet"); runOnce()
+      StreamReplay.sentinelRounds(spark, d.in, maxTs)(runOnce())
       val sec = (System.nanoTime() - t0) / 1e9
-      val out = spark.read.parquet(d.out)
-      val nBatches = out.select(col("batch_id").cast("long"))
-        .distinct().count()
-      val got = out.filter(col("user_id") >= 0).count()
+      val nBatches = StreamReplay.batchIds(spark, d.out).count()
+      val got = spark.read.parquet(d.out).filter(col("user_id") >= 0).count()
       // sanity: the streamed outer join must emit exactly the batch
       // left-join's row count at the same scale
       val want = ev.filter(col("event_type") === "click").as("c")

@@ -15,7 +15,6 @@ import org.apache.hadoop.fs.{AbstractFileSystem, ChecksumException, CreateFlag, 
   FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's `file:` filesystem ([[LocalFs]]) behaves like stock
@@ -109,10 +108,9 @@ class LocalFsSpec extends AnyFunSuite {
       val d = StreamReplay.dirs(spark, "graft_localfs_ckpt")
       val rows = spark.range(0, 100).select(col("id").as("event_id"))
       StreamReplay.stage(rows, s"${d.in}/part0.parquet")
-      spark.readStream.schema(rows.schema).parquet(d.in)
+      StreamReplay.runToEnd(spark.readStream.schema(rows.schema).parquet(d.in)
         .writeStream.format("parquet").option("path", d.out)
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        .option("checkpointLocation", d.ckpt))
       val log = Paths.get(d.ckpt, "offsets", "0")
       assert(Files.exists(Paths.get(d.ckpt, "offsets", ".0.crc")))
       val raf = new RandomAccessFile(log.toFile, "rw")

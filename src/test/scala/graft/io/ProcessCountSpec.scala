@@ -14,7 +14,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Counts the processes local file I/O starts, not the time it takes:
@@ -88,11 +87,11 @@ object ProcessCountProbe {
       val d = StreamReplay.dirs(spark, "graft_proc_count")
       val ev = spark.range(0, 1500).select(col("id").as("event_id"),
         timestamp_seconds(lit(1700000000L) + col("id")).as("ts"))
-      def runOnce(): Unit = spark.readStream.schema(ev.schema).parquet(d.in)
-        .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet").option("path", d.out)
-        .option("checkpointLocation", d.ckpt)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      def runOnce(): Unit = StreamReplay.runToEnd(
+        spark.readStream.schema(ev.schema).parquet(d.in)
+          .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
+          .writeStream.format("parquet").option("path", d.out)
+          .option("checkpointLocation", d.ckpt))
       val first = ev.filter(col("event_id") < 1000)
       StreamReplay.stage(first.union(first), s"${d.in}/part0.parquet")
       runOnce()
