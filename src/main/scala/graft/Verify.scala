@@ -21,6 +21,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: $why")
           failed(name) = why
         }
+        Runner.drainStreams(spark)
       }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

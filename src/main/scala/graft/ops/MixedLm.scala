@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Per-group sufficient statistics for a linear mixed model: everything
@@ -46,15 +46,22 @@ case class LmmFit(beta: Array[Double], psi: Array[Array[Double]],
   * (N−p)-style degrees-of-freedom correction that plain ML lacks.
   *
   * Scale: the observation-level data is touched exactly once
-  * ([[groupStats]], a single shuffle keyed by group). Every EM
-  * iteration runs two aggregate passes over the GROUP-cardinality
-  * stats frame (distributed map + p²-sized reduce); the driver holds
-  * β, Ψ, σ², C_β — p²+q²+1 scalars, never group-cardinality data. At
-  * 100 TB the stats frame is #locations rows, not #observations.
+  * ([[groupStats]], a single shuffle keyed by group), whose per-group
+  * rows (p²+p+2 doubles each) are collected once, sorted by group key.
+  * EM runs as driver loops over them: at group cardinality a Spark pass
+  * per iteration buys nothing, and a fixed summation order makes the
+  * fit reproducible to the last bit. The collect is capped at
+  * [[MaxGroups]] and fails loud past it: at 100 TB the table is
+  * #locations rows, not #observations, but nothing else bounds it.
   */
 object MixedLm {
 
-  /** One pass over `df` → per-group Gram/moment statistics.
+  /** The most groups [[groupStats]] collects: ~18 MB of doubles at p=4,
+    * far above the reference's ~300 locations. */
+  val MaxGroups = 100000
+
+  /** One pass over `df` → per-group Gram/moment statistics, on the
+    * driver, sorted by group key.
     *
     * Rows with a null in `yCol` or any of `xCols` are dropped HERE, not
     * left to the caller: `count` vs null-skipping `sum` would otherwise
@@ -63,9 +70,7 @@ object MixedLm {
     * statsmodels' `MixedLM(missing='drop')` does.
     */
   def groupStats(df: DataFrame, groupCol: String, yCol: String,
-      xCols: Seq[String]): Dataset[LmmGroupStats] = {
-    val spark = df.sparkSession
-    import spark.implicits._
+      xCols: Seq[String]): Array[LmmGroupStats] = {
     val p = xCols.length
     val dfc = df.na.drop(yCol +: xCols)
     val aggs =
@@ -75,17 +80,20 @@ object MixedLm {
         sum(col(c) * col(yCol)).as(s"sxy_$i") } ++
       (for (i <- 0 until p; j <- 0 until p if j >= i)
         yield sum(col(xCols(i)) * col(xCols(j))).as(s"sxx_${i}_$j"))
-    dfc.groupBy(col(groupCol).cast("string").as("g"))
+    val grouped = dfc.groupBy(col(groupCol).cast("string").as("g"))
       .agg(aggs.head, aggs.tail: _*)
-      .map { r =>
-        val sxy = Array.tabulate(p)(i => r.getAs[Double](s"sxy_$i"))
-        val sxx = Array.tabulate(p * p) { k =>
-          val (i, j) = (k / p, k % p)
-          r.getAs[Double](s"sxx_${math.min(i, j)}_${math.max(i, j)}")
-        }
-        LmmGroupStats(r.getAs[String]("g"), r.getAs[Double]("n"),
-          r.getAs[Double]("syy"), sxy, sxx)
+    val rows = grouped.limit(MaxGroups + 1).collect()
+    require(rows.length <= MaxGroups, s"MixedLm.groupStats: ${grouped.count()} " +
+      s"groups exceed the driver collect cap MaxGroups = $MaxGroups")
+    rows.map { r =>
+      val sxy = Array.tabulate(p)(i => r.getAs[Double](s"sxy_$i"))
+      val sxx = Array.tabulate(p * p) { k =>
+        val (i, j) = (k / p, k % p)
+        r.getAs[Double](s"sxx_${math.min(i, j)}_${math.max(i, j)}")
       }
+      LmmGroupStats(r.getAs[String]("g"), r.getAs[Double]("n"),
+        r.getAs[Double]("syy"), sxy, sxx)
+    }.sortBy(s => Option(s.g)) // a null key is a group too, and sorts first
   }
 
   /** EM(-REML) fit. `ridgeEps` (scaled by the largest Gram diagonal)
@@ -93,17 +101,16 @@ object MixedLm {
     * window — e.g. the simulator's TAVG column when the weather feed
     * is absent, or gov_action on an all-post-threshold slice.
     */
-  def fitEm(stats: Dataset[LmmGroupStats], p: Int, zIdx: Seq[Int],
+  def fitEm(stats: Array[LmmGroupStats], zIdx: Seq[Int],
       reml: Boolean = true, maxIters: Int = 200, tol: Double = 1e-9,
       ridgeEps: Double = 1e-8): LmmFit = {
-    val spark = stats.sparkSession
-    import spark.implicits._
+    val p = dims(stats)
     val q = zIdx.length
     val zi = zIdx.toArray
-    val totals = stats.map(s => Array(s.n, 1.0)).reduce(addVec _)
-    val bigN = totals(0); val m = totals(1)
+    val bigN = sumOver(stats)(s => Array(s.n))(0)
+    val m = stats.length.toDouble
     // init: ridged OLS β, Ψ = σ²_ols I
-    val g0 = stats.map(s => s.sxx ++ s.sxy :+ s.syy).reduce(addVec _)
+    val g0 = sumOver(stats)(s => s.sxx ++ s.sxy :+ s.syy)
     val sxxT = g0.slice(0, p * p); val sxyT = g0.slice(p * p, p * p + p)
     val eps = ridgeEps * math.max(1.0,
       (0 until p).map(i => sxxT(i * p + i)).max)
@@ -121,11 +128,9 @@ object MixedLm {
     var done = false
     while (it < maxIters && !done) {
       val psiInv = invSmall(psi)
-      val (s2c, psiC) = (sigma2, psiInv) // stable closures
-      val betaC = beta
       // ---- pass A: assemble the p×p GLS system Σ X'V⁻¹X, Σ X'V⁻¹y ----
-      val pa = stats.map { s =>
-        val lam = lambdaOf(s, zi, s2c, psiC)
+      val pa = sumOver(stats) { s =>
+        val lam = lambdaOf(s, zi, sigma2, psiInv)
         val szx = subRows(s.sxx, zi, p)          // q×p
         val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
         val lz = matMul(lam, szx, q, q, p)       // q×p: Λ Szx
@@ -137,33 +142,32 @@ object MixedLm {
             var corr = 0.0
             var k = 0
             while (k < q) { corr += szx(k * p + i) * lz(k * p + j); k += 1 }
-            out(i * p + j) = (s.sxx(i * p + j) - corr / s2c) / s2c
+            out(i * p + j) = (s.sxx(i * p + j) - corr / sigma2) / sigma2
             j += 1
           }
           var corrY = 0.0
           var k = 0
           while (k < q) { corrY += lz(k * p + i) * szy(k); k += 1 }
-          out(p * p + i) = (s.sxy(i) - corrY / s2c) / s2c
+          out(p * p + i) = (s.sxy(i) - corrY / sigma2) / sigma2
           i += 1
         }
         out
-      }.reduce(addVec _)
+      }
       val aMat = Array.tabulate(p, p)((i, j) =>
-        pa(i * p + j) + (if (i == j) eps / s2c else 0.0))
+        pa(i * p + j) + (if (i == j) eps / sigma2 else 0.0))
       val bVec = pa.slice(p * p, p * p + p)
       val betaN = LinAlg.solve(aMat, bVec)
       cBeta = invSmall(aMat)
-      val cbNow = cBeta
       // ---- pass B: Ψ and σ² M-steps (REML adds the C_β traces) ----
-      val pb = stats.map { s =>
-        val lam = lambdaOf(s, zi, s2c, psiC)
+      val pb = sumOver(stats) { s =>
+        val lam = lambdaOf(s, zi, sigma2, psiInv)
         val szz = subSquare(s.sxx, zi, p)        // q×q
         val szx = subRows(s.sxx, zi, p)
         val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
         val rz = Array.tabulate(q)(i =>          // Z'(y − Xβ)
           szy(i) - (0 until p).map(j => szx(i * p + j) * betaN(j)).sum)
         val bh = Array.tabulate(q)(i =>          // BLUP b̂ = Λ rz / σ²
-          (0 until q).map(k => lam(i * q + k) * rz(k)).sum / s2c)
+          (0 until q).map(k => lam(i * q + k) * rz(k)).sum / sigma2)
         val ebb = Array.tabulate(q * q) { k =>
           val (i, j) = (k / q, k % q); bh(i) * bh(j) + lam(k)
         }
@@ -180,10 +184,10 @@ object MixedLm {
         if (reml) {
           // D = −Λ Szx / σ² (q×p); E[bb'] += D C_β D';
           // rss += tr(C_β (X+ZD)'(X+ZD))
-          val d = matMul(lam, szx, q, q, p).map(-_ / s2c)
+          val d = matMul(lam, szx, q, q, p).map(-_ / sigma2)
           val dcb = Array.tabulate(q * p) { kk =>
             val (i, j) = (kk / p, kk % p)
-            (0 until p).map(l => d(i * p + l) * cbNow(l)(j)).sum
+            (0 until p).map(l => d(i * p + l) * cBeta(l)(j)).sum
           }
           var i = 0
           while (i < q) {
@@ -211,7 +215,7 @@ object MixedLm {
                   d(kk * p + ii) * szzd(kk * p + jj)
                 kk += 1
               }
-              extra += cbNow(jj)(ii) * gij
+              extra += cBeta(jj)(ii) * gij
               jj += 1
             }
             ii += 1
@@ -221,12 +225,12 @@ object MixedLm {
         System.arraycopy(ebb, 0, out, 0, q * q)
         out(q * q) = rss + trLZ + extra
         out
-      }.reduce(addVec _)
+      }
       val psiN = Array.tabulate(q, q)((i, j) =>
         (pb(i * q + j) + pb(j * q + i)) / (2.0 * m)) // symmetrize fp drift
       val sigma2N = math.max(1e-12, pb(q * q) / bigN)
-      val delta = (0 until p).map(i => math.abs(betaN(i) - betaC(i))).max
-        .max(math.abs(sigma2N - s2c) / (1.0 + s2c))
+      val delta = (0 until p).map(i => math.abs(betaN(i) - beta(i))).max
+        .max(math.abs(sigma2N - sigma2) / (1.0 + sigma2))
       beta = betaN; psi = psiN; sigma2 = sigma2N
       it += 1
       if (delta < tol) done = true
@@ -235,36 +239,39 @@ object MixedLm {
   }
 
   /** Per-group BLUPs at the converged fit: (g, b̂_1..b̂_q). */
-  def blups(stats: Dataset[LmmGroupStats], fit: LmmFit, p: Int,
-      zIdx: Seq[Int]): DataFrame = {
-    val spark = stats.sparkSession
-    import spark.implicits._
+  def blups(stats: Array[LmmGroupStats], fit: LmmFit,
+      zIdx: Seq[Int]): Array[(String, Array[Double])] = {
+    val p = dims(stats)
     val q = zIdx.length
     val zi = zIdx.toArray
     val psiInv = invSmall(fit.psi)
-    val (s2, betaF) = (fit.sigma2, fit.beta)
-    val ds = stats.map { s =>
-      val lam = lambdaOf(s, zi, s2, psiInv)
+    stats.map { s =>
+      val lam = lambdaOf(s, zi, fit.sigma2, psiInv)
       val szx = subRows(s.sxx, zi, p)
       val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
       val rz = Array.tabulate(q)(i =>
-        szy(i) - (0 until p).map(j => szx(i * p + j) * betaF(j)).sum)
+        szy(i) - (0 until p).map(j => szx(i * p + j) * fit.beta(j)).sum)
       val bh = Array.tabulate(q)(i =>
-        (0 until q).map(k => lam(i * q + k) * rz(k)).sum / s2)
+        (0 until q).map(k => lam(i * q + k) * rz(k)).sum / fit.sigma2)
       (s.g, bh)
     }
-    ds.select(col("_1").as("g") +:
-      (0 until q).map(i => col("_2").getItem(i).as(s"b$i")): _*)
   }
 
-  // ---- small dense helpers (executor-side, q ≤ 2, p ≤ 4) ----
-
-  private def addVec(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val out = new Array[Double](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = a(i) + b(i); i += 1 }
-    out
+  /** The covariate count p; no group is no fit. */
+  private def dims(stats: Array[LmmGroupStats]): Int = {
+    require(stats.nonEmpty, s"MixedLm: ${stats.length} groups to fit")
+    stats.head.sxy.length
   }
+
+  /** Σ of `f` over the groups, in the order of `stats`. */
+  private def sumOver(stats: Array[LmmGroupStats])(
+      f: LmmGroupStats => Array[Double]): Array[Double] = {
+    val acc = f(stats.head)
+    for (s <- stats.tail; (v, i) <- f(s).zipWithIndex) acc(i) += v
+    acc
+  }
+
+  // ---- small dense helpers (q ≤ 2, p ≤ 4) ----
 
   private def dotv(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0; var i = 0
@@ -310,14 +317,12 @@ object MixedLm {
     val p = s.sxy.length
     val a = Array.tabulate(q, q)((i, j) =>
       s.sxx(zi(i) * p + zi(j)) / sigma2 + psiInv(i)(j))
-    val inv = invSmallArr(a)
+    val inv = invSmall(a)
     Array.tabulate(q * q)(k => inv(k / q)(k % q))
   }
 
   /** Inverse via column-wise LinAlg.solve (n ≤ 4). */
-  def invSmall(a: Array[Array[Double]]): Array[Array[Double]] = invSmallArr(a)
-
-  private def invSmallArr(a: Array[Array[Double]]): Array[Array[Double]] = {
+  private def invSmall(a: Array[Array[Double]]): Array[Array[Double]] = {
     val n = a.length
     val cols = Array.tabulate(n) { j =>
       val e = new Array[Double](n); e(j) = 1.0

@@ -143,11 +143,9 @@ object CovidSimulator {
     * ([[graft.ops.MixedLm]]): random (Intercept, lag_confirmed) per
     * state, exactly the statsmodels `MixedLM(..., exog_re=[Intercept,
     * lag_confirmed], groups=state).fit()` surface the reference calls
-    * (covid_simulator.py:456-460; `.fit()` defaults to REML). Until
-    * round 9 this was a fixed-λ ridge approximation; the EM fit
-    * estimates the actual variance components, and PipelinesSpec now
-    * value-compares the per-state β against the reference's committed
-    * recover_coefs.csv golden.
+    * (covid_simulator.py:456-460; `.fit()` defaults to REML).
+    * PipelinesSpec value-compares the per-state β against the
+    * reference's committed recover_coefs.csv golden.
     *
     * `imputeNegative=false` yields the PRE-imputation table — the shape
     * the reference commits to recover_coefs.csv (the CSV is written
@@ -161,15 +159,16 @@ object CovidSimulator {
       .select((col("state") +: col("d_removed").cast("double").as("y") +:
         xs.map(c => col(c).cast("double").as(c))): _*)
       .na.drop()
-    // ONE observation-level pass → group stats; EM iterates over the
-    // state-cardinality frame only (driver holds β, Ψ, σ² — p²+q²
-    // scalars, never per-state data)
-    val stats = MixedLm.groupStats(train, "state", "y", xs).persist()
-    val fit = MixedLm.fitEm(stats, p = 4, zIdx = Seq(0, 3))
+    // ONE observation-level pass → per-state stats collected to the
+    // driver (capped at MixedLm.MaxGroups: a mis-keyed input fails loud,
+    // not OOM); EM and the BLUPs run there, no Spark job per iteration
+    val stats = MixedLm.groupStats(train, "state", "y", xs)
+    val fit = MixedLm.fitEm(stats, zIdx = Seq(0, 3))
     val beta = fit.beta
-    val rc = MixedLm.blups(stats, fit, p = 4, zIdx = Seq(0, 3))
-      .select(col("g").as("state"), lit("Intercept").as("coef_name"),
-        col("b0").as("coef_value"), col("b1").as("re_lag_confirmed"))
+    import feats.sparkSession.implicits._
+    val rc = MixedLm.blups(stats, fit, zIdx = Seq(0, 3)).toSeq
+      .map { case (g, b) => (g, "Intercept", b(0), b(1)) }
+      .toDF("state", "coef_name", "coef_value", "re_lag_confirmed")
       .withColumn("fe_Intercept", lit(beta(0)))
       .withColumn("Intercept", col("fe_Intercept") + col("coef_value"))
       .withColumn("lag_confirmed", lit(beta(3)) + col("re_lag_confirmed"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.ops.LinAlg.dot
 import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -397,7 +398,6 @@ object DedupQueries {
       // zip_with/aggregate lambdas are interpreted per pair (~36 s);
       // unrolling dim=64 into scalar Add chains stalls Catalyst
       // constraint inference for minutes.)
-      def dot(a: Column, b: Column): Column = graft.ops.LinAlg.dot(a, b)
       // e feeds both join sides; persist so the scan + interpreted
       // per-element cast + norm run once (small: vec_id + 64 doubles).
       val e = Tables.load(s, dir, "embeddings")
@@ -759,7 +759,6 @@ object DedupQueries {
   private val d11 = Q(
     "d11_semantic_dedup",
     (s, dir) => {
-      def dot(a: Column, b: Column): Column = graft.ops.LinAlg.dot(a, b)
       val cent = KMeansOps.centroids(s, dir, KMeansOps.iters, kk = 0)
       // e feeds both self-join sides; persist so the scan + k-literal
       // argmin assignment + norm run once (same pattern as d6's e)

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.LinAlg.dot
 import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,9 +61,6 @@ object KMeansOps {
     math.max(k, math.ceil(n / targetCell.toDouble).toInt)
   val adaptiveKSql: String =
     s"SELECT GREATEST($k, CAST(ceil(count(*) / $targetCell.0) AS INT)) FROM e"
-
-  private def dot(a: Column, b: Column): Column =
-    graft.ops.LinAlg.dot(a, b)
 
   def loadV(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.ops.LinAlg.dot
 import graft.ops.{Integrators, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -679,8 +680,6 @@ object MlQueries {
   private val m9 = Q(
     "m9_kmeans_step",
     (s, dir) => {
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        graft.ops.LinAlg.dot(a, b)
       val e = Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))
@@ -877,8 +876,6 @@ object MlQueries {
     (s, dir) => {
       import s.implicits._
       import org.apache.spark.storage.StorageLevel
-      def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-        graft.ops.LinAlg.dot(a, b)
       val e = KMeansOps.loadV(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
       var v: Seq[Double] = Seq.fill(64)(0.125) // unit norm
       val trace =

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.ops.LinAlg.dot
 import graft.ops.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,17 +47,7 @@ object SimilarityQueries {
   private def vecDouble: Column =
     col("embedding").cast("array<double>")
 
-  /** Codegen'd native dot product (graft.functions.DotProduct via
-    * GraftExtensions). The interpreted HOF spelling
-    * `aggregate(zip_with(a, b, _*_), 0.0, _+_)` is ~40× slower and
-    * falls out of whole-stage codegen; same accumulation order, so the
-    * doubles are bit-identical to the HOF version and the oracle.
-    */
-  private def dot(a: Column, b: Column): Column =
-    graft.ops.LinAlg.dot(a, b)
-
-  private def norm(v: Column): Column =
-    sqrt(graft.ops.LinAlg.dot(v, v))
+  private def norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Normalized vectors with per-plane LSH sign bits → bucket. */
   private def withBucket(df: DataFrame): DataFrame = {

@@ -338,9 +338,14 @@ object SourceQueries {
         fs.listFiles().count(f => f.getName.endsWith(".parquet"))
       }
       val nSmall = dataFiles(small)
-      s.read.parquet(small)
-        .coalesce(4)
-        .write.mode("overwrite").parquet(compact)
+      // one split per small file: the reader's packing otherwise follows
+      // the core count, and at 2 cores coalesce(4) had 2 splits to merge
+      graft.streaming.StreamReplay.withConf(s,
+          "spark.sql.files.minPartitionNum", nSmall.toString) {
+        s.read.parquet(small)
+          .coalesce(4)
+          .write.mode("overwrite").parquet(compact)
+      }
       val nCompact = dataFiles(compact)
       s.read.parquet(compact)
         .agg(count(lit(1)).as("n_rows"),

@@ -165,7 +165,8 @@ object StreamReplay {
     withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  private def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
+  /** Runs `body` with session conf `key` = `value`, then restores it. */
+  def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
     val prior = s.conf.getOption(key)
     s.conf.set(key, value)
     try body

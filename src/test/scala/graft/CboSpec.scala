@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cost-based-optimizer evidence: catalog statistics (`ANALYZE TABLE`)
@@ -10,17 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * the difference between a full shuffle of the fact table and none;
   * this spec pins that flip end-to-end on a real catalog table.
   */
-class CboSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CboSpec extends AnyFunSuite with TempDirs {
 
   private val sfDir = "/root/testdata/sf0.01"
 
   // a private warehouse: the spec creates and ANALYZEs catalog tables
   private lazy val spark = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_cbo_wh").toString)
+      tempDir("graft_cbo_wh"))
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def setup(): Unit = {
     spark.sql("DROP TABLE IF EXISTS cbo_li")

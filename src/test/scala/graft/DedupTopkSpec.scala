@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** d25/d26 — the bounded-output top-k summaries of the exact near-dup
@@ -21,11 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     doc (contracts 1–2 above run there), corpora past it report
   *     exactly the anchored docs with their exact unsampled summaries.
   */
-class DedupTopkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class DedupTopkSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def toks(prefix: String, n: Int): String =
     (0 until n).map(i => s"$prefix$i").mkString(" ")
@@ -52,8 +51,7 @@ class DedupTopkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def stage(r: Int): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"dedup_topk_spec_$r").toString
+    val dir = tempDir(s"dedup_topk_spec_$r")
     corpus(r).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
   }
@@ -153,8 +151,7 @@ class DedupTopkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("d27_budget_spec").toString
+    val dir = tempDir("d27_budget_spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("d27_lsh_tuning_sampled")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -189,8 +186,7 @@ class DedupTopkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("src0"))
       .withColumn("n_chars", length($"text").cast("long"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("d25_budget_spec").toString
+    val dir = tempDir("d25_budget_spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out25 = SparkEntry.queries("d25_neardup_topk")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract tests for the graft-fixedwidth DataSource V2 connector:
@@ -10,11 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition planning, and value fidelity vs the projection-based
   * decode it promotes (src15's substring/cast path).
   */
-class FixedWidthSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FixedWidthSourceSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val cols =
     "k:1:10:long,name:11:25:string,grp:36:5,cents:41:15"
@@ -22,8 +21,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Encode a deterministic 3-field fixed-width file and return its dir. */
   private lazy val dir: String = {
     import spark.implicits._
-    val out = java.nio.file.Files
-      .createTempDirectory("fixedwidth_spec").toString + "/data"
+    val out = tempDir("fixedwidth_spec") + "/data"
     (0 until 500).map { i =>
       (i.toLong, s"name_$i", (i % 7).toLong, (i * 13 - 1000).toLong)
     }.toDF("k", "name", "grp", "cents")
@@ -141,8 +139,7 @@ class FixedWidthSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pushed Not inside Or drops blank-numeric rows end-to-end") {
     import spark.implicits._
     // blank cents field for k % 5 == 0 -> decodes to null
-    val out = java.nio.file.Files
-      .createTempDirectory("fixedwidth_null_spec").toString + "/data"
+    val out = tempDir("fixedwidth_null_spec") + "/data"
     (0 until 100).map { i =>
       val cents = if (i % 5 == 0) "" else (i * 13 - 200).toString
       f"$i%10d" + ("name_" + i).padTo(25, ' ') +

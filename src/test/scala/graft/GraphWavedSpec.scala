@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-staged exact g5 (round 17): the K-wave driver loop must return
@@ -14,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * coEdges against a dir carrying co_edges.parquet must reproduce the
   * derived edge set exactly (the decade probe's g5b floor shave).
   */
-class GraphWavedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphWavedSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -40,8 +39,7 @@ class GraphWavedSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("co-edge MV read path == derived edge set") {
     import org.apache.spark.sql.functions._
-    val mvDir = java.nio.file.Files
-      .createTempDirectory("graft_coedges_mv").toString
+    val mvDir = tempDir("graft_coedges_mv")
     // a dataset dir containing ONLY the MV: lineitem links to the real
     // testdata so the derivation baseline stays comparable
     java.nio.file.Files.createSymbolicLink(

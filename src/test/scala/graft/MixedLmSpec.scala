@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.MixedLm
+import graft.pipelines.CovidSimulator
+import graft.streaming.StreamReplay
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,8 +40,7 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("g", "y", "intercept")
   }
 
-  private lazy val stats =
-    MixedLm.groupStats(df, "g", "y", Seq("intercept")).persist()
+  private lazy val stats = MixedLm.groupStats(df, "g", "y", Seq("intercept"))
 
   // closed forms, straight-line Scala
   private lazy val (msw, msb, grand) = {
@@ -53,7 +54,7 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("REML-EM hits the balanced one-way ANOVA closed form") {
-    val fit = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0), reml = true,
+    val fit = MixedLm.fitEm(stats, zIdx = Seq(0), reml = true,
       maxIters = 2000, tol = 1e-13)
     val tau2 = (msb - msw) / n
     // the singular-covariate guard ridge (ridgeEps, needed for the
@@ -68,9 +69,9 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ML-EM lacks the dof correction: smaller tau2, same direction") {
-    val reml = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0), reml = true,
+    val reml = MixedLm.fitEm(stats, zIdx = Seq(0), reml = true,
       maxIters = 2000, tol = 1e-13)
-    val ml = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0), reml = false,
+    val ml = MixedLm.fitEm(stats, zIdx = Seq(0), reml = false,
       maxIters = 2000, tol = 1e-13)
     assert(ml.psi(0)(0) < reml.psi(0)(0))
     // balanced-case ratio ≈ (m-1)/m (exactly so if sigma2 were shared)
@@ -89,9 +90,9 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
       yield (s"g$i", yij(i, j), 1.0, 0.0)
     val df2 = rows.toDF("g", "y", "intercept", "dead")
     val st2 = MixedLm.groupStats(df2, "g", "y", Seq("intercept", "dead"))
-    val fit2 = MixedLm.fitEm(st2, p = 2, zIdx = Seq(0), maxIters = 2000,
+    val fit2 = MixedLm.fitEm(st2, zIdx = Seq(0), maxIters = 2000,
       tol = 1e-13)
-    val fit1 = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0), maxIters = 2000,
+    val fit1 = MixedLm.fitEm(stats, zIdx = Seq(0), maxIters = 2000,
       tol = 1e-13)
     assert(math.abs(fit2.beta(1)) < 1e-9, s"dead coef ${fit2.beta(1)}")
     assert(math.abs(fit2.beta(0) - fit1.beta(0)) < 1e-6)
@@ -100,10 +101,9 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BLUPs shrink group means toward the grand mean") {
-    val fit = MixedLm.fitEm(stats, p = 1, zIdx = Seq(0))
-    import spark.implicits._
-    val b = MixedLm.blups(stats, fit, p = 1, zIdx = Seq(0))
-      .select("g", "b0").as[(String, Double)].collect().toMap
+    val fit = MixedLm.fitEm(stats, zIdx = Seq(0))
+    val b = MixedLm.blups(stats, fit, zIdx = Seq(0))
+      .map { case (g, bh) => g -> bh(0) }.toMap
     val ybars = (0 until m).map(i =>
       s"g$i" -> (0 until n).map(yij(i, _)).sum / n).toMap
     // shrinkage factor for balanced groups: w = n tau2/(sigma2 + n tau2)
@@ -113,5 +113,79 @@ class MixedLmSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(b(g) - expected) < 1e-6 * (1 + math.abs(expected)),
         s"$g blup ${b(g)} vs $expected")
     }
+  }
+
+  test("fitEm and blups on the collected stats start no Spark job") {
+    val st = stats // collected before the count starts
+    val (b, jobs) = SparkJobs.during(spark) {
+      val fit = MixedLm.fitEm(st, zIdx = Seq(0), maxIters = 2000, tol = 1e-13)
+      MixedLm.blups(st, fit, zIdx = Seq(0))
+    }
+    assert(b.length == m)
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  test("CovidSimulator.coefficients starts at most 3 jobs, whatever the EM " +
+      "iteration count") {
+    import spark.implicits._
+    val xs = Seq("Intercept", "gov_action", "TAVG", "lag_confirmed")
+    // 8 states × 30 days, per-state intercept and lag slope; TAVG ≡ 0 as
+    // when the weather feed is absent
+    val rows = for (st <- 0 until 8; d <- 0 until 30) yield {
+      val lag = 5.0 + 3.0 * d + 2.0 * st
+      val ga = if (d >= 15) 1.0 else 0.0
+      val y = 1.0 + 0.2 * st + (0.05 + 0.01 * (st % 3)) * lag - 0.5 * ga +
+        math.sin(1.3 * st + 0.7 * d)
+      (s"s$st", 1, 0, y, 1.0, ga, 0.0, lag)
+    }
+    val feats = rows.toDF("state" +: "removed" +: "holdout" +: "d_removed" +: xs: _*)
+    val (coefs, jobs) = SparkJobs.during(spark)(CovidSimulator.coefficients(feats))
+    // the same fit outside the count: EM takes many passes, each of
+    // which used to start two jobs
+    val iters = MixedLm.fitEm(MixedLm.groupStats(feats, "state", "d_removed", xs),
+      zIdx = Seq(0, 3)).iters
+    info(s"$jobs jobs at $iters EM iterations")
+    assert(iters > 1, s"$iters EM iterations")
+    assert(jobs >= 1 && jobs <= 3, s"$jobs jobs at $iters EM iterations")
+    assert(coefs.count() == 8)
+  }
+
+  test("the fit is bit-identical at 1 and 7 shuffle partitions over " +
+      "shuffled input rows") {
+    import spark.implicits._
+    val rows = new scala.util.Random(11).shuffle(
+      for (i <- 0 until m; j <- 0 until n) yield (s"g$i", yij(i, j), 1.0, (j % 4).toDouble))
+    val input = rows.toDF("g", "y", "intercept", "x")
+    def fitAt(parts: Int) = StreamReplay.withShufflePartitions(spark, parts) {
+      val st = MixedLm.groupStats(input, "g", "y", Seq("intercept", "x"))
+      val fit = MixedLm.fitEm(st, zIdx = Seq(0), maxIters = 2000, tol = 1e-13)
+      (fit, MixedLm.blups(st, fit, zIdx = Seq(0)).map { case (g, b) => (g, b.toSeq) }.toSeq)
+    }
+    val (f1, b1) = fitAt(1)
+    val (f7, b7) = fitAt(7)
+    assert(f1.beta.toSeq == f7.beta.toSeq)
+    assert(f1.psi.map(_.toSeq).toSeq == f7.psi.map(_.toSeq).toSeq)
+    assert(f1.sigma2 == f7.sigma2)
+    assert(f1.iters == f7.iters)
+    assert(b1 == b7)
+  }
+
+  test("past MaxGroups groups, and at zero groups, the fit fails loud with " +
+      "the group count") {
+    def keyed(nGroups: Long) = spark.range(nGroups)
+      .select(col("id").as("g"), lit(1.0).as("y"), lit(1.0).as("intercept"))
+    assert(MixedLm.groupStats(keyed(MixedLm.MaxGroups), "g", "y", Seq("intercept"))
+      .length == MixedLm.MaxGroups)
+    val over = intercept[IllegalArgumentException](
+      MixedLm.groupStats(keyed(MixedLm.MaxGroups + 1L), "g", "y", Seq("intercept")))
+    assert(over.getMessage.contains(s"${MixedLm.MaxGroups + 1} groups") &&
+      over.getMessage.contains(s"MaxGroups = ${MixedLm.MaxGroups}"), over.getMessage)
+    val none = MixedLm.groupStats(keyed(0), "g", "y", Seq("intercept"))
+    assert(none.isEmpty)
+    val noFit = intercept[IllegalArgumentException](MixedLm.fitEm(none, zIdx = Seq(0)))
+    assert(noFit.getMessage.contains("0 groups"), noFit.getMessage)
+    val fit = MixedLm.fitEm(stats, zIdx = Seq(0))
+    val noBlups = intercept[IllegalArgumentException](MixedLm.blups(none, fit, zIdx = Seq(0)))
+    assert(noBlups.getMessage.contains("0 groups"), noBlups.getMessage)
   }
 }

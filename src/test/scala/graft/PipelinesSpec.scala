@@ -2,7 +2,6 @@ package graft
 
 import graft.pipelines.{CovidDataTransform, CovidSimulator, WeatherForecast}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end pipeline tests over the reference's own committed CSVs:
@@ -11,13 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape and state coverage, and the forecaster honors the reference's
   * output contract (pred_actual / future_pred / rsme_score).
   */
-class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelinesSpec extends AnyFunSuite with TempDirs {
 
   private val refDir = "/root/reference/scripts"
 
   private lazy val spark = GraftSession(8)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private lazy val datasetFull = CovidDataTransform.run(spark).cache()
 
@@ -42,7 +41,7 @@ class PipelinesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("JHU 3-key join keeps country-level rows (blank province_state)") {
     // the reference's pandas merge matches NaN keys; an equi-join on a
     // null province_state silently dropped every country-level series
-    val dir = java.nio.file.Files.createTempDirectory("graft_jhu")
+    val dir = java.nio.file.Paths.get(tempDir("graft_jhu"))
     val wide = Seq("confirmed" -> 10, "recovered" -> 20, "death" -> 30)
       .map { case (m, base) =>
         val f = dir.resolve(s"$m.csv")

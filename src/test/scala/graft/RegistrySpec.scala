@@ -84,15 +84,29 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(confs.isEmpty, confs.mkString("\n"))
   }
 
+  test("src9_compaction compacts to 4 files at leaf-node parallelism 1, 2, 4 and 8") {
+    val q = Registry.all.find(_.name == "src9_compaction").get
+    for (par <- Seq(1, 2, 4, 8)) {
+      val after = graft.streaming.StreamReplay.withConf(spark,
+          "spark.sql.leafNodeDefaultParallelism", par.toString) {
+        q.fn(spark, sfDir).select("files_after").head().getLong(0)
+      }
+      assert(after == 4L, s"files_after $after at leaf-node parallelism $par")
+    }
+  }
+
   Registry.all.foreach { q =>
     test(s"${q.name} executes on sf0.001") {
-      // Runner releases the row's caches and checkpoint blocks, as in
-      // Bench and Verify
-      val p = Runner.run(spark) {
+      // Runner releases the row's caches and checkpoint blocks, and the
+      // drain stops its streams and drops its stream_* views, as Bench
+      // and Verify do
+      val run = Runner.run(spark) {
         val df = q.fn(spark, sfDir)
         df.count()
         df.queryExecution.executedPlan.toString
-      }.fold(why => fail(s"${q.name} failed: $why"), identity)
+      }
+      Runner.drainStreams(spark)
+      val p = run.fold(why => fail(s"${q.name} failed: $why"), identity)
       // Blanket plan audit (round 9): NO query's final plan may contain
       // an unkeyed CartesianProduct — the quadratic-blowup operator a
       // dropped join key silently buys. (Deliberate 1-row scalar

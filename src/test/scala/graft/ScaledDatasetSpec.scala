@@ -2,20 +2,19 @@ package graft
 
 import graft.ops.Tables
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The m× dataset ScaleProbe's decade and sf1full boards run on. */
-class ScaledDatasetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaledDatasetSpec extends AnyFunSuite with TempDirs {
 
   private val src = "/root/testdata/sf0.001"
 
   private lazy val spark = GraftSession(2)
 
   private lazy val dir =
-    java.nio.file.Files.createTempDirectory("graft_scaled").toString + "/m2"
+    tempDir("graft_scaled") + "/m2"
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def read(from: String, table: String) =
     spark.read.parquet(s"$from/$table.parquet")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** t34 sequence packing — greedy whole-doc first-fit into C=512-token
@@ -14,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. the fold's summary agrees with an independent per-doc replay
   *     of the same protocol on the sf0.001 documents.
   */
-class SequencePackingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SequencePackingSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** The t34 protocol, replayed doc-by-doc in plain Scala. The
     * checksum replays Σ (id mod P)·(bin+1 mod P) mod P via BIGINT
@@ -44,8 +43,7 @@ class SequencePackingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def stage(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("seq_packing_spec").toString
+    val dir = tempDir("seq_packing_spec")
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))

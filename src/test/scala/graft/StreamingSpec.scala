@@ -240,25 +240,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the events table stream declares the file's schema, normalizes ts " +
       "like Tables.load, and starts no job once the table is resolved") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val resolved = graft.ops.Tables.load(spark, sfDir, "events")
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup("table_stream", "build the events stream")
-    val stream = StreamReplay.tableStream(spark, sfDir, "events")
-    // the bus delivers in order: the fence job's start follows every earlier one
-    sc.setJobGroup("fence", "flush the listener bus")
-    spark.range(1).count()
-    sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30000000000L
-    while (!groups.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
-    sc.removeSparkListener(listener)
-    assert(groups.contains("fence") && !groups.contains("table_stream"), groups)
+    val (stream, jobs) = SparkJobs.during(spark)(StreamReplay.tableStream(spark, sfDir, "events"))
+    assert(jobs == 0, s"$jobs jobs")
     assert(stream.queryExecution.logical.collectLeaves().map(_.schema) ==
       Seq(spark.read.parquet(s"$sfDir/events.parquet").schema))
     assert(stream.schema == resolved.schema)

@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics spec for d24 (substring-level exact dedup) on a
@@ -8,11 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * first-document copies survive, later copies are removed as MAXIMAL
   * merged spans, and sub-window (< 20 token) repeats are untouched.
   */
-class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SubstringDedupSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   private def toks(prefix: String, n: Int): String =
     (0 until n).map(i => s"$prefix$i").mkString(" ")
@@ -34,8 +33,7 @@ class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars",
         org.apache.spark.sql.functions.length($"text").cast("long"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("substr_dedup_spec").toString
+    val dir = tempDir("substr_dedup_spec")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val out = SparkEntry.queries("d24_substring_dedup")(spark, dir)
@@ -63,8 +61,7 @@ class SubstringDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars",
         org.apache.spark.sql.functions.length($"text").cast("long"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("substr_dedup_spec2").toString
+    val dir = tempDir("substr_dedup_spec2")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val out = SparkEntry.queries("d24_substring_dedup")(spark, dir)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** w38_theil_sen_sampled (X314): the deterministic pair-sampling
@@ -18,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      cross-multiplied h·np, which wraps silently in non-ANSI Spark
   *      and raises in DuckDB once np > 2³¹).
   */
-class WindowSpec extends AnyFunSuite with BeforeAndAfterAll {
+class WindowSpec extends AnyFunSuite with TempDirs {
 
   private val B = 500L
   private val M32 = 4294967296L // 2^32
@@ -26,7 +25,7 @@ class WindowSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = GraftSession(4)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
   /** Write a synthetic events.parquet (testdata schema subset the two
     * Theil–Sen rows touch, plus the columns Tables.load normalizes) and
@@ -34,8 +33,7 @@ class WindowSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def eventsDir(rows: Seq[(Long, Long, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_windowspec").toString
+    val dir = tempDir("graft_windowspec")
     rows.toDF("event_id", "user_id", "value")
       .withColumn("ts", timestamp_micros(col("event_id") * 1000000L))
       .withColumn("event_type", lit("view"))

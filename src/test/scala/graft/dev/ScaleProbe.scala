@@ -656,11 +656,12 @@ object ScaleProbe {
   }
 
   /** REML-EM mixed-model scaling (round 9): the fit's design claim is
-    * that per-iteration cost rides the GROUP-cardinality stats frame,
+    * that per-iteration cost rides the GROUP-cardinality stats table,
     * not the observation count — groups replicated m× (disjoint group
-    * keys, same per-group data) should cost ~flat per EM iteration
-    * after the single observation-level groupStats pass. Probes the
-    * simulator-shaped model (p=4, q=2) on synthetic groups.
+    * keys, same per-group data) cost one observation-level groupStats
+    * pass plus a collect, then EM runs as a driver loop linear in the
+    * group count. Probes the simulator-shaped model (p=4, q=2) on
+    * synthetic groups.
     */
   private def mixedLmProbe(): Unit = withSession { spark =>
     import spark.implicits._
@@ -678,14 +679,12 @@ object ScaleProbe {
       val df = rows.toDF("g", "y", "intercept", "cov2", "dead", "x")
       var t0 = System.nanoTime()
       val stats = MixedLm.groupStats(df, "g", "y",
-        Seq("intercept", "cov2", "dead", "x")).persist()
-      stats.count()
+        Seq("intercept", "cov2", "dead", "x"))
       val tStats = (System.nanoTime() - t0) / 1e9
       t0 = System.nanoTime()
-      val fit = MixedLm.fitEm(stats, p = 4, zIdx = Seq(0, 3),
+      val fit = MixedLm.fitEm(stats, zIdx = Seq(0, 3),
         maxIters = 40, tol = 0.0) // fixed 40 iterations: comparable work
       val tFit = (System.nanoTime() - t0) / 1e9
-      stats.unpersist()
       println(f"MIXEDLM x$m%-3d groups=$nG%-5d obs=${nG * 40}%-7d " +
         f"stats=$tStats%5.2fs em40=$tFit%6.2fs " +
         f"(${tFit / 40 * 1000}%5.1f ms/iter) beta_x=${fit.beta(3)}%.4f")

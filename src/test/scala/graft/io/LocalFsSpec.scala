@@ -21,14 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * Hadoop: the same permission bits, the same link statuses, the same
   * checksum verification; and every engine session resolves `file:` to
   * it unless the user named another implementation. */
-class LocalFsSpec extends AnyFunSuite {
+class LocalFsSpec extends AnyFunSuite with graft.TempDirs {
 
   private val root = URI.create("file:///")
 
   private def stockConf = new Configuration()
   private def engineConf = { val c = new Configuration(); LocalFs.install(c); c }
-
-  private def tempDir(name: String): java.nio.file.Path = Files.createTempDirectory(name)
 
   private def perm(octal: String) = new FsPermission(Integer.parseInt(octal, 8).toShort)
 
@@ -55,7 +53,8 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("files, dirs and .crc sidecars get the stock permission bits through FileSystem and FileContext") {
-    val (stockDir, engineDir) = (tempDir("localfs_stock"), tempDir("localfs_engine"))
+    val (stockDir, engineDir) =
+      (Paths.get(tempDir("localfs_stock")), Paths.get(tempDir("localfs_engine")))
     val stockFs = new LocalFileSystem()
     stockFs.initialize(root, stockConf)
     val engineFs = new NioLocalFileSystem()
@@ -70,7 +69,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("getFileLinkStatus gives the stock result on a file, a dir, a symlink and a dangling symlink") {
-    val dir = tempDir("localfs_links")
+    val dir = Paths.get(tempDir("localfs_links"))
     val file = Files.write(dir.resolve("file"), Array[Byte](1, 2, 3))
     val sub = Files.createDirectory(dir.resolve("dir"))
     val link = Files.createSymbolicLink(dir.resolve("link"), file)

@@ -3,7 +3,7 @@ package graft.io
 import java.io.File
 import java.lang.management.ManagementFactory
 import java.net.URI
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Path => JPath, Paths}
 import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
@@ -21,7 +21,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * round trip with `PATH` led by logging wrappers for the commands
   * Hadoop's local filesystem shells out to. The log must hold only the
   * control's one `chmod`, from a stock `RawLocalFileSystem`. */
-class ProcessCountSpec extends AnyFunSuite {
+class ProcessCountSpec extends AnyFunSuite with graft.TempDirs {
 
   private val commands = Seq("chmod", "readlink", "ls", "stat", "chown")
 
@@ -49,7 +49,7 @@ class ProcessCountSpec extends AnyFunSuite {
   }
 
   test("a checkpointed streaming round trip starts no chmod, readlink, ls, stat or chown process") {
-    val base = Files.createTempDirectory("proc_count")
+    val base = Paths.get(tempDir("proc_count"))
     val bin = Files.createDirectory(base.resolve("bin"))
     val tmp = Files.createDirectory(base.resolve("tmp"))
     val log = base.resolve("commands.log")
