@@ -1,26 +1,72 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.pipelines.{CovidDataTransform, CovidSimulator, WeatherForecast}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end pipeline tests over the reference's own committed CSVs:
-  * the transform reproduces the dataset_full contract, the simulator's
-  * coefficient table matches the committed recover_coefs.csv golden in
-  * shape and state coverage, and the forecaster honors the reference's
-  * output contract (pred_actual / future_pred / rsme_score).
+/** End-to-end pipeline tests: the transform reproduces the dataset_full
+  * contract, the simulator's features, R₀, simulation and intervention
+  * comparison hold their contracts, the coefficient table matches the
+  * committed recover_coefs.csv golden, and the forecaster honors the
+  * reference's output contract (pred_actual / future_pred / rsme_score).
+  *
+  * Inputs: the reference's own committed CSVs under `refDir` when that
+  * checkout is present; otherwise seeded inputs in the same shapes and
+  * relative paths ([[PipelineFixtures]]). The contract tests (transform,
+  * features, R₀ replay, simulation clamp, intervention diff, AR(1)
+  * forecast output) run on either, and say in an `info` line which they
+  * used; one more traces the generated edge rows through the transform
+  * and runs on generated inputs only. The tests that compare against an
+  * artifact only the reference commits are cancelled when the file they
+  * read is absent:
+  *  - the coefficient shape and per-state β tests need
+  *    `data/simulation_data/recover_coefs.csv`;
+  *  - the 250-series forecast test and the committed future_pred.csv
+  *    contract need `output/weather_output/future_pred.csv`;
+  *  - the two LSTM parity tests need that file and
+  *    `output/weather_output/rsme_score.csv`.
   */
 class PipelinesSpec extends AnyFunSuite with TempDirs {
 
   private val refDir = "/root/reference/scripts"
+  private val fixtureSeed = 7L
 
   private lazy val spark = GraftSession(8)
 
   override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
-  private lazy val datasetFull = CovidDataTransform.run(spark).cache()
+  /** The reference checkout when present, else generated inputs. */
+  private lazy val dataDir: String =
+    if (Files.isDirectory(Paths.get(refDir))) refDir
+    else {
+      val d = tempDir("graft_pipeline_inputs")
+      PipelineFixtures.write(Paths.get(d), fixtureSeed)
+      d
+    }
+
+  private def reportInputs(): Unit =
+    info(if (dataDir == refDir) s"inputs: the reference's CSVs under $refDir"
+      else s"inputs: PipelineFixtures seed $fixtureSeed ($refDir absent)")
+
+  /** Cancels a test that compares against the reference's committed
+    * `artifact` when `rel` (under `refDir`) is not on this machine. */
+  private def assumeReference(rel: String, artifact: String): Unit = {
+    val path = s"$refDir/$rel"
+    val present = Files.exists(Paths.get(path))
+    assume(present,
+      s"$path absent: compares against the reference's committed $artifact")
+  }
+
+  private val recoverCoefs = "data/simulation_data/recover_coefs.csv"
+  private val futurePred = "output/weather_output/future_pred.csv"
+  private val rsmeScore = "output/weather_output/rsme_score.csv"
+
+  private lazy val datasetFull = CovidDataTransform.run(spark, dataDir).cache()
 
   test("transform emits the dataset_full contract") {
+    reportInputs()
     assert(datasetFull.columns.toSeq == Seq("date", "country_region",
       "province_state", "confirmed", "recovered", "death", "population",
       "TAVG", "date_idx", "location_name"))
@@ -63,11 +109,33 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
       Seq(null, "Italy", 20200402, 11, 21, 31)))
   }
 
+  /** The generated inputs' edge rows, traced through the transform:
+    * which locations survive it, and one country roll-up by value. */
+  test("transform admits exactly the generated full-horizon, populated locations") {
+    assume(dataDir != refDir, "checks PipelineFixtures' edge rows only")
+    import spark.implicits._
+    val locs = datasetFull.select("location_name").distinct().as[String]
+      .collect().toSet
+    assert(locs == PipelineFixtures.Admitted.toSet)
+    // Borduria's two JHU province rows, one under a legacy name, sum to
+    // one country-level row
+    val jhu = Files.readAllLines(
+      Paths.get(dataDir, "data/covid_data/jhu_confirmed_covid.csv"))
+    val day = jhu.get(0).split(",", -1).indexOf("_3_1_20")
+    val expected = (1 until jhu.size).map(jhu.get(_).split(",", -1))
+      .filter(_(1) == "Borduria").map(_(day).toLong).sum
+    val got = datasetFull.filter(col("location_name") === "Borduria : UNK" &&
+        col("date") === 20200301)
+      .select(col("confirmed").cast("long")).as[Long].collect().toSeq
+    assert(got == Seq(expected))
+  }
+
   private lazy val feats =
-    CovidSimulator.features(spark, CovidSimulator.loadPopDataset(spark))
-      .cache()
+    CovidSimulator.features(spark,
+      CovidSimulator.loadPopDataset(spark, dataDir)).cache()
 
   test("simulator features carry both date encodings, bands and lags") {
+    reportInputs()
     val cols = feats.columns.toSet
     assert(Set("dateval", "date", "is_freezing", "is_cold", "is_warm",
       "is_hot", "temp_th", "gov_action", "Intercept", "holdout",
@@ -83,6 +151,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
   private lazy val coefsShared = CovidSimulator.coefficients(feats).cache()
 
   test("coefficient table matches the committed recover_coefs.csv golden shape") {
+    assumeReference(recoverCoefs, "recover_coefs.csv golden")
     val coefs = coefsShared
     val golden = spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/data/simulation_data/recover_coefs.csv")
@@ -124,6 +193,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     * ≈0.51 US-only) and are deliberately not asserted.
     */
   test("per-state beta matches the committed recover_coefs.csv golden values") {
+    assumeReference(recoverCoefs, "recover_coefs.csv golden")
     import spark.implicits._
     val mine = CovidSimulator.coefficients(feats, imputeNegative = false)
       .select(col("state"), col("lag_confirmed").as("beta_mine"))
@@ -153,8 +223,9 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     * against the distributed window/agg computation in features().
     */
   test("R_0 matches an independent straight-line replay of the reference loop") {
+    reportInputs()
     import spark.implicits._
-    val raw = CovidSimulator.loadPopDataset(spark)
+    val raw = CovidSimulator.loadPopDataset(spark, dataDir)
       .select(col("province_state"), col("date"), col("confirmed"),
         col("recovered"), col("death"))
       .as[(String, Int, Double, Double, Double)].collect()
@@ -192,6 +263,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
   }
 
   test("simulation output is clamped and covers every fitted state") {
+    reportInputs()
     val coefs = coefsShared
     val sim = CovidSimulator.simulate(feats, coefs)
     assert(sim.filter(col("pred_removed") < 0).count() == 0)
@@ -199,6 +271,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
   }
 
   test("intervention comparison diverges only where gov_action was zeroed") {
+    reportInputs()
     val coefs = coefsShared
     val cmp = CovidSimulator.compareIntervention(feats, coefs)
     assert(cmp.count() > 0)
@@ -209,7 +282,29 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
       abs(col("diff_confirmed")) > 1e-12).count() == 0)
   }
 
+  /** The output contract of the test below, on whichever inputs ran:
+    * every series with `minRows` rows is forecast. */
+  test("AR(1) forecast honors its output contract on the pipeline inputs") {
+    reportInputs()
+    val src = spark.read.option("header", true).option("inferSchema", true)
+      .csv(s"$dataDir/$futurePred")
+      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
+        col("date").cast("int").as("date"),
+        col("TAVG_pred").cast("double").as("value"))
+    val eligible = src.groupBy("series").count()
+      .filter(col("count") >= 60).count()
+    val (pa, fp, rs) = WeatherForecast.run(spark, src,
+      minRows = 60, nTest = 10, horizon = 30, model = "ar1")
+    val nSeries = rs.count()
+    assert(nSeries > 0 && nSeries == eligible)
+    assert(pa.count() == nSeries * 10)
+    assert(fp.count() == nSeries * 30)
+    assert(fp.filter(col("date_idx") < 0 || col("date_idx") > 29).count() == 0)
+    assert(fp.filter(col("pred").isNull).count() == 0)
+  }
+
   test("forecast pipeline honors the reference output contract") {
+    assumeReference(futurePred, "future_pred.csv (its 250 series)")
     val src = spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/output/weather_output/future_pred.csv")
       .select(concat(col("country"), lit(" : "), col("state")).as("series"),
@@ -250,6 +345,8 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     * El Salvador 0.0515, Mozambique 0.0257, Luxembourg 0.0660.
     */
   test("LSTM pipeline mode: trains per-series models, RMSE parity vs committed rsme_score.csv") {
+    assumeReference(futurePred, "future_pred.csv")
+    assumeReference(rsmeScore, "rsme_score.csv")
     import spark.implicits._
     val picked = Seq("El Salvador : UNK", "Mozambique : UNK",
       "Luxembourg : UNK")
@@ -316,6 +413,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     * §7.4's documented-impossible note.
     */
   test("committed future_pred.csv contract: shape, density, date monotonicity") {
+    assumeReference(futurePred, "future_pred.csv")
     import spark.implicits._
     val golden = spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/output/weather_output/future_pred.csv")
@@ -363,6 +461,8 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     *     unseeded draws, not a protocol drift).
     */
   test("LSTM full-population parity: all 250 series vs committed rsme_score.csv") {
+    assumeReference(futurePred, "future_pred.csv")
+    assumeReference(rsmeScore, "rsme_score.csv")
     import spark.implicits._
     val all = spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/output/weather_output/future_pred.csv")
