@@ -107,8 +107,9 @@ object CovidDataTransform {
     us.unionByName(rolled)
   }
 
-  def run(spark: SparkSession,
-      refDir: String = "/root/reference/scripts"): DataFrame = {
+  /** The `dataset_full` frame from the inputs under `refDir`, laid out
+    * as the reference's `scripts/` directory (FIXTURES.md). */
+  def run(spark: SparkSession, refDir: String): DataFrame = {
     import spark.implicits._
     def csv(path: String): DataFrame =
       spark.read.option("header", true).option("inferSchema", true)
@@ -196,16 +197,20 @@ object CovidDataTransform {
       .withColumn("population", col("pop_broadcast").cast("double"))
       .withColumn("location_name",
         concat(col("country_region"), lit(" : "), col("province_state")))
+      .withColumns(measures.map(m => m -> col(m).cast("double")).toMap)
       .select("date", "country_region", "province_state", "confirmed",
         "recovered", "death", "population", "TAVG", "date_idx",
         "location_name")
   }
 
-  /** Runnable: writes the dataset_full parquet + prints summary. */
+  /** Runnable: `CovidDataTransform <scriptsDir> <outDir>` writes the
+    * dataset_full parquet to `outDir` and prints a summary. */
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("/tmp/graft_pipelines/dataset_full")
+    require(args.length == 2,
+      "usage: CovidDataTransform <scriptsDir> <outDir>")
+    val Array(refDir, out) = args
     val spark = GraftSession()
-    val ds = run(spark)
+    val ds = run(spark, refDir)
     ds.write.mode("overwrite").parquet(out)
     val locs = ds.select("location_name").distinct().count()
     println(s"PIPELINE dataset_full rows=${ds.count()} locations=$locs -> $out")

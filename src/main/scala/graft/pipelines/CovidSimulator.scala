@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.GraftSession
-import graft.ops.MixedLm
+import graft.ops.{MixedLm, Sequential}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -28,9 +28,10 @@ case class SimOut(state: String, rn: Int, pred_confirmed: Double,
   *     fit by REML-EM ([[graft.ops.MixedLm]] — statsmodels MixedLM's
   *     default flavor), emitted in the committed `recover_coefs.csv`
   *     column shape, with the reference's negative-β mean imputation.
-  *  3. [[simulate]] — the discrete SIR recurrence (W6/M4) per state
-  *     driven by the per-state coefficients, with the bias adjustment
-  *     (M8: pred_removed -= |mean bias|, clamp at 0).
+  *  3. [[simulate]] — the discrete SIR recurrence (W6/M4,
+  *     [[graft.ops.Sequential.sirSimulate]]) per state driven by the
+  *     per-state coefficients, with the bias adjustment (M8:
+  *     pred_removed -= |mean bias|, clamp at 0).
   */
 object CovidSimulator {
 
@@ -40,8 +41,7 @@ object CovidSimulator {
     * (the raw GHCN weather blobs are not committed), which the model
     * carries as a zero-variance covariate absorbed by the ridge.
     */
-  def loadPopDataset(spark: SparkSession,
-      refDir: String = "/root/reference/scripts"): DataFrame = {
+  def loadPopDataset(spark: SparkSession, refDir: String): DataFrame = {
     spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/data/simulation_data/pop_dataset.csv")
       .select(col("date").cast("int").as("date"),
@@ -219,9 +219,11 @@ object CovidSimulator {
   }
 
   /** Stages 7-8 of §3.3 — per-state discrete SIR on the training rows
-    * with alpha = beta*R0/N (generate_dataset, covid_simulator.py:39-58)
-    * and z1(t) = cI + cGov*gov_action(t) + cT*TAVG(t), then the bias
-    * adjustment on pred_removed and the final clamp at zero.
+    * with alpha = beta*R0/N (generate_dataset, covid_simulator.py:39-58;
+    * the recurrence is [[graft.ops.Sequential.sirSimulate]], which
+    * registry row w6_sir_recurrence checks against DuckDB) and z1(t) =
+    * cI + cGov*gov_action(t) + cT*TAVG(t), then the bias adjustment on
+    * pred_removed and the final clamp at zero.
     */
   def simulate(feats: DataFrame, coefs: DataFrame): DataFrame = {
     val spark = feats.sparkSession
@@ -244,17 +246,12 @@ object CovidSimulator {
         val rows = it.toIndexedSeq.sortBy(_.rn)
         val h = rows.head
         val n = h.population
-        val alpha = h.beta * h.r0 / n
-        var pc = h.confirmed; var pr = h.removed; var ps = n
-        rows.iterator.map { r =>
-          if (r.rn > 1) {
-            val pcN = pc + alpha * ps * pc - h.beta * pc - r.z1
-            val prN = pr + h.beta * pc + r.z1
-            val psN = ps - alpha * ps * pc
-            pc = pcN; pr = prN; ps = psN
+        // rn runs 1..rows.length, so step t of the kernel is row rn = t + 1
+        Sequential.sirSimulate(h.confirmed, h.removed, n, h.beta * h.r0 / n,
+            h.beta, rows.map(_.z1))
+          .iterator.zip(rows.iterator).map { case ((pc, pr, ps), r) =>
+            SimOut(state, r.rn, pc, pr, ps)
           }
-          SimOut(state, r.rn, pc, pr, ps)
-        }
       }
       .toDF()
     // M8 bias adjust on pred_removed vs actual removed, then clamp
@@ -269,15 +266,18 @@ object CovidSimulator {
         "pred_susceptible")
   }
 
-  /** Runnable: transform → features → coefficients → simulation. */
+  /** Runnable: `CovidSimulator <scriptsDir>` runs transform → features →
+    * coefficients → simulation on the inputs under `scriptsDir`. */
   def main(args: Array[String]): Unit = {
+    require(args.length == 1, "usage: CovidSimulator <scriptsDir>")
+    val refDir = args(0)
     val spark = GraftSession()
     // integration: the transform's dataset_full builds and is non-empty
-    val dsf = CovidDataTransform.run(spark)
+    val dsf = CovidDataTransform.run(spark, refDir)
     println(s"PIPELINE transform rows=${dsf.count()}")
     // model fit + simulation on the committed per-state series (the
     // dates span the gov_action threshold, so the design has variance)
-    val feats = features(spark, loadPopDataset(spark)).cache()
+    val feats = features(spark, loadPopDataset(spark, refDir)).cache()
     val coefs = coefficients(feats)
     val sim = simulate(feats, coefs)
     println(s"PIPELINE simulator states=${coefs.count()} " +

@@ -1,53 +1,52 @@
 package graft.pipelines
 
+import java.time.LocalDate
+import java.time.format.DateTimeFormatter.BASIC_ISO_DATE
+
 import graft.GraftSession
+import graft.ops.{Lstm, Sequential}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** Per-series rollout input (top-level for Encoders). */
-case class RollRow(series: String, rn: Long, norm: Double, a: Double,
-    b: Double, maxabs: Double, maxdate: Int)
-case class RollOut(series: String, date_idx: Int, pred: Double)
-/** One normalized observation for the LSTM path's group fold. */
-case class SeriesObs(series: String, date: Int, norm: Double,
-    maxabs: Double, maxdate: Int)
-/** Tagged union of the three output kinds one trained series emits. */
+/** Tagged union of the three output kinds one forecast series emits. */
 case class ForecastOut(kind: String, series: String, date: Int,
     date_idx: Int, pred: Double, actual: Double)
 
 /** The reference's per-location forecasting pipeline
-  * (weather_pred.py __main__, SURVEY.md §3.2), two model paths behind
-  * the same protocol — series admission (A8), abs-max normalization
-  * (W8), train/test tail split (O3), one-step test evaluation + RMSE
-  * (M6), autoregressive future rollout (W7), de-normalization — and
-  * the same output contract (pred_actual, future_pred, rsme_score):
+  * (weather_pred.py __main__, SURVEY.md §3.2): one per-series
+  * `groupByKey.flatMapGroups` fold that holds the whole protocol —
+  * series admission (A8), abs-max normalization (W8), train/test tail
+  * split (O3), one-step test evaluation + RMSE (M6), autoregressive
+  * future rollout (W7), de-normalization — and the output contract
+  * (pred_actual, future_pred, rsme_score). Each group task fits its own
+  * series single-threaded: the reference's one-model-per-(country,
+  * state, feature) shape is embarrassingly parallel across series,
+  * with no driver state and no shuffle beyond the one series
+  * partition. Only the model differs:
   *
-  *   - [[runAr1]]: per-series closed-form AR(1) — the fast flag
-  *     (`model = "ar1"`; documented substitution, SURVEY §7.3 #3): fits
-  *     are pure groupBy sum-aggregates, no iteration anywhere.
-  *   - [[runLstm]]: the DEFAULT `model = "lstm"` — the reference's
-  *     ACTUAL model — per-series LSTM(H) →
-  *     Dense(1, tanh) trained to convergence with full-batch adam and
-  *     EarlyStopping(patience, restore_best_weights)
+  *   - `model = "lstm"`, the DEFAULT and the reference's ACTUAL model:
+  *     LSTM(H) → Dense(1, tanh) trained to convergence with full-batch
+  *     adam and EarlyStopping(patience, restore_best_weights)
   *     ([[graft.ops.Lstm.trainSeries]], weather_pred.py:108-116,
-  *     304-311). One `groupByKey.flatMapGroups` over series: each
-  *     group task trains its own model single-threaded — the
-  *     reference's one-model-per-(country,state,feature) shape is
-  *     embarrassingly parallel across series, so a 1000-executor
-  *     cluster trains 1000 series at once with zero driver state and
-  *     zero shuffle beyond the one series partition. LstmTrainingSpec
-  *     proves the kernel (gradient vs finite differences; convergence
-  *     + committed-scale RMSE at the reference's exact 365/30/50
-  *     shape); PipelinesSpec drives this path end-to-end.
+  *     304-311), rolled out by [[graft.ops.Lstm.netRollout]].
+  *     LstmTrainingSpec proves the kernel (gradient vs finite
+  *     differences; convergence + committed-scale RMSE at the
+  *     reference's exact 365/30/50 shape).
+  *   - `model = "ar1"`, the fast flag (documented substitution, SURVEY
+  *     §7.3 #3): closed-form OLS AR(1), rolled out by
+  *     [[graft.ops.Sequential.arRollout]].
+  *
+  * PipelinesSpec drives both models end-to-end and replays the AR(1)
+  * protocol straight-line.
   */
 object WeatherForecast {
 
   /** The pipeline entry point. `model = "lstm"` (the default) is the
-    * reference's documented mode — per-series LSTM(H) trained to
-    * convergence ([[runLstm]]); `model = "ar1"` is the fast closed-form
-    * flag ([[runAr1]]) for smoke runs and series too short for the
-    * window shape. Both honor the identical output contract.
+    * reference's documented mode; `model = "ar1"` is the fast
+    * closed-form flag for smoke runs and series too short for the
+    * window shape. `nSteps`/`hidden`/`epochs`/`patience` shape the
+    * LSTM and default to the reference's values (365/50/500/25); the
+    * LSTM admits only series long enough for `nTest` test windows.
     *
     * @param series (series string, date int yyyyMMdd, value double)
     * @return (predActual, futurePred, rmseScore) */
@@ -55,146 +54,47 @@ object WeatherForecast {
       minRows: Int = 60, nTest: Int = 10, horizon: Int = 30,
       model: String = "lstm", nSteps: Int = 365, hidden: Int = 50,
       epochs: Int = 500, patience: Int = 25)
-      : (DataFrame, DataFrame, DataFrame) = model match {
-    case "lstm" => runLstm(spark, series, minRows, nTest, horizon,
-      nSteps, hidden, epochs, patience)
-    case "ar1" => runAr1(spark, series, minRows, nTest, horizon)
-    case other => throw new IllegalArgumentException(
-      s"unknown forecast model '$other' (expected lstm or ar1)")
-  }
-
-  /** The fast closed-form path (model = "ar1").
-    * @param series (series string, date int yyyyMMdd, value double)
-    * @return (predActual, futurePred, rmseScore) */
-  def runAr1(spark: SparkSession, series: DataFrame,
-      minRows: Int = 60, nTest: Int = 10, horizon: Int = 30)
       : (DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
-    val w = Window.partitionBy("series").orderBy("date")
-    val wAll = Window.partitionBy("series")
-    // A8 admission: long-enough series only
-    val admitted = series.withColumn("cnt", count(lit(1)).over(wAll))
-      .filter(col("cnt") >= minRows)
-    // W8 abs-max normalization (max kept for de-normalization)
-    val normed = admitted
-      .withColumn("maxabs", max(abs(col("value"))).over(wAll))
-      .withColumn("norm", col("value") / col("maxabs"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("prev", lag("norm", 1).over(w))
-      .withColumn("maxdate", max("date").over(wAll))
-    // M5 substitution: per-series AR(1) by closed-form OLS on the
-    // train prefix (everything but the last nTest rows)
-    val fit = normed.filter(col("prev").isNotNull &&
-        col("rn") <= col("cnt") - nTest)
-      .groupBy("series")
-      .agg(count(lit(1)).cast("double").as("n"),
-        sum("prev").as("sx"), sum("norm").as("sy"),
-        sum(col("prev") * col("norm")).as("sxy"),
-        sum(col("prev") * col("prev")).as("sxx"))
-      .filter(col("sxx") - col("sx") * col("sx") / col("n") > 1e-12)
-      .withColumn("b", (col("sxy") - col("sx") * col("sy") / col("n"))
-        / (col("sxx") - col("sx") * col("sx") / col("n")))
-      .withColumn("a", col("sy") / col("n") - col("b") * col("sx") / col("n"))
-      .select("series", "a", "b")
-    // one-step-ahead test predictions, de-normalized (pred_actual)
-    val predActual = normed.filter(col("rn") > col("cnt") - nTest)
-      .join(fit, Seq("series"))
-      .withColumn("pred_norm", col("a") + col("b") * col("prev"))
-      .select(col("series"), col("date"),
-        (col("pred_norm") * col("maxabs")).as("pred"),
-        col("value").as("actual"), col("pred_norm"), col("norm"))
-    // per-series test RMSE on the normalized scale (rsme_score shape;
-    // the reference's committed scores are normalized, ~0.05)
-    val rmseScore = predActual
-      .groupBy("series")
-      .agg(round(sqrt(avg(pow(col("pred_norm") - col("norm"), 2))), 6)
-        .as("rmse"), count(lit(1)).as("n_test"))
-      .orderBy("series")
-    // W7 rollout: feed predictions back for `horizon` steps, then
-    // de-normalize and attach future dates (future_pred shape)
-    val lastRows = normed.filter(col("rn") === col("cnt"))
-      .join(fit, Seq("series"))
-      .select(col("series"), col("rn"), col("norm"), col("a"), col("b"),
-        col("maxabs"), col("maxdate"))
-      .as[RollRow]
-    val rolled = lastRows.flatMap { r =>
-      var x = r.norm
-      (0 until horizon).iterator.map { i =>
-        x = r.a + r.b * x
-        RollOut(r.series, i, x * r.maxabs)
-      }
-    }.toDF()
-    val futurePred = rolled
-      .join(lastRows.toDF().select(col("series"), col("maxdate")), Seq("series"))
-      .withColumn("date",
-        date_format(date_add(to_date(col("maxdate").cast("string"), "yyyyMMdd"),
-          col("date_idx") + 1), "yyyyMMdd").cast("int"))
-      .select("series", "date", "date_idx", "pred")
-      .orderBy("series", "date_idx")
-    (predActual.select("series", "date", "pred", "actual"), futurePred,
-      rmseScore)
-  }
-
-  /** The LSTM path: same admission/normalization/split/rollout protocol
-    * as [[run]], with the per-series model trained for real inside its
-    * group task. `nSteps`/`hidden`/`epochs`/`patience` default to the
-    * reference's values (365/50/500/25); tests shrink them to fit the
-    * committed 180-day series.
-    *
-    * @return (predActual, futurePred, rmseScore) with [[run]]'s schemas
-    */
-  def runLstm(spark: SparkSession, series: DataFrame,
-      minRows: Int = 60, nTest: Int = 10, horizon: Int = 30,
-      nSteps: Int = 365, hidden: Int = 50, epochs: Int = 500,
-      patience: Int = 25): (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val w = Window.partitionBy("series").orderBy("date")
-    val wAll = Window.partitionBy("series")
-    val admitted = series.withColumn("cnt", count(lit(1)).over(wAll))
-      .filter(col("cnt") >= math.max(minRows, nSteps + nTest + 1))
-    val normed = admitted
-      .withColumn("maxabs", max(abs(col("value"))).over(wAll))
-      .withColumn("norm", col("value") / col("maxabs"))
-      .withColumn("maxdate", max("date").over(wAll))
-      .select(col("series"), col("date"), col("norm"), col("maxabs"),
-        col("maxdate"))
-      .as[SeriesObs]
-    val (h, st, te, ep, pa, hz) = (hidden, nSteps, nTest, epochs,
-      patience, horizon)
-    // ONE training per series; the tagged frame is persisted so the
-    // three output selects don't re-train. Bounded: (nTest + horizon
-    // + 1) rows per series.
-    val tagged = normed.groupByKey(_.series)
+    val minLen = model match {
+      case "lstm" => math.max(minRows, nSteps + nTest + 1)
+      case "ar1" => minRows
+      case other => throw new IllegalArgumentException(
+        s"unknown forecast model '$other' (expected lstm or ar1)")
+    }
+    // ONE fit per series; the tagged frame is persisted so the three
+    // output selects don't re-fit. Bounded: (nTest + horizon + 1) rows
+    // per series.
+    val tagged = series.select("series", "date", "value")
+      .as[(String, Int, Double)]
+      .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(_.date)
-        val xs = rows.map(_.norm)
-        val maxabs = rows.head.maxabs
-        val (fit, rmse) = graft.ops.Lstm.trainSeries(xs, h, st, te, ep, pa,
-          seed = key.hashCode.toLong & 0x7fffffffL)
-        val wins = graft.ops.Lstm.splitSequence(xs, st)
-        val testWins = wins.takeRight(te)
-        val testRows = rows.takeRight(te) // targets of the last te windows
-        val pa0 = testWins.zip(testRows).map { case ((wxs, y), r) =>
-          ForecastOut("pa", key, r.date, 0,
-            graft.ops.Lstm.netPredict(wxs, fit.params, h) * maxabs,
-            y * maxabs)
+        val rows = it.toArray.sortBy(_._2)
+        if (rows.length < minLen) Iterator.empty
+        else {
+          val maxabs = rows.iterator.map(r => math.abs(r._3)).max
+          val xs = rows.map(_._3 / maxabs)
+          val fit =
+            if (model == "ar1") ar1(xs, nTest, horizon)
+            else Some(lstm(xs, nTest, horizon, nSteps, hidden, epochs,
+              patience, seed = key.hashCode.toLong & 0x7fffffffL))
+          fit.iterator.flatMap { case (test, rmse, future) =>
+            val pa = test.zip(rows.takeRight(nTest)).map { case (p, r) =>
+              ForecastOut("pa", key, r._2, 0, p * maxabs, r._3)
+            }
+            val lastDate = LocalDate.parse(rows.last._2.toString,
+              BASIC_ISO_DATE)
+            val fp = future.zipWithIndex.map { case (p, i) =>
+              ForecastOut("fp", key,
+                lastDate.plusDays(i + 1L).format(BASIC_ISO_DATE).toInt,
+                i, p * maxabs, 0.0)
+            }
+            (pa :+ ForecastOut("rs", key, 0, nTest, rmse, 0.0)) ++ fp
+          }
         }
-        val lastDate = java.time.LocalDate.parse(
-          rows.last.maxdate.toString,
-          java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-        val roll = graft.ops.Lstm.netRollout(
-          xs.takeRight(st), hz, fit.params, h)
-        val fp = roll.zipWithIndex.map { case (p, i) =>
-          ForecastOut("fp", key,
-            lastDate.plusDays(i + 1).format(
-              java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt,
-            i, p * maxabs, 0.0)
-        }
-        (pa0 :+ ForecastOut("rs", key, 0, te, rmse, 0.0)) ++ fp
       }.toDF().persist()
     val predActual = tagged.filter(col("kind") === "pa")
-      .select(col("series"), col("date"), col("pred"),
-        col("actual"))
+      .select("series", "date", "pred", "actual")
     val futurePred = tagged.filter(col("kind") === "fp")
       .select("series", "date", "date_idx", "pred")
       .orderBy("series", "date_idx")
@@ -205,12 +105,55 @@ object WeatherForecast {
     (predActual, futurePred, rmseScore)
   }
 
-  /** Runnable: drives the protocol with the committed forecast series
-    * as input (the raw GHCN observations are not committed). */
+  /** One series' fit on the normalized scale: the one-step predictions
+    * of its last `nTest` values, their RMSE, and the `horizon`-step
+    * rollout from its last value. */
+  private type Fit = (Seq[Double], Double, Seq[Double])
+
+  /** M5 substitution: AR(1) by closed-form OLS on the train prefix
+    * (every pair but those ending in the last `nTest` values). None when
+    * the lagged values are (near) constant, so the slope is undefined. */
+  private def ar1(xs: Array[Double], nTest: Int, horizon: Int): Option[Fit] = {
+    val nTrain = xs.length - nTest
+    var n, sx, sy, sxy, sxx = 0.0
+    var i = 1
+    while (i < nTrain) {
+      val (p, y) = (xs(i - 1), xs(i))
+      n += 1; sx += p; sy += y; sxy += p * y; sxx += p * p
+      i += 1
+    }
+    if (!(sxx - sx * sx / n > 1e-12)) None
+    else {
+      val b = (sxy - sx * sy / n) / (sxx - sx * sx / n)
+      val a = sy / n - b * sx / n
+      val test = (nTrain until xs.length).map(i => a + b * xs(i - 1))
+      val sse = test.indices.map { j =>
+        val d = test(j) - xs(nTrain + j); d * d }.sum
+      Some((test, math.sqrt(sse / nTest),
+        Sequential.arRollout(IndexedSeq(xs.last), IndexedSeq(b), a, horizon)))
+    }
+  }
+
+  /** The reference's model: an LSTM trained on the series' windows, its
+    * test windows predicted and its last window rolled out. */
+  private def lstm(xs: Array[Double], nTest: Int, horizon: Int, nSteps: Int,
+      hidden: Int, epochs: Int, patience: Int, seed: Long): Fit = {
+    val (fit, rmse) = Lstm.trainSeries(xs, hidden, nSteps, nTest, epochs,
+      patience, seed)
+    val test = Lstm.splitSequence(xs, nSteps).takeRight(nTest).toSeq
+      .map { case (w, _) => Lstm.netPredict(w, fit.params, hidden) }
+    (test, rmse, Lstm.netRollout(xs.takeRight(nSteps), horizon, fit.params,
+      hidden).toSeq)
+  }
+
+  /** Runnable: `WeatherForecast <scriptsDir>` drives the protocol with
+    * `<scriptsDir>/output/weather_output/future_pred.csv` as input (the
+    * raw GHCN observations are not committed). */
   def main(args: Array[String]): Unit = {
+    require(args.length == 1, "usage: WeatherForecast <scriptsDir>")
     val spark = GraftSession()
     val src = spark.read.option("header", true).option("inferSchema", true)
-      .csv("/root/reference/scripts/output/weather_output/future_pred.csv")
+      .csv(s"${args(0)}/output/weather_output/future_pred.csv")
       .select(concat(col("country"), lit(" : "), col("state")).as("series"),
         col("date").cast("int").as("date"),
         col("TAVG_pred").cast("double").as("value"))

@@ -489,8 +489,8 @@ object MlQueries {
     * the real model trains to convergence in `ops/Lstm`
     * (netWindowGrad/adamTrain — H-unit BPTT + full-batch adam +
     * EarlyStopping, LstmTrainingSpec at the reference's 365/30/50
-    * shape) and `WeatherForecast.runLstm` is the per-series pipeline
-    * path; m5b/m5c keep the cell/gradient semantics under the DuckDB
+    * shape) and `WeatherForecast.run` (model "lstm") is the per-series
+    * pipeline path; m5b/m5c keep the cell/gradient semantics under the DuckDB
     * gate where a deterministic oracle exists.
     */
   private val m5 = Q(

@@ -9,16 +9,18 @@ import org.scalatest.funsuite.AnyFunSuite
 /** End-to-end pipeline tests: the transform reproduces the dataset_full
   * contract, the simulator's features, R₀, simulation and intervention
   * comparison hold their contracts, the coefficient table matches the
-  * committed recover_coefs.csv golden, and the forecaster honors the
-  * reference's output contract (pred_actual / future_pred / rsme_score).
+  * committed recover_coefs.csv golden, and the forecaster — both its
+  * models, the AR(1) flag and the default LSTM — honors the reference's
+  * output contract (pred_actual / future_pred / rsme_score).
   *
   * Inputs: the reference's own committed CSVs under `refDir` when that
   * checkout is present; otherwise seeded inputs in the same shapes and
   * relative paths ([[PipelineFixtures]]). The contract tests (transform,
-  * features, R₀ replay, simulation clamp, intervention diff, AR(1)
-  * forecast output) run on either, and say in an `info` line which they
-  * used; one more traces the generated edge rows through the transform
-  * and runs on generated inputs only. The tests that compare against an
+  * features, R₀ replay, SIR replay, simulation clamp, intervention
+  * diff, AR(1) and LSTM forecast output, AR(1) replay) run on either,
+  * and say in an `info` line which they used; one more traces the
+  * generated edge rows through the transform and runs on generated
+  * inputs only. The tests that compare against an
   * artifact only the reference commits are cancelled when the file they
   * read is absent:
   *  - the coefficient shape and per-state β tests need
@@ -65,11 +67,27 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
 
   private lazy val datasetFull = CovidDataTransform.run(spark, dataDir).cache()
 
+  /** A committed or generated `future_pred.csv` as the forecaster's
+    * (series, date, value) input. */
+  private def forecastInput(path: String) =
+    spark.read.option("header", true).option("inferSchema", true).csv(path)
+      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
+        col("date").cast("int").as("date"),
+        col("TAVG_pred").cast("double").as("value"))
+
+  /** `got` within `tol` of `expected`, relative to `1 + |expected|`. */
+  private def close(got: Double, expected: Double, tol: Double): Boolean =
+    math.abs(got - expected) <= tol * (1.0 + math.abs(expected))
+
   test("transform emits the dataset_full contract") {
     reportInputs()
-    assert(datasetFull.columns.toSeq == Seq("date", "country_region",
-      "province_state", "confirmed", "recovered", "death", "population",
-      "TAVG", "date_idx", "location_name"))
+    // names and types as FIXTURES.md documents dataset_full
+    assert(datasetFull.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("date" -> "int", "country_region" -> "string",
+        "province_state" -> "string", "confirmed" -> "double",
+        "recovered" -> "double", "death" -> "double",
+        "population" -> "double", "TAVG" -> "double",
+        "date_idx" -> "double", "location_name" -> "string"))
     val n = datasetFull.count()
     assert(n > 0)
     // every admitted location carries the full 180-day horizon and a
@@ -262,6 +280,60 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     assert(bad.isEmpty, s"R_0 mismatch: ${bad.take(3)}")
   }
 
+  /** The SIR recurrence (covid_simulator.py:39-58) replayed straight-line
+    * per state from the collected training rows and coefficients, then
+    * the bias adjustment and the clamp, against [[CovidSimulator.simulate]]. */
+  test("simulation matches a straight-line SIR replay with bias adjustment") {
+    reportInputs()
+    import spark.implicits._
+    val coefs = coefsShared.select("state", "Intercept", "gov_action", "TAVG",
+        "lag_confirmed")
+      .as[(String, Double, Double, Double, Double)].collect()
+      .map(c => c._1 -> c).toMap
+    val train = feats.filter(col("removed") > 0 && col("holdout") === 0)
+      .select(col("state"), col("dateval"), col("confirmed").cast("double"),
+        col("removed").cast("double"), col("population").cast("double"),
+        col("gov_action").cast("double"), col("TAVG").cast("double"),
+        col("R_0"))
+      .as[(String, String, Double, Double, Double, Double, Double, Double)]
+      .collect()
+    val expected = train.groupBy(_._1).toSeq.flatMap { case (st, rows) =>
+      val sorted = rows.sortBy(_._2)
+      val (_, cI, cG, cT, beta) = coefs(st)
+      val h = sorted.head
+      val n = h._5
+      val alpha = beta * h._8 / n
+      var pc = h._3; var pr = h._4; var ps = n
+      val steps = sorted.indices.map { t =>
+        if (t > 0) {
+          val r = sorted(t)
+          val z = cI + cG * r._6 + cT * r._7
+          val pcN = pc + alpha * ps * pc - beta * pc - z
+          val prN = pr + beta * pc + z
+          val psN = ps - alpha * ps * pc
+          pc = pcN; pr = prN; ps = psN
+        }
+        (pc, pr, ps)
+      }
+      val bias = steps.zip(sorted).map { case (s, r) => s._2 - r._4 }.sum /
+        sorted.length
+      steps.zipWithIndex.map { case ((c, r, s), t) =>
+        (st, t + 1) -> (c, math.max(0.0, r - math.abs(bias)), s)
+      }
+    }.toMap
+    val got = CovidSimulator.simulate(feats, coefsShared)
+      .select("state", "rn", "pred_confirmed", "pred_removed",
+        "pred_susceptible")
+      .as[(String, Int, Double, Double, Double)].collect()
+      .map(r => (r._1, r._2) -> (r._3, r._4, r._5)).toMap
+    assert(expected.nonEmpty && got.keySet == expected.keySet)
+    val bad = expected.filter { case (k, (c, r, s)) =>
+      val (gc, gr, gs) = got(k)
+      !(close(gc, c, 1e-9) && close(gr, r, 1e-9) && close(gs, s, 1e-9))
+    }
+    assert(bad.isEmpty, s"simulate mismatch: ${bad.take(3)}")
+  }
+
   test("simulation output is clamped and covers every fitted state") {
     reportInputs()
     val coefs = coefsShared
@@ -282,34 +354,110 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
       abs(col("diff_confirmed")) > 1e-12).count() == 0)
   }
 
-  /** The output contract of the test below, on whichever inputs ran:
-    * every series with `minRows` rows is forecast. */
-  test("AR(1) forecast honors its output contract on the pipeline inputs") {
+  /** The AR(1) protocol replayed straight-line per series on the
+    * collected input: admission, abs-max normalisation, OLS on the
+    * train prefix, one-step test predictions, the RMSE rounded to 6
+    * decimals and the 30-step feedback rollout with its dates. */
+  test("AR(1) forecast matches a straight-line replay of the protocol") {
     reportInputs()
-    val src = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$dataDir/$futurePred")
-      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
-        col("date").cast("int").as("date"),
-        col("TAVG_pred").cast("double").as("value"))
+    import spark.implicits._
+    val src = forecastInput(s"$dataDir/$futurePred")
+    val (nTest, horizon) = (10, 30)
+    val ymd = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
+    case class Expected(test: Seq[(Int, Double, Double)], rmse: Double,
+        future: Seq[(Int, Int, Double)])
+    val expected = src.as[(String, Int, Double)].collect().groupBy(_._1)
+      .flatMap { case (series, obs) =>
+        val rows = obs.sortBy(_._2)
+        val maxabs = rows.map(r => math.abs(r._3)).max
+        val xs = rows.map(_._3 / maxabs)
+        val nTrain = xs.length - nTest
+        var (n, sx, sy, sxy, sxx) = (0.0, 0.0, 0.0, 0.0, 0.0)
+        for (i <- 1 until nTrain) {
+          n += 1; sx += xs(i - 1); sy += xs(i)
+          sxy += xs(i - 1) * xs(i); sxx += xs(i - 1) * xs(i - 1)
+        }
+        val den = sxx - sx * sx / n
+        if (rows.length < 60 || !(den > 1e-12)) None
+        else {
+          val b = (sxy - sx * sy / n) / den
+          val a = sy / n - b * sx / n
+          val test = (nTrain until xs.length).map { i =>
+            (rows(i)._2, (a + b * xs(i - 1)) * maxabs, rows(i)._3)
+          }
+          val mse = (nTrain until xs.length).map { i =>
+            val e = a + b * xs(i - 1) - xs(i); e * e }.sum / nTest
+          val rmse = BigDecimal(math.sqrt(mse))
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+          val last = java.time.LocalDate.parse(rows.last._2.toString, ymd)
+          var x = xs.last
+          val future = (0 until horizon).map { i =>
+            x = a + b * x
+            (last.plusDays(i + 1L).format(ymd).toInt, i, x * maxabs)
+          }
+          Some(series -> Expected(test, rmse, future))
+        }
+      }
+    val (pa, fp, rs) = WeatherForecast.run(spark, src,
+      minRows = 60, nTest = nTest, horizon = horizon, model = "ar1")
+    val gotRmse = rs.select("series", "rmse", "n_test")
+      .as[(String, Double, Long)].collect()
+    assert(expected.nonEmpty &&
+      gotRmse.map(_._1).toSet == expected.keySet)
+    gotRmse.foreach { case (s, r, nt) =>
+      assert(math.abs(r - expected(s).rmse) <= 1e-6, s"$s rmse $r")
+      assert(nt == nTest, s"$s n_test $nt")
+    }
+    val gotTest = pa.select("series", "date", "pred", "actual")
+      .as[(String, Int, Double, Double)].collect().groupBy(_._1)
+    val gotFuture = fp.select("series", "date", "date_idx", "pred")
+      .as[(String, Int, Int, Double)].collect().groupBy(_._1)
+    expected.foreach { case (s, e) =>
+      val t = gotTest(s).sortBy(_._2).toSeq
+      assert(t.map(_._2) == e.test.map(_._1), s"$s test dates")
+      t.zip(e.test).foreach { case (g, x) =>
+        assert(close(g._3, x._2, 1e-9) && close(g._4, x._3, 1e-9),
+          s"$s test row $g vs $x")
+      }
+      val f = gotFuture(s).sortBy(_._3).toSeq
+      assert(f.map(r => (r._2, r._3)) == e.future.map(r => (r._1, r._2)),
+        s"$s future dates")
+      f.zip(e.future).foreach { case (g, x) =>
+        assert(close(g._4, x._3, 1e-9), s"$s future row $g vs $x")
+      }
+    }
+  }
+
+  /** The output contract of the test below, on whichever inputs ran,
+    * for both models: every series with `minRows` rows is forecast. The
+    * LSTM runs at a window shape the 180-day series admit, small enough
+    * to train in seconds; it is the fixture-backed twin of the gated
+    * LSTM parity tests. */
+  test("AR(1) and LSTM forecasts honor their output contract on the pipeline inputs") {
+    reportInputs()
+    import spark.implicits._
+    val src = forecastInput(s"$dataDir/$futurePred")
     val eligible = src.groupBy("series").count()
       .filter(col("count") >= 60).count()
-    val (pa, fp, rs) = WeatherForecast.run(spark, src,
-      minRows = 60, nTest = 10, horizon = 30, model = "ar1")
-    val nSeries = rs.count()
-    assert(nSeries > 0 && nSeries == eligible)
-    assert(pa.count() == nSeries * 10)
-    assert(fp.count() == nSeries * 30)
-    assert(fp.filter(col("date_idx") < 0 || col("date_idx") > 29).count() == 0)
-    assert(fp.filter(col("pred").isNull).count() == 0)
+    for (model <- Seq("ar1", "lstm")) {
+      val (pa, fp, rs) = WeatherForecast.run(spark, src,
+        minRows = 60, nTest = 10, horizon = 30, model = model,
+        nSteps = 20, hidden = 4, epochs = 20, patience = 5)
+      val nSeries = rs.count()
+      assert(nSeries > 0 && nSeries == eligible, model)
+      assert(pa.count() == nSeries * 10, model)
+      assert(fp.count() == nSeries * 30, model)
+      assert(fp.filter(col("date_idx") < 0 || col("date_idx") > 29).count() == 0,
+        model)
+      assert(fp.filter(col("pred").isNull).count() == 0, model)
+      val rmse = rs.select("rmse").as[Double].collect()
+      assert(rmse.forall(r => !r.isNaN && !r.isInfinite), s"$model: $rmse")
+    }
   }
 
   test("forecast pipeline honors the reference output contract") {
     assumeReference(futurePred, "future_pred.csv (its 250 series)")
-    val src = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$refDir/output/weather_output/future_pred.csv")
-      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
-        col("date").cast("int").as("date"),
-        col("TAVG_pred").cast("double").as("value"))
+    val src = forecastInput(s"$refDir/$futurePred")
     val (pa, fp, rs) = WeatherForecast.run(spark, src,
       minRows = 60, nTest = 10, horizon = 30, model = "ar1")
     val nSeries = rs.count()
@@ -332,8 +480,8 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     * exactly our adamTrain shape); patience is widened 25 → 50 because
     * the scaled-down 16-unit full-batch loss curve plateaus longer
     * than the reference's 50-unit net before descending: the round-17
-    * M5Epochs probe measured 6 of the 9 round-16 band misses as
-    * plateau EARLY-STOPS at epoch 38–47 (best=38–47, ran≤74 of 250)
+    * M5Epochs probe (recorded in SURVEY.md) measured 6 of the 9
+    * round-16 band misses as plateau EARLY-STOPS at epoch 38–47 (best=38–47, ran≤74 of 250)
     * whose RMSE collapses 3–10× with the plateau cleared
     * (e.g. Tajikistan 0.2513 → 0.0267, US:KS 0.3249 → 0.0390) —
     * an optimization artifact, not model capacity; multi-seed spreads
@@ -350,11 +498,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     import spark.implicits._
     val picked = Seq("El Salvador : UNK", "Mozambique : UNK",
       "Luxembourg : UNK")
-    val src = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$refDir/output/weather_output/future_pred.csv")
-      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
-        col("date").cast("int").as("date"),
-        col("TAVG_pred").cast("double").as("value"))
+    val src = forecastInput(s"$refDir/$futurePred")
       .filter(col("series").isin(picked: _*))
     val (pa, fp, rs) = WeatherForecast.run(spark, src,
       minRows = 60, nTest = 10, horizon = 30,
@@ -464,11 +608,7 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     assumeReference(futurePred, "future_pred.csv")
     assumeReference(rsmeScore, "rsme_score.csv")
     import spark.implicits._
-    val all = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$refDir/output/weather_output/future_pred.csv")
-      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
-        col("date").cast("int").as("date"),
-        col("TAVG_pred").cast("double").as("value"))
+    val all = forecastInput(s"$refDir/$futurePred")
     val (_, fp, rs) = WeatherForecast.run(spark, all,
       minRows = 60, nTest = 10, horizon = 30,
       nSteps = 120, hidden = 16, epochs = 500, patience = 50)
