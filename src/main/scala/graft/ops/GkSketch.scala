@@ -48,7 +48,7 @@ final class GkSketch(val eps: Double) extends Serializable {
 
   // Insert buffer: amortizes the O(size) merge walk over BUF inserts.
   private val BUF = 512
-  private var buf: Array[Double] = new Array[Double](BUF)
+  private val buf: Array[Double] = new Array[Double](BUF)
   private var bufLen: Int = 0
 
   /** Total values inserted (including both sides of merges). */

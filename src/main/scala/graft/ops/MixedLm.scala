@@ -171,7 +171,7 @@ object MixedLm {
         val ebb = Array.tabulate(q * q) { k =>
           val (i, j) = (k / q, k % q); bh(i) * bh(j) + lam(k)
         }
-        var rss = s.syy - 2.0 * dotv(betaN, s.sxy) + quad(betaN, s.sxx, p) -
+        val rss = s.syy - 2.0 * dotv(betaN, s.sxy) + quad(betaN, s.sxx, p) -
           2.0 * dotv(bh, rz) + quad(bh, szz, q)
         var k = 0
         var trLZ = 0.0

@@ -93,17 +93,4 @@ object PlotSink {
     val _ = n
     PngCodec.encodeRgb(width, height, rgb)
   }
-
-  /** Count pixels exactly matching a palette color — the spec's and
-    * registry row's raster summary (series present ⇔ count > 0).
-    */
-  def countColor(rgb: Array[Byte], c: (Int, Int, Int)): Long = {
-    var k = 0; var cnt = 0L
-    while (k < rgb.length) {
-      if ((rgb(k) & 0xff) == c._1 && (rgb(k + 1) & 0xff) == c._2 &&
-        (rgb(k + 2) & 0xff) == c._3) cnt += 1
-      k += 3
-    }
-    cnt
-  }
 }

@@ -1,9 +1,9 @@
 package graft.pipelines
 
-import graft.GraftSession
 import graft.ops.Sequential
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Row shape for the TAVG smoothing fold (top-level for Encoders). */
 case class WxRow(country_region: String, province_state: String, date: Int,
@@ -31,6 +31,21 @@ object CovidDataTransform {
 
   private val measures = Seq("confirmed", "recovered", "death")
 
+  private val jhuDate = "_\\d+_\\d+_\\d+" // a JHU date column, `_M_D_YY`
+
+  /** A header CSV read without schema inference: names from the file's
+    * header (one job; the sources differ in their unused columns, so a
+    * positional schema would misread some), the `types` columns parsed
+    * as those types, the rest as strings. */
+  private[pipelines] def readCsv(spark: SparkSession, path: String,
+      types: PartialFunction[String, DataType]): DataFrame = {
+    val names = spark.read.option("header", true).csv(path).columns
+    spark.read.option("header", true)
+      .schema(StructType(names.map(n =>
+        StructField(n, types.applyOrElse(n, (_: String) => StringType)))))
+      .csv(path)
+  }
+
   /** `_M_D_YY` wide-column name → yyyyMMdd int (the reference parses
     * dates out of COLUMN NAMES during melt, covid_data_transform.py:86). */
   private def colToYmd(c: String): Int = {
@@ -41,7 +56,7 @@ object CovidDataTransform {
   /** Unpivot one JHU wide table to (province_state, country_region,
     * date int, <measure> long). */
   private def meltJhu(df: DataFrame, measure: String): DataFrame = {
-    val dateCols = df.columns.filter(_.matches("_\\d+_\\d+_\\d+"))
+    val dateCols = df.columns.filter(_.matches(jhuDate))
     val renamed = df.select(
       (Seq(col("province_state"), col("country_region")) ++
         dateCols.map(c => col(c).as(colToYmd(c).toString))): _*)
@@ -111,15 +126,15 @@ object CovidDataTransform {
     * as the reference's `scripts/` directory (FIXTURES.md). */
   def run(spark: SparkSession, refDir: String): DataFrame = {
     import spark.implicits._
-    def csv(path: String): DataFrame =
-      spark.read.option("header", true).option("inferSchema", true)
-        .csv(s"$refDir/$path")
+    // each used column typed as FIXTURES.md documents it
+    def csv(path: String, types: PartialFunction[String, DataType]) =
+      readCsv(spark, s"$refDir/$path", types)
 
-    val exclude = Seq("latitude", "longitude", "location_geom")
-    val lookup = csv("data/covid_data/location_match.csv")
+    val lookup = csv("data/covid_data/location_match.csv", Map.empty)
 
     var interCovid = joinJhu(measures.map(m =>
-        csv(s"data/covid_data/jhu_${m}_covid.csv").drop(exclude: _*)))
+        csv(s"data/covid_data/jhu_${m}_covid.csv",
+          { case c if c.matches(jhuDate) => LongType })))
       .withColumn("country_region",
         when(col("country_region") === "US", "United States")
           .otherwise(col("country_region")))
@@ -127,45 +142,47 @@ object CovidDataTransform {
     interCovid = rollupNonUs(interCovid, measures.map(_ -> "sum"))
 
     // stage 3+7: population dims and joins
-    val jhuPop = csv("data/covid_data/jhu_countries_with_code.csv")
+    val jhuPop = csv("data/covid_data/jhu_countries_with_code.csv",
+        Map("pop_data_2018" -> LongType))
       .withColumn("country_region",
         regexp_replace(col("countries_and_territories"), "_", " "))
       .select(col("country_region"), col("pop_data_2018").as("population"))
       .dropDuplicates()
     interCovid = interCovid.join(broadcast(jhuPop), Seq("country_region"), "inner")
 
-    val usCovid = csv("data/covid_data/daily_covid_usstates.csv")
-      .select("date", "state", "positive", "recovered", "death")
-      .withColumnRenamed("state", "province_state")
-      .withColumnRenamed("positive", "confirmed")
-      .withColumn("country_region", lit("United States"))
+    val usCovid = csv("data/covid_data/daily_covid_usstates.csv",
+        Map("date" -> IntegerType, "positive" -> LongType,
+          "recovered" -> LongType, "death" -> LongType))
+      .select(col("date"), col("state").as("province_state"),
+        col("positive").as("confirmed"), col("recovered"), col("death"),
+        lit("United States").as("country_region"))
       .na.fill(0)
-    val usPop = csv("data/covid_data/covid_county_population_usafacts.csv")
+    val usPop = csv("data/covid_data/covid_county_population_usafacts.csv",
+        Map("population" -> LongType))
       .groupBy(col("State").as("province_state"))
       .agg(sum("population").as("population"))
     val usWithPop = usCovid.join(broadcast(usPop), Seq("province_state"), "inner")
 
-    var covid = interCovid.unionByName(usWithPop, allowMissingColumns = true)
+    val covid = interCovid.unionByName(usWithPop, allowMissingColumns = true)
       .na.fill("UNK", Seq("province_state"))
       .na.fill(0)
-      .withColumn("date", col("date").cast("int"))
       .withColumn("country_region", trim(col("country_region")))
 
     // stages 9-11: weather frame = committed forecast, canonicalized,
     // rolled up (mean), then the W5 smoothing recurrence per location
-    var weather = csv("output/weather_output/future_pred.csv")
-      .select(col("TAVG_pred").as("TAVG"),
-        col("state").as("province_state"), col("date"),
-        col("country").as("country_region"),
+    var weather = csv("output/weather_output/future_pred.csv",
+        Map("TAVG_pred" -> DoubleType, "date" -> IntegerType,
+          "date_idx" -> IntegerType))
+      .select(col("TAVG_pred").as("TAVG"), col("state").as("province_state"),
+        col("date"), col("country").as("country_region"),
         col("date_idx").cast("double").as("date_idx"))
       .na.fill(-1.0, Seq("date_idx"))
     weather = renameLocation(weather, lookup)
     weather = rollupNonUs(weather,
       Seq("TAVG" -> "mean", "date_idx" -> "mean"))
     val smoothed = weather
-      .select(col("country_region"), col("province_state"),
-        col("date").cast("int").as("date"), col("TAVG").as("tavg"),
-        col("date_idx"))
+      .select(col("country_region"), col("province_state"), col("date"),
+        col("TAVG").as("tavg"), col("date_idx"))
       .as[WxRow]
       .groupByKey(r => (r.country_region, r.province_state))
       .flatMapGroups { (key: (String, String), it: Iterator[WxRow]) =>
@@ -201,19 +218,5 @@ object CovidDataTransform {
       .select("date", "country_region", "province_state", "confirmed",
         "recovered", "death", "population", "TAVG", "date_idx",
         "location_name")
-  }
-
-  /** Runnable: `CovidDataTransform <scriptsDir> <outDir>` writes the
-    * dataset_full parquet to `outDir` and prints a summary. */
-  def main(args: Array[String]): Unit = {
-    require(args.length == 2,
-      "usage: CovidDataTransform <scriptsDir> <outDir>")
-    val Array(refDir, out) = args
-    val spark = GraftSession()
-    val ds = run(spark, refDir)
-    ds.write.mode("overwrite").parquet(out)
-    val locs = ds.select("location_name").distinct().count()
-    println(s"PIPELINE dataset_full rows=${ds.count()} locations=$locs -> $out")
-    spark.stop()
   }
 }

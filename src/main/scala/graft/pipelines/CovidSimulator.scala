@@ -1,10 +1,10 @@
 package graft.pipelines
 
-import graft.GraftSession
 import graft.ops.{MixedLm, Sequential}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
 /** Per-state simulation row (top-level for Encoders). */
 case class SimRow(state: String, rn: Int, confirmed: Double, removed: Double,
@@ -42,17 +42,15 @@ object CovidSimulator {
     * carries as a zero-variance covariate absorbed by the ridge.
     */
   def loadPopDataset(spark: SparkSession, refDir: String): DataFrame = {
-    spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"$refDir/data/simulation_data/pop_dataset.csv")
-      .select(col("date").cast("int").as("date"),
-        lit("United States").as("country_region"),
-        col("state").as("province_state"),
-        col("positive").cast("double").as("confirmed"),
-        col("recovered").cast("double").as("recovered"),
-        col("death").cast("double").as("death"),
-        col("population").cast("double").as("population"),
-        lit(0.0).as("TAVG"),
-        lit(-1.0).as("date_idx"))
+    CovidDataTransform.readCsv(spark,
+        s"$refDir/data/simulation_data/pop_dataset.csv",
+        Map("date" -> IntegerType, "positive" -> DoubleType,
+          "recovered" -> DoubleType, "death" -> DoubleType,
+          "population" -> DoubleType))
+      .select(col("date"), lit("United States").as("country_region"),
+        col("state").as("province_state"), col("positive").as("confirmed"),
+        col("recovered"), col("death"), col("population"),
+        lit(0.0).as("TAVG"), lit(-1.0).as("date_idx"))
       .withColumn("location_name",
         concat(col("country_region"), lit(" : "), col("province_state")))
   }
@@ -61,25 +59,21 @@ object CovidSimulator {
   def features(spark: SparkSession, datasetFull: DataFrame,
       startDate: String = "2020-02-22",
       holdoutDate: String = "2020-04-20"): DataFrame = {
-    datasetFull.createOrReplaceTempView("dsf")
     // NB: like SQLite, Spark resolves TAVG in the CASEs to the RAW
     // input column, not the TAVG/10 alias — reproduced deliberately.
-    val sql = spark.sql(
-      s"""SELECT province_state, country_region AS country, date, confirmed,
-         |       recovered, death, population, TAVG/10 AS TAVG,
-         |       location_name,
-         |       date_format(to_date(CAST(date AS STRING), 'yyyyMMdd'),
-         |                   'yyyy-MM-dd') AS dateval,
-         |       country_region || '-' || province_state AS state,
-         |       CASE WHEN TAVG <= 0 THEN 1 ELSE 0 END AS is_freezing,
-         |       CASE WHEN TAVG > 0 AND TAVG/10 < 20 THEN 1 ELSE 0 END AS is_cold,
-         |       CASE WHEN TAVG >= 20 AND TAVG/10 < 35 THEN 1 ELSE 0 END AS is_warm,
-         |       CASE WHEN TAVG >= 35 THEN 1 ELSE 0 END AS is_hot,
-         |       CASE WHEN TAVG >= 20 THEN 1 ELSE 0 END AS temp_th,
-         |       CASE WHEN to_date(date_format(to_date(CAST(date AS STRING),
-         |                 'yyyyMMdd'), 'yyyy-MM-dd')) > DATE '2020-03-20'
-         |            THEN 1 ELSE 0 END AS gov_action
-         |FROM dsf""".stripMargin)
+    val dateval = "date_format(to_date(CAST(date AS STRING), 'yyyyMMdd'), 'yyyy-MM-dd')"
+    val projected = datasetFull.selectExpr("province_state",
+        "country_region AS country", "date", "confirmed", "recovered",
+        "death", "population", "TAVG/10 AS TAVG", "location_name",
+        s"$dateval AS dateval",
+        "country_region || '-' || province_state AS state",
+        "CASE WHEN TAVG <= 0 THEN 1 ELSE 0 END AS is_freezing",
+        "CASE WHEN TAVG > 0 AND TAVG/10 < 20 THEN 1 ELSE 0 END AS is_cold",
+        "CASE WHEN TAVG >= 20 AND TAVG/10 < 35 THEN 1 ELSE 0 END AS is_warm",
+        "CASE WHEN TAVG >= 35 THEN 1 ELSE 0 END AS is_hot",
+        "CASE WHEN TAVG >= 20 THEN 1 ELSE 0 END AS temp_th",
+        s"CASE WHEN to_date($dateval) > DATE '2020-03-20' THEN 1 ELSE 0 END " +
+          "AS gov_action")
       .dropDuplicates()
       .withColumn("Intercept", lit(1.0))
       .filter(col("dateval") >= startDate)
@@ -87,7 +81,7 @@ object CovidSimulator {
         when(col("dateval") >= holdoutDate, 1).otherwise(0))
     val w = Window.partitionBy("state").orderBy("dateval")
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val trimmed = sql
+    val trimmed = projected
       .withColumn("seen",
         sum(when(col("confirmed") > 0, 1).otherwise(0)).over(wRun))
       .filter(col("seen") > 0).drop("seen")
@@ -197,25 +191,14 @@ object CovidSimulator {
     */
   def compareIntervention(feats: DataFrame, coefs: DataFrame,
       pivotDate: String = "2020-03-25"): DataFrame = {
-    val after = simulate(feats, coefs)
     val zeroed = feats.withColumn("gov_action",
       when(col("dateval") > pivotDate, 0).otherwise(col("gov_action")))
-    val before = simulate(zeroed, coefs)
-    val a = after.select(col("state"), col("rn"),
-      col("pred_confirmed").as("pred_confirmed_after"),
-      col("pred_removed").as("pred_removed_after"),
-      col("pred_susceptible").as("pred_susceptible_after"))
-    val b = before.select(col("state"), col("rn"),
-      col("pred_confirmed").as("pred_confirmed_before"),
-      col("pred_removed").as("pred_removed_before"),
-      col("pred_susceptible").as("pred_susceptible_before"))
-    a.join(b, Seq("state", "rn"))
-      .withColumn("diff_confirmed",
-        col("pred_confirmed_after") - col("pred_confirmed_before"))
-      .withColumn("diff_removed",
-        col("pred_removed_after") - col("pred_removed_before"))
-      .withColumn("diff_susceptible",
-        col("pred_susceptible_after") - col("pred_susceptible_before"))
+    val preds = Seq("confirmed", "removed", "susceptible")
+    def sim(f: DataFrame, tag: String) = simulate(f, coefs).select(col("state") +:
+      col("rn") +: preds.map(p => col(s"pred_$p").as(s"pred_${p}_$tag")): _*)
+    sim(feats, "after").join(sim(zeroed, "before"), Seq("state", "rn"))
+      .withColumns(preds.map(p => s"diff_$p" ->
+        (col(s"pred_${p}_after") - col(s"pred_${p}_before"))).toMap)
   }
 
   /** Stages 7-8 of §3.3 — per-state discrete SIR on the training rows
@@ -264,28 +247,5 @@ object CovidSimulator {
         greatest(lit(0.0), col("pred_removed") - abs(col("bias"))))
       .select("state", "rn", "pred_confirmed", "pred_removed",
         "pred_susceptible")
-  }
-
-  /** Runnable: `CovidSimulator <scriptsDir>` runs transform → features →
-    * coefficients → simulation on the inputs under `scriptsDir`. */
-  def main(args: Array[String]): Unit = {
-    require(args.length == 1, "usage: CovidSimulator <scriptsDir>")
-    val refDir = args(0)
-    val spark = GraftSession()
-    // integration: the transform's dataset_full builds and is non-empty
-    val dsf = CovidDataTransform.run(spark, refDir)
-    println(s"PIPELINE transform rows=${dsf.count()}")
-    // model fit + simulation on the committed per-state series (the
-    // dates span the gov_action threshold, so the design has variance)
-    val feats = features(spark, loadPopDataset(spark, refDir)).cache()
-    val coefs = coefficients(feats)
-    val sim = simulate(feats, coefs)
-    println(s"PIPELINE simulator states=${coefs.count()} " +
-      s"sim_rows=${sim.count()} " +
-      s"neg_preds=${sim.filter(col("pred_removed") < 0).count()}")
-    val cmp = compareIntervention(feats, coefs)
-    println(s"PIPELINE intervention rows=${cmp.count()} " +
-      s"affected=${cmp.filter(abs(col("diff_removed")) > 1e-9).count()}")
-    spark.stop()
   }
 }

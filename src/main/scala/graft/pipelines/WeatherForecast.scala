@@ -3,7 +3,6 @@ package graft.pipelines
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter.BASIC_ISO_DATE
 
-import graft.GraftSession
 import graft.ops.{Lstm, Sequential}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,9 +61,9 @@ object WeatherForecast {
       case other => throw new IllegalArgumentException(
         s"unknown forecast model '$other' (expected lstm or ar1)")
     }
-    // ONE fit per series; the tagged frame is persisted so the three
-    // output selects don't re-fit. Bounded: (nTest + horizon + 1) rows
-    // per series.
+    // ONE fit per series, run here into a local checkpoint that the three
+    // outputs read and the ContextCleaner frees with them (no CacheManager
+    // entry). Bounded: (nTest + horizon + 1) rows per series.
     val tagged = series.select("series", "date", "value")
       .as[(String, Int, Double)]
       .groupByKey(_._1)
@@ -92,7 +91,7 @@ object WeatherForecast {
             (pa :+ ForecastOut("rs", key, 0, nTest, rmse, 0.0)) ++ fp
           }
         }
-      }.toDF().persist()
+      }.toDF().localCheckpoint()
     val predActual = tagged.filter(col("kind") === "pa")
       .select("series", "date", "pred", "actual")
     val futurePred = tagged.filter(col("kind") === "fp")
@@ -144,25 +143,5 @@ object WeatherForecast {
       .map { case (w, _) => Lstm.netPredict(w, fit.params, hidden) }
     (test, rmse, Lstm.netRollout(xs.takeRight(nSteps), horizon, fit.params,
       hidden).toSeq)
-  }
-
-  /** Runnable: `WeatherForecast <scriptsDir>` drives the protocol with
-    * `<scriptsDir>/output/weather_output/future_pred.csv` as input (the
-    * raw GHCN observations are not committed). */
-  def main(args: Array[String]): Unit = {
-    require(args.length == 1, "usage: WeatherForecast <scriptsDir>")
-    val spark = GraftSession()
-    val src = spark.read.option("header", true).option("inferSchema", true)
-      .csv(s"${args(0)}/output/weather_output/future_pred.csv")
-      .select(concat(col("country"), lit(" : "), col("state")).as("series"),
-        col("date").cast("int").as("date"),
-        col("TAVG_pred").cast("double").as("value"))
-    // ar1 fast flag: the committed 180-day series cannot admit the
-    // LSTM default's 365-step windows; PipelinesSpec drives the lstm
-    // mode end-to-end at a window shape the committed series support.
-    val (pa, fp, rs) = run(spark, src, model = "ar1")
-    println(s"PIPELINE weather pred_actual=${pa.count()} " +
-      s"future_pred=${fp.count()} rsme_score=${rs.count()}")
-    spark.stop()
   }
 }

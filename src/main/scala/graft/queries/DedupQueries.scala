@@ -465,7 +465,6 @@ object DedupQueries {
   private val d7 = Q(
     "d7_jaccard_dfcap",
     (s, dir) => {
-      import s.implicits._
       // Candidate generation in ONE evaluation of the shingle pass:
       // group the inverted index per shingle, DF-cap the posting list
       // (≤10 docs), and emit the pairs combinatorially from the sorted

@@ -326,7 +326,6 @@ object SourceQueries {
   private val s9 = Q(
     "src9_compaction",
     (s, dir) => {
-      import s.implicits._
       val small = tmpDir("events_small")
       val compact = tmpDir("events_compact")
       Tables.load(s, dir, "events")

@@ -38,7 +38,6 @@ class GraphWavedSpec extends AnyFunSuite with TempDirs {
   }
 
   test("co-edge MV read path == derived edge set") {
-    import org.apache.spark.sql.functions._
     val mvDir = tempDir("graft_coedges_mv")
     // a dataset dir containing ONLY the MV: lineitem links to the real
     // testdata so the derivation baseline stays comparable

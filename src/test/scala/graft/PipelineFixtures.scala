@@ -31,7 +31,10 @@ import java.util.Locale
   *    2020-03-20 gov_action threshold and the 2020-03-25 intervention
   *    pivot; its states start with zero-confirmed days, and ND has no
   *    recovered or death increments in its first 30 positive rows, so
-  *    its raw R₀ is 0 and the zero→mean imputation runs.
+  *    its raw R₀ is 0 and the zero→mean imputation runs;
+  *  - NM's removals fall as its confirmed cases rise, so its fitted β
+  *    is negative and the negative-β mean imputation runs; they never
+  *    rise, so its raw R₀ is 0 too.
   */
 object PipelineFixtures {
 
@@ -210,7 +213,7 @@ object PipelineFixtures {
   private def writePopDataset(dir: Path, rnd: scala.util.Random): Unit = {
     val dates = days(LocalDate.of(2020, 2, 28), 52)
     val govFrom = LocalDate.of(2020, 3, 20)
-    val states = Seq("CA", "NY", "TX", "WA", "FL", "ND")
+    val states = Seq("CA", "NY", "TX", "WA", "FL", "ND", "NM")
     val g = uniform(rnd, 10.0, 30.0)
     val rows = states.zipWithIndex.flatMap { case (s, i) =>
       val population = 1000000L + rnd.nextInt(30000000)
@@ -219,17 +222,21 @@ object PipelineFixtures {
         population * 0.003, uniform(rnd, 20.0, 35.0))
       val conf = Vector.fill(lead)(0L) ++ grown.map(math.max(1L, _))
       val a = uniform(rnd, 5.0, 30.0)
-      val b = uniform(rnd, 0.005, 0.03)
+      // NM's slope is negative: its removals start at its final case
+      // count and never rise (so its raw R₀ is 0), nor fall below 1
+      val falling = s == "NM"
+      val b = uniform(rnd, 0.005, 0.03) * (if (falling) -1 else 1)
       // ND reports no removals over its first 30 positive rows
       val quietUntil = if (s == "ND") lead + 30 else lead + 1
-      var total = 0.0
+      var total = if (falling) conf.last.toDouble else 0.0
       val removed = dates.indices.map { t =>
         if (t >= quietUntil) {
           val gov = if (dates(t).isAfter(govFrom)) g else 0.0
-          total += math.max(0.0,
-            a + gov + b * conf(t - 1) + 5.0 * rnd.nextGaussian())
+          val step = a + gov + b * conf(t - 1) + 5.0 * rnd.nextGaussian()
+          total += (if (falling) math.min(0.0, step) else math.max(0.0, step))
         }
-        math.min(math.round(total), conf(t))
+        if (falling) math.max(1L, math.round(total))
+        else math.min(math.round(total), conf(t))
       }
       val death = removed.map(_ / 10)
       val recovered = removed.zip(death).map { case (r, d) => r - d }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.pipelines.{CovidDataTransform, CovidSimulator, WeatherForecast}
+import graft.pipelines.{CovidChain, CovidDataTransform, CovidSimulator, WeatherForecast}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,9 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * relative paths ([[PipelineFixtures]]). The contract tests (transform,
   * features, R₀ replay, SIR replay, simulation clamp, intervention
   * diff, AR(1) and LSTM forecast output, AR(1) replay) run on either,
-  * and say in an `info` line which they used; one more traces the
-  * generated edge rows through the transform and runs on generated
-  * inputs only. The tests that compare against an
+  * and say in an `info` line which they used. Four more check generated
+  * inputs only: the transform's edge rows and the negative-β imputation
+  * (cancelled where the reference is present), and the plans' job
+  * counts and the whole [[CovidChain]] (always run on generated
+  * inputs). The tests that compare against an
   * artifact only the reference commits are cancelled when the file they
   * read is absent:
   *  - the coefficient shape and per-state β tests need
@@ -39,14 +41,28 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
 
   override def afterAll(): Unit = try spark.stop() finally super.afterAll()
 
+  /** Generated inputs, whether or not the reference checkout is here. */
+  private lazy val fixtureDir: String = {
+    val d = tempDir("graft_pipeline_inputs")
+    PipelineFixtures.write(Paths.get(d), fixtureSeed)
+    d
+  }
+
   /** The reference checkout when present, else generated inputs. */
   private lazy val dataDir: String =
-    if (Files.isDirectory(Paths.get(refDir))) refDir
-    else {
-      val d = tempDir("graft_pipeline_inputs")
-      PipelineFixtures.write(Paths.get(d), fixtureSeed)
-      d
-    }
+    if (Files.isDirectory(Paths.get(refDir))) refDir else fixtureDir
+
+  /** The session's temp view names. */
+  private def tempViews(s: org.apache.spark.sql.SparkSession): Set[String] =
+    s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+  /** An empty CacheManager. This spec keeps its shared frames in local
+    * checkpoints, outside the CacheManager, so that a test can see an
+    * entry that a pipeline leaves there. */
+  private def emptyCache(): Unit = {
+    spark.catalog.clearCache()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 
   private def reportInputs(): Unit =
     info(if (dataDir == refDir) s"inputs: the reference's CSVs under $refDir"
@@ -65,7 +81,8 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
   private val futurePred = "output/weather_output/future_pred.csv"
   private val rsmeScore = "output/weather_output/rsme_score.csv"
 
-  private lazy val datasetFull = CovidDataTransform.run(spark, dataDir).cache()
+  private lazy val datasetFull =
+    CovidDataTransform.run(spark, dataDir).localCheckpoint()
 
   /** A committed or generated `future_pred.csv` as the forecaster's
     * (series, date, value) input. */
@@ -148,9 +165,50 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     assert(got == Seq(expected))
   }
 
+  /** Building the pipeline's plans reads only the CSV headers: one job
+    * per typed read, no schema-inference scans (8 reads took 16 jobs
+    * while they inferred). */
+  test("building the transform and pop_dataset plans reads only the CSV headers") {
+    val (_, transformJobs) = SparkJobs.during(spark) {
+      CovidDataTransform.run(spark, fixtureDir) }
+    assert(transformJobs <= 8, s"$transformJobs jobs to build the transform")
+    val (_, popJobs) = SparkJobs.during(spark) {
+      CovidSimulator.loadPopDataset(spark, fixtureDir) }
+    assert(popJobs <= 1, s"$popJobs jobs to build loadPopDataset")
+  }
+
+  /** The whole chain on generated inputs, whatever `dataDir` is: every
+    * stage's CSV holds the rows it reported, and the run leaves no temp
+    * view, cache entry or persistent RDD behind. */
+  test("CovidChain writes every stage and reports the rows it wrote") {
+    val work = tempDir("graft_chain")
+    emptyCache()
+    val (views, rdds) = (tempViews(spark), spark.sparkContext.getPersistentRDDs)
+    val stages = CovidChain.run(spark, fixtureDir, work)
+    assert(stages.map(_.name) == Seq("dataset_full", "features",
+      "coefficients", "simulation", "intervention"))
+    stages.foreach { s =>
+      info(s"${s.name}: ${s.rows} rows")
+      val reread = spark.read.option("header", true)
+        .csv(s"$work/${s.name}.csv").count()
+      assert(s.rows > 0 && s.rows == reread, s)
+      assert(s.seconds >= 0.0, s)
+    }
+    assert(tempViews(spark) == views)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val newRdds = spark.sparkContext.getPersistentRDDs.keySet.diff(rdds.keySet)
+    assert(newRdds.isEmpty, newRdds)
+  }
+
   private lazy val feats =
     CovidSimulator.features(spark,
-      CovidSimulator.loadPopDataset(spark, dataDir)).cache()
+      CovidSimulator.loadPopDataset(spark, dataDir)).localCheckpoint()
+
+  test("features registers no temp view") {
+    val fresh = spark.newSession() // temp views are per session
+    CovidSimulator.features(fresh, CovidSimulator.loadPopDataset(fresh, dataDir))
+    assert(tempViews(fresh).isEmpty)
+  }
 
   test("simulator features carry both date encodings, bands and lags") {
     reportInputs()
@@ -166,7 +224,8 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
   }
 
   // ONE REML-EM fit shared by the shape/simulate/intervention tests
-  private lazy val coefsShared = CovidSimulator.coefficients(feats).cache()
+  private lazy val coefsShared =
+    CovidSimulator.coefficients(feats).localCheckpoint()
 
   test("coefficient table matches the committed recover_coefs.csv golden shape") {
     assumeReference(recoverCoefs, "recover_coefs.csv golden")
@@ -228,6 +287,25 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     assert(worst._2 < 0.10, s"worst state ${worst._1} |beta diff| ${worst._2}")
     assert(diffs.count(_._2 > 0.05) <= 3,
       s"too many outlier states: ${diffs.filter(_._2 > 0.05).mkString(", ")}")
+  }
+
+  /** PipelineFixtures' NM reports falling removals as its cases rise, so
+    * its fitted β is negative; the reference's mean imputation
+    * (covid_simulator.py:501-502) replaces it with the mean positive β.
+    * The fixture twin of the golden-shape test's imputation assert. */
+  test("negative-beta imputation replaces every negative fitted beta") {
+    assume(dataDir != refDir, "checks PipelineFixtures' falling-removals state")
+    import spark.implicits._
+    val raw = CovidSimulator.coefficients(feats, imputeNegative = false)
+      .select("state", "lag_confirmed").as[(String, Double)].collect().toMap
+    val imputed = coefsShared.select("state", "lag_confirmed")
+      .as[(String, Double)].collect().toMap
+    val negative = raw.filter(_._2 < 0).keySet
+    assert(negative.nonEmpty, s"no negative beta in $raw")
+    val positive = raw.values.filter(_ > 0)
+    val mean = positive.sum / positive.size
+    assert(imputed.values.forall(_ >= 0), imputed)
+    negative.foreach(st => assert(close(imputed(st), mean, 1e-12), st))
   }
 
   /** R₀ is model-free arithmetic (covid_simulator.py:393-410) but is not
@@ -428,6 +506,20 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  /** The forecast's fold is stored outside the CacheManager, so repeated
+    * runs leave it as they found it, and give bit-identical outputs. */
+  test("forecast runs add no CacheManager entry") {
+    val src = forecastInput(s"$dataDir/$futurePred")
+    emptyCache()
+    val outs = (1 to 3).map { _ =>
+      val (pa, fp, rs) = WeatherForecast.run(spark, src, model = "ar1")
+      (pa.orderBy("series", "date").collect().toSeq, fp.collect().toSeq,
+        rs.collect().toSeq)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(outs.head._1.nonEmpty && outs.forall(_ == outs.head))
+  }
+
   /** The output contract of the test below, on whichever inputs ran,
     * for both models: every series with `minRows` rows is forecast. The
     * LSTM runs at a window shape the 180-day series admit, small enough
@@ -558,7 +650,6 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     */
   test("committed future_pred.csv contract: shape, density, date monotonicity") {
     assumeReference(futurePred, "future_pred.csv")
-    import spark.implicits._
     val golden = spark.read.option("header", true).option("inferSchema", true)
       .csv(s"$refDir/output/weather_output/future_pred.csv")
       .select(concat(col("country"), lit(" : "), col("state")).as("series"),

@@ -329,7 +329,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("m10 k-means assignment pass is scan-local: literal centroids, " +
       "no join, no exchange before the aggregate") {
-    import org.apache.spark.sql.functions.col
     val e = graft.queries.KMeansOps.loadV(spark, sfDir)
     val cent = graft.queries.KMeansOps.seeds(e)
     val assigned = e.withColumn("cluster",
