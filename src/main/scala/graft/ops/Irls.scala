@@ -34,7 +34,7 @@ object Irls {
     * @param xCols feature columns (the intercept is added internally)
     * @param tol   stop when max |Δβ| < tol
     * Cold start mu₀ = y + 0.5 (the classic GLM initializer — the same
-    * one the hash-proven m1b/m1c registry rows replay in DuckDB).
+    * one the hash-proven m1d registry row replays in DuckDB).
     */
   def poissonFit(df: DataFrame, yCol: String, xCols: Seq[String],
       tol: Double = 1e-10, maxIter: Int = 25,

@@ -163,11 +163,7 @@ object MixedLm {
         val lam = lambdaOf(s, zi, sigma2, psiInv)
         val szz = subSquare(s.sxx, zi, p)        // q×q
         val szx = subRows(s.sxx, zi, p)
-        val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
-        val rz = Array.tabulate(q)(i =>          // Z'(y − Xβ)
-          szy(i) - (0 until p).map(j => szx(i * p + j) * betaN(j)).sum)
-        val bh = Array.tabulate(q)(i =>          // BLUP b̂ = Λ rz / σ²
-          (0 until q).map(k => lam(i * q + k) * rz(k)).sum / sigma2)
+        val (rz, bh) = blup(s, zi, lam, szx, betaN, sigma2)
         val ebb = Array.tabulate(q * q) { k =>
           val (i, j) = (k / q, k % q); bh(i) * bh(j) + lam(k)
         }
@@ -242,19 +238,42 @@ object MixedLm {
   def blups(stats: Array[LmmGroupStats], fit: LmmFit,
       zIdx: Seq[Int]): Array[(String, Array[Double])] = {
     val p = dims(stats)
-    val q = zIdx.length
     val zi = zIdx.toArray
     val psiInv = invSmall(fit.psi)
     stats.map { s =>
       val lam = lambdaOf(s, zi, fit.sigma2, psiInv)
-      val szx = subRows(s.sxx, zi, p)
-      val szy = Array.tabulate(q)(i => s.sxy(zi(i)))
-      val rz = Array.tabulate(q)(i =>
-        szy(i) - (0 until p).map(j => szx(i * p + j) * fit.beta(j)).sum)
-      val bh = Array.tabulate(q)(i =>
-        (0 until q).map(k => lam(i * q + k) * rz(k)).sum / fit.sigma2)
-      (s.g, bh)
+      (s.g, blup(s, zi, lam, subRows(s.sxx, zi, p), fit.beta, fit.sigma2)._2)
     }
+  }
+
+  /** One group's residual moment rz = Z'(y − Xβ) and BLUP
+    * b̂ = Λ rz / σ², each inner sum taken left to right from its first
+    * term. `szx` is the q×p block [[subRows]] gives.
+    */
+  private def blup(s: LmmGroupStats, zi: Array[Int], lam: Array[Double],
+      szx: Array[Double], beta: Array[Double],
+      sigma2: Double): (Array[Double], Array[Double]) = {
+    val q = zi.length
+    val p = beta.length
+    val rz = new Array[Double](q)
+    val bh = new Array[Double](q)
+    var i = 0
+    while (i < q) {
+      var acc = szx(i * p) * beta(0)
+      var j = 1
+      while (j < p) { acc += szx(i * p + j) * beta(j); j += 1 }
+      rz(i) = s.sxy(zi(i)) - acc
+      i += 1
+    }
+    i = 0
+    while (i < q) {
+      var acc = lam(i * q) * rz(0)
+      var k = 1
+      while (k < q) { acc += lam(i * q + k) * rz(k); k += 1 }
+      bh(i) = acc / sigma2
+      i += 1
+    }
+    (rz, bh)
   }
 
   /** The covariate count p; no group is no fit. */

@@ -212,17 +212,16 @@ object CovidSimulator {
     val spark = feats.sparkSession
     import spark.implicits._
     val w = Window.partitionBy("state").orderBy("dateval")
-    val joined = feats.filter(col("removed") > 0 && col("holdout") === 0)
+    feats.filter(col("removed") > 0 && col("holdout") === 0)
       .join(broadcast(coefs.select(col("state"), col("Intercept").as("cI"),
         col("gov_action").as("cG"), col("TAVG").as("cT"),
         col("lag_confirmed").as("beta"))), Seq("state"))
       .withColumn("rn", row_number().over(w))
-      .withColumn("z1cov",
-        col("cI") + col("cG") * col("gov_action") + col("cT") * col("TAVG"))
-    val sim = joined
       .select(col("state"), col("rn"), col("confirmed"), col("removed"),
-        col("population"), col("z1cov").as("z1"), col("R_0").as("r0"),
-        col("beta"))
+        col("population"),
+        (col("cI") + col("cG") * col("gov_action") + col("cT") * col("TAVG"))
+          .as("z1"),
+        col("R_0").as("r0"), col("beta"))
       .as[SimRow]
       .groupByKey(_.state)
       .flatMapGroups { (state: String, it: Iterator[SimRow]) =>
@@ -230,22 +229,21 @@ object CovidSimulator {
         val h = rows.head
         val n = h.population
         // rn runs 1..rows.length, so step t of the kernel is row rn = t + 1
-        Sequential.sirSimulate(h.confirmed, h.removed, n, h.beta * h.r0 / n,
-            h.beta, rows.map(_.z1))
-          .iterator.zip(rows.iterator).map { case ((pc, pr, ps), r) =>
-            SimOut(state, r.rn, pc, pr, ps)
-          }
+        val sir = Sequential.sirSimulate(h.confirmed, h.removed, n,
+          h.beta * h.r0 / n, h.beta, rows.map(_.z1))
+        // M8 bias adjust: mean(pred_removed − removed) summed in rn
+        // order, so the bias does not depend on the input partitioning
+        var biasSum = 0.0
+        var i = 0
+        while (i < rows.length) {
+          biasSum += sir(i)._2 - rows(i).removed
+          i += 1
+        }
+        val bias = math.abs(biasSum / rows.length)
+        sir.iterator.zip(rows.iterator).map { case ((pc, pr, ps), r) =>
+          SimOut(state, r.rn, pc, math.max(0.0, pr - bias), ps)
+        }
       }
       .toDF()
-    // M8 bias adjust on pred_removed vs actual removed, then clamp
-    val actual = joined.select(col("state"), col("rn"), col("removed"))
-    val bias = sim.join(actual, Seq("state", "rn"))
-      .groupBy("state")
-      .agg(avg(col("pred_removed") - col("removed")).as("bias"))
-    sim.join(broadcast(bias), Seq("state"))
-      .withColumn("pred_removed",
-        greatest(lit(0.0), col("pred_removed") - abs(col("bias"))))
-      .select("state", "rn", "pred_confirmed", "pred_removed",
-        "pred_susceptible")
   }
 }

@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.LongType
   *
   * Without this rule Spark plans the theta condition as a broadcast
   * nested-loop (or cartesian) join: every probe row is compared against
-  * every candidate row, O(n·m) at any scale. The rewrite is the j17
-  * pattern, applied by the OPTIMIZER so a user can write the naive
-  * predicate and still get the scalable plan:
+  * every candidate row, O(n·m) at any scale. The rewrite is the
+  * hand-written bucket-explode pattern, applied by the OPTIMIZER so a
+  * user can write the naive predicate and still get the scalable plan
+  * (registry row j18 runs it):
   *
   *   Join(L, R, abs(a−b) ≤ δ)
   *     ⇒ Project(origOutput,

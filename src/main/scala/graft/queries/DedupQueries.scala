@@ -1323,6 +1323,153 @@ object DedupQueries {
             HAVING count(*) >= 2
             ORDER BY 1, 2"""))
 
+  /** Near-duplicate truth pairs (doc_a < doc_b) under the exact
+    * integer Jaccard ≥ ½ gate 2·shared ≥ |A|+|B|−shared, over the
+    * [[shingled]] rows `ex`, keeping only pairs whose doc_a passes
+    * `anchor`.
+    */
+  private[queries] def jaccardHalfPairs(ex: DataFrame,
+      anchor: Column => Column): DataFrame = {
+    val a = ex.filter(anchor(col("doc_id")))
+      .select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("sh"))
+    val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"),
+      col("sh"))
+    a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b", "na", "nb")
+      .agg(count(lit(1)).as("shared"))
+      .filter(lit(2L) * col("shared")
+        >= col("na") + col("nb") - col("shared"))
+      .select("doc_a", "doc_b")
+  }
+
+  /** DuckDB's [[jaccardHalfPairs]] over the CTE `ex` (doc_id, nsh, sh),
+    * `anchored(docIdColumn)` the anchor predicate.
+    */
+  private[queries] def duckJaccardHalfPairs(anchored: String => String): String =
+    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
+       |  WHERE ${anchored("a.doc_id")}
+       |  GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
+       |  HAVING 2 * count(*) >= a.nsh + b.nsh - count(*)""".stripMargin
+
+  /** The band configs d20 and d27 score: (name, bands, rows). */
+  private val lshCfgs = Seq(("b8r1", 8, 1), ("b4r2", 4, 2), ("b2r4", 2, 4),
+    ("b1r8", 1, 8))
+
+  /** The LSH band-tuning table d20 and d27 share, one row per config:
+    * cfg, n_candidates, n_true, n_caught, recall, precision, counting
+    * only the truth and candidate pairs whose smaller id passes
+    * `anchor`. Signatures and the truth set are each built once and
+    * reused by all four configs.
+    */
+  private def lshTuning(s: SparkSession, dir: String,
+      anchor: Column => Column): DataFrame = {
+    val sig = minhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    val truth = jaccardHalfPairs(ex, anchor)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val truthTotal = truth.agg(count(lit(1)).as("n_true"))
+    // Round-17 opt: ONE banded pipeline for all four configs (cfg
+    // rides the band key) instead of four separate explode→self-join→
+    // distinct→2-agg branches, and the per-config candidate/caught
+    // pair comes from one LEFT join against the (unique-keyed) truth
+    // set + a single grouped aggregate — same counts, same rows
+    // (oracle-pinned), ~4x fewer stages on the config side. The
+    // cfg-list left join keeps a zero-candidate config's row alive
+    // with the original (0, 0, NULL precision) semantics.
+    import s.implicits._
+    val bands = sig.select(col("doc_id"), explode(array(
+      lshCfgs.flatMap { case (cfg, nb, r) =>
+        (0 until nb).map { j =>
+          val key = md5(concat(
+            (0 until r).map(i => col(s"mh${j * r + i}")): _*))
+          struct(lit(cfg).as("cfg"), lit(j).as("bi"), key.as("bk"))
+        }
+      }: _*)).as("bd"))
+      .select(col("doc_id"), col("bd.cfg").as("cfg"),
+        col("bd.bi").as("bi"), col("bd.bk").as("bk"))
+    val cand = bands.filter(anchor(col("doc_id"))).as("x")
+      .join(bands.as("y"),
+        col("x.cfg") === col("y.cfg") && col("x.bi") === col("y.bi") &&
+          col("x.bk") === col("y.bk") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
+        col("y.doc_id").as("doc_b"))
+      .distinct()
+    val perCfg = cand
+      .join(truth.withColumn("hit", lit(1L)), Seq("doc_a", "doc_b"),
+        "left")
+      .groupBy("cfg")
+      .agg(count(lit(1)).as("n_candidates"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_caught"))
+    lshCfgs.map(_._1).toDF("cfg")
+      .join(perCfg, Seq("cfg"), "left")
+      .na.fill(0L, Seq("n_candidates", "n_caught"))
+      .crossJoin(truthTotal)
+      .select(col("cfg"), col("n_candidates"),
+        col("n_true"), col("n_caught"),
+        when(col("n_true") > 0L,
+          col("n_caught").cast("double")
+            / col("n_true").cast("double")).as("recall"),
+        when(col("n_candidates") > 0L,
+          col("n_caught").cast("double")
+            / col("n_candidates").cast("double")).as("precision"))
+  }
+
+  /** DuckDB's [[lshTuning]] as the CTE `tuning`: `anchorCtes` add any
+    * CTE the predicate `anchored(docIdColumn)` reads.
+    */
+  private def duckLshTuning(anchorCtes: String,
+      anchored: String => String): String = {
+    val bandSql = (nb: Int, r: Int) =>
+      (0 until nb).map { j =>
+        val key = (0 until r).map(i => s"mh${j * r + i}").mkString(" || ")
+        s"SELECT doc_id, $j AS bi, md5($key) AS bk FROM sigs"
+      }.mkString(" UNION ALL ")
+    val candSql = (cfg: String) =>
+      s"""c_$cfg AS (
+         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
+         |  FROM b_$cfg x JOIN b_$cfg y
+         |    ON x.bi = y.bi AND x.bk = y.bk AND x.doc_id < y.doc_id
+         |  WHERE ${anchored("x.doc_id")})""".stripMargin
+    val rowSql = (cfg: String) =>
+      s"""SELECT '$cfg' AS cfg,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg) AS n_candidates,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_true,
+         |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg c
+         |   JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
+         |    AS n_caught,
+         |  CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
+         |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
+         |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
+         |    / (SELECT CAST(count(*) AS DOUBLE) FROM truth) END
+         |    AS recall,
+         |  CASE WHEN (SELECT count(*) FROM c_$cfg) > 0 THEN
+         |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
+         |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
+         |    / (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg) END
+         |    AS precision""".stripMargin
+    s"""WITH sets AS (
+       |  SELECT doc_id, $duckShingles AS shs FROM documents),
+       |ex AS (
+       |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
+       |sigs AS (
+       |  SELECT doc_id,
+       |    ${(0 until 8).map(i =>
+             s"min(md5(sh || '|$i')) AS mh$i").mkString(", ")}
+       |  FROM ex GROUP BY 1),
+       |$anchorCtes
+       |truth AS (
+       |  ${duckJaccardHalfPairs(anchored)}),
+       |${lshCfgs.map { case (c, nb, r) =>
+           s"b_$c AS (${bandSql(nb, r)})" }.mkString(",\n")},
+       |${lshCfgs.map { case (c, _, _) => candSql(c) }.mkString(",\n")},
+       |tuning AS (
+       |${lshCfgs.map { case (c, _, _) => rowSql(c) }
+           .mkString("\nUNION ALL\n")})
+       |""".stripMargin
+  }
+
   /** X225 d20: LSH BAND-TUNING sweep — the s-curve engineering table
     * behind every MinHash deployment: the same 8-hash signatures banded
     * four ways (8 bands×1 row … 1 band×8 rows), each config scored for
@@ -1331,128 +1478,20 @@ object DedupQueries {
     * Wide bands (r=1) catch everything but flood the verifier; narrow
     * bands (r=8) are cheap but miss — the row MEASURES the tradeoff a
     * 100 TB operator must pick, on the same data, in one query.
-    * Signatures and the truth set are each built once and reused by
-    * all four configs; candidate generation stays equi-join-on-band-key
-    * (the d4 plan) for every config.
+    * Candidate generation stays equi-join-on-band-key (the d4 plan)
+    * for every config.
     */
   private val d20 = Q(
     "d20_lsh_tuning",
-    (s, dir) => {
-      val sig = minhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val a = ex.select(col("doc_id").as("doc_a"), col("nsh").as("na"),
-        col("sh"))
-      val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"),
-        col("sh"))
-      val truth = a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(count(lit(1)).as("shared"))
-        .filter(lit(2L) * col("shared")
-          >= col("na") + col("nb") - col("shared"))
-        .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val truthTotal = truth.agg(count(lit(1)).as("n_true_total"))
-      val cfgs = Seq(("b8r1", 8, 1), ("b4r2", 4, 2), ("b2r4", 2, 4),
-        ("b1r8", 1, 8))
-      // Round-17 opt: ONE banded pipeline for all four configs (cfg
-      // rides the band key) instead of four separate explode→self-join→
-      // distinct→2-agg branches, and the per-config candidate/caught
-      // pair comes from one LEFT join against the (unique-keyed) truth
-      // set + a single grouped aggregate — same counts, same rows
-      // (oracle-pinned), ~4x fewer stages on the config side. The
-      // cfg-list left join keeps a zero-candidate config's row alive
-      // with the original (0, 0, NULL precision) semantics.
-      import s.implicits._
-      val bands = sig.select(col("doc_id"), explode(array(
-        cfgs.flatMap { case (cfg, nb, r) =>
-          (0 until nb).map { j =>
-            val key = md5(concat(
-              (0 until r).map(i => col(s"mh${j * r + i}")): _*))
-            struct(lit(cfg).as("cfg"), lit(j).as("bi"), key.as("bk"))
-          }
-        }: _*)).as("bd"))
-        .select(col("doc_id"), col("bd.cfg").as("cfg"),
-          col("bd.bi").as("bi"), col("bd.bk").as("bk"))
-      val cand = bands.as("x").join(bands.as("y"),
-          col("x.cfg") === col("y.cfg") && col("x.bi") === col("y.bi") &&
-            col("x.bk") === col("y.bk") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
-          col("y.doc_id").as("doc_b"))
-        .distinct()
-      val perCfg = cand
-        .join(truth.withColumn("hit", lit(1L)), Seq("doc_a", "doc_b"),
-          "left")
-        .groupBy("cfg")
-        .agg(count(lit(1)).as("n_candidates"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_caught"))
-      cfgs.map(_._1).toDF("cfg")
-        .join(perCfg, Seq("cfg"), "left")
-        .na.fill(0L, Seq("n_candidates", "n_caught"))
-        .crossJoin(truthTotal)
-        .select(col("cfg"), col("n_candidates"),
-          col("n_true_total"), col("n_caught"),
-          when(col("n_true_total") > 0L,
-            col("n_caught").cast("double")
-              / col("n_true_total").cast("double")).as("recall"),
-          when(col("n_candidates") > 0L,
-            col("n_caught").cast("double")
-              / col("n_candidates").cast("double")).as("precision"))
-        .orderBy("cfg")
-    },
-    Some {
-      val bandSql = (cfg: String, nb: Int, r: Int) =>
-        (0 until nb).map { j =>
-          val key = (0 until r).map(i => s"mh${j * r + i}").mkString(" || ")
-          s"SELECT doc_id, $j AS bi, md5($key) AS bk FROM sigs"
-        }.mkString(" UNION ALL ")
-      val candSql = (cfg: String) =>
-        s"""c_$cfg AS (
-           |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM b_$cfg x JOIN b_$cfg y
-           |    ON x.bi = y.bi AND x.bk = y.bk AND x.doc_id < y.doc_id)"""
-          .stripMargin
-      val rowSql = (cfg: String) =>
-        s"""SELECT '$cfg' AS cfg,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg)
-           |    AS n_candidates,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_true_total,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg c
-           |   JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    AS n_caught,
-           |  CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
-           |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
-           |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    / (SELECT CAST(count(*) AS DOUBLE) FROM truth) END
-           |    AS recall,
-           |  CASE WHEN (SELECT count(*) FROM c_$cfg) > 0 THEN
-           |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
-           |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    / (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg) END
-           |    AS precision""".stripMargin
-      val cfgs = Seq(("b8r1", 8, 1), ("b4r2", 4, 2), ("b2r4", 2, 4),
-        ("b1r8", 1, 8))
-      s"""WITH sets AS (
-         |  SELECT doc_id, $duckShingles AS shs FROM documents),
-         |ex AS (
-         |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
-         |sigs AS (
-         |  SELECT doc_id,
-         |    ${(0 until 8).map(i =>
-               s"min(md5(sh || '|$i')) AS mh$i").mkString(", ")}
-         |  FROM ex GROUP BY 1),
-         |truth AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
-         |  HAVING 2 * count(*) >= a.nsh + b.nsh - count(*)),
-         |${cfgs.map { case (c, nb, r) =>
-             s"b_$c AS (${bandSql(c, nb, r)})" }.mkString(",\n")},
-         |${cfgs.map { case (c, _, _) => candSql(c) }.mkString(",\n")}
-         |${cfgs.map { case (c, _, _) => rowSql(c) }
-             .mkString("\nUNION ALL\n")}
-         |ORDER BY cfg""".stripMargin
-    })
+    (s, dir) => lshTuning(s, dir, _ => lit(true))
+      .select(col("cfg"), col("n_candidates"),
+        col("n_true").as("n_true_total"), col("n_caught"), col("recall"),
+        col("precision"))
+      .orderBy("cfg"),
+    Some(duckLshTuning("", _ => "TRUE") +
+      """SELECT cfg, n_candidates, n_true AS n_true_total, n_caught,
+        |       recall, precision
+        |FROM tuning ORDER BY cfg""".stripMargin))
 
   /** X242 d21: MEDOID canonicalization — pick each near-dup cluster's
     * canonical document by CENTRALITY (the member most similar to its
@@ -1573,6 +1612,78 @@ object DedupQueries {
                     CAST(sum(size - 1) AS BIGINT) AS n_removed
              FROM sizes GROUP BY size ORDER BY size"""))
 
+  /** d23's and d28's verdicts on batch×corpus candidate pairs `cand`
+    * (bdoc, cdoc): `pairs` are the pairs exact-verified at Jaccard ≥ ½
+    * against shingle sets read for candidate docs only (the d4
+    * posture); per batch doc, `agg` holds the verified count and best
+    * Jaccard (abdoc, n_dups, best_jaccard) and `best` the best match
+    * (bdoc2, best_match, ties to the smallest corpus doc_id).
+    */
+  private case class BatchVerdicts(pairs: DataFrame, agg: DataFrame,
+      best: DataFrame)
+
+  private def batchVerdicts(s: SparkSession, dir: String,
+      cand: DataFrame): BatchVerdicts = {
+    val candDocs = cand
+      .select(explode(array(col("bdoc"), col("cdoc"))).as("doc_id"))
+      .distinct()
+    val candSets = shingleSets(s, dir)
+      .join(candDocs, Seq("doc_id"), "left_semi")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val a = candSets.select(col("doc_id").as("bdoc"),
+      col("nsh").as("na"), col("shs").as("shs_a"))
+    val b = candSets.select(col("doc_id").as("cdoc"),
+      col("nsh").as("nb"), col("shs").as("shs_b"))
+    val pairs = cand.join(a, Seq("bdoc")).join(b, Seq("cdoc"))
+      .withColumn("shared",
+        size(array_intersect(col("shs_a"), col("shs_b"))))
+      .withColumn("jaccard", round(col("shared").cast("double")
+        / (col("na") + col("nb") - col("shared")), 4))
+      .filter(col("jaccard") >= 0.5)
+      .select("bdoc", "cdoc", "jaccard")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val agg = pairs.groupBy(col("bdoc").as("abdoc"))
+      .agg(count(lit(1)).as("n_dups"), max("jaccard").as("best_jaccard"))
+    val best = pairs.join(agg,
+        col("bdoc") === col("abdoc") &&
+          col("jaccard") === col("best_jaccard"))
+      .groupBy(col("bdoc").as("bdoc2"))
+      .agg(min("cdoc").as("best_match"))
+    BatchVerdicts(pairs, agg, best)
+  }
+
+  /** DuckDB's band candidates of batch (doc_id % 3 = 0) × corpus and
+    * [[batchVerdicts]], as the CTEs cand, pairs, agg and best.
+    */
+  private val duckBatchVerdictCtes =
+    s"""$duckLshBaseCtes,
+       |cand AS (
+       |  SELECT DISTINCT x.doc_id AS bdoc, y.doc_id AS cdoc
+       |  FROM bands x JOIN bands y
+       |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key
+       |  WHERE x.doc_id % 3 = 0 AND y.doc_id % 3 <> 0),
+       |stats AS (
+       |  SELECT a.doc_id AS bdoc, b.doc_id AS cdoc,
+       |         a.nsh AS na, b.nsh AS nb, count(*) AS shared
+       |  FROM ex a JOIN ex b ON a.sh = b.sh
+       |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
+       |  GROUP BY 1, 2, 3, 4),
+       |pairs AS (
+       |  SELECT c.bdoc, c.cdoc,
+       |         round(shared * 1.0 / (na + nb - shared), 4) AS jaccard
+       |  FROM cand c JOIN stats st
+       |    ON c.bdoc = st.bdoc AND c.cdoc = st.cdoc
+       |  WHERE round(shared * 1.0 / (na + nb - shared), 4) >= 0.5),
+       |agg AS (
+       |  SELECT bdoc, CAST(count(*) AS BIGINT) AS n_dups,
+       |         max(jaccard) AS best_jaccard
+       |  FROM pairs GROUP BY 1),
+       |best AS (
+       |  SELECT p.bdoc, min(p.cdoc) AS best_match
+       |  FROM pairs p JOIN agg g
+       |    ON p.bdoc = g.bdoc AND p.jaccard = g.best_jaccard
+       |  GROUP BY 1)""".stripMargin
+
   /** X307 d23: INCREMENTAL DEDUP — the nightly-ingest posture every
     * production corpus actually runs: a NEW BATCH (doc_id % 3 = 0)
     * arrives against an already-indexed CORPUS (the rest), and the
@@ -1591,13 +1702,8 @@ object DedupQueries {
   private val d23 = Q(
     "d23_incremental_dedup",
     (s, dir) => {
-      val sigs = minhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val bands = sigs.select(col("doc_id"),
-        explode(array((0 until 4).map(j =>
-          struct(lit(j).as("band_idx"),
-            md5(concat(col(s"mh${2 * j}"), col(s"mh${2 * j + 1}")))
-              .as("band_key"))): _*)).as("b"))
-        .select(col("doc_id"), col("b.band_idx"), col("b.band_key"))
+      val bands = bandsOf(
+        minhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
       val isBatch = col("doc_id") % 3 === 0
       val cand = bands.filter(isBatch).as("x")
         .join(bands.filter(!isBatch).as("y"),
@@ -1606,67 +1712,17 @@ object DedupQueries {
         .select(col("x.doc_id").as("bdoc"), col("y.doc_id").as("cdoc"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val candDocs = cand
-        .select(explode(array(col("bdoc"), col("cdoc"))).as("doc_id"))
-        .distinct()
-      val candSets = shingleSets(s, dir)
-        .join(candDocs, Seq("doc_id"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val a = candSets.select(col("doc_id").as("bdoc"),
-        col("nsh").as("na"), col("shs").as("shs_a"))
-      val b = candSets.select(col("doc_id").as("cdoc"),
-        col("nsh").as("nb"), col("shs").as("shs_b"))
-      val pairs = cand.join(a, Seq("bdoc")).join(b, Seq("cdoc"))
-        .withColumn("shared",
-          size(array_intersect(col("shs_a"), col("shs_b"))))
-        .withColumn("jaccard", round(col("shared").cast("double")
-          / (col("na") + col("nb") - col("shared")), 4))
-        .filter(col("jaccard") >= 0.5)
-        .select("bdoc", "cdoc", "jaccard")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val agg = pairs.groupBy(col("bdoc").as("abdoc"))
-        .agg(count(lit(1)).as("n_dups"), max("jaccard").as("best_jaccard"))
-      val best = pairs.join(agg,
-          col("bdoc") === col("abdoc") &&
-            col("jaccard") === col("best_jaccard"))
-        .groupBy(col("bdoc").as("bdoc2"))
-        .agg(min("cdoc").as("best_match"))
+      val v = batchVerdicts(s, dir, cand)
       Tables.load(s, dir, "documents").filter(isBatch).select("doc_id")
-        .join(agg, col("doc_id") === col("abdoc"), "left")
-        .join(best, col("doc_id") === col("bdoc2"), "left")
+        .join(v.agg, col("doc_id") === col("abdoc"), "left")
+        .join(v.best, col("doc_id") === col("bdoc2"), "left")
         .select(col("doc_id"),
           coalesce(col("n_dups"), lit(0L)).as("n_dups"),
           col("best_match"), col("best_jaccard"),
           col("n_dups").isNull.cast("int").as("admit"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH $duckLshBaseCtes,
-             |cand AS (
-             |  SELECT DISTINCT x.doc_id AS bdoc, y.doc_id AS cdoc
-             |  FROM bands x JOIN bands y
-             |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-             |  WHERE x.doc_id % 3 = 0 AND y.doc_id % 3 <> 0),
-             |stats AS (
-             |  SELECT a.doc_id AS bdoc, b.doc_id AS cdoc,
-             |         a.nsh AS na, b.nsh AS nb, count(*) AS shared
-             |  FROM ex a JOIN ex b
-             |    ON a.sh = b.sh AND a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
-             |  GROUP BY 1, 2, 3, 4),
-             |pairs AS (
-             |  SELECT c.bdoc, c.cdoc,
-             |         round(shared * 1.0 / (na + nb - shared), 4) AS jaccard
-             |  FROM cand c JOIN stats st
-             |    ON c.bdoc = st.bdoc AND c.cdoc = st.cdoc
-             |  WHERE round(shared * 1.0 / (na + nb - shared), 4) >= 0.5),
-             |agg AS (
-             |  SELECT bdoc, CAST(count(*) AS BIGINT) AS n_dups,
-             |         max(jaccard) AS best_jaccard
-             |  FROM pairs GROUP BY 1),
-             |best AS (
-             |  SELECT p.bdoc, min(p.cdoc) AS best_match
-             |  FROM pairs p JOIN agg g
-             |    ON p.bdoc = g.bdoc AND p.jaccard = g.best_jaccard
-             |  GROUP BY 1)
+    Some(s"""WITH $duckBatchVerdictCtes
              |SELECT d.doc_id, coalesce(g.n_dups, 0) AS n_dups,
              |       b.best_match, g.best_jaccard,
              |       CAST(g.n_dups IS NULL AS INT) AS admit
@@ -2009,131 +2065,30 @@ object DedupQueries {
     (s, dir) => {
       val nDocs = Tables.load(s, dir, "documents").count()
       def anchored(c: Column): Column = graft.ops.Anchors.keep(c, nDocs)
-      val sig = minhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      val a = ex.filter(anchored(col("doc_id")))
-        .select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("sh"))
-      val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"),
-        col("sh"))
-      val truth = a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(count(lit(1)).as("shared"))
-        .filter(lit(2L) * col("shared")
-          >= col("na") + col("nb") - col("shared"))
-        .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val truthTotal = truth.agg(count(lit(1)).as("n_true_sampled"))
       val nAnchors = Tables.load(s, dir, "documents")
         .filter(anchored(col("doc_id")))
         .agg(count(lit(1)).as("n_anchors"))
-      val cfgs = Seq(("b8r1", 8, 1), ("b4r2", 4, 2), ("b2r4", 2, 4),
-        ("b1r8", 1, 8))
-      // Round-17 opt: same single-pipeline merge as d20 — cfg rides the
-      // band key, one anchored self-join for all four configs, one LEFT
-      // join + grouped aggregate for candidates/caught (truth is
-      // unique-keyed). Rows identical (oracle-pinned).
-      import s.implicits._
-      val bands = sig.select(col("doc_id"), explode(array(
-        cfgs.flatMap { case (cfg, nb, r) =>
-          (0 until nb).map { j =>
-            val key = md5(concat(
-              (0 until r).map(i => col(s"mh${j * r + i}")): _*))
-            struct(lit(cfg).as("cfg"), lit(j).as("bi"), key.as("bk"))
-          }
-        }: _*)).as("bd"))
-        .select(col("doc_id"), col("bd.cfg").as("cfg"),
-          col("bd.bi").as("bi"), col("bd.bk").as("bk"))
-      val cand = bands.filter(anchored(col("doc_id"))).as("x")
-        .join(bands.as("y"),
-          col("x.cfg") === col("y.cfg") && col("x.bi") === col("y.bi") &&
-            col("x.bk") === col("y.bk") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.cfg").as("cfg"), col("x.doc_id").as("doc_a"),
-          col("y.doc_id").as("doc_b"))
-        .distinct()
-      val perCfg = cand
-        .join(truth.withColumn("hit", lit(1L)), Seq("doc_a", "doc_b"),
-          "left")
-        .groupBy("cfg")
-        .agg(count(lit(1)).as("n_candidates_sampled"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_caught_sampled"))
-      cfgs.map(_._1).toDF("cfg")
-        .join(perCfg, Seq("cfg"), "left")
-        .na.fill(0L, Seq("n_candidates_sampled", "n_caught_sampled"))
-        .crossJoin(truthTotal).crossJoin(nAnchors)
+      lshTuning(s, dir, anchored).crossJoin(nAnchors)
         .select(col("cfg"), col("n_anchors"),
-          col("n_candidates_sampled"),
-          col("n_true_sampled"), col("n_caught_sampled"),
-          when(col("n_true_sampled") > 0L,
-            col("n_caught_sampled").cast("double")
-              / col("n_true_sampled").cast("double")).as("recall_est"),
-          when(col("n_candidates_sampled") > 0L,
-            col("n_caught_sampled").cast("double")
-              / col("n_candidates_sampled").cast("double"))
-            .as("precision_est"))
+          col("n_candidates").as("n_candidates_sampled"),
+          col("n_true").as("n_true_sampled"),
+          col("n_caught").as("n_caught_sampled"),
+          col("recall").as("recall_est"),
+          col("precision").as("precision_est"))
         .orderBy("cfg")
     },
-    Some {
-      val bandSql = (cfg: String, nb: Int, r: Int) =>
-        (0 until nb).map { j =>
-          val key = (0 until r).map(i => s"mh${j * r + i}").mkString(" || ")
-          s"SELECT doc_id, $j AS bi, md5($key) AS bk FROM sigs"
-        }.mkString(" UNION ALL ")
-      val candSql = (cfg: String) =>
-        s"""c_$cfg AS (
-           |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-           |  FROM b_$cfg x JOIN b_$cfg y
-           |    ON x.bi = y.bi AND x.bk = y.bk AND x.doc_id < y.doc_id
-           |  WHERE x.doc_id IN (SELECT doc_id FROM anchors))"""
-          .stripMargin
-      val rowSql = (cfg: String) =>
-        s"""SELECT '$cfg' AS cfg,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM anchors) AS n_anchors,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg)
-           |    AS n_candidates_sampled,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM truth)
-           |    AS n_true_sampled,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM c_$cfg c
-           |   JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    AS n_caught_sampled,
-           |  CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
-           |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
-           |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    / (SELECT CAST(count(*) AS DOUBLE) FROM truth) END
-           |    AS recall_est,
-           |  CASE WHEN (SELECT count(*) FROM c_$cfg) > 0 THEN
-           |    (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg c
-           |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
-           |    / (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg) END
-           |    AS precision_est""".stripMargin
-      val cfgs = Seq(("b8r1", 8, 1), ("b4r2", 4, 2), ("b2r4", 2, 4),
-        ("b1r8", 1, 8))
-      s"""WITH sets AS (
-         |  SELECT doc_id, $duckShingles AS shs FROM documents),
-         |ex AS (
-         |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
-         |sigs AS (
-         |  SELECT doc_id,
-         |    ${(0 until 8).map(i =>
-               s"min(md5(sh || '|$i')) AS mh$i").mkString(", ")}
-         |  FROM ex GROUP BY 1),
-         |anchors AS (
+    Some(duckLshTuning(
+      s"""anchors AS (
          |  SELECT doc_id FROM documents
          |  WHERE ${graft.ops.Anchors.keepSql("doc_id",
-                "SELECT count(*) FROM documents")}),
-         |truth AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  WHERE a.doc_id IN (SELECT doc_id FROM anchors)
-         |  GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
-         |  HAVING 2 * count(*) >= a.nsh + b.nsh - count(*)),
-         |${cfgs.map { case (c, nb, r) =>
-             s"b_$c AS (${bandSql(c, nb, r)})" }.mkString(",\n")},
-         |${cfgs.map { case (c, _, _) => candSql(c) }.mkString(",\n")}
-         |${cfgs.map { case (c, _, _) => rowSql(c) }
-             .mkString("\nUNION ALL\n")}
-         |ORDER BY cfg""".stripMargin
-    })
+                "SELECT count(*) FROM documents")}),""".stripMargin,
+      c => s"$c IN (SELECT doc_id FROM anchors)") +
+      """SELECT cfg, (SELECT CAST(count(*) AS BIGINT) FROM anchors)
+        |         AS n_anchors,
+        |       n_candidates AS n_candidates_sampled,
+        |       n_true AS n_true_sampled, n_caught AS n_caught_sampled,
+        |       recall AS recall_est, precision AS precision_est
+        |FROM tuning ORDER BY cfg""".stripMargin))
 
   /** X323 d28: INCREMENTAL NEAR-DUP MAINTENANCE against a STORED LSH
     * index — the gap d23 left open (round-16 verdict "What's missing"
@@ -2180,42 +2135,18 @@ object DedupQueries {
         .select(col("x.doc_id").as("bdoc"), col("y.doc_id").as("cdoc"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val candDocs = cand
-        .select(explode(array(col("bdoc"), col("cdoc"))).as("doc_id"))
-        .distinct()
-      val candSets = shingleSets(s, dir)
-        .join(candDocs, Seq("doc_id"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val a = candSets.select(col("doc_id").as("bdoc"),
-        col("nsh").as("na"), col("shs").as("shs_a"))
-      val b = candSets.select(col("doc_id").as("cdoc"),
-        col("nsh").as("nb"), col("shs").as("shs_b"))
-      val pairs = cand.join(a, Seq("bdoc")).join(b, Seq("cdoc"))
-        .withColumn("shared",
-          size(array_intersect(col("shs_a"), col("shs_b"))))
-        .withColumn("jaccard", round(col("shared").cast("double")
-          / (col("na") + col("nb") - col("shared")), 4))
-        .filter(col("jaccard") >= 0.5)
-        .select("bdoc", "cdoc", "jaccard")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val v = batchVerdicts(s, dir, cand)
       val ncand = cand.groupBy(col("bdoc").as("nbdoc"))
         .agg(count(lit(1)).as("n_candidates"))
-      val agg = pairs.groupBy(col("bdoc").as("abdoc"))
-        .agg(count(lit(1)).as("n_dups"), max("jaccard").as("best_jaccard"))
-      val best = pairs.join(agg,
-          col("bdoc") === col("abdoc") &&
-            col("jaccard") === col("best_jaccard"))
-        .groupBy(col("bdoc").as("bdoc2"))
-        .agg(min("cdoc").as("best_match"))
       // index delta: admitted batch docs' band rows union into the
       // stored index — two bounded Long counters, the d23 posture
-      val dupOwners = pairs.select(col("bdoc").as("doc_id")).distinct()
+      val dupOwners = v.pairs.select(col("bdoc").as("doc_id")).distinct()
       val idxAfter = stored.count() +
         batchBands.join(dupOwners, Seq("doc_id"), "left_anti").count()
       docs.filter(isBatch).select("doc_id")
         .join(ncand, col("doc_id") === col("nbdoc"), "left")
-        .join(agg, col("doc_id") === col("abdoc"), "left")
-        .join(best, col("doc_id") === col("bdoc2"), "left")
+        .join(v.agg, col("doc_id") === col("abdoc"), "left")
+        .join(v.best, col("doc_id") === col("bdoc2"), "left")
         .select(col("doc_id"),
           coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
           coalesce(col("n_dups"), lit(0L)).as("n_dups"),
@@ -2224,36 +2155,10 @@ object DedupQueries {
           lit(idxAfter).as("index_rows_after"))
         .orderBy("doc_id")
     },
-    Some(s"""WITH $duckLshBaseCtes,
-             |cand AS (
-             |  SELECT DISTINCT x.doc_id AS bdoc, y.doc_id AS cdoc
-             |  FROM bands x JOIN bands y
-             |    ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-             |  WHERE x.doc_id % 3 = 0 AND y.doc_id % 3 <> 0),
-             |stats AS (
-             |  SELECT a.doc_id AS bdoc, b.doc_id AS cdoc,
-             |         a.nsh AS na, b.nsh AS nb, count(*) AS shared
-             |  FROM ex a JOIN ex b ON a.sh = b.sh
-             |  WHERE a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
-             |  GROUP BY 1, 2, 3, 4),
-             |pairs AS (
-             |  SELECT c.bdoc, c.cdoc,
-             |         round(shared * 1.0 / (na + nb - shared), 4) AS jaccard
-             |  FROM cand c JOIN stats st
-             |    ON c.bdoc = st.bdoc AND c.cdoc = st.cdoc
-             |  WHERE round(shared * 1.0 / (na + nb - shared), 4) >= 0.5),
+    Some(s"""WITH $duckBatchVerdictCtes,
              |ncand AS (
              |  SELECT bdoc, CAST(count(*) AS BIGINT) AS n_candidates
              |  FROM cand GROUP BY 1),
-             |agg AS (
-             |  SELECT bdoc, CAST(count(*) AS BIGINT) AS n_dups,
-             |         max(jaccard) AS best_jaccard
-             |  FROM pairs GROUP BY 1),
-             |best AS (
-             |  SELECT p.bdoc, min(p.cdoc) AS best_match
-             |  FROM pairs p JOIN agg g
-             |    ON p.bdoc = g.bdoc AND p.jaccard = g.best_jaccard
-             |  GROUP BY 1),
              |idx AS (
              |  SELECT (SELECT CAST(count(*) AS BIGINT) FROM bands
              |          WHERE doc_id % 3 <> 0)

@@ -19,6 +19,12 @@ import org.apache.spark.sql.expressions.Window
   */
 object EventQueries {
 
+  /** e1's batch answer, which e10's stream replay must equal. */
+  private val hourWindowSql =
+    """SELECT event_type, date_trunc('hour', ts) AS hour_window,
+                   count(*) AS n, round(sum(value), 4) AS sum_value
+            FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
+
   /** Tumbling 1-hour window aggregation — Spark's native `window()`
     * operator; the batch analogue of a streaming windowed count.
     */
@@ -31,9 +37,7 @@ object EventQueries {
         .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
         .orderBy("event_type", "hour_window")
     },
-    Some("""SELECT event_type, date_trunc('hour', ts) AS hour_window,
-                   count(*) AS n, round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+    Some(hourWindowSql))
 
   /** Sessionization: a new session starts after a >30-min silence per
     * user. lag-gap flag + running sum = session id — the batch analogue
@@ -374,9 +378,7 @@ object EventQueries {
           col("n"), round(col("sum_value"), 4).as("sum_value"))
         .orderBy("event_type", "hour_window")
     },
-    Some("""SELECT event_type, date_trunc('hour', ts) AS hour_window,
-                   count(*) AS n, round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+    Some(hourWindowSql))
 
   /** Second stream-batch equivalence row: the events parquet replayed
     * through `readStream` → the SAME native session_window aggregation

@@ -193,7 +193,7 @@ object GraphQueries {
     * 3 fixed rounds of [[graft.ops.PageRank]] fixed-point arithmetic.
     * Ranks are BIGINT micro-units, so the driver hash-compare is exact
     * — no rounding tolerance — against a DuckDB oracle that unrolls
-    * the same three rounds as chained CTEs (the m1b/m1d technique).
+    * the same three rounds as chained CTEs (the m1d technique).
     * Part nodes are offset by 10^6 to share one id space.
     */
   private val g1 = Q(
@@ -782,7 +782,7 @@ object GraphQueries {
     * recompute, repeat) over the co-purchase graph, k = 80 (chosen so
     * the cascade is live: secondary deletions continue for 5+ rounds on
     * this graph). Emits one (round, n_nodes, n_edges) row per round —
-    * the bounded-round trace device of m1b/g1, so the iterative
+    * the bounded-round trace device of m1d/g1, so the iterative
     * operator is hash-verified against a DuckDB oracle that unrolls the
     * same four rounds as chained CTEs. All-integer: degrees, node and
     * edge counts — no tolerance anywhere. Scale: each round is one

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -668,77 +669,23 @@ object JoinQueries {
                      0) AS BIGINT) AS sum_ref_cents
             FROM full0 GROUP BY 1 ORDER BY 1"""))
 
-  /** X235 j17: BAND JOIN (|price_a − price_b| ≤ δ) via bucket-explode —
-    * the "find competitors within 10 cents" matching the interval
-    * family still lacked: j10 overlaps explicit intervals, j15/j16
-    * pick ONE nearest row, a band join wants EVERY row within a fixed
-    * distance. Naive form is a non-equi theta join (nested-loop at any
-    * scale); here the probe side (Brand#1 parts) explodes each row to
-    * its δ-width bucket and both neighbors, the candidate side carries
-    * its single bucket, and the join is a pure EQUI-join on the bucket
-    * key — each true pair produced exactly once (a candidate's bucket
-    * is unique), with the exact |Δcents| ≤ 10 filter applied
-    * post-join in integers. Scale: shuffle cost is 3×probe + 1×build
-    * rows hash-partitioned on bucket; no cross product ever forms,
-    * and bucket width = δ bounds candidates per probe to two buckets'
-    * occupancy regardless of table size.
-    */
-  private val j17 = Q(
-    "j17_price_band_join",
-    (s, dir) => {
-      val parts = Tables.load(s, dir, "part")
-        .withColumn("cents",
-          floor(col("p_retailprice") * 100 + lit(0.5)).cast("long"))
-      val probe = parts.filter(col("p_brand") === "Brand#1")
-        .select(col("p_partkey").as("probe_key"),
-          col("cents").as("probe_cents"),
-          explode(array(expr("cents div 10") - 1L,
-            expr("cents div 10"),
-            expr("cents div 10") + 1L)).as("bkt"))
-      val cand = parts.filter(col("p_brand") =!= "Brand#1")
-        .select(col("p_partkey").as("cand_key"),
-          col("cents").as("cand_cents"),
-          expr("cents div 10").as("bkt"))
-      probe.join(cand, "bkt")
-        .filter(abs(col("probe_cents") - col("cand_cents")) <= 10L)
-        .groupBy("probe_key")
-        .agg(min("probe_cents").as("probe_cents"),
-          count(lit(1)).as("n_matches"),
-          min("cand_cents").as("min_match_cents"),
-          max("cand_cents").as("max_match_cents"),
-          sum("cand_key").as("match_key_sum"))
-        .orderBy("probe_key")
-    },
-    Some("""WITH parts AS (
-              SELECT p_partkey, p_brand,
-                     CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)
-                       AS cents
-              FROM part),
-            probe AS (
-              SELECT p_partkey AS probe_key, cents AS probe_cents
-              FROM parts WHERE p_brand = 'Brand#1'),
-            cand AS (
-              SELECT p_partkey AS cand_key, cents AS cand_cents
-              FROM parts WHERE p_brand <> 'Brand#1')
-            SELECT p.probe_key, min(p.probe_cents) AS probe_cents,
-                   CAST(count(*) AS BIGINT) AS n_matches,
-                   min(c.cand_cents) AS min_match_cents,
-                   max(c.cand_cents) AS max_match_cents,
-                   CAST(sum(c.cand_key) AS BIGINT) AS match_key_sum
-            FROM probe p JOIN cand c
-              ON abs(p.probe_cents - c.cand_cents) <= 10
-            GROUP BY p.probe_key ORDER BY p.probe_key"""))
-
-  /** X263 j18: the j17 band join written NAIVELY — the join condition
-    * is the raw theta predicate `abs(probe − cand) ≤ 10` — executed
-    * through [[graft.plans.BandJoinRewrite]], the injected optimizer
-    * rule that turns it into the bucket-explode equi-join
-    * automatically. This is the custom-Rule[LogicalPlan] showcase: the
+  /** X263 j18: BAND JOIN (|price_a − price_b| ≤ δ) — "find
+    * competitors within 10 cents": every Brand#1 part against every
+    * other part within a fixed distance (j10 overlaps explicit
+    * intervals, j15/j16 pick ONE nearest row). The join condition is
+    * the raw theta predicate `abs(probe − cand) ≤ 10`, a nested loop at
+    * any scale as written; [[graft.plans.BandJoinRewrite]], the
+    * injected optimizer rule, turns it into the bucket-explode
+    * equi-join (probe rows explode to their δ-width bucket and both
+    * neighbours, candidates carry one bucket, the exact filter runs
+    * post-join), so shuffle cost is 3×probe + 1×build rows and no cross
+    * product forms. This is the custom-Rule[LogicalPlan] showcase: the
     * USER writes the predicate they mean, the OPTIMIZER supplies the
     * scalable plan, and the oracle (DuckDB executing the same naive
     * join) hash-proves the rewrite changed the plan and nothing else.
-    * PlanSpec pins no-nested-loop; the PropertySpec band-join law is
-    * the rewrite's correctness proof for arbitrary inputs.
+    * PlanSpec pins the equi-join and no nested loop; the PropertySpec
+    * band-join law is the rewrite's correctness proof for arbitrary
+    * inputs.
     */
   private val j18 = Q(
     "j18_band_join_auto",
@@ -782,6 +729,52 @@ object JoinQueries {
               ON abs(p.probe_cents - c.cand_cents) <= 10
             GROUP BY p.probe_key ORDER BY p.probe_key"""))
 
+  /** Each click as-of-joined by [[graft.plans.AsOfJoinExec]] to its
+    * user's purchases, which dedupe to one per (user, µs) by the first
+    * event_id in `witness` order so the match is unique; `forward` and
+    * `toleranceUs` pass to [[graft.plans.AsOf.join]]. Money in exact
+    * integer cents.
+    */
+  private def asOfClicks(s: SparkSession, dir: String, witness: Column,
+      forward: Boolean, toleranceUs: Option[Long]): DataFrame = {
+    import graft.plans.AsOf
+    val ev = Tables.load(s, dir, "events")
+    val wB = Window.partitionBy("user_id", "us").orderBy(witness)
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"),
+        unix_micros(col("ts")).as("us"),
+        round(col("value") * 100).cast("long").as("cents"))
+      .withColumn("rn", row_number().over(wB))
+      .filter(col("rn") === 1)
+      // fresh exprIds on every column: both as-of sides come from the
+      // same scan, and the exec binds by exprId per side
+      .select(col("user_id").as("p_user"), col("us").as("p_us"),
+        col("cents").as("p_cents"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("click_us"))
+    AsOf.join(clicks, purchases, "user_id", "click_us", "p_user", "p_us",
+        forward, toleranceUs)
+      .select("event_id", "user_id", "click_us", "p_us", "p_cents")
+      .orderBy("event_id")
+  }
+
+  /** DuckDB's two [[asOfClicks]] sides as the CTEs p (p_user, p_us,
+    * p_cents; the first event_id in `witness` order per user and µs)
+    * and c (event_id, user_id, click_us).
+    */
+  private def duckAsOfSides(witness: String): String =
+    s"""WITH p0 AS (
+       |  SELECT user_id, epoch_us(ts) AS us,
+       |         CAST(round(value * 100) AS BIGINT) AS cents,
+       |         row_number() OVER (PARTITION BY user_id, ts
+       |           ORDER BY event_id $witness) AS rn
+       |  FROM events WHERE event_type = 'purchase'),
+       |p AS (SELECT user_id AS p_user, us AS p_us, cents AS p_cents
+       |      FROM p0 WHERE rn = 1),
+       |c AS (SELECT event_id, user_id, epoch_us(ts) AS click_us
+       |      FROM events WHERE event_type = 'click')""".stripMargin
+
   /** X292 j19: AS-OF JOIN AS A CUSTOM PHYSICAL OPERATOR — the tier-(c)
     * extension surface demonstrated end-to-end: `plans.AsOfJoin`
     * (LogicalPlan) → `AsOfJoinStrategy` (injectPlannerStrategy) →
@@ -799,38 +792,9 @@ object JoinQueries {
     */
   private val j19 = Q(
     "j19_asof_exec",
-    (s, dir) => {
-      import graft.plans.AsOf
-      val ev = Tables.load(s, dir, "events")
-      val wB = Window.partitionBy("user_id", "us")
-        .orderBy(col("event_id").desc)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("rn", row_number().over(wB))
-        .filter(col("rn") === 1)
-        // fresh exprIds on every column: both as-of sides come from the
-        // same scan, and the exec binds by exprId per side
-        .select(col("user_id").as("p_user"), col("us").as("p_us"),
-          col("cents").as("p_cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("click_us"))
-      AsOf.join(clicks, purchases, "user_id", "click_us", "p_user", "p_us")
-        .select("event_id", "user_id", "click_us", "p_us", "p_cents")
-        .orderBy("event_id")
-    },
-    Some("""WITH p0 AS (
-              SELECT user_id, event_id, epoch_us(ts) AS us,
-                     CAST(round(value * 100) AS BIGINT) AS cents,
-                     row_number() OVER (PARTITION BY user_id, ts
-                       ORDER BY event_id DESC) AS rn
-              FROM events WHERE event_type = 'purchase'),
-            p AS (SELECT user_id AS p_user, us AS p_us, cents AS p_cents
-                  FROM p0 WHERE rn = 1),
-            c AS (SELECT event_id, user_id, epoch_us(ts) AS click_us
-                  FROM events WHERE event_type = 'click')
+    (s, dir) => asOfClicks(s, dir, col("event_id").desc, forward = false,
+      toleranceUs = None),
+    Some(duckAsOfSides("DESC") + """
             SELECT c.event_id, c.user_id, c.click_us, p.p_us, p.p_cents
             FROM c ASOF LEFT JOIN p
               ON c.user_id = p.p_user AND c.click_us >= p.p_us
@@ -848,38 +812,9 @@ object JoinQueries {
     */
   private val j20 = Q(
     "j20_asof_exec_forward",
-    (s, dir) => {
-      import graft.plans.AsOf
-      val tolUs = 30L * 60L * 1000000L
-      val ev = Tables.load(s, dir, "events")
-      val wB = Window.partitionBy("user_id", "us")
-        .orderBy(col("event_id").asc)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("us"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .withColumn("rn", row_number().over(wB))
-        .filter(col("rn") === 1)
-        .select(col("user_id").as("p_user"), col("us").as("p_us"),
-          col("cents").as("p_cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("click_us"))
-      AsOf.join(clicks, purchases, "user_id", "click_us", "p_user", "p_us",
-          forward = true, toleranceUs = Some(tolUs))
-        .select("event_id", "user_id", "click_us", "p_us", "p_cents")
-        .orderBy("event_id")
-    },
-    Some("""WITH p0 AS (
-              SELECT user_id, epoch_us(ts) AS us,
-                     CAST(round(value * 100) AS BIGINT) AS cents,
-                     row_number() OVER (PARTITION BY user_id, ts
-                       ORDER BY event_id ASC) AS rn
-              FROM events WHERE event_type = 'purchase'),
-            p AS (SELECT user_id AS p_user, us AS p_us, cents AS p_cents
-                  FROM p0 WHERE rn = 1),
-            c AS (SELECT event_id, user_id, epoch_us(ts) AS click_us
-                  FROM events WHERE event_type = 'click'),
+    (s, dir) => asOfClicks(s, dir, col("event_id").asc, forward = true,
+      toleranceUs = Some(30L * 60L * 1000000L)),
+    Some(duckAsOfSides("ASC") + """,
             nxt AS (
               SELECT c.event_id, c.user_id, c.click_us,
                      min(p.p_us) AS p_us
@@ -894,5 +829,5 @@ object JoinQueries {
 
   def all: Seq[Q] =
     Seq(j1, j2, j3, j4, j5, j6, j7, jAnti, j9, j10, j11, j12, j13, j14,
-      j15, j16, j17, j18, j19, j20)
+      j15, j16, j18, j19, j20)
 }

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Q
 import graft.ops.LinAlg.dot
 import graft.ops.{Integrators, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,8 +26,8 @@ object MlQueries {
 
   /** M1 Poisson GLM (MLlib GeneralizedLinearRegression, IRLS,
     * log link), fitted per l_returnflag group: round(l_quantity) ~
-    * l_discount — the exact model whose closed-form IRLS path m1b/m1c
-    * hash-prove step-by-step and m1d runs to convergence. The Spark side
+    * l_discount — the exact model whose closed-form IRLS path m1d
+    * hash-proves step by step to convergence. The Spark side
     * here is MLlib's own IRLS solver (three group fits, each a fully
     * distributed optimization; the driver holds 3 flag strings and 2
     * doubles per group); the DuckDB oracle replays the closed-form IRLS
@@ -82,147 +82,6 @@ object MlQueries {
          |SELECT l_returnflag, round(b, 4) AS slope,
          |       round(a, 4) AS intercept
          |FROM c$irlsIters ORDER BY l_returnflag""".stripMargin))
-
-  /** M1b — one IRLS iteration of the Poisson GLM (log link), closed
-    * form, per l_returnflag group: cold start mu0 = y + 0.5 (the
-    * classic GLM initializer), working weights w = mu0, working
-    * response z = ln(mu0) + (y − mu0)/mu0, then one weighted least
-    * squares of z on (1, l_discount) via sum-aggregates. This is the
-    * hash-checkable step of the IRLS path whose converged fixed point
-    * m1 computes through MLlib; every quantity is a distributed
-    * map-side-combined aggregate.
-    * Ref: covid_simulator.py:60-94 (GLM protocol).
-    */
-  private val m1b = Q(
-    "m1b_poisson_irls1",
-    (s, dir) => {
-      val d = Tables.load(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          round(col("l_quantity")).as("y"), col("l_discount").as("x"))
-        .withColumn("mu", col("y") + lit(0.5))
-        .withColumn("w", col("mu"))
-        .withColumn("z", log(col("mu")) + (col("y") - col("mu")) / col("mu"))
-      d.groupBy("l_returnflag")
-        .agg(sum("w").as("sw"),
-          sum(col("w") * col("x")).as("swx"),
-          sum(col("w") * col("z")).as("swz"),
-          sum(col("w") * col("x") * col("z")).as("swxz"),
-          sum(col("w") * col("x") * col("x")).as("swxx"))
-        .withColumn("slope",
-          round((col("swxz") - col("swx") * col("swz") / col("sw"))
-            / (col("swxx") - col("swx") * col("swx") / col("sw")), 4))
-        .withColumn("intercept",
-          round(col("swz") / col("sw")
-            - (col("swxz") - col("swx") * col("swz") / col("sw"))
-              / (col("swxx") - col("swx") * col("swx") / col("sw"))
-              * col("swx") / col("sw"), 4))
-        .select("l_returnflag", "slope", "intercept")
-        .orderBy("l_returnflag")
-    },
-    Some("""WITH d AS (
-              SELECT l_returnflag, round(l_quantity) AS y, l_discount AS x,
-                     round(l_quantity) + CAST(0.5 AS DOUBLE) AS mu
-              FROM lineitem),
-            z AS (
-              SELECT l_returnflag, x, mu AS w,
-                     ln(mu) + (y - mu) / mu AS z
-              FROM d),
-            a AS (
-              SELECT l_returnflag, sum(w) AS sw, sum(w*x) AS swx,
-                     sum(w*z) AS swz, sum(w*x*z) AS swxz,
-                     sum(w*x*x) AS swxx
-              FROM z GROUP BY 1)
-            SELECT l_returnflag,
-                   round((swxz - swx*swz/sw) / (swxx - swx*swx/sw), 4)
-                     AS slope,
-                   round(swz/sw - (swxz - swx*swz/sw)
-                     / (swxx - swx*swx/sw) * swx/sw, 4) AS intercept
-            FROM a ORDER BY l_returnflag"""))
-
-  /** M1c — the SECOND IRLS iteration, still closed form: iteration 1's
-    * per-group (slope, intercept) — kept unrounded — re-enter the
-    * working-response construction (mu1 = exp(a1 + b1·x), w = mu1,
-    * z = ln(mu1) + (y − mu1)/mu1) and a second weighted least squares
-    * produces the next coefficients. Proves the IRLS *iteration* (not
-    * just one step) cross-engine: two chained rounds of the exact
-    * update MLlib's m1 runs 25 of. Per iteration: one sum-aggregate
-    * shuffle + one broadcast join of the group-cardinality
-    * coefficient table — the distributed cost model of the full GLM.
-    */
-  private val m1c = Q(
-    "m1c_poisson_irls2",
-    (s, dir) => {
-      val d = Tables.load(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          round(col("l_quantity")).as("y"), col("l_discount").as("x"))
-      def wls(rows: org.apache.spark.sql.DataFrame) = rows
-        .groupBy("l_returnflag")
-        .agg(sum("w").as("sw"),
-          sum(col("w") * col("x")).as("swx"),
-          sum(col("w") * col("z")).as("swz"),
-          sum(col("w") * col("x") * col("z")).as("swxz"),
-          sum(col("w") * col("x") * col("x")).as("swxx"))
-        .withColumn("b",
-          (col("swxz") - col("swx") * col("swz") / col("sw"))
-            / (col("swxx") - col("swx") * col("swx") / col("sw")))
-        .withColumn("a",
-          col("swz") / col("sw")
-            - (col("swxz") - col("swx") * col("swz") / col("sw"))
-              / (col("swxx") - col("swx") * col("swx") / col("sw"))
-              * col("swx") / col("sw"))
-        .select("l_returnflag", "a", "b")
-      val it1 = wls(d
-        .withColumn("mu", col("y") + lit(0.5))
-        .withColumn("w", col("mu"))
-        .withColumn("z", log(col("mu")) + (col("y") - col("mu")) / col("mu")))
-      val it2 = wls(d.join(broadcast(it1), Seq("l_returnflag"))
-        .withColumn("mu", exp(col("a") + col("b") * col("x")))
-        .withColumn("w", col("mu"))
-        .withColumn("z", log(col("mu")) + (col("y") - col("mu")) / col("mu")))
-      it2.select(col("l_returnflag"),
-        round(col("b"), 4).as("slope"),
-        round(col("a"), 4).as("intercept"))
-        .orderBy("l_returnflag")
-    },
-    Some("""WITH d AS (
-              SELECT l_returnflag, round(l_quantity) AS y, l_discount AS x
-              FROM lineitem),
-            z1 AS (
-              SELECT l_returnflag, x, y,
-                     y + CAST(0.5 AS DOUBLE) AS w,
-                     ln(y + CAST(0.5 AS DOUBLE))
-                       + (y - (y + CAST(0.5 AS DOUBLE)))
-                         / (y + CAST(0.5 AS DOUBLE)) AS z
-              FROM d),
-            a1 AS (
-              SELECT l_returnflag, sum(w) AS sw, sum(w*x) AS swx,
-                     sum(w*z) AS swz, sum(w*x*z) AS swxz,
-                     sum(w*x*x) AS swxx
-              FROM z1 GROUP BY 1),
-            c1 AS (
-              SELECT l_returnflag,
-                     swz/sw - (swxz - swx*swz/sw)
-                       / (swxx - swx*swx/sw) * swx/sw AS a,
-                     (swxz - swx*swz/sw) / (swxx - swx*swx/sw) AS b
-              FROM a1),
-            z2 AS (
-              SELECT d.l_returnflag, d.x, c.a, c.b,
-                     exp(c.a + c.b * d.x) AS w,
-                     ln(exp(c.a + c.b * d.x))
-                       + (d.y - exp(c.a + c.b * d.x))
-                         / exp(c.a + c.b * d.x) AS z
-              FROM d JOIN c1 c USING (l_returnflag)),
-            a2 AS (
-              SELECT l_returnflag, sum(w) AS sw, sum(w*x) AS swx,
-                     sum(w*z) AS swz, sum(w*x*z) AS swxz,
-                     sum(w*x*x) AS swxx
-              FROM z2 GROUP BY 1)
-            SELECT l_returnflag,
-                   round((swxz - swx*swz/sw) / (swxx - swx*swx/sw), 4)
-                     AS slope,
-                   round(swz/sw - (swxz - swx*swz/sw)
-                     / (swxx - swx*swx/sw) * swx/sw, 4) AS intercept
-            FROM a2 ORDER BY l_returnflag"""))
 
   /** How many IRLS rounds m1d replays. Poisson/log-link IRLS is
     * quadratically convergent near the fixed point: on this data the
@@ -285,8 +144,15 @@ object MlQueries {
     sb.toString
   }
 
-  /** M1d — the m1b/m1c closed-form IRLS run TO CONVERGENCE as a driver
-    * loop (the round-5 judge's top ask): per iteration one
+  /** M1d — the closed-form IRLS of the Poisson GLM (log link) per
+    * l_returnflag group, run TO CONVERGENCE as a driver loop. Round 1
+    * cold-starts at mu0 = y + 0.5 (the classic GLM initializer) with
+    * working weights w = mu and working response
+    * z = ln(mu) + (y − mu)/mu; every later round rebuilds mu from the
+    * previous round's unrounded (a, b) as exp(a + b·x), and each round
+    * is one weighted least squares of z on (1, l_discount) via five
+    * sum-aggregates. The trace's `iter` 1 and 2 rows are the single
+    * and the chained step. Per iteration one
     * map-side-combined aggregate shuffle produces the five WLS sums per
     * l_returnflag group, the driver turns them into the next (slope,
     * intercept) — 3 groups × 2 doubles of driver state, never
@@ -2655,7 +2521,7 @@ object MlQueries {
             FROM cells"""))
 
   /** X218 m36: LOGISTIC regression Newton step — the binomial-GLM
-    * sibling of the m1b/m1c Poisson IRLS chain, on the is-English
+    * sibling of the m1d Poisson IRLS chain, on the is-English
     * classifier (x = English-marker count, y = lang='en'). At β=0 the
     * logistic weights are EXACTLY ¼ (p=½ for every row), so the first
     * Newton step has a closed form over exact-integer sufficient
@@ -2712,46 +2578,29 @@ object MlQueries {
                      / CAST(n * sxx - sx * sx AS DOUBLE) AS beta1
             FROM st"""))
 
-  /** X219 m37: TWO-PROPORTION z-test (pooled) on an id-bucketed A/B
-    * split — assignment by user_id parity (the deterministic
-    * experiment-bucketing device real holdouts use), outcome = the
-    * user logged more purchases than errors. The four cell counts come
-    * from ONE per-user aggregate, and the statistic is the textbook
-    * pooled z evaluated in a PINNED op-order chain of correctly-rounded
-    * IEEE ops (four divisions, one sqrt) mirrored literally by the
-    * oracle — hash-exact with no tolerance, the m25/m29 convention of
-    * reporting the statistic (the normal CDF is a table lookup, not
-    * engine work). Scale: flag building is map-side partial agg on
-    * user_id; the test itself reduces to 4 integers.
+  /** The A/B cells m37 and m38 read: arm 1 is odd user_id, arm 2 even
+    * (the deterministic id bucketing real holdouts use), the outcome is
+    * "the user logged more purchases than errors", and n and x per arm
+    * come from ONE per-user aggregate.
     */
-  private val m37 = Q(
-    "m37_two_proportion_ztest",
-    (s, dir) => {
-      val flags = Tables.load(s, dir, "events")
-        .groupBy("user_id")
-        .agg(
-          when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            > sum(when(col("event_type") === "error", 1L).otherwise(0L)),
-            1L).otherwise(0L).as("out"))
-        .withColumn("seg", (col("user_id") % 2).cast("long"))
-      val cells = flags.agg(
-        sum(when(col("seg") === 1L, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("seg") === 1L, col("out")).otherwise(0L)).as("x1"),
-        sum(when(col("seg") === 0L, 1L).otherwise(0L)).as("n2"),
-        sum(when(col("seg") === 0L, col("out")).otherwise(0L)).as("x2"))
-      cells.select(col("n1"), col("x1"), col("n2"), col("x2"),
-        (col("x1").cast("double") / col("n1").cast("double")).as("p1"),
-        (col("x2").cast("double") / col("n2").cast("double")).as("p2"),
-        ((col("x1").cast("double") / col("n1").cast("double")
-          - col("x2").cast("double") / col("n2").cast("double"))
-          / sqrt(((col("x1") + col("x2")).cast("double")
-              / (col("n1") + col("n2")).cast("double"))
-            * (lit(1.0) - (col("x1") + col("x2")).cast("double")
-              / (col("n1") + col("n2")).cast("double"))
-            * (lit(1.0) / col("n1").cast("double")
-              + lit(1.0) / col("n2").cast("double")))).as("z"))
-    },
-    Some("""WITH flags AS (
+  private def abCells(s: SparkSession, dir: String): DataFrame = {
+    val flags = Tables.load(s, dir, "events")
+      .groupBy("user_id")
+      .agg(
+        when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          > sum(when(col("event_type") === "error", 1L).otherwise(0L)),
+          1L).otherwise(0L).as("out"))
+      .withColumn("seg", (col("user_id") % 2).cast("long"))
+    flags.agg(
+      sum(when(col("seg") === 1L, 1L).otherwise(0L)).as("n1"),
+      sum(when(col("seg") === 1L, col("out")).otherwise(0L)).as("x1"),
+      sum(when(col("seg") === 0L, 1L).otherwise(0L)).as("n2"),
+      sum(when(col("seg") === 0L, col("out")).otherwise(0L)).as("x2"))
+  }
+
+  /** DuckDB's [[abCells]]: the `cells` CTE. */
+  private val duckAbCells =
+    """WITH flags AS (
               SELECT user_id, user_id % 2 AS seg,
                      CASE WHEN
                        sum(CASE WHEN event_type = 'purchase'
@@ -2770,7 +2619,37 @@ object MlQueries {
                      CAST(sum(CASE WHEN seg = 0 THEN "out" ELSE 0 END)
                        AS BIGINT) AS x2
               FROM flags)
-            SELECT n1, x1, n2, x2,
+            """
+
+  /** Arm `i`'s conversion rate x_i / n_i, one IEEE division. */
+  private def abRate(i: Int): Column =
+    col(s"x$i").cast("double") / col(s"n$i").cast("double")
+
+  /** X219 m37: TWO-PROPORTION z-test (pooled) on an id-bucketed A/B
+    * split — assignment by user_id parity (the deterministic
+    * experiment-bucketing device real holdouts use), outcome = the
+    * user logged more purchases than errors. The four cell counts come
+    * from ONE per-user aggregate, and the statistic is the textbook
+    * pooled z evaluated in a PINNED op-order chain of correctly-rounded
+    * IEEE ops (four divisions, one sqrt) mirrored literally by the
+    * oracle — hash-exact with no tolerance, the m25/m29 convention of
+    * reporting the statistic (the normal CDF is a table lookup, not
+    * engine work). Scale: flag building is map-side partial agg on
+    * user_id; the test itself reduces to 4 integers.
+    */
+  private val m37 = Q(
+    "m37_two_proportion_ztest",
+    (s, dir) => {
+      val pool = (col("x1") + col("x2")).cast("double") /
+        (col("n1") + col("n2")).cast("double")
+      abCells(s, dir).select(col("n1"), col("x1"), col("n2"), col("x2"),
+        abRate(1).as("p1"), abRate(2).as("p2"),
+        ((abRate(1) - abRate(2))
+          / sqrt(pool * (lit(1.0) - pool)
+            * (lit(1.0) / col("n1").cast("double")
+              + lit(1.0) / col("n2").cast("double")))).as("z"))
+    },
+    Some(duckAbCells + """SELECT n1, x1, n2, x2,
                    CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS p1,
                    CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS p2,
                    (CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE)
@@ -2796,53 +2675,14 @@ object MlQueries {
     */
   private val m38 = Q(
     "m38_experiment_readout",
-    (s, dir) => {
-      val flags = Tables.load(s, dir, "events")
-        .groupBy("user_id")
-        .agg(
-          when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            > sum(when(col("event_type") === "error", 1L).otherwise(0L)),
-            1L).otherwise(0L).as("out"))
-        .withColumn("seg", (col("user_id") % 2).cast("long"))
-      flags.agg(
-        sum(when(col("seg") === 1L, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("seg") === 1L, col("out")).otherwise(0L)).as("x1"),
-        sum(when(col("seg") === 0L, 1L).otherwise(0L)).as("n2"),
-        sum(when(col("seg") === 0L, col("out")).otherwise(0L)).as("x2"))
-        .select(col("n1"), col("x1"), col("n2"), col("x2"),
-          (((col("n1") - col("n2")) * (col("n1") - col("n2")))
-            .cast("double") / (col("n1") + col("n2")).cast("double"))
-            .as("srm_chi2"),
-          (col("x1").cast("double") / col("n1").cast("double")).as("p1"),
-          (col("x2").cast("double") / col("n2").cast("double")).as("p2"),
-          (col("x1").cast("double") / col("n1").cast("double")
-            - col("x2").cast("double") / col("n2").cast("double"))
-            .as("abs_lift"),
-          ((col("x1").cast("double") / col("n1").cast("double")
-            - col("x2").cast("double") / col("n2").cast("double"))
-            / (col("x2").cast("double") / col("n2").cast("double")))
-            .as("rel_lift"))
-    },
-    Some("""WITH flags AS (
-              SELECT user_id, user_id % 2 AS seg,
-                     CASE WHEN
-                       sum(CASE WHEN event_type = 'purchase'
-                           THEN 1 ELSE 0 END) >
-                       sum(CASE WHEN event_type = 'error'
-                           THEN 1 ELSE 0 END)
-                     THEN 1 ELSE 0 END AS "out"
-              FROM events GROUP BY 1),
-            cells AS (
-              SELECT CAST(sum(CASE WHEN seg = 1 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n1,
-                     CAST(sum(CASE WHEN seg = 1 THEN "out" ELSE 0 END)
-                       AS BIGINT) AS x1,
-                     CAST(sum(CASE WHEN seg = 0 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n2,
-                     CAST(sum(CASE WHEN seg = 0 THEN "out" ELSE 0 END)
-                       AS BIGINT) AS x2
-              FROM flags)
-            SELECT n1, x1, n2, x2,
+    (s, dir) => abCells(s, dir).select(col("n1"), col("x1"), col("n2"),
+      col("x2"),
+      (((col("n1") - col("n2")) * (col("n1") - col("n2"))).cast("double")
+        / (col("n1") + col("n2")).cast("double")).as("srm_chi2"),
+      abRate(1).as("p1"), abRate(2).as("p2"),
+      (abRate(1) - abRate(2)).as("abs_lift"),
+      ((abRate(1) - abRate(2)) / abRate(2)).as("rel_lift")),
+    Some(duckAbCells + """SELECT n1, x1, n2, x2,
                    CAST((n1 - n2) * (n1 - n2) AS DOUBLE)
                      / CAST(n1 + n2 AS DOUBLE) AS srm_chi2,
                    CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS p1,
@@ -4119,7 +3959,7 @@ object MlQueries {
             ORDER BY l_suppkey"""))
 
   def all: Seq[Q] =
-    Seq(m1, m1b, m1c, m1d, m2, m2b, m2c, m3, m5, m5b, m5c, m6, m7, m8, m9, m10, m11, m12,
+    Seq(m1, m1d, m2, m2b, m2c, m3, m5, m5b, m5c, m6, m7, m8, m9, m10, m11, m12,
       m13, m14, m15, m16, m17, m18, m19, m20, m21, m22, m24, m25, m26,
       m27, m28, m29, m30, m31, m32, m33, m34, m35, m36, m37, m38, m39,
       m40, m41, m42, m43, m44)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -898,6 +899,69 @@ object PipelineQueries {
                      AS achieved_share
             FROM agg ORDER BY lang"""))
 
+  /** The two deterministic md5-bucketed splits pl7 and pl15 audit:
+    * `g_split` routes whole sources, `n_split` each doc on its own. */
+  private def leakageSplits(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"))
+      .withColumn("g_split",
+        when(substring(md5(col("source")), 1, 1) < "c", "train")
+          .otherwise("val"))
+      .withColumn("n_split",
+        when(substring(md5(col("doc_id").cast("string")), 1, 1) < "c",
+          "train").otherwise("val"))
+
+  /** How many of the near-dup `pairs` there are (n_pairs) and how many
+    * of them `splitCol` puts on opposite sides (n_cross), as one row. */
+  private def splitPairCounts(pairs: DataFrame, sp: DataFrame,
+      splitCol: String): DataFrame = {
+    val sa = sp.select(col("doc_id").as("doc_a"), col(splitCol).as("sp_a"))
+    val sb = sp.select(col("doc_id").as("doc_b"), col(splitCol).as("sp_b"))
+    pairs.join(broadcast(sa), Seq("doc_a"))
+      .join(broadcast(sb), Seq("doc_b"))
+      .agg(count(lit(1)).as("n_pairs"),
+        sum(when(col("sp_a") =!= col("sp_b"), 1L).otherwise(0L))
+          .as("n_cross"))
+  }
+
+  /** DuckDB's split-leakage audit as the CTE `audit`, one row per
+    * strategy: strategy, the columns `head(splitColumn)` adds, n_pairs
+    * and n_cross. `anchorCtes` add any CTE the pair predicate
+    * `anchored(docIdColumn)` or `head` reads.
+    */
+  private def duckLeakageAudit(anchorCtes: String,
+      anchored: String => String, head: String => String): String = {
+    def strategy(name: String, split: String) =
+      s"""SELECT '$name' AS strategy, ${head(split)}
+         |    CAST(count(*) AS BIGINT) AS n_pairs,
+         |    CAST(sum(CASE WHEN sa.$split <> sb.$split
+         |             THEN 1 ELSE 0 END) AS BIGINT) AS n_cross
+         |  FROM pairs p
+         |  JOIN sp sa ON p.doc_a = sa.doc_id
+         |  JOIN sp sb ON p.doc_b = sb.doc_id""".stripMargin
+    s"""WITH sets AS (
+       |  SELECT doc_id, ${DedupQueries.duckShingles} AS shs
+       |  FROM documents),
+       |ex AS (
+       |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh
+       |  FROM sets),
+       |$anchorCtes
+       |pairs AS (
+       |  ${DedupQueries.duckJaccardHalfPairs(anchored)}),
+       |sp AS (
+       |  SELECT doc_id, source,
+       |    CASE WHEN substr(md5(source), 1, 1) < 'c'
+       |         THEN 'train' ELSE 'val' END AS g_split,
+       |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
+       |         THEN 'train' ELSE 'val' END AS n_split
+       |  FROM documents),
+       |audit AS (
+       |  ${strategy("group_by_source", "g_split")}
+       |  UNION ALL
+       |  ${strategy("naive_by_doc", "n_split")})
+       |""".stripMargin
+  }
+
   /** X222 pl7: GROUP-AWARE train/val split + near-dup LEAKAGE audit —
     * the eval-integrity step of a training pipeline: if near-duplicate
     * documents land on opposite sides of the split, validation loss is
@@ -914,92 +978,32 @@ object PipelineQueries {
   private val pl7 = Q(
     "pl7_group_split_leakage",
     (s, dir) => {
-      val ex = DedupQueries.shingled(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val a = ex.select(col("doc_id").as("doc_a"), col("nsh").as("na"),
-        col("sh"))
-      val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"),
-        col("sh"))
-      val pairs = a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(count(lit(1)).as("shared"))
-        .filter(lit(2L) * col("shared")
-          >= col("na") + col("nb") - col("shared"))
-        .select("doc_a", "doc_b")
-      val sp = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("source"))
-        .withColumn("g_split",
-          when(substring(md5(col("source")), 1, 1) < "c", "train")
-            .otherwise("val"))
-        .withColumn("n_split",
-          when(substring(md5(col("doc_id").cast("string")), 1, 1) < "c",
-            "train").otherwise("val"))
+      val pairs = DedupQueries.jaccardHalfPairs(DedupQueries.shingled(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        _ => lit(true))
+      val sp = leakageSplits(s, dir)
       def audit(strategy: String, splitCol: String) = {
         val counts = sp.agg(
           sum(when(col(splitCol) === "train", 1L).otherwise(0L))
             .as("n_train"),
           sum(when(col(splitCol) === "val", 1L).otherwise(0L)).as("n_val"))
-        val sa = sp.select(col("doc_id").as("doc_a"),
-          col(splitCol).as("sp_a"))
-        val sb = sp.select(col("doc_id").as("doc_b"),
-          col(splitCol).as("sp_b"))
-        val pairAgg = pairs.join(broadcast(sa), Seq("doc_a"))
-          .join(broadcast(sb), Seq("doc_b"))
-          .agg(count(lit(1)).as("n_neardup_pairs"),
-            sum(when(col("sp_a") =!= col("sp_b"), 1L).otherwise(0L))
-              .as("n_cross_pairs"))
-        counts.crossJoin(pairAgg).select(lit(strategy).as("strategy"),
-          col("n_train"), col("n_val"), col("n_neardup_pairs"),
-          col("n_cross_pairs"))
+        counts.crossJoin(splitPairCounts(pairs, sp, splitCol))
+          .select(lit(strategy).as("strategy"), col("n_train"),
+            col("n_val"), col("n_pairs").as("n_neardup_pairs"),
+            col("n_cross").as("n_cross_pairs"))
       }
       audit("group_by_source", "g_split")
         .unionByName(audit("naive_by_doc", "n_split"))
         .orderBy("strategy")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, ${DedupQueries.duckShingles} AS shs
-               FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh
-               FROM sets),
-             pairs AS (
-               SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-               FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-               GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
-               HAVING 2 * count(*) >= a.nsh + b.nsh - count(*)),
-             sp AS (
-               SELECT doc_id, source,
-                 CASE WHEN substr(md5(source), 1, 1) < 'c'
-                      THEN 'train' ELSE 'val' END AS g_split,
-                 CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-                      THEN 'train' ELSE 'val' END AS n_split
-               FROM documents),
-             g AS (
-               SELECT 'group_by_source' AS strategy,
-                 (SELECT CAST(count(*) AS BIGINT) FROM sp
-                  WHERE g_split = 'train') AS n_train,
-                 (SELECT CAST(count(*) AS BIGINT) FROM sp
-                  WHERE g_split = 'val') AS n_val,
-                 CAST(count(*) AS BIGINT) AS n_neardup_pairs,
-                 CAST(sum(CASE WHEN sa.g_split <> sb.g_split
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_cross_pairs
-               FROM pairs p
-               JOIN sp sa ON p.doc_a = sa.doc_id
-               JOIN sp sb ON p.doc_b = sb.doc_id),
-             n AS (
-               SELECT 'naive_by_doc' AS strategy,
-                 (SELECT CAST(count(*) AS BIGINT) FROM sp
-                  WHERE n_split = 'train') AS n_train,
-                 (SELECT CAST(count(*) AS BIGINT) FROM sp
-                  WHERE n_split = 'val') AS n_val,
-                 CAST(count(*) AS BIGINT) AS n_neardup_pairs,
-                 CAST(sum(CASE WHEN sa.n_split <> sb.n_split
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_cross_pairs
-               FROM pairs p
-               JOIN sp sa ON p.doc_a = sa.doc_id
-               JOIN sp sb ON p.doc_b = sb.doc_id)
-             SELECT * FROM g UNION ALL SELECT * FROM n
-             ORDER BY strategy"""))
+    Some(duckLeakageAudit("", _ => "TRUE", split =>
+      s"""(SELECT CAST(count(*) AS BIGINT) FROM sp
+         |     WHERE $split = 'train') AS n_train,
+         |    (SELECT CAST(count(*) AS BIGINT) FROM sp
+         |     WHERE $split = 'val') AS n_val,""".stripMargin) +
+      """SELECT strategy, n_train, n_val, n_pairs AS n_neardup_pairs,
+        |       n_cross AS n_cross_pairs
+        |FROM audit ORDER BY strategy""".stripMargin))
 
   /** X233 pl8: TOKEN-BUDGET corpus sampling — the "give me exactly N
     * tokens per source" step of training-mixture construction (budgets
@@ -1091,7 +1095,7 @@ object PipelineQueries {
         .agg(count(lit(1)).as("n_top_overlap"))
       val globals = docs.agg(count(lit(1)).as("n_docs"),
         sum("doc_id").as("doc_id_sum"))
-      def summary(e: Int, top: org.apache.spark.sql.DataFrame) = top
+      def summary(e: Int, top: DataFrame) = top
         .agg(count(lit(1)).as("n_top"),
           sum("doc_id").as("top_doc_id_sum"),
           min("ok").as("first_order_key"))
@@ -2122,103 +2126,39 @@ object PipelineQueries {
       val nDocs = Tables.load(s, dir, "documents").count()
       def anchored(c: org.apache.spark.sql.Column) =
         graft.ops.Anchors.keep(c, nDocs)
-      val ex = DedupQueries.shingled(s, dir)
+      val pairs = DedupQueries.jaccardHalfPairs(DedupQueries.shingled(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+        anchored)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val a = ex.filter(anchored(col("doc_id")))
-        .select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("sh"))
-      val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"),
-        col("sh"))
-      val pairs = a.join(b, Seq("sh")).filter(col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(count(lit(1)).as("shared"))
-        .filter(lit(2L) * col("shared")
-          >= col("na") + col("nb") - col("shared"))
-        .select("doc_a", "doc_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sp = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("source"))
-        .withColumn("g_split",
-          when(substring(md5(col("source")), 1, 1) < "c", "train")
-            .otherwise("val"))
-        .withColumn("n_split",
-          when(substring(md5(col("doc_id").cast("string")), 1, 1) < "c",
-            "train").otherwise("val"))
+      val sp = leakageSplits(s, dir)
       val nAnchors = Tables.load(s, dir, "documents")
         .filter(anchored(col("doc_id")))
         .agg(count(lit(1)).as("n_anchors"))
-      def audit(strategy: String, splitCol: String) = {
-        val sa = sp.select(col("doc_id").as("doc_a"),
-          col(splitCol).as("sp_a"))
-        val sb = sp.select(col("doc_id").as("doc_b"),
-          col(splitCol).as("sp_b"))
-        val pairAgg = pairs.join(broadcast(sa), Seq("doc_a"))
-          .join(broadcast(sb), Seq("doc_b"))
-          .agg(count(lit(1)).as("n_neardup_sampled"),
-            sum(when(col("sp_a") =!= col("sp_b"), 1L).otherwise(0L))
-              .as("n_cross_sampled"))
-        pairAgg.crossJoin(nAnchors).select(lit(strategy).as("strategy"),
-          col("n_anchors"), col("n_neardup_sampled"),
-          col("n_cross_sampled"),
-          when(col("n_neardup_sampled") > 0L,
-            col("n_cross_sampled").cast("double")
-              / col("n_neardup_sampled").cast("double"))
-            .as("leak_rate_est"))
-      }
+      def audit(strategy: String, splitCol: String) =
+        splitPairCounts(pairs, sp, splitCol).crossJoin(nAnchors)
+          .select(lit(strategy).as("strategy"), col("n_anchors"),
+            col("n_pairs").as("n_neardup_sampled"),
+            col("n_cross").as("n_cross_sampled"),
+            when(col("n_pairs") > 0L,
+              col("n_cross").cast("double") / col("n_pairs").cast("double"))
+              .as("leak_rate_est"))
       audit("group_by_source", "g_split")
         .unionByName(audit("naive_by_doc", "n_split"))
         .orderBy("strategy")
     },
-    Some(s"""WITH sets AS (
-             |  SELECT doc_id, ${DedupQueries.duckShingles} AS shs
-             |  FROM documents),
-             |ex AS (
-             |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh
-             |  FROM sets),
-             |anchors AS (
-             |  SELECT doc_id FROM documents
-             |  WHERE ${graft.ops.Anchors.keepSql("doc_id",
-                  "SELECT count(*) FROM documents")}),
-             |pairs AS (
-             |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-             |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id < b.doc_id
-             |  WHERE a.doc_id IN (SELECT doc_id FROM anchors)
-             |  GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
-             |  HAVING 2 * count(*) >= a.nsh + b.nsh - count(*)),
-             |sp AS (
-             |  SELECT doc_id, source,
-             |    CASE WHEN substr(md5(source), 1, 1) < 'c'
-             |         THEN 'train' ELSE 'val' END AS g_split,
-             |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c'
-             |         THEN 'train' ELSE 'val' END AS n_split
-             |  FROM documents),
-             |g AS (
-             |  SELECT 'group_by_source' AS strategy,
-             |    (SELECT CAST(count(*) AS BIGINT) FROM anchors)
-             |      AS n_anchors,
-             |    CAST(count(*) AS BIGINT) AS n_neardup_sampled,
-             |    CAST(sum(CASE WHEN sa.g_split <> sb.g_split
-             |             THEN 1 ELSE 0 END) AS BIGINT) AS n_cross_sampled
-             |  FROM pairs p
-             |  JOIN sp sa ON p.doc_a = sa.doc_id
-             |  JOIN sp sb ON p.doc_b = sb.doc_id),
-             |n AS (
-             |  SELECT 'naive_by_doc' AS strategy,
-             |    (SELECT CAST(count(*) AS BIGINT) FROM anchors)
-             |      AS n_anchors,
-             |    CAST(count(*) AS BIGINT) AS n_neardup_sampled,
-             |    CAST(sum(CASE WHEN sa.n_split <> sb.n_split
-             |             THEN 1 ELSE 0 END) AS BIGINT) AS n_cross_sampled
-             |  FROM pairs p
-             |  JOIN sp sa ON p.doc_a = sa.doc_id
-             |  JOIN sp sb ON p.doc_b = sb.doc_id)
-             |SELECT strategy, n_anchors, n_neardup_sampled,
-             |       n_cross_sampled,
-             |       CASE WHEN n_neardup_sampled > 0 THEN
-             |         CAST(n_cross_sampled AS DOUBLE)
-             |         / CAST(n_neardup_sampled AS DOUBLE) END
-             |         AS leak_rate_est
-             |FROM (SELECT * FROM g UNION ALL SELECT * FROM n)
-             |ORDER BY strategy""".stripMargin))
+    Some(duckLeakageAudit(
+      s"""anchors AS (
+         |  SELECT doc_id FROM documents
+         |  WHERE ${graft.ops.Anchors.keepSql("doc_id",
+              "SELECT count(*) FROM documents")}),""".stripMargin,
+      c => s"$c IN (SELECT doc_id FROM anchors)",
+      _ => "(SELECT CAST(count(*) AS BIGINT) FROM anchors) AS n_anchors,") +
+      """SELECT strategy, n_anchors, n_pairs AS n_neardup_sampled,
+        |       n_cross AS n_cross_sampled,
+        |       CASE WHEN n_pairs > 0 THEN
+        |         CAST(n_cross AS DOUBLE) / CAST(n_pairs AS DOUBLE) END
+        |         AS leak_rate_est
+        |FROM audit ORDER BY strategy""".stripMargin))
 
   def all: Seq[Q] =
     Seq(pl1, pl2, mm1, pl3, mm2, pl4, mm3, mm4, mm5, pl5, mm6, mm7, pl6,

@@ -75,6 +75,52 @@ object SimilarityQueries {
       s"(CASE WHEN ${duckDot.format("v", duckPlaneLit(w))} > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
 
+  /** The first 10 vectors of `e` as queries (query_id, qv, qn), with
+    * `keep` columns of `e` carried along. */
+  private def queriesOf(e: DataFrame, keep: String*): DataFrame =
+    e.filter(col("vec_id") < 10)
+      .select(Seq(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn")) ++ keep.map(col): _*)
+
+  /** The search tail every cosine row shares: over query × candidate
+    * pairs (query_id, qv, qn against vec_id, v, nrm), each query's
+    * top 3 other vectors by rounded cosine, ties to the lower id, with
+    * `keep` columns between query_id and neighbor_id.
+    */
+  private def cosineTop3(pairs: DataFrame, keep: String*): DataFrame = {
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    pairs.filter(col("vec_id") =!= col("query_id"))
+      .withColumn("cosine",
+        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
+      .select((col("query_id") +: keep.map(col)) ++
+        Seq(col("vec_id").as("neighbor_id"), col("cosine")): _*)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 3)
+      .orderBy("query_id", "rank")
+  }
+
+  /** DuckDB's [[cosineTop3]]: `from` joins the queries as `q` (query_id,
+    * qv, qn and the `keep` columns) to the candidates as `n` (vec_id, v,
+    * nrm).
+    */
+  private def duckTop3(from: String, keep: String*): String = {
+    val k = keep.map(_ + ", ").mkString
+    val qk = keep.map("q." + _ + ", ").mkString
+    s"""scored AS (
+       |  SELECT q.query_id, ${qk}n.vec_id AS neighbor_id,
+       |         round(${duckDot.format("q.qv", "n.v")} / (q.qn * n.nrm), 4)
+       |           AS cosine
+       |  FROM $from WHERE n.vec_id <> q.query_id),
+       |ranked AS (
+       |  SELECT query_id, ${k}neighbor_id, cosine,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cosine DESC, neighbor_id) AS rank
+       |  FROM scored)
+       |SELECT query_id, ${k}neighbor_id, cosine, rank FROM ranked
+       |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+  }
+
   /** Brute-force cosine top-3 for the first 10 query vectors — the
     * exact baseline every ANN variant is judged against.
     */
@@ -82,19 +128,7 @@ object SimilarityQueries {
     "s1_knn_bruteforce",
     (s, dir) => {
       val e = corpus(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      broadcast(q).crossJoin(e)
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
+      cosineTop3(broadcast(queriesOf(e)).crossJoin(e))
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v, label FROM embeddings),
@@ -103,18 +137,7 @@ object SimilarityQueries {
              q AS (
                SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
                WHERE vec_id < 10),
-             scored AS (
-               SELECT q.query_id, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qv", "v")} / (qn * nrm), 4)
-                        AS cosine
-               FROM q CROSS JOIN n WHERE n.vec_id <> q.query_id),
-             ranked AS (
-               SELECT query_id, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, neighbor_id, cosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+             ${duckTop3("q CROSS JOIN n")}"""))
 
   /** Random-hyperplane LSH ANN: 4 sign bits → 16 buckets; the query
     * searches only its own bucket. Emits per-query top-3 within-bucket
@@ -124,20 +147,8 @@ object SimilarityQueries {
     "s2_lsh_ann",
     (s, dir) => {
       val e = withBucket(corpus(s, dir))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"), col("bucket"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      broadcast(q).join(e, Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-        .select(col("query_id"), col("bucket"),
-          col("vec_id").as("neighbor_id"), col("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
+      cosineTop3(broadcast(queriesOf(e, "bucket")).join(e, Seq("bucket")),
+        "bucket")
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v, label FROM embeddings),
@@ -147,25 +158,15 @@ object SimilarityQueries {
              q AS (
                SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket FROM n
                WHERE vec_id < 10),
-             scored AS (
-               SELECT q.query_id, q.bucket, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qv", "v")} / (qn * nrm), 4)
-                        AS cosine
-               FROM q JOIN n USING (bucket) WHERE n.vec_id <> q.query_id),
-             ranked AS (
-               SELECT query_id, bucket, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, bucket, neighbor_id, cosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+             ${duckTop3("q JOIN n USING (bucket)", "bucket")}"""))
 
-  /** IVF-style coarse search: per-label mean vectors are the cells
-    * (stand-in for k-means centroids), each query probes its nearest
-    * cell and searches only that cell's members exactly.
+  /** IVF over per-label cells: the per-label mean vectors are the cells
+    * (stand-in for k-means centroids), each query probes its `nProbe`
+    * nearest cells (cell-cosine ties to the lower label) and searches
+    * only their members exactly.
     */
-  private val s3 = Q(
-    "s3_ivf_centroid",
+  private def ivfLabelCells(name: String, nProbe: Int): Q = Q(
+    name,
     (s, dir) => {
       val e = corpus(s, dir)
       // cell list: per-label centroid = element-wise mean (array avg via
@@ -176,29 +177,16 @@ object SimilarityQueries {
         .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
           .getField("m").as("cv"))
         .withColumn("cn", norm(col("cv")))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
       val wCell = Window.partitionBy("query_id")
         .orderBy(col("cell_cos").desc, col("label"))
-      val probe = broadcast(q).crossJoin(broadcast(cent))
+      val probe = broadcast(queriesOf(e)).crossJoin(broadcast(cent))
         .withColumn("cell_cos",
           round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
         .withColumn("crk", row_number().over(wCell))
-        .filter(col("crk") === 1)
+        .filter(col("crk") <= nProbe)
         .select(col("query_id"), col("qv"), col("qn"),
           col("label").as("cell"))
-      val wTop = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      probe.join(e, probe("cell") === e("label"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-        .select(col("query_id"), col("cell"),
-          col("vec_id").as("neighbor_id"), col("cosine"))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
+      cosineTop3(probe.join(e, probe("cell") === e("label")), "cell")
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v, label FROM embeddings),
@@ -223,20 +211,11 @@ object SimilarityQueries {
                      round(${duckDot.format("qv", "cv")} / (qn * cn), 4) DESC,
                      c.label) AS crk
                  FROM q CROSS JOIN centn c)
-               WHERE crk = 1),
-             scored AS (
-               SELECT p.query_id, p.cell, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qv", "v")} / (qn * nrm), 4)
-                        AS cosine
-               FROM probe p JOIN n ON n.label = p.cell
-               WHERE n.vec_id <> p.query_id),
-             ranked AS (
-               SELECT query_id, cell, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, cell, neighbor_id, cosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+               WHERE crk <= $nProbe),
+             ${duckTop3("probe q JOIN n ON n.label = q.cell", "cell")}"""))
+
+  /** IVF with probe 1: each query searches its one nearest cell. */
+  private val s3 = ivfLabelCells("s3_ivf_centroid", nProbe = 1)
 
   /** IVF with probe=2: each query searches its TWO nearest cells —
     * the standard recall knob (nprobe) of IVF indexes. Costs one extra
@@ -244,77 +223,15 @@ object SimilarityQueries {
     * different cells are disjoint (a vector lives in exactly one cell),
     * so no dedup is needed before the global top-k.
     */
-  private val s4 = Q(
-    "s4_ivf_probe2",
-    (s, dir) => {
-      val e = corpus(s, dir)
-      val cent = e.select(col("label"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("label", "pos").agg(avg("x").as("m"))
-        .groupBy("label")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .getField("m").as("cv"))
-        .withColumn("cn", norm(col("cv")))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val wCell = Window.partitionBy("query_id")
-        .orderBy(col("cell_cos").desc, col("label"))
-      val probe = broadcast(q).crossJoin(broadcast(cent))
-        .withColumn("cell_cos",
-          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 4))
-        .withColumn("crk", row_number().over(wCell))
-        .filter(col("crk") <= 2)
-        .select(col("query_id"), col("qv"), col("qn"),
-          col("label").as("cell"))
-      val wTop = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      probe.join(e, probe("cell") === e("label"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-        .select(col("query_id"), col("cell"),
-          col("vec_id").as("neighbor_id"), col("cosine"))
-        .withColumn("rank", row_number().over(wTop))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
-    },
-    Some(s"""WITH e AS (
-               SELECT vec_id, $duckVec AS v, label FROM embeddings),
-             n AS (
-               SELECT vec_id, v, $duckNorm AS nrm, label FROM e),
-             cm AS (
-               SELECT label, t.pos, avg(v[t.pos]) AS m
-               FROM e, range(1, ${dim + 1}) t(pos) GROUP BY 1, 2),
-             cent AS (
-               SELECT label, list(m ORDER BY pos) AS cv FROM cm GROUP BY 1),
-             centn AS (
-               SELECT label, cv,
-                 sqrt(list_sum(list_transform(cv, x -> x * x))) AS cn
-               FROM cent),
-             q AS (
-               SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
-               WHERE vec_id < 10),
-             probe AS (
-               SELECT query_id, qv, qn, label AS cell FROM (
-                 SELECT q.query_id, q.qv, q.qn, c.label,
-                   row_number() OVER (PARTITION BY q.query_id ORDER BY
-                     round(${duckDot.format("qv", "cv")} / (qn * cn), 4) DESC,
-                     c.label) AS crk
-                 FROM q CROSS JOIN centn c)
-               WHERE crk <= 2),
-             scored AS (
-               SELECT p.query_id, p.cell, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qv", "v")} / (qn * nrm), 4)
-                        AS cosine
-               FROM probe p JOIN n ON n.label = p.cell
-               WHERE n.vec_id <> p.query_id),
-             ranked AS (
-               SELECT query_id, cell, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, cell, neighbor_id, cosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+  private val s4 = ivfLabelCells("s4_ivf_probe2", nProbe = 2)
+
+  /** The in-cell cosine top-3 serve stage shared by s5 (build+serve in
+    * one plan) and s14 (serve against the RELOADED parquet index):
+    * queries = the index rows with vec_id < 10, broadcast against
+    * their own cell's members.
+    */
+  private def ivfServe(e: DataFrame): DataFrame =
+    cosineTop3(broadcast(queriesOf(e, "cell")).join(e, Seq("cell")), "cell")
 
   /** IVF over CONVERGED k-means cells: the cell list is the centroid
     * set after [[KMeansOps.iters]] Lloyd iterations (not the per-label
@@ -324,28 +241,6 @@ object SimilarityQueries {
     * k·dim literals (broadcast-free scan-local assignment), the corpus
     * shuffles once on the cell key.
     */
-  /** The in-cell cosine top-3 serve stage shared by s5 (build+serve in
-    * one plan) and s14 (serve against the RELOADED parquet index):
-    * queries = the index rows with vec_id < 10, broadcast against
-    * their own cell's members.
-    */
-  private def ivfServe(e: DataFrame): DataFrame = {
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qn"), col("cell"))
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(q).join(e, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-      .select(col("query_id"), col("cell"),
-        col("vec_id").as("neighbor_id"), col("cosine"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= 3)
-      .orderBy("query_id", "rank")
-  }
-
   private val s5 = Q(
     "s5_ivf_kmeans",
     (s, dir) => {
@@ -356,6 +251,27 @@ object SimilarityQueries {
     },
     Some(ivfTopkOracle))
 
+  /** The serve half of the IVF-over-k-means oracles: every vector of
+    * `n` (vec_id, v, nrm) assigned to its argmin-L2 centroid in the
+    * last Lloyd CTE of [[KMeansOps.duckCtes]], then the in-cell
+    * [[duckTop3]].
+    */
+  private def duckIvfServe: String =
+    s"""af AS (
+       |  SELECT vec_id, v, nrm, cluster AS cell FROM (
+       |    SELECT n.vec_id, n.v, n.nrm, c.cluster,
+       |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
+       |        list_sum(list_transform(n.v, x -> x * x))
+       |        - 2 * list_sum(list_transform(list_zip(n.v, c.cv),
+       |            p -> p[1] * p[2]))
+       |        + list_sum(list_transform(c.cv, x -> x * x)),
+       |        c.cluster) AS rn
+       |    FROM n CROSS JOIN c${KMeansOps.iters} c) t WHERE rn = 1),
+       |qry AS (
+       |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cell FROM af
+       |  WHERE vec_id < 10),
+       |${duckTop3("qry q JOIN af n USING (cell)", "cell")}""".stripMargin
+
   /** The shared s5/s14 oracle: DuckDB recomputes the converged k-means
     * assignment and the in-cell top-3 from scratch — s14's persistence
     * round-trip must be value-invisible (parquet stores the exact
@@ -365,31 +281,7 @@ object SimilarityQueries {
     KMeansOps.duckCtes(KMeansOps.iters) + s""",
          |n AS (
          |  SELECT vec_id, v, $duckNorm AS nrm FROM e),
-         |af AS (
-         |  SELECT vec_id, v, nrm, cluster AS cell FROM (
-         |    SELECT n.vec_id, n.v, n.nrm, c.cluster,
-         |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-         |        list_sum(list_transform(n.v, x -> x * x))
-         |        - 2 * list_sum(list_transform(list_zip(n.v, c.cv),
-         |            p -> p[1] * p[2]))
-         |        + list_sum(list_transform(c.cv, x -> x * x)),
-         |        c.cluster) AS rn
-         |    FROM n CROSS JOIN c${KMeansOps.iters} c) t WHERE rn = 1),
-         |qry AS (
-         |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cell FROM af
-         |  WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT qry.query_id, qry.cell, a.vec_id AS neighbor_id,
-         |         round(${duckDot.format("qry.qv", "a.v")}
-         |           / (qry.qn * a.nrm), 4) AS cosine
-         |  FROM qry JOIN af a USING (cell) WHERE a.vec_id <> qry.query_id),
-         |ranked AS (
-         |  SELECT query_id, cell, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, cell, neighbor_id, cosine, rank FROM ranked
-         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         |$duckIvfServe""".stripMargin
 
   /** X324 s14: IVF INDEX PERSISTENCE — the serving-side contract
     * (round-16 verdict "What's missing" #2). s5 rebuilds the IVF index
@@ -492,31 +384,7 @@ object SimilarityQueries {
          |  SELECT vec_id, $duckVec AS v FROM embeddings),
          |n AS (
          |  SELECT vec_id, v, $duckNorm AS nrm FROM allv),
-         |af AS (
-         |  SELECT vec_id, v, nrm, cluster AS cell FROM (
-         |    SELECT n.vec_id, n.v, n.nrm, c.cluster,
-         |      row_number() OVER (PARTITION BY n.vec_id ORDER BY
-         |        list_sum(list_transform(n.v, x -> x * x))
-         |        - 2 * list_sum(list_transform(list_zip(n.v, c.cv),
-         |            p -> p[1] * p[2]))
-         |        + list_sum(list_transform(c.cv, x -> x * x)),
-         |        c.cluster) AS rn
-         |    FROM n CROSS JOIN c${KMeansOps.iters} c) t WHERE rn = 1),
-         |qry AS (
-         |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cell FROM af
-         |  WHERE vec_id < 10),
-         |scored AS (
-         |  SELECT qry.query_id, qry.cell, a.vec_id AS neighbor_id,
-         |         round(${duckDot.format("qry.qv", "a.v")}
-         |           / (qry.qn * a.nrm), 4) AS cosine
-         |  FROM qry JOIN af a USING (cell) WHERE a.vec_id <> qry.query_id),
-         |ranked AS (
-         |  SELECT query_id, cell, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM scored)
-         |SELECT query_id, cell, neighbor_id, cosine, rank FROM ranked
-         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         |$duckIvfServe""".stripMargin
 
   /** Multi-probe LSH: each query probes its own bucket PLUS the 4
     * buckets at Hamming distance 1 (one sign bit flipped) — the
@@ -530,24 +398,11 @@ object SimilarityQueries {
     "s6_lsh_multiprobe",
     (s, dir) => {
       val e = withBucket(corpus(s, dir))
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"), col("bucket"))
-      val probes = q.select(col("query_id"), col("qv"), col("qn"),
-        explode(array(
+      val probes = queriesOf(e, "bucket").select(col("query_id"), col("qv"),
+        col("qn"), explode(array(
           col("bucket") +: (0 until nPlanes).map(p =>
             col("bucket").bitwiseXOR(lit(1L << p))): _*)).as("bucket"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      broadcast(probes).join(e, Seq("bucket"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cosine",
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("cosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
+      cosineTop3(broadcast(probes).join(e, Seq("bucket")))
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v, label FROM embeddings),
@@ -563,19 +418,7 @@ object SimilarityQueries {
                    ${(0 until nPlanes).map(p => s"xor(bucket, ${1L << p})")
                      .mkString(", ")}]) AS bucket
                FROM q),
-             scored AS (
-               SELECT p.query_id, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qv", "v")} / (qn * nrm), 4)
-                        AS cosine
-               FROM probes p JOIN n USING (bucket)
-               WHERE n.vec_id <> p.query_id),
-             ranked AS (
-               SELECT query_id, neighbor_id, cosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, neighbor_id, cosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+             ${duckTop3("probes q JOIN n USING (bucket)")}"""))
 
   /** ANN QUALITY SCOREBOARD: recall@3 of every approximate variant
     * against the exact brute-force truth — the evaluation an index

@@ -27,6 +27,11 @@ import java.util.Locale
   *    at all — both are forecast in full and must be dropped;
   *  - `daily_covid_usstates.csv` leaves `recovered` blank for its
   *    first days;
+  *  - the JHU and US series run to 2020-03-30, past the 2020-03-20
+  *    gov_action threshold and the 2020-03-25 intervention pivot, so
+  *    zeroing gov_action changes the chain's simulation; their growth
+  *    midpoints fall late in that span, so the chain fits every state
+  *    a positive β;
   *  - `pop_dataset.csv` runs 2020-02-28..2020-04-19, across the
   *    2020-03-20 gov_action threshold and the 2020-03-25 intervention
   *    pivot; its states start with zero-confirmed days, and ND has no
@@ -104,7 +109,7 @@ object PipelineFixtures {
     val covid = "data/covid_data"
     // JHU wide tables: (province, country) rows, one `_M_D_YY` column a
     // day; the 3 measure tables share their rows
-    val jhuDays = days(LocalDate.of(2020, 2, 10), 30)
+    val jhuDays = days(LocalDate.of(2020, 2, 10), 50) // to 2020-03-30
     val jhuLocs = Seq(
       "" -> "Aland Isles",
       "North Borduria" -> "Borduria",
@@ -114,7 +119,7 @@ object PipelineFixtures {
       "" -> "Elbonia",
       "" -> "US")
     val curves = jhuLocs.map { _ =>
-      val conf = confirmedCurve(rnd, jhuDays.length, 5000.0, 20.0)
+      val conf = confirmedCurve(rnd, jhuDays.length, 5000.0, 45.0)
       val share = uniform(rnd, 0.05, 0.15)
       val removed = conf.map(c => math.round(c * share))
       val death = removed.map(_ / 10)
@@ -173,9 +178,9 @@ object PipelineFixtures {
     writeCsv(dir, s"$covid/covid_county_population_usafacts.csv",
       Seq("countyFIPS", "County Name", "State", "population"), counties)
 
-    val usDays = days(ForecastStart, 20)
+    val usDays = days(ForecastStart, 44) // to 2020-03-30
     val daily = states.flatMap { s =>
-      val conf = confirmedCurve(rnd, usDays.length, 2000.0, 10.0)
+      val conf = confirmedCurve(rnd, usDays.length, 2000.0, 40.0)
       usDays.zip(conf).zipWithIndex.map { case ((d, c), t) =>
         val removed = math.round(c * 0.1)
         val death = removed / 10

@@ -194,6 +194,12 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
       assert(s.rows > 0 && s.rows == reread, s)
       assert(s.seconds >= 0.0, s)
     }
+    // the generated series run past the gov_action threshold and the
+    // intervention pivot, so zeroing gov_action changes some prediction
+    val changed = spark.read.option("header", true)
+      .csv(s"$work/intervention.csv")
+      .filter(abs(col("diff_removed").cast("double")) > 0.0).count()
+    assert(changed > 0, "intervention.csv: no non-zero diff_removed")
     assert(tempViews(spark) == views)
     assert(spark.sharedState.cacheManager.isEmpty)
     val newRdds = spark.sparkContext.getPersistentRDDs.keySet.diff(rdds.keySet)
@@ -418,6 +424,27 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     val sim = CovidSimulator.simulate(feats, coefs)
     assert(sim.filter(col("pred_removed") < 0).count() == 0)
     assert(sim.select("state").distinct().count() == coefs.count())
+  }
+
+  test("simulation is bit-identical at 1 and 7 shuffle partitions") {
+    reportInputs()
+    import spark.implicits._
+    import graft.streaming.StreamReplay.{withConf, withShufflePartitions}
+    // no broadcast joins and no AQE coalescing, so that the 7-partition
+    // run really shuffles the simulation's rows into 7 partitions
+    def simAt(parts: Int) =
+      withConf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1") {
+        withConf(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false") {
+          withShufflePartitions(spark, parts) {
+            CovidSimulator.simulate(feats, coefsShared)
+              .as[(String, Int, Double, Double, Double)].collect()
+              .map(r => (r._1, r._2) -> r).toMap
+          }
+        }
+      }
+    val (s1, s7) = (simAt(1), simAt(7))
+    assert(s1.nonEmpty && s1 == s7,
+      s"differ at ${s1.keySet.filter(k => !s7.get(k).contains(s1(k))).take(3)}")
   }
 
   test("intervention comparison diverges only where gov_action was zeroed") {

@@ -443,18 +443,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == 2, s"expected 2 shuffles, got $n\n" + p.take(3000))
   }
 
-  test("j17 band join plans as an EQUI-join on the bucket key — the " +
-      "|Δ|≤δ predicate must not surface as a theta join") {
-    val p = plan("j17_price_band_join")
-    // The whole design: explode probe to bucket±1 so the band match is
-    // a hash-partitionable equi-join; a nested-loop or cartesian plan
-    // means the bucket key got lost and the query is O(n·m) at scale.
-    assert(!p.contains("CartesianProduct")
-        && !p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin")
-        || p.contains("ShuffledHashJoin"), p.take(3000))
-  }
-
   test("sql7 correlated scalar subqueries decorrelate: no per-outer-row " +
       "re-execution survives optimization") {
     val p = plan("sql7_correlated_scalar_subquery")

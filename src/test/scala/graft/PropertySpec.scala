@@ -147,13 +147,14 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  // ---- j17 band-join bucket-explode law -------------------------------
-  // The j17 registry row replaces the |Δcents| ≤ δ theta join with an
-  // equi-join on δ-width buckets (probe explodes to b−1, b, b+1). This
-  // property proves the rewrite is LOSSLESS and DUPLICATE-FREE for
-  // arbitrary probe/candidate multisets: any pair within δ differs by
-  // at most one bucket (coverage), a candidate owns exactly one bucket
-  // (exactly-once), and the post-join filter removes the rest.
+  // ---- band-join bucket-explode law ------------------------------------
+  // BandJoinRewrite (registry row j18) replaces the |Δcents| ≤ δ theta
+  // join with an equi-join on δ-width buckets (probe explodes to b−1,
+  // b, b+1). This property proves the rewrite is LOSSLESS and
+  // DUPLICATE-FREE for arbitrary probe/candidate multisets: any pair
+  // within δ differs by at most one bucket (coverage), a candidate owns
+  // exactly one bucket (exactly-once), and the post-join filter removes
+  // the rest.
 
   test("band join: bucket-explode pairs == brute-force |Δ|<=δ pairs, " +
       "each exactly once") {

@@ -37,6 +37,33 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The row groups that run the same oracle SQL on purpose, each with
+    * what its later rows prove that the first does not. Any other
+    * shared oracle is a row another row already proves.
+    */
+  private val sharedOracles: Map[Set[String], String] = Map(
+    Set("e1_tumbling_window", "e10_stream_batch_equiv") ->
+      "stream ≡ batch: the windowed stream replay lands on e1's batch answer",
+    Set("e9_session_window_native", "e11_stream_session_equiv") ->
+      "stream ≡ batch: the session-window stream replay lands on e9's answer",
+    Set("e14_stream_tws_equiv", "e18_stream_fmgws_equiv") ->
+      "stream ≡ batch: two keyed-state APIs land on the same running totals",
+    Set("e15_foreachbatch_sink_equiv", "e16_stream_checkpoint_resume",
+        "e23_stream_rate_limit", "e37_file_sink_txn_log") ->
+      "stream ≡ batch: four sink and trigger paths land on one type rollup",
+    Set("s5_ivf_kmeans", "s14_ivf_persist") ->
+      "the IVF index served from parquet equals the one built in the plan")
+
+  test("no two rows share an oracle unless the group is a named equivalence proof") {
+    val groups = SparkEntry.oracleSql.toSeq
+      .groupBy { case (_, sql) => sql.trim.split("\\s+").mkString(" ") }
+      .values.map(_.map(_._1).toSet).filter(_.size > 1).toSet
+    val unnamed = groups -- sharedOracles.keySet
+    assert(unnamed.isEmpty, s"rows sharing an oracle with no named reason: $unnamed")
+    val stale = sharedOracles.keySet -- groups
+    assert(stale.isEmpty, s"named groups that no longer share an oracle: $stale")
+  }
+
   test("entry returns rows on sf0.001 (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

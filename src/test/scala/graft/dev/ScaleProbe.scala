@@ -31,7 +31,7 @@ import scala.collection.mutable.LinkedHashMap
   *   ann           recall@3 of s1 s2 s5 s6 s12 s13, embeddings 1/2/4/8×
   *   substr        d24 dup-heavy vs unique arms, documents 1/2/4/8×
   *   asof          j15 vs asof-exec vs naive range join, events 4/16/64×
-  *   band          j17 vs naive theta join, part 1/4/8×
+  *   band          j18 vs naive theta join, part 1/4/8×
   *   sketch        GK vs exact percentile shuffle bytes, orders 1-64×
   *   skew          AQE skew-join split on vs off (synthetic, no replicas)
   *   mixedlm       REML-EM per-iteration cost (synthetic groups)
@@ -482,7 +482,7 @@ object ScaleProbe {
     * measures both so the gap, not just the trend, is on record.
     */
   private def band = Sweep("BAND", "graft_scale_band", Seq(1, 4, 8),
-    Seq("j17_price_band_join"),
+    Seq("j18_band_join_auto"),
     (spark, m, dir) => {
       val parts = read(spark, "part")
       write(offsetKeys(parts, m, "p_partkey" -> parts.count()), dir, "part")
