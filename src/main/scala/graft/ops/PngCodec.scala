@@ -72,21 +72,8 @@ object PngCodec {
   /** Encode row-major 8-bit grayscale pixels as a complete valid PNG
     * (signature + IHDR + one IDAT + IEND, filter type 0 scanlines).
     */
-  def encodeGray(width: Int, height: Int, pixels: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && pixels.length == width * height,
-      s"need width*height=${width * height} pixels, got ${pixels.length}")
-    val raw = new Array[Byte](height * (width + 1))
-    var r = 0
-    while (r < height) {
-      // raw(r * (width+1)) is already 0 = filter type None
-      System.arraycopy(pixels, r * width, raw, r * (width + 1) + 1, width)
-      r += 1
-    }
-    val ihdr = be32(width) ++ be32(height) ++
-      Array[Byte](8, 0, 0, 0, 0) // depth 8, gray, deflate, adaptive, no interlace
-    signature ++ chunk("IHDR", ihdr) ++ chunk("IDAT", deflate(raw)) ++
-      chunk("IEND", Array.emptyByteArray)
-  }
+  def encodeGray(width: Int, height: Int, pixels: Array[Byte]): Array[Byte] =
+    encode(width, height, pixels, bpp = 1, colorType = 0)
 
   /** Encode row-major interleaved 8-bit RGB pixels as a complete valid
     * truecolor PNG (color type 2, filter type 0 scanlines) — the plot
@@ -94,19 +81,24 @@ object PngCodec {
     * [[encodeGray]]; PlotSinkSpec proves the output against the JDK
     * ImageIO reader pixel-for-pixel.
     */
-  def encodeRgb(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0 && rgb.length == 3 * width * height,
-      s"need 3*width*height=${3 * width * height} bytes, got ${rgb.length}")
-    val stride = 3 * width
+  def encodeRgb(width: Int, height: Int, rgb: Array[Byte]): Array[Byte] =
+    encode(width, height, rgb, bpp = 3, colorType = 2)
+
+  /** Depth-8 PNG of `bpp`-byte pixels under IHDR `colorType`. */
+  private def encode(width: Int, height: Int, px: Array[Byte], bpp: Int,
+      colorType: Int): Array[Byte] = {
+    require(width > 0 && height > 0 && px.length == bpp * width * height,
+      s"need $bpp*width*height=${bpp * width * height} bytes, got ${px.length}")
+    val stride = bpp * width
     val raw = new Array[Byte](height * (stride + 1))
     var r = 0
     while (r < height) {
       // raw(r * (stride+1)) is already 0 = filter type None
-      System.arraycopy(rgb, r * stride, raw, r * (stride + 1) + 1, stride)
+      System.arraycopy(px, r * stride, raw, r * (stride + 1) + 1, stride)
       r += 1
     }
     val ihdr = be32(width) ++ be32(height) ++
-      Array[Byte](8, 2, 0, 0, 0) // depth 8, truecolor, deflate, adaptive, no interlace
+      Array[Byte](8, colorType.toByte, 0, 0, 0) // depth 8, deflate, adaptive, no interlace
     signature ++ chunk("IHDR", ihdr) ++ chunk("IDAT", deflate(raw)) ++
       chunk("IEND", Array.emptyByteArray)
   }
@@ -130,39 +122,8 @@ object PngCodec {
     * must never decode silently into wrong pixels.
     */
   def decodeGray(png: Array[Byte]): Gray = {
-    require(png.length >= 8 && (0 until 8).forall(i => png(i) == signature(i)),
-      "not a PNG: bad signature")
-    var off = 8
-    var width = -1; var height = -1
-    var bitDepth = -1; var colorType = -1
-    val idat = new ByteArrayOutputStream()
-    var done = false
-    while (!done) {
-      require(off + 8 <= png.length, "truncated chunk header")
-      val len = readBe32(png, off)
-      val typ = new String(png, off + 4, 4, "US-ASCII")
-      require(len >= 0 && off + 12 + len <= png.length,
-        s"truncated $typ chunk (len=$len)")
-      val crc = new CRC32()
-      crc.update(png, off + 4, 4 + len)
-      require(crc.getValue.toInt == readBe32(png, off + 8 + len),
-        s"CRC mismatch in $typ chunk")
-      typ match {
-        case "IHDR" =>
-          width = readBe32(png, off + 8); height = readBe32(png, off + 12)
-          bitDepth = png(off + 16) & 0xff; colorType = png(off + 17) & 0xff
-        case "IDAT" => idat.write(png, off + 8, len)
-        case "IEND" => done = true
-        case _ => () // ancillary chunks (tEXt, pHYs, ...) are skippable
-      }
-      off += 12 + len
-    }
-    require(width > 0 && height > 0, "missing or empty IHDR")
-    require(bitDepth == 8 && colorType == 0,
-      s"unsupported PNG variant: depth=$bitDepth colorType=$colorType " +
-        "(8-bit grayscale only)")
-    val raw = inflate(idat.toByteArray, height * (width + 1))
-    Gray(width, height, decodeScanlines(raw, width, height, 1))
+    val (width, height, px) = decode(png, bpp = 1, colorType = 0, "grayscale")
+    Gray(width, height, px)
   }
 
   /** Decode a real 8-bit truecolor PNG byte stream — the read-back half
@@ -172,11 +133,20 @@ object PngCodec {
     * neighbors sit one PIXEL back, not one byte — PNG spec 9.2).
     */
   def decodeRgb(png: Array[Byte]): Rgb = {
+    val (width, height, rgb) = decode(png, bpp = 3, colorType = 2, "truecolor")
+    Rgb(width, height, rgb)
+  }
+
+  /** (width, height, pixel bytes) of a depth-8 PNG whose IHDR must carry
+    * `colorType` (`kind` names it in the error); chunks are walked and
+    * CRC-checked, ancillary ones (tEXt, pHYs, ...) skipped. */
+  private def decode(png: Array[Byte], bpp: Int, colorType: Int,
+      kind: String): (Int, Int, Array[Byte]) = {
     require(png.length >= 8 && (0 until 8).forall(i => png(i) == signature(i)),
       "not a PNG: bad signature")
     var off = 8
     var width = -1; var height = -1
-    var bitDepth = -1; var colorType = -1
+    var bitDepth = -1; var ct = -1
     val idat = new ByteArrayOutputStream()
     var done = false
     while (!done) {
@@ -192,7 +162,7 @@ object PngCodec {
       typ match {
         case "IHDR" =>
           width = readBe32(png, off + 8); height = readBe32(png, off + 12)
-          bitDepth = png(off + 16) & 0xff; colorType = png(off + 17) & 0xff
+          bitDepth = png(off + 16) & 0xff; ct = png(off + 17) & 0xff
         case "IDAT" => idat.write(png, off + 8, len)
         case "IEND" => done = true
         case _ => ()
@@ -200,11 +170,11 @@ object PngCodec {
       off += 12 + len
     }
     require(width > 0 && height > 0, "missing or empty IHDR")
-    require(bitDepth == 8 && colorType == 2,
-      s"unsupported PNG variant: depth=$bitDepth colorType=$colorType " +
-        "(8-bit truecolor only)")
-    val raw = inflate(idat.toByteArray, height * (3 * width + 1))
-    Rgb(width, height, decodeScanlines(raw, 3 * width, height, 3))
+    require(bitDepth == 8 && ct == colorType,
+      s"unsupported PNG variant: depth=$bitDepth colorType=$ct " +
+        s"(8-bit $kind only)")
+    val raw = inflate(idat.toByteArray, height * (bpp * width + 1))
+    (width, height, decodeScanlines(raw, bpp * width, height, bpp))
   }
 
   /** Shared five-type scanline reconstruction over `stride`-byte rows

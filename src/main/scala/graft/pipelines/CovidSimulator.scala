@@ -160,7 +160,8 @@ object CovidSimulator {
     val fit = MixedLm.fitEm(stats, zIdx = Seq(0, 3))
     val beta = fit.beta
     import feats.sparkSession.implicits._
-    val rc = MixedLm.blups(stats, fit, zIdx = Seq(0, 3)).toSeq
+    val blups = MixedLm.blups(stats, fit, zIdx = Seq(0, 3)).toSeq
+    val rc = blups
       .map { case (g, b) => (g, "Intercept", b(0), b(1)) }
       .toDF("state", "coef_name", "coef_value", "re_lag_confirmed")
       .withColumn("fe_Intercept", lit(beta(0)))
@@ -168,16 +169,21 @@ object CovidSimulator {
       .withColumn("lag_confirmed", lit(beta(3)) + col("re_lag_confirmed"))
       .withColumn("gov_action", lit(beta(1)))
       .withColumn("TAVG", lit(beta(2)))
-    // negative-beta mean imputation (covid_simulator.py:501-502)
+    // negative-beta mean imputation (covid_simulator.py:501-502), from
+    // the driver's BLUPs; with no positive β there is no mean to impute
+    // (pandas would give NaN), so fail naming every state's β
     val out =
       if (!imputeNegative) rc
       else {
-        val mb = rc.filter(col("lag_confirmed") > 0)
-          .agg(avg("lag_confirmed").as("mean_beta"))
-        rc.crossJoin(broadcast(mb))
-          .withColumn("lag_confirmed",
-            when(col("lag_confirmed") < 0, col("mean_beta"))
-              .otherwise(col("lag_confirmed")))
+        val lag = blups.map { case (g, b) => g -> (beta(3) + b(1)) }
+        val positive = lag.map(_._2).filter(_ > 0)
+        if (positive.isEmpty)
+          throw new IllegalArgumentException("no state has a positive " +
+            "lag_confirmed beta to impute the negative ones with: " +
+            lag.map { case (g, v) => s"$g=$v" }.mkString(", "))
+        rc.withColumn("lag_confirmed",
+          when(col("lag_confirmed") < 0, lit(positive.sum / positive.size))
+            .otherwise(col("lag_confirmed")))
       }
     out.select("state", "coef_name", "coef_value", "re_lag_confirmed",
       "fe_Intercept", "Intercept", "lag_confirmed", "gov_action", "TAVG")

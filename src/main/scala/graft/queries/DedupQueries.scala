@@ -65,6 +65,80 @@ object DedupQueries {
       |       list_filter(string_split(text, ' '), x -> x <> '')[j+2] || ' ' ||
       |       list_filter(string_split(text, ' '), x -> x <> '')[j+3]))""".stripMargin
 
+  /** Word 3-shingles of `text` in order (space-split, empty tokens
+    * dropped); none when it has fewer than 3 words — the tokeniser of
+    * the MinHash, SimHash, shingle-set and winnowing passes. */
+  private[queries] def shingles3(text: String): Iterator[String] = {
+    val toks = text.split(" ").filter(_.nonEmpty)
+    if (toks.length < 3) Iterator.empty
+    else toks.sliding(3).map(_.mkString(" "))
+  }
+
+  /** The oracle's `sets` (each document's distinct 3-shingle list) and
+    * `ex` (one row per (doc_id, nsh, sh)) CTEs. */
+  private[queries] val duckShingleRows =
+    s"""sets AS (
+               SELECT doc_id, $duckShingles AS shs FROM documents),
+             ex AS (
+               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets)"""
+
+  /** Per-doc 16-bit SimHash computed task-locally in the scan pass
+    * (bit k = sign of Σ±1 over the doc's distinct 3-shingles, +1 iff hex
+    * digit k of md5(shingle) ≥ 8) — same one-pass no-shuffle shape as
+    * the MinHash signatures. d5 and d13 match on it. */
+  private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .as[(Long, String)]
+      .mapPartitions { it =>
+        val md5 = graft.ops.Hashing.newMd5()
+        it.flatMap { case (id, text) =>
+          val shs = shingles3(text).toSet
+          if (shs.isEmpty) Iterator.empty
+          else {
+            val sums = new Array[Int](16)
+            shs.foreach { sh =>
+              val h = md5.hex(sh)
+              var k = 0
+              while (k < 16) {
+                val v = Character.digit(h.charAt(k), 16)
+                sums(k) += (if (v >= 8) 1 else -1)
+                k += 1
+              }
+            }
+            var sim = 0L
+            var k = 0
+            while (k < 16) {
+              if (sums(k) > 0) sim |= 1L << k
+              k += 1
+            }
+            Iterator.single(DocSim(id, sim))
+          }
+        }
+      }.toDF()
+  }
+
+  /** The oracle of [[simhashSigs]]: `sig(doc_id, simhash)` and the CTEs
+    * it is built from. */
+  private val duckSimhashSigs =
+    s"""sets AS (
+               SELECT doc_id, $duckShingles AS shs FROM documents),
+             ex AS (
+               SELECT doc_id, md5(unnest(shs)) AS h FROM sets),
+             bits AS (
+               SELECT doc_id,
+                 ${(1 to 16).map(k =>
+                   s"sum(CASE WHEN strpos('0123456789abcdef', substr(h, $k, 1)) - 1 >= 8 THEN 1 ELSE -1 END) AS s$k")
+                   .mkString(", ")}
+               FROM ex GROUP BY 1),
+             sig AS (
+               SELECT doc_id,
+                 ${(1 to 16).map(k =>
+                   s"(CASE WHEN s$k > 0 THEN ${1L << (k - 1)} ELSE 0 END)")
+                   .mkString(" + ")} AS simhash
+               FROM bits)"""
+
   /** Exact dedup: md5 fingerprint of normalized text, canonical row =
     * min doc_id per fingerprint, per-source survivor counts.
     * The 100 TB plan: one shuffle on the 16-byte fingerprint.
@@ -118,10 +192,7 @@ object DedupQueries {
         .select("doc_a", "doc_b", "shared", "jaccard")
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets)
+    Some(s"""WITH $duckShingleRows
              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                     count(*) AS shared,
                     round(count(*) * 1.0
@@ -157,10 +228,9 @@ object DedupQueries {
       .mapPartitions { it =>
         val md5 = graft.ops.Hashing.newMd5()
         it.flatMap { case (id, text) =>
-          val toks = text.split(" ").filter(_.nonEmpty)
-          if (toks.length < 3) Iterator.empty
+          val shs = shingles3(text).toSet
+          if (shs.isEmpty) Iterator.empty
           else {
-            val shs = toks.sliding(3).map(_.mkString(" ")).toSet
             val mhs = Array.fill[String](8)(null)
             shs.foreach { sh =>
               var i = 0
@@ -189,12 +259,9 @@ object DedupQueries {
       .select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
-        val toks = text.split(" ").filter(_.nonEmpty)
-        if (toks.length < 3) Iterator.empty
-        else {
-          val shs = toks.sliding(3).map(_.mkString(" ")).toSet
-          Iterator.single(DocSet(id, shs.size, shs.toSeq))
-        }
+        val shs = shingles3(text).toSet
+        if (shs.isEmpty) Iterator.empty
+        else Iterator.single(DocSet(id, shs.size, shs.toSeq))
       })
       .toDF()
   }
@@ -268,10 +335,7 @@ object DedupQueries {
     * shared by the self-join pair chain below and d23's incremental
     * batch×corpus chain. */
   private val duckLshBaseCtes =
-    s"""sets AS (
-       |  SELECT doc_id, $duckShingles AS shs FROM documents),
-       |ex AS (
-       |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
+    s"""$duckShingleRows,
        |sigs AS (
        |  SELECT doc_id,
        |    ${(0 until 8).map(i =>
@@ -315,41 +379,7 @@ object DedupQueries {
   private val d4 = Q(
     "d5_simhash",
     (s, dir) => {
-      import s.implicits._
-      // Per-doc 16-bit SimHash computed task-locally in the scan pass
-      // (bit k = sign of Σ±1 over shingles, +1 iff hex digit k of
-      // md5(shingle) ≥ 8) — same one-pass no-shuffle shape as the
-      // MinHash signatures.
-      val sig = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md5 = graft.ops.Hashing.newMd5()
-          it.flatMap { case (id, text) =>
-            val toks = text.split(" ").filter(_.nonEmpty)
-            if (toks.length < 3) Iterator.empty
-            else {
-              val shs = toks.sliding(3).map(_.mkString(" ")).toSet
-              val sums = new Array[Int](16)
-              shs.foreach { sh =>
-                val h = md5.hex(sh)
-                var k = 0
-                while (k < 16) {
-                  val v = Character.digit(h.charAt(k), 16)
-                  sums(k) += (if (v >= 8) 1 else -1)
-                  k += 1
-                }
-              }
-              var sim = 0L
-              var k = 0
-              while (k < 16) {
-                if (sums(k) > 0) sim |= 1L << k
-                k += 1
-              }
-              Iterator.single(DocSim(id, sim))
-            }
-          }
-        }.toDF()
+      val sig = simhashSigs(s, dir)
       sig.as("x").join(sig.as("y"),
           col("x.simhash") === col("y.simhash") &&
             col("x.doc_id") < col("y.doc_id"))
@@ -357,22 +387,7 @@ object DedupQueries {
           col("x.simhash"))
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, md5(unnest(shs)) AS h FROM sets),
-             bits AS (
-               SELECT doc_id,
-                 ${(1 to 16).map(k =>
-                   s"sum(CASE WHEN strpos('0123456789abcdef', substr(h, $k, 1)) - 1 >= 8 THEN 1 ELSE -1 END) AS s$k")
-                   .mkString(", ")}
-               FROM ex GROUP BY 1),
-             sig AS (
-               SELECT doc_id,
-                 ${(1 to 16).map(k =>
-                   s"(CASE WHEN s$k > 0 THEN ${1L << (k - 1)} ELSE 0 END)")
-                   .mkString(" + ")} AS simhash
-               FROM bits)
+    Some(s"""WITH $duckSimhashSigs
              SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, x.simhash
              FROM sig x JOIN sig y
                ON x.simhash = y.simhash AND x.doc_id < y.doc_id
@@ -525,10 +540,7 @@ object DedupQueries {
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
+    Some(s"""WITH $duckShingleRows,
              rare AS (
                SELECT sh FROM ex GROUP BY 1 HAVING count(*) <= 10),
              cand AS (
@@ -586,10 +598,7 @@ object DedupQueries {
         .select("doc_a", "doc_b", "est_j", "exact_j", "abs_err")
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
+    Some(s"""WITH $duckShingleRows,
              sigs AS (
                SELECT doc_id,
                  ${(0 until 8).map(i =>
@@ -657,17 +666,10 @@ object DedupQueries {
     labels.select(col("doc_id"), col("lbl").as("cluster"))
   }
 
-  private val d9 = Q(
-    "d9_dedup_clusters",
-    (s, dir) => {
-      val labels = ccLabels(s, dir)
-      val sizes = labels.groupBy("cluster")
-        .agg(count(lit(1)).as("n_docs"))
-      labels.join(sizes, Seq("cluster"))
-        .select("doc_id", "cluster", "n_docs")
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH RECURSIVE $duckLshPairCtes,
+  /** The oracle of [[ccLabels]] after `WITH RECURSIVE`: `comp(doc_id,
+    * cluster)`, the min doc_id reachable over the verified pairs. */
+  private val duckCcLabels =
+    s"""$duckLshPairCtes,
              edges AS (
                SELECT doc_a AS src, doc_b AS dst FROM pairs
                UNION ALL
@@ -679,7 +681,19 @@ object DedupQueries {
                JOIN edges e ON r.dst = e.src),
              comp AS (
                SELECT src AS doc_id, min(dst) AS cluster
-               FROM reach GROUP BY 1),
+               FROM reach GROUP BY 1)"""
+
+  private val d9 = Q(
+    "d9_dedup_clusters",
+    (s, dir) => {
+      val labels = ccLabels(s, dir)
+      val sizes = labels.groupBy("cluster")
+        .agg(count(lit(1)).as("n_docs"))
+      labels.join(sizes, Seq("cluster"))
+        .select("doc_id", "cluster", "n_docs")
+        .orderBy("doc_id")
+    },
+    Some(s"""WITH RECURSIVE $duckCcLabels,
              sizes AS (
                SELECT cluster, count(*) AS n_docs FROM comp GROUP BY 1)
              SELECT doc_id, cluster, n_docs
@@ -712,19 +726,7 @@ object DedupQueries {
           sum(when(col("rn") =!= 1, 1L).otherwise(0L)).as("n_dropped"))
         .orderBy("cluster")
     },
-    Some(s"""WITH RECURSIVE $duckLshPairCtes,
-             edges AS (
-               SELECT doc_a AS src, doc_b AS dst FROM pairs
-               UNION ALL
-               SELECT doc_b, doc_a FROM pairs),
-             reach(src, dst) AS (
-               SELECT DISTINCT src, src FROM edges
-               UNION
-               SELECT r.src, e.dst FROM reach r
-               JOIN edges e ON r.dst = e.src),
-             comp AS (
-               SELECT src AS doc_id, min(dst) AS cluster
-               FROM reach GROUP BY 1),
+    Some(s"""WITH RECURSIVE $duckCcLabels,
              ranked AS (
                SELECT c.cluster, c.doc_id, d.source,
                  row_number() OVER (PARTITION BY c.cluster
@@ -836,10 +838,7 @@ object DedupQueries {
           round(col("n_contaminated").cast("double") / col("n_docs"), 4))
         .orderBy("source")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, unnest(shs) AS sh FROM sets),
+    Some(s"""WITH $duckShingleRows,
              eval_sh AS (
                SELECT DISTINCT sh FROM ex
                SEMI JOIN (SELECT doc_id FROM documents
@@ -877,38 +876,7 @@ object DedupQueries {
   private val d13 = Q(
     "d13_simhash_hamming",
     (s, dir) => {
-      import s.implicits._
-      val sig = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val md5 = graft.ops.Hashing.newMd5()
-          it.flatMap { case (id, text) =>
-            val toks = text.split(" ").filter(_.nonEmpty)
-            if (toks.length < 3) Iterator.empty
-            else {
-              val shs = toks.sliding(3).map(_.mkString(" ")).toSet
-              val sums = new Array[Int](16)
-              shs.foreach { sh =>
-                val h = md5.hex(sh)
-                var k = 0
-                while (k < 16) {
-                  val v = Character.digit(h.charAt(k), 16)
-                  sums(k) += (if (v >= 8) 1 else -1)
-                  k += 1
-                }
-              }
-              var sim = 0L
-              var k = 0
-              while (k < 16) {
-                if (sums(k) > 0) sim |= 1L << k
-                k += 1
-              }
-              Iterator.single(DocSim(id, sim))
-            }
-          }
-        }.toDF()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val sig = simhashSigs(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
       // bands: bits [0,5), [5,10), [10,16)
       val bands = sig.select(col("doc_id"), col("simhash"),
         explode(array(
@@ -935,22 +903,7 @@ object DedupQueries {
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, md5(unnest(shs)) AS h FROM sets),
-             bits AS (
-               SELECT doc_id,
-                 ${(1 to 16).map(k =>
-                   s"sum(CASE WHEN strpos('0123456789abcdef', substr(h, $k, 1)) - 1 >= 8 THEN 1 ELSE -1 END) AS s$k")
-                   .mkString(", ")}
-               FROM ex GROUP BY 1),
-             sig AS (
-               SELECT doc_id,
-                 ${(1 to 16).map(k =>
-                   s"(CASE WHEN s$k > 0 THEN ${1L << (k - 1)} ELSE 0 END)")
-                   .mkString(" + ")} AS simhash
-               FROM bits),
+    Some(s"""WITH $duckSimhashSigs,
              bands AS (
                SELECT doc_id, simhash, 0 AS band_idx,
                       simhash & 31 AS band_bits FROM sig
@@ -1101,10 +1054,7 @@ object DedupQueries {
             .as("containment"))
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets)
+    Some(s"""WITH $duckShingleRows
              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                     CAST(a.nsh AS BIGINT) AS na,
                     CAST(count(*) AS BIGINT) AS shared,
@@ -1201,11 +1151,7 @@ object DedupQueries {
           col("rank_gap"), col("shared"), col("jaccard"))
         .orderBy("doc_a", "doc_b")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, $duckShingles AS shs FROM documents),
-             ex AS (
-               SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh
-               FROM sets),
+    Some(s"""WITH $duckShingleRows,
              dockeys AS (
                SELECT doc_id, max(nsh) AS nsh, min(sh) AS skey
                FROM ex GROUP BY 1),
@@ -1259,11 +1205,9 @@ object DedupQueries {
         .mapPartitions { it =>
           val md5 = graft.ops.Hashing.newMd5()
           it.flatMap { case (id, text) =>
-            val toks = text.split(" ").filter(_.nonEmpty)
-            if (toks.length < 3) Iterator.empty
+            val hs = shingles3(text).map(md5.hex).toArray
+            if (hs.isEmpty) Iterator.empty
             else {
-              val hs = toks.sliding(3).map(g => md5.hex(g.mkString(" ")))
-                .toArray
               val fps: Set[String] =
                 if (hs.length <= 4) Set(hs.min)
                 else (0 to hs.length - 4).map { i =>
@@ -1449,10 +1393,7 @@ object DedupQueries {
          |     JOIN truth t ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b)
          |    / (SELECT CAST(count(*) AS DOUBLE) FROM c_$cfg) END
          |    AS precision""".stripMargin
-    s"""WITH sets AS (
-       |  SELECT doc_id, $duckShingles AS shs FROM documents),
-       |ex AS (
-       |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
+    s"""WITH $duckShingleRows,
        |sigs AS (
        |  SELECT doc_id,
        |    ${(0 until 8).map(i =>
@@ -1893,73 +1834,25 @@ object DedupQueries {
     * is the aggregator's engine-neutral total order (jaccard DESC,
     * partner ASC), which the oracle's row_number replays exactly.
     */
-  private val d25 = Q(
-    "d25_neardup_topk",
-    (s, dir) => {
-      import s.implicits._
-      val nDocs = Tables.load(s, dir, "documents").count()
-      val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      // Anchored docs on the LEFT of the inverted-index join (the side
-      // that is reported), full corpus on the right (the side reported
-      // AGAINST): join volume is A/n of the all-pairs verify, and the
-      // directional aggregate is exact per anchored doc — no mirroring
-      // step (the pre-anchor spelling aggregated undirected and
-      // mirrored to halve the full join's shuffle; with the left side
-      // budget-bounded the directional join is the smaller plan).
-      val a = ex.filter(graft.ops.Anchors.keep(col("doc_id"), nDocs))
+  private val d25 = anchoredTop3("d25_neardup_topk",
+    "n_matches", "match_id", "jaccard",
+    (ex, anchoredEx) => {
+      val a = anchoredEx
         .select(col("doc_id").as("doc_a"), col("nsh").as("na"), col("sh"))
       val b = ex.select(col("doc_id").as("doc_b"), col("nsh").as("nb"), col("sh"))
-      val pairs = a.join(b, Seq("sh")).filter(col("doc_a") =!= col("doc_b"))
+      a.join(b, Seq("sh")).filter(col("doc_a") =!= col("doc_b"))
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(count(lit(1)).as("shared"))
         .withColumn("jaccard", round(col("shared").cast("double")
           / (col("na") + col("nb") - col("shared")), 4))
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val counts = pairs.groupBy(col("doc_a").as("cdoc"))
-        .agg(count(lit(1)).as("n_matches"))
-      val topk = new graft.functions.TopKAggregator(3).toColumn
-      pairs.as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(topk.name("top"))
-        .toDF("doc_id", "top")
-        .join(counts, col("doc_id") === col("cdoc"))
-        .select(col("doc_id"), col("n_matches"),
-          posexplode(col("top")).as(Seq("i", "t")))
-        .select(col("doc_id"), col("n_matches"), (col("i") + 1).as("rank"),
-          col("t._1").as("match_id"), col("t._2").as("jaccard"))
-        .orderBy("doc_id", "rank")
     },
-    Some(s"""WITH sets AS (
-             |  SELECT doc_id, $duckShingles AS shs FROM documents),
-             |ex AS (
-             |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
-             |anchors AS (
-             |  SELECT doc_id FROM documents
-             |  WHERE ${graft.ops.Anchors.keepSql("doc_id",
-                  "SELECT count(*) FROM documents")}),
-             |pairs AS (
-             |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             |         round(count(*) * 1.0
-             |           / (a.nsh + b.nsh - count(*)), 4) AS jaccard
-             |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-             |  WHERE a.doc_id IN (SELECT doc_id FROM anchors)
-             |  GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
-             |  HAVING round(count(*) * 1.0
-             |           / (a.nsh + b.nsh - count(*)), 4) >= 0.5),
-             |rk AS (
-             |  SELECT doc_a, doc_b, jaccard,
-             |         CAST(count(*) OVER (PARTITION BY doc_a) AS BIGINT)
-             |           AS n_matches,
-             |         row_number() OVER (PARTITION BY doc_a
-             |           ORDER BY jaccard DESC, doc_b) AS rank
-             |  FROM pairs)
-             |SELECT doc_a AS doc_id, n_matches, CAST(rank AS INT) AS rank,
-             |       doc_b AS match_id, jaccard
-             |FROM rk WHERE rank <= 3
-             |ORDER BY doc_id, rank""".stripMargin))
+    """round(count(*) * 1.0
+                   / (a.nsh + b.nsh - count(*)), 4) AS jaccard""",
+    """GROUP BY a.doc_id, b.doc_id, a.nsh, b.nsh
+          HAVING round(count(*) * 1.0
+                   / (a.nsh + b.nsh - count(*)), 4) >= 0.5""")
 
   /** X317 d26: CONTAINMENT TOP-K SUMMARY — the same bounded-output
     * posture for d16's asymmetric containment enumeration (the other
@@ -1976,71 +1869,85 @@ object DedupQueries {
     * corpus, so each anchored doc's n_containers/top-3 are EXACT).
     * Equals the unsampled summary when n ≤ A (DedupTopkSpec).
     */
-  private val d26 = Q(
-    "d26_containment_topk",
-    (s, dir) => {
-      import s.implicits._
-      val nDocs = Tables.load(s, dir, "documents").count()
-      val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      // Contained (reported) side anchored, container side full — the
-      // directional aggregate with containment's own denominator |A|.
-      // (The pre-anchor spelling aggregated undirected and emitted both
-      // directions to halve the full join; with the left side budget-
-      // bounded the directional join is the smaller plan.)
-      val a = ex.filter(graft.ops.Anchors.keep(col("doc_id"), nDocs))
-        .select(col("doc_id").as("doc_a"),
-          col("nsh").cast("long").as("na"), col("sh"))
+  private val d26 = anchoredTop3("d26_containment_topk",
+    "n_containers", "container_id", "containment",
+    (ex, anchoredEx) => {
+      // Containment's own denominator |A|: only the contained side's
+      // size enters the score.
+      val a = anchoredEx.select(col("doc_id").as("doc_a"),
+        col("nsh").cast("long").as("na"), col("sh"))
       val b = ex.select(col("doc_id").as("doc_b"), col("sh"))
-      val pairs = a.join(b, Seq("sh")).filter(col("doc_a") =!= col("doc_b"))
+      a.join(b, Seq("sh")).filter(col("doc_a") =!= col("doc_b"))
         .groupBy("doc_a", "doc_b", "na")
         .agg(count(lit(1)).as("shared"))
         .filter(col("na") >= 5 && col("shared") * 5 >= col("na") * 4)
         .select(col("doc_a"), col("doc_b"),
           (col("shared").cast("double") / col("na").cast("double"))
             .as("containment"))
+    },
+    """CAST(count(*) AS DOUBLE) / CAST(a.nsh AS DOUBLE)
+                   AS containment""",
+    """GROUP BY a.doc_id, b.doc_id, a.nsh
+          HAVING a.nsh >= 5 AND count(*) * 5 >= a.nsh * 4""")
+
+  /** The anchored top-3 summary of d25 and d26. The reported doc_a side
+    * is the [[graft.ops.Anchors]] sample of the persisted shingle rows,
+    * the side reported AGAINST stays the full corpus: join volume is A/n
+    * of the all-pairs verify, and the directional aggregate is exact per
+    * anchored doc. `pairs(ex, anchoredEx)` scores (doc_a, doc_b, <score>)
+    * pairs; per anchored doc the row reports the pair count `nCol` and
+    * the top 3 partners `idCol` by score DESC, partner ASC — the
+    * TopKAggregator's engine-neutral total order, which the oracle's
+    * row_number replays. The oracle's pairs CTE selects `duckScore` from
+    * the shared-shingle join of anchored `a` and full `b`, then applies
+    * `duckGroup` (GROUP BY and HAVING). */
+  private def anchoredTop3(name: String, nCol: String, idCol: String,
+      score: String, pairs: (DataFrame, DataFrame) => DataFrame,
+      duckScore: String, duckGroup: String): Q = Q(
+    name,
+    (s, dir) => {
+      import s.implicits._
+      val nDocs = Tables.load(s, dir, "documents").count()
+      val ex = shingled(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+      val scored = pairs(ex, ex.filter(graft.ops.Anchors.keep(col("doc_id"), nDocs)))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val counts = pairs.groupBy(col("doc_a").as("cdoc"))
-        .agg(count(lit(1)).as("n_containers"))
+      val counts = scored.groupBy(col("doc_a").as("cdoc"))
+        .agg(count(lit(1)).as(nCol))
       val topk = new graft.functions.TopKAggregator(3).toColumn
-      pairs.as[(Long, Long, Double)]
+      scored.as[(Long, Long, Double)]
         .groupByKey(_._1)
         .mapValues(r => (r._2, r._3))
         .agg(topk.name("top"))
         .toDF("doc_id", "top")
         .join(counts, col("doc_id") === col("cdoc"))
-        .select(col("doc_id"), col("n_containers"),
+        .select(col("doc_id"), col(nCol),
           posexplode(col("top")).as(Seq("i", "t")))
-        .select(col("doc_id"), col("n_containers"), (col("i") + 1).as("rank"),
-          col("t._1").as("container_id"), col("t._2").as("containment"))
+        .select(col("doc_id"), col(nCol), (col("i") + 1).as("rank"),
+          col("t._1").as(idCol), col("t._2").as(score))
         .orderBy("doc_id", "rank")
     },
-    Some(s"""WITH sets AS (
-             |  SELECT doc_id, $duckShingles AS shs FROM documents),
-             |ex AS (
-             |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh FROM sets),
-             |anchors AS (
-             |  SELECT doc_id FROM documents
-             |  WHERE ${graft.ops.Anchors.keepSql("doc_id",
-                  "SELECT count(*) FROM documents")}),
-             |pairs AS (
-             |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             |         CAST(count(*) AS DOUBLE) / CAST(a.nsh AS DOUBLE)
-             |           AS containment
-             |  FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-             |  WHERE a.doc_id IN (SELECT doc_id FROM anchors)
-             |  GROUP BY a.doc_id, b.doc_id, a.nsh
-             |  HAVING a.nsh >= 5 AND count(*) * 5 >= a.nsh * 4),
-             |rk AS (
-             |  SELECT doc_a, doc_b, containment,
-             |         CAST(count(*) OVER (PARTITION BY doc_a) AS BIGINT)
-             |           AS n_containers,
-             |         row_number() OVER (PARTITION BY doc_a
-             |           ORDER BY containment DESC, doc_b) AS rank
-             |  FROM pairs)
-             |SELECT doc_a AS doc_id, n_containers, CAST(rank AS INT) AS rank,
-             |       doc_b AS container_id, containment
-             |FROM rk WHERE rank <= 3
-             |ORDER BY doc_id, rank""".stripMargin))
+    Some(s"""WITH $duckShingleRows,
+          anchors AS (
+            SELECT doc_id FROM documents
+            WHERE ${graft.ops.Anchors.keepSql("doc_id",
+              "SELECT count(*) FROM documents")}),
+          pairs AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                   $duckScore
+            FROM ex a JOIN ex b ON a.sh = b.sh AND a.doc_id <> b.doc_id
+            WHERE a.doc_id IN (SELECT doc_id FROM anchors)
+            $duckGroup),
+          rk AS (
+            SELECT doc_a, doc_b, $score,
+                   CAST(count(*) OVER (PARTITION BY doc_a) AS BIGINT)
+                     AS $nCol,
+                   row_number() OVER (PARTITION BY doc_a
+                     ORDER BY $score DESC, doc_b) AS rank
+            FROM pairs)
+          SELECT doc_a AS doc_id, $nCol, CAST(rank AS INT) AS rank,
+                 doc_b AS $idCol, $score
+          FROM rk WHERE rank <= 3
+          ORDER BY doc_id, rank"""))
 
   /** X319 d27: ANCHOR-SAMPLED LSH TUNING — the scale posture for d20,
     * whose exact recall/precision measurement computes the FULL truth

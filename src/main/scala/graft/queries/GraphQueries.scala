@@ -43,6 +43,58 @@ object GraphQueries {
       .localCheckpoint()
   }
 
+  /** The oracle's `op`/`e0` CTEs of [[coEdges]], opening `WITH`:
+    * distinct co-purchase edges (p1 < p2). */
+  private val duckCoEdges: String =
+    """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                        FROM lineitem),
+            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
+                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p)"""
+
+  /** [[duckCoEdges]] plus the `deg` CTE of [[degrees]]. */
+  private val duckCoEdgeDegrees: String = duckCoEdges +
+    """,
+            deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
+                      SELECT p1 AS node FROM e0
+                      UNION ALL
+                      SELECT p2 AS node FROM e0)
+                    GROUP BY node)"""
+
+  /** g2's and g9's symmetrized supplier–part edges (src, dst), parts
+    * offset by 10^6 to share one id space. */
+  private def supplierPartEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Tables.load(s, dir, "lineitem")
+      .select(col("l_suppkey").as("sk"),
+        (col("l_partkey") + 1000000L).as("pk"))
+      .distinct()
+    pairs.select(col("sk").as("src"), col("pk").as("dst"))
+      .unionByName(pairs.select(col("pk").as("src"), col("sk").as("dst")))
+      .localCheckpoint()
+  }
+
+  /** The oracle of [[supplierPartEdges]] (`e0`, `edges`) and its `nodes`. */
+  private val duckSupplierPartNodes: String =
+    """e0 AS (
+              SELECT DISTINCT l_suppkey AS sk, l_partkey + 1000000 AS pk
+              FROM lineitem),
+            edges AS (
+              SELECT sk AS src, pk AS dst FROM e0
+              UNION ALL
+              SELECT pk AS src, sk AS dst FROM e0),
+            nodes AS (SELECT DISTINCT src AS node FROM edges)"""
+
+  /** `n` Bellman-Ford rounds over `edges` as CTEs d1 … dn, each relaxing
+    * the previous round's (node, dist) table: dist' = least(dist, min
+    * over in-neighbors (dist) + 1). d0 is the caller's. */
+  private def duckBfsRounds(n: Int): String = (1 to n).map { k =>
+    s"""d$k AS (SELECT d.node, least(d.dist, nb.nd) AS dist
+                   FROM d${k - 1} d LEFT JOIN (
+                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
+                     FROM edges e JOIN d${k - 1} dd ON e.src = dd.node
+                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
+                   ON d.node = nb.node)"""
+  }.mkString(",\n            ")
+
   private def degrees(e0: DataFrame): DataFrame =
     e0.select(col("p1").as("node"))
       .unionByName(e0.select(col("p2").as("node")))
@@ -253,13 +305,7 @@ object GraphQueries {
   private val g2 = Q(
     "g2_bfs_khop",
     (s, dir) => {
-      val pairs = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"),
-          (col("l_partkey") + 1000000L).as("pk"))
-        .distinct()
-      val edges = pairs.select(col("sk").as("src"), col("pk").as("dst"))
-        .unionByName(pairs.select(col("pk").as("src"), col("sk").as("dst")))
-        .localCheckpoint()
+      val edges = supplierPartEdges(s, dir)
       val nodes = edges.select(col("src").as("node")).distinct()
       var dist = nodes.withColumn("dist",
         when(col("node").isin(0L, 1L), lit(0L))).localCheckpoint()
@@ -279,36 +325,12 @@ object GraphQueries {
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy("dist")
     },
-    Some("""WITH e0 AS (
-              SELECT DISTINCT l_suppkey AS sk, l_partkey + 1000000 AS pk
-              FROM lineitem),
-            edges AS (
-              SELECT sk AS src, pk AS dst FROM e0
-              UNION ALL
-              SELECT pk AS src, sk AS dst FROM e0),
-            nodes AS (SELECT DISTINCT src AS node FROM edges),
+    Some(s"""WITH $duckSupplierPartNodes,
             d0 AS (SELECT node,
                           CASE WHEN node IN (0, 1) THEN CAST(0 AS BIGINT)
                           END AS dist
                    FROM nodes),
-            d1 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d0 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d0 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d2 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d1 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d1 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d3 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d2 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d2 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node)
+            ${duckBfsRounds(3)}
             SELECT coalesce(dist, -1) AS dist,
                    CAST(count(*) AS BIGINT) AS n_nodes
             FROM d3 GROUP BY 1 ORDER BY 1"""))
@@ -340,14 +362,7 @@ object GraphQueries {
         .select(lit(nNodes).as("n_nodes"), lit(nEdges).as("n_edges"),
           col("n_triangles"))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                        FROM lineitem),
-            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                      SELECT p1 AS node FROM e0
-                      UNION ALL SELECT p2 FROM e0)
-                    GROUP BY node),
+    Some(duckCoEdgeDegrees + """,
             oriented AS (
               SELECT CASE WHEN d1.deg < d2.deg
                             OR (d1.deg = d2.deg AND p1 < p2)
@@ -412,15 +427,7 @@ object GraphQueries {
         .withColumn("assortativity",
           when(col("den") =!= 0.0, col("num") / col("den")))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                        FROM lineitem),
-            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                      SELECT p1 AS node FROM e0
-                      UNION ALL
-                      SELECT p2 AS node FROM e0)
-                    GROUP BY node),
+    Some(duckCoEdgeDegrees + """,
             wd AS (SELECT d1.deg AS d1, d2.deg AS d2
                    FROM e0 JOIN deg d1 ON e0.p1 = d1.node
                            JOIN deg d2 ON e0.p2 = d2.node),
@@ -598,10 +605,7 @@ object GraphQueries {
   private val g5 = Q(
     "g5_link_prediction",
     (s, dir) => g5Exact(s, dir),
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                        FROM lineitem),
-            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+    Some(duckCoEdges + """,
             nbr AS (SELECT p1 AS c, p2 AS x FROM e0
                     UNION ALL
                     SELECT p2 AS c, p1 AS x FROM e0),
@@ -694,10 +698,7 @@ object GraphQueries {
         .select("anchor", "rk", "candidate", "common_neighbors")
         .orderBy("anchor", "rk")
     },
-    Some(s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                         FROM lineitem),
-             e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                    FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+    Some(duckCoEdges + s""",
              nbr AS (SELECT p1 AS c, p2 AS x FROM e0
                      UNION ALL
                      SELECT p2 AS c, p1 AS x FROM e0),
@@ -741,15 +742,7 @@ object GraphQueries {
           ((lit(3L) * col("n_triangles")).cast("double") /
             col("n_wedges").cast("double")).as("global_cc"))
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                        FROM lineitem),
-            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                      SELECT p1 AS node FROM e0
-                      UNION ALL
-                      SELECT p2 AS node FROM e0)
-                    GROUP BY node),
+    Some(duckCoEdgeDegrees + """,
             wc AS (SELECT CAST(sum((deg * (deg - 1)) // 2) AS BIGINT)
                      AS n_wedges FROM deg),
             wd AS (SELECT e0.p1, e0.p2, d1.deg AS d1, d2.deg AS d2
@@ -944,13 +937,7 @@ object GraphQueries {
   private val g9 = Q(
     "g9_closeness_centrality",
     (s, dir) => {
-      val pairs = Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey").as("sk"),
-          (col("l_partkey") + 1000000L).as("pk"))
-        .distinct()
-      val edges = pairs.select(col("sk").as("src"), col("pk").as("dst"))
-        .unionByName(pairs.select(col("pk").as("src"), col("sk").as("dst")))
-        .localCheckpoint()
+      val edges = supplierPartEdges(s, dir)
       val nodes = edges.select(col("src").as("node")).distinct()
         .localCheckpoint()
       // FRONTIER BFS, not whole-set Bellman-Ford: each round expands
@@ -997,54 +984,12 @@ object GraphQueries {
             + col("h5").cast("double") / 5.0
             + col("h6").cast("double") / 6.0).as("harmonic"))
     },
-    Some("""WITH e0 AS (
-              SELECT DISTINCT l_suppkey AS sk, l_partkey + 1000000 AS pk
-              FROM lineitem),
-            edges AS (
-              SELECT sk AS src, pk AS dst FROM e0
-              UNION ALL
-              SELECT pk AS src, sk AS dst FROM e0),
-            nodes AS (SELECT DISTINCT src AS node FROM edges),
+    Some(s"""WITH $duckSupplierPartNodes,
             d0 AS (SELECT node,
                           CASE WHEN node = 0 THEN CAST(0 AS BIGINT) END
                             AS dist
                    FROM nodes),
-            d1 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d0 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d0 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d2 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d1 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d1 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d3 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d2 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d2 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d4 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d3 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d3 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d5 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d4 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d4 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
-            d6 AS (SELECT d.node, least(d.dist, nb.nd) AS dist
-                   FROM d5 d LEFT JOIN (
-                     SELECT e.dst AS node, min(dd.dist) + 1 AS nd
-                     FROM edges e JOIN d5 dd ON e.src = dd.node
-                     WHERE dd.dist IS NOT NULL GROUP BY e.dst) nb
-                   ON d.node = nb.node),
+            ${duckBfsRounds(6)},
             census AS (
               SELECT coalesce(dist, -1) AS d,
                      CAST(count(*) AS BIGINT) AS n
@@ -1170,15 +1115,7 @@ object GraphQueries {
           sum("deg").as("deg_sum"))
         .orderBy("band_lo")
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-                        FROM lineitem),
-            e0 AS (SELECT DISTINCT a.p AS p1, b.p AS p2
-                   FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-            deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                      SELECT p1 AS node FROM e0
-                      UNION ALL
-                      SELECT p2 AS node FROM e0)
-                    GROUP BY node),
+    Some(duckCoEdgeDegrees + """,
             banded AS (
               SELECT deg,
                      CASE WHEN deg < 2 THEN 1

@@ -13,14 +13,7 @@ object MlOracles {
     * arithmetic (the w6 lesson).
     */
   val m3Rk4Sql: String =
-    """WITH RECURSIVE base AS (
-      |  SELECT l_suppkey, rn, qty, disc, tax FROM (
-      |    SELECT l_suppkey,
-      |      row_number() OVER (PARTITION BY l_suppkey
-      |        ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn,
-      |      l_quantity AS qty, l_discount AS disc, l_tax AS tax
-      |    FROM lineitem)
-      |  WHERE rn <= 30),
+    SequentialQueries.duckSirBase + """,
       |sim AS (
       |  SELECT l_suppkey, rn, qty AS c,
       |         CAST(10.0 AS DOUBLE) * tax AS r,

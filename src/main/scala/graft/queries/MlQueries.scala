@@ -3,7 +3,7 @@ package graft.queries
 import graft.Q
 import graft.ops.LinAlg.dot
 import graft.ops.{Integrators, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -317,19 +317,7 @@ object MlQueries {
   private val m3 = Q(
     "m3_sir_rk4",
     (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-      val rows = Tables.load(s, dir, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 30)
-        .select(col("l_suppkey").as("key"), col("rn"),
-          col("l_quantity").as("qty"), col("l_discount").as("disc"),
-          col("l_tax").as("tax"))
-        .as[SirRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
+      SequentialQueries.sirSeries(s, dir) { (key, sorted) =>
           val sim = Integrators.sirRk4(
             confirmed0 = sorted.head.qty, removed0 = 10.0 * sorted.head.tax,
             n0 = 1000.0, alpha = 1e-5, beta = 0.05,
@@ -1025,15 +1013,7 @@ object MlQueries {
               (col("precision") + col("recall")), 4)))
         .orderBy("class")
     },
-    Some("""WITH scored AS (
-              SELECT lang,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('the','a','and','of'))) AS s_en,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('el','la','de','que'))) AS s_es,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('le','les','et','de'))) AS s_fr
-              FROM documents),
+    Some(TextQueries.duckLangScores + """,
             conf AS (
               SELECT lang,
                      CASE WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
@@ -2694,6 +2674,56 @@ object MlQueries {
                    / (CAST(x2 AS DOUBLE) / CAST(n2 AS DOUBLE)) AS rel_lift
             FROM cells"""))
 
+  /** m39's and m41's six exact-BIGINT cells: per arm (1 = purchase,
+    * 2 = click) the count n, Σcents s and Σcents² q. */
+  private def twoArmCells(s: SparkSession, dir: String): DataFrame = {
+    def arm(k: Int, t: String): Seq[Column] = {
+      def cell(v: Column) = sum(when(col("event_type") === t, v).otherwise(0L))
+      Seq(cell(lit(1L)).as(s"n$k"), cell(col("cents")).as(s"s$k"),
+        cell(col("cents") * col("cents")).as(s"q$k"))
+    }
+    val cells = arm(1, "purchase") ++ arm(2, "click")
+    Tables.load(s, dir, "events")
+      .filter(col("event_type").isin("purchase", "click"))
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .agg(cells.head, cells.tail: _*)
+  }
+
+  /** Arm k's count as a double, and its sample variance by the one-pass
+    * (q − s²/n)/(n − 1) identity: the pinned chains of m39 and m41. */
+  private def armN(k: Int): Column = col(s"n$k").cast("double")
+  private def armVar(k: Int): Column =
+    (col(s"q$k").cast("double")
+      - col(s"s$k").cast("double") * col(s"s$k").cast("double") / armN(k)) /
+      (armN(k) - lit(1.0))
+
+  /** The oracle of [[twoArmCells]] plus a `derived` CTE naming each arm's
+    * double count, mean and variance in the same op order. */
+  private val duckTwoArmStats: String = {
+    def arm(k: Int, t: String) = Seq(
+      s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS n$k",
+      s"CAST(sum(CASE WHEN event_type = '$t' THEN cents ELSE 0 END) AS BIGINT) AS s$k",
+      s"CAST(sum(CASE WHEN event_type = '$t' THEN cents * cents ELSE 0 END) AS BIGINT) AS q$k")
+    def stats(k: Int) =
+      s"""CAST(n$k AS DOUBLE) AS n${k}d,
+                CAST(s$k AS DOUBLE) / CAST(n$k AS DOUBLE) AS mean$k,
+                (CAST(q$k AS DOUBLE) - CAST(s$k AS DOUBLE)
+                   * CAST(s$k AS DOUBLE) / CAST(n$k AS DOUBLE))
+                  / (CAST(n$k AS DOUBLE) - 1.0) AS var$k"""
+    s"""WITH ev AS (
+              SELECT event_type,
+                     CAST(round(value * 100) AS BIGINT) AS cents
+              FROM events WHERE event_type IN ('purchase', 'click')),
+            cells AS (
+              SELECT
+                ${(arm(1, "purchase") ++ arm(2, "click")).mkString(",\n                ")}
+              FROM ev),
+            derived AS (
+              SELECT *, ${stats(1)},
+                ${stats(2)}
+              FROM cells)"""
+  }
+
   /** X228 m39: WELCH's unequal-variance t-test on event spend (purchase
     * vs click cents) — the CONTINUOUS-outcome sibling of m37's
     * two-proportion z (and the default two-sample test when nobody can
@@ -2710,105 +2740,43 @@ object MlQueries {
   private val m39 = Q(
     "m39_welch_ttest",
     (s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_type").isin("purchase", "click"))
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-      val cells = ev.agg(
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n1"),
-        sum(when(col("event_type") === "purchase", col("cents"))
-          .otherwise(0L)).as("s1"),
-        sum(when(col("event_type") === "purchase",
-          col("cents") * col("cents")).otherwise(0L)).as("q1"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L))
-          .as("n2"),
-        sum(when(col("event_type") === "click", col("cents"))
-          .otherwise(0L)).as("s2"),
-        sum(when(col("event_type") === "click",
-          col("cents") * col("cents")).otherwise(0L)).as("q2"))
       // Pinned IEEE chains, mirrored token-for-token by the oracle.
-      val n1d = col("n1").cast("double"); val n2d = col("n2").cast("double")
-      val m1c = col("s1").cast("double") / n1d
-      val m2c = col("s2").cast("double") / n2d
-      val v1 = (col("q1").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double") / n1d) /
-        (n1d - lit(1.0))
-      val v2 = (col("q2").cast("double")
-        - col("s2").cast("double") * col("s2").cast("double") / n2d) /
-        (n2d - lit(1.0))
-      val se2 = v1 / n1d + v2 / n2d
-      cells.select(col("n1"), col("s1"), col("q1"),
+      val m1c = col("s1").cast("double") / armN(1)
+      val m2c = col("s2").cast("double") / armN(2)
+      val se2 = armVar(1) / armN(1) + armVar(2) / armN(2)
+      twoArmCells(s, dir).select(col("n1"), col("s1"), col("q1"),
         col("n2"), col("s2"), col("q2"),
         m1c.as("mean1"), m2c.as("mean2"),
-        v1.as("var1"), v2.as("var2"),
+        armVar(1).as("var1"), armVar(2).as("var2"),
         ((m1c - m2c) / sqrt(se2)).as("t_stat"),
-        (se2 * se2 / ((v1 / n1d) * (v1 / n1d) / (n1d - lit(1.0))
-          + (v2 / n2d) * (v2 / n2d) / (n2d - lit(1.0)))).as("welch_df"))
+        (se2 * se2 / ((armVar(1) / armN(1)) * (armVar(1) / armN(1))
+          / (armN(1) - lit(1.0))
+          + (armVar(2) / armN(2)) * (armVar(2) / armN(2))
+            / (armN(2) - lit(1.0)))).as("welch_df"))
     },
-    Some("""WITH ev AS (
-              SELECT event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents
-              FROM events WHERE event_type IN ('purchase', 'click')),
-            cells AS (
-              SELECT
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n1,
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s1,
-                CAST(sum(CASE WHEN event_type = 'purchase'
-                         THEN cents * cents ELSE 0 END) AS BIGINT) AS q1,
-                CAST(sum(CASE WHEN event_type = 'click' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n2,
-                CAST(sum(CASE WHEN event_type = 'click' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s2,
-                CAST(sum(CASE WHEN event_type = 'click'
-                         THEN cents * cents ELSE 0 END) AS BIGINT) AS q2
-              FROM ev)
-            SELECT n1, s1, q1, n2, s2, q2,
-                   CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) AS mean1,
-                   CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS mean2,
-                   (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                      * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                     / (CAST(n1 AS DOUBLE) - 1.0) AS var1,
-                   (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                      * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                     / (CAST(n2 AS DOUBLE) - 1.0) AS var2,
-                   (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-                     - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                   / sqrt(((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       / (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE)
-                     + ((CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                       / (CAST(n2 AS DOUBLE) - 1.0)) / CAST(n2 AS DOUBLE))
-                     AS t_stat,
-                   (((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       / (CAST(n1 AS DOUBLE) - 1.0) / CAST(n1 AS DOUBLE)
-                     + (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                       / (CAST(n2 AS DOUBLE) - 1.0) / CAST(n2 AS DOUBLE))
-                    * ((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       / (CAST(n1 AS DOUBLE) - 1.0) / CAST(n1 AS DOUBLE)
-                     + (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                       / (CAST(n2 AS DOUBLE) - 1.0) / CAST(n2 AS DOUBLE)))
-                   / (((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       / (CAST(n1 AS DOUBLE) - 1.0) / CAST(n1 AS DOUBLE))
-                      * ((CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                        * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                       / (CAST(n1 AS DOUBLE) - 1.0) / CAST(n1 AS DOUBLE))
-                      / (CAST(n1 AS DOUBLE) - 1.0)
-                     + ((CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                       / (CAST(n2 AS DOUBLE) - 1.0) / CAST(n2 AS DOUBLE))
-                      * ((CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                        * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                       / (CAST(n2 AS DOUBLE) - 1.0) / CAST(n2 AS DOUBLE))
-                      / (CAST(n2 AS DOUBLE) - 1.0)) AS welch_df
-            FROM cells"""))
+    Some(duckTwoArmStats +
+      """
+            SELECT n1, s1, q1, n2, s2, q2, mean1, mean2, var1, var2,
+                   (mean1 - mean2) / sqrt(var1 / n1d + var2 / n2d) AS t_stat,
+                   (var1 / n1d + var2 / n2d) * (var1 / n1d + var2 / n2d)
+                   / ((var1 / n1d) * (var1 / n1d) / (n1d - 1.0)
+                     + (var2 / n2d) * (var2 / n2d) / (n2d - 1.0))
+                     AS welch_df
+            FROM derived"""))
+
+  /** m40's and m43's event types in alphabetical order, each with the
+    * suffix of its pivoted cells `n_<k>` and `s_<k>`. */
+  private val eventTypes = Seq("click" -> "cl", "error" -> "er",
+    "purchase" -> "pu", "signup" -> "si", "view" -> "vi")
+  private def dbl(c: String): Column = col(c).cast("double")
+  /** The pivoted cells: per type, its count `n(t)` and cents sum `s(t)`. */
+  private def typeCells(n: String => Column, s: String => Column): Seq[Column] =
+    eventTypes.flatMap { case (t, k) => Seq(n(t).as(s"n_$k"), s(t).as(s"s_$k")) }
+  /** Σ_g S_g²/n_g as a pinned 5-term left-assoc chain over the cells. */
+  private def typeSumSq: Column =
+    eventTypes.map { case (_, k) => dbl(s"s_$k") * dbl(s"s_$k") / dbl(s"n_$k") }
+      .reduce(_ + _)
+  private def typeN: Column = eventTypes.map { case (_, k) => col(s"n_$k") }.reduce(_ + _)
 
   /** X229 m40: ONE-WAY ANOVA F (does mean spend differ across the five
     * event types?) — the k-group generalization of m39's two-sample t.
@@ -2827,139 +2795,57 @@ object MlQueries {
     (s, dir) => {
       val ev = Tables.load(s, dir, "events")
         .withColumn("cents", round(col("value") * 100).cast("long"))
-      def ng(t: String) =
-        sum(when(col("event_type") === t, 1L).otherwise(0L))
-      def sg(t: String) =
-        sum(when(col("event_type") === t, col("cents")).otherwise(0L))
-      val cells = ev.agg(
-        ng("click").as("n_cl"), sg("click").as("s_cl"),
-        ng("error").as("n_er"), sg("error").as("s_er"),
-        ng("purchase").as("n_pu"), sg("purchase").as("s_pu"),
-        ng("signup").as("n_si"), sg("signup").as("s_si"),
-        ng("view").as("n_vi"), sg("view").as("s_vi"),
-        sum(col("cents") * col("cents")).as("q_all"))
-      def d(c: String) = col(c).cast("double")
-      // Σ_g S_g²/n_g as a pinned 5-term left-assoc chain.
-      val sumSq = d("s_cl") * d("s_cl") / d("n_cl") +
-        d("s_er") * d("s_er") / d("n_er") +
-        d("s_pu") * d("s_pu") / d("n_pu") +
-        d("s_si") * d("s_si") / d("n_si") +
-        d("s_vi") * d("s_vi") / d("n_vi")
-      val nTot = col("n_cl") + col("n_er") + col("n_pu") +
-        col("n_si") + col("n_vi")
+      val cellCols = typeCells(
+        t => sum(when(col("event_type") === t, 1L).otherwise(0L)),
+        t => sum(when(col("event_type") === t, col("cents")).otherwise(0L))) :+
+        sum(col("cents") * col("cents")).as("q_all")
+      val cells = ev.agg(cellCols.head, cellCols.tail: _*)
       val sTot = col("s_cl") + col("s_er") + col("s_pu") +
         col("s_si") + col("s_vi")
-      val ssb = sumSq -
-        sTot.cast("double") * sTot.cast("double") / nTot.cast("double")
-      val ssw = d("q_all") - sumSq
-      cells.select(
-        nTot.as("n_total"), sTot.as("sum_cents"), col("q_all"),
-        (d("s_cl") / d("n_cl")).as("mean_click"),
-        (d("s_er") / d("n_er")).as("mean_error"),
-        (d("s_pu") / d("n_pu")).as("mean_purchase"),
-        (d("s_si") / d("n_si")).as("mean_signup"),
-        (d("s_vi") / d("n_vi")).as("mean_view"),
-        ssb.as("ss_between"), ssw.as("ss_within"),
-        lit(4L).as("df1"), (nTot - lit(5L)).as("df2"),
-        ((ssb / lit(4.0))
-          / (ssw / (nTot.cast("double") - lit(5.0)))).as("f_stat"))
+      val ssb = typeSumSq -
+        sTot.cast("double") * sTot.cast("double") / typeN.cast("double")
+      val ssw = dbl("q_all") - typeSumSq
+      cells.select(Seq(typeN.as("n_total"), sTot.as("sum_cents"), col("q_all")) ++
+        eventTypes.map { case (t, k) => (dbl(s"s_$k") / dbl(s"n_$k")).as(s"mean_$t") } ++
+        Seq(ssb.as("ss_between"), ssw.as("ss_within"),
+          lit(4L).as("df1"), (typeN - lit(5L)).as("df2"),
+          ((ssb / lit(4.0))
+            / (ssw / (typeN.cast("double") - lit(5.0)))).as("f_stat")): _*)
     },
-    Some("""WITH ev AS (
+    Some {
+      def cells(k: String, t: String) = Seq(
+        s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS n_$k",
+        s"CAST(sum(CASE WHEN event_type = '$t' THEN cents ELSE 0 END) AS BIGINT) AS s_$k")
+      def chain(f: String => String) = eventTypes.map(tk => f(tk._2)).mkString(" + ")
+      s"""WITH ev AS (
               SELECT event_type,
                      CAST(round(value * 100) AS BIGINT) AS cents
               FROM events),
             cells AS (
               SELECT
-                CAST(sum(CASE WHEN event_type = 'click' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_cl,
-                CAST(sum(CASE WHEN event_type = 'click' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s_cl,
-                CAST(sum(CASE WHEN event_type = 'error' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_er,
-                CAST(sum(CASE WHEN event_type = 'error' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s_er,
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_pu,
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s_pu,
-                CAST(sum(CASE WHEN event_type = 'signup' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_si,
-                CAST(sum(CASE WHEN event_type = 'signup' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s_si,
-                CAST(sum(CASE WHEN event_type = 'view' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_vi,
-                CAST(sum(CASE WHEN event_type = 'view' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s_vi,
+                ${eventTypes.flatMap { case (t, k) => cells(k, t) }.mkString(",\n                ")},
                 CAST(sum(cents * cents) AS BIGINT) AS q_all
-              FROM ev)
-            SELECT n_cl + n_er + n_pu + n_si + n_vi AS n_total,
-                   s_cl + s_er + s_pu + s_si + s_vi AS sum_cents,
-                   q_all,
-                   CAST(s_cl AS DOUBLE) / CAST(n_cl AS DOUBLE)
-                     AS mean_click,
-                   CAST(s_er AS DOUBLE) / CAST(n_er AS DOUBLE)
-                     AS mean_error,
-                   CAST(s_pu AS DOUBLE) / CAST(n_pu AS DOUBLE)
-                     AS mean_purchase,
-                   CAST(s_si AS DOUBLE) / CAST(n_si AS DOUBLE)
-                     AS mean_signup,
-                   CAST(s_vi AS DOUBLE) / CAST(n_vi AS DOUBLE)
-                     AS mean_view,
-                   (CAST(s_cl AS DOUBLE) * CAST(s_cl AS DOUBLE)
-                      / CAST(n_cl AS DOUBLE)
-                    + CAST(s_er AS DOUBLE) * CAST(s_er AS DOUBLE)
-                      / CAST(n_er AS DOUBLE)
-                    + CAST(s_pu AS DOUBLE) * CAST(s_pu AS DOUBLE)
-                      / CAST(n_pu AS DOUBLE)
-                    + CAST(s_si AS DOUBLE) * CAST(s_si AS DOUBLE)
-                      / CAST(n_si AS DOUBLE)
-                    + CAST(s_vi AS DOUBLE) * CAST(s_vi AS DOUBLE)
-                      / CAST(n_vi AS DOUBLE))
-                   - CAST(s_cl + s_er + s_pu + s_si + s_vi AS DOUBLE)
-                     * CAST(s_cl + s_er + s_pu + s_si + s_vi AS DOUBLE)
-                     / CAST(n_cl + n_er + n_pu + n_si + n_vi AS DOUBLE)
-                     AS ss_between,
-                   CAST(q_all AS DOUBLE)
-                   - (CAST(s_cl AS DOUBLE) * CAST(s_cl AS DOUBLE)
-                      / CAST(n_cl AS DOUBLE)
-                    + CAST(s_er AS DOUBLE) * CAST(s_er AS DOUBLE)
-                      / CAST(n_er AS DOUBLE)
-                    + CAST(s_pu AS DOUBLE) * CAST(s_pu AS DOUBLE)
-                      / CAST(n_pu AS DOUBLE)
-                    + CAST(s_si AS DOUBLE) * CAST(s_si AS DOUBLE)
-                      / CAST(n_si AS DOUBLE)
-                    + CAST(s_vi AS DOUBLE) * CAST(s_vi AS DOUBLE)
-                      / CAST(n_vi AS DOUBLE)) AS ss_within,
-                   CAST(4 AS BIGINT) AS df1,
-                   n_cl + n_er + n_pu + n_si + n_vi - 5 AS df2,
-                   (((CAST(s_cl AS DOUBLE) * CAST(s_cl AS DOUBLE)
-                      / CAST(n_cl AS DOUBLE)
-                    + CAST(s_er AS DOUBLE) * CAST(s_er AS DOUBLE)
-                      / CAST(n_er AS DOUBLE)
-                    + CAST(s_pu AS DOUBLE) * CAST(s_pu AS DOUBLE)
-                      / CAST(n_pu AS DOUBLE)
-                    + CAST(s_si AS DOUBLE) * CAST(s_si AS DOUBLE)
-                      / CAST(n_si AS DOUBLE)
-                    + CAST(s_vi AS DOUBLE) * CAST(s_vi AS DOUBLE)
-                      / CAST(n_vi AS DOUBLE))
-                   - CAST(s_cl + s_er + s_pu + s_si + s_vi AS DOUBLE)
-                     * CAST(s_cl + s_er + s_pu + s_si + s_vi AS DOUBLE)
-                     / CAST(n_cl + n_er + n_pu + n_si + n_vi AS DOUBLE))
-                    / 4.0)
-                   / ((CAST(q_all AS DOUBLE)
-                   - (CAST(s_cl AS DOUBLE) * CAST(s_cl AS DOUBLE)
-                      / CAST(n_cl AS DOUBLE)
-                    + CAST(s_er AS DOUBLE) * CAST(s_er AS DOUBLE)
-                      / CAST(n_er AS DOUBLE)
-                    + CAST(s_pu AS DOUBLE) * CAST(s_pu AS DOUBLE)
-                      / CAST(n_pu AS DOUBLE)
-                    + CAST(s_si AS DOUBLE) * CAST(s_si AS DOUBLE)
-                      / CAST(n_si AS DOUBLE)
-                    + CAST(s_vi AS DOUBLE) * CAST(s_vi AS DOUBLE)
-                      / CAST(n_vi AS DOUBLE)))
-                     / (CAST(n_cl + n_er + n_pu + n_si + n_vi AS DOUBLE)
-                        - 5.0)) AS f_stat
-            FROM cells"""))
+              FROM ev),
+            derived AS (
+              SELECT *, ${chain(k => s"n_$k")} AS n_total,
+                     ${chain(k => s"s_$k")} AS sum_cents,
+                     ${chain(k => s"CAST(s_$k AS DOUBLE) * CAST(s_$k AS DOUBLE) / CAST(n_$k AS DOUBLE)")}
+                       AS sum_sq
+              FROM cells),
+            ss AS (
+              SELECT *, sum_sq - CAST(sum_cents AS DOUBLE)
+                       * CAST(sum_cents AS DOUBLE) / CAST(n_total AS DOUBLE)
+                       AS ss_between,
+                     CAST(q_all AS DOUBLE) - sum_sq AS ss_within
+              FROM derived)
+            SELECT n_total, sum_cents, q_all,
+                   ${eventTypes.map { case (t, k) => s"CAST(s_$k AS DOUBLE) / CAST(n_$k AS DOUBLE) AS mean_$t" }.mkString(",\n                   ")},
+                   ss_between, ss_within,
+                   CAST(4 AS BIGINT) AS df1, n_total - 5 AS df2,
+                   (ss_between / 4.0)
+                   / (ss_within / (CAST(n_total AS DOUBLE) - 5.0)) AS f_stat
+            FROM ss"""
+    })
 
   /** X246 m41: EFFECT SIZES (Cohen's d + Hedges' g) for the m39
     * comparison — the "is it LARGE, not just significant" number a
@@ -2973,84 +2859,29 @@ object MlQueries {
   private val m41 = Q(
     "m41_effect_sizes",
     (s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-        .filter(col("event_type").isin("purchase", "click"))
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-      val cells = ev.agg(
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n1"),
-        sum(when(col("event_type") === "purchase", col("cents"))
-          .otherwise(0L)).as("s1"),
-        sum(when(col("event_type") === "purchase",
-          col("cents") * col("cents")).otherwise(0L)).as("q1"),
-        sum(when(col("event_type") === "click", 1L).otherwise(0L))
-          .as("n2"),
-        sum(when(col("event_type") === "click", col("cents"))
-          .otherwise(0L)).as("s2"),
-        sum(when(col("event_type") === "click",
-          col("cents") * col("cents")).otherwise(0L)).as("q2"))
-      val n1d = col("n1").cast("double"); val n2d = col("n2").cast("double")
-      val v1 = (col("q1").cast("double")
-        - col("s1").cast("double") * col("s1").cast("double") / n1d) /
-        (n1d - lit(1.0))
-      val v2 = (col("q2").cast("double")
-        - col("s2").cast("double") * col("s2").cast("double") / n2d) /
-        (n2d - lit(1.0))
-      val sp = sqrt(((n1d - lit(1.0)) * v1 + (n2d - lit(1.0)) * v2)
+      val (n1d, n2d) = (armN(1), armN(2))
+      val sp = sqrt(((n1d - lit(1.0)) * armVar(1) + (n2d - lit(1.0)) * armVar(2))
         / (n1d + n2d - lit(2.0)))
       val d = (col("s1").cast("double") / n1d
         - col("s2").cast("double") / n2d) / sp
-      cells.select(col("n1"), col("n2"),
-        v1.as("var1"), v2.as("var2"), sp.as("pooled_sd"),
+      twoArmCells(s, dir).select(col("n1"), col("n2"),
+        armVar(1).as("var1"), armVar(2).as("var2"), sp.as("pooled_sd"),
         d.as("cohens_d"),
         (d * (lit(1.0) - lit(3.0)
           / (lit(4.0) * (n1d + n2d) - lit(9.0)))).as("hedges_g"))
     },
-    Some("""WITH ev AS (
-              SELECT event_type,
-                     CAST(round(value * 100) AS BIGINT) AS cents
-              FROM events WHERE event_type IN ('purchase', 'click')),
-            cells AS (
-              SELECT
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n1,
-                CAST(sum(CASE WHEN event_type = 'purchase' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s1,
-                CAST(sum(CASE WHEN event_type = 'purchase'
-                         THEN cents * cents ELSE 0 END) AS BIGINT) AS q1,
-                CAST(sum(CASE WHEN event_type = 'click' THEN 1
-                         ELSE 0 END) AS BIGINT) AS n2,
-                CAST(sum(CASE WHEN event_type = 'click' THEN cents
-                         ELSE 0 END) AS BIGINT) AS s2,
-                CAST(sum(CASE WHEN event_type = 'click'
-                         THEN cents * cents ELSE 0 END) AS BIGINT) AS q2
-              FROM ev),
-            derived AS (
-              SELECT n1, n2,
-                (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE)
-                   * CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE))
-                  / (CAST(n1 AS DOUBLE) - 1.0) AS var1,
-                (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE)
-                   * CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
-                  / (CAST(n2 AS DOUBLE) - 1.0) AS var2,
-                CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)
-                  - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) AS dmean
-              FROM cells)
-            SELECT n1, n2, var1, var2,
-                   sqrt(((CAST(n1 AS DOUBLE) - 1.0) * var1
-                       + (CAST(n2 AS DOUBLE) - 1.0) * var2)
-                     / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0))
-                     AS pooled_sd,
-                   dmean / sqrt(((CAST(n1 AS DOUBLE) - 1.0) * var1
-                       + (CAST(n2 AS DOUBLE) - 1.0) * var2)
-                     / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0))
-                     AS cohens_d,
-                   (dmean / sqrt(((CAST(n1 AS DOUBLE) - 1.0) * var1
-                       + (CAST(n2 AS DOUBLE) - 1.0) * var2)
-                     / (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE) - 2.0)))
-                   * (1.0 - 3.0 / (4.0 * (CAST(n1 AS DOUBLE)
-                       + CAST(n2 AS DOUBLE)) - 9.0)) AS hedges_g
-            FROM derived"""))
+    Some(duckTwoArmStats +
+      """,
+            pooled AS (
+              SELECT *, mean1 - mean2 AS dmean,
+                     sqrt(((n1d - 1.0) * var1 + (n2d - 1.0) * var2)
+                       / (n1d + n2d - 2.0)) AS sp
+              FROM derived)
+            SELECT n1, n2, var1, var2, sp AS pooled_sd,
+                   dmean / sp AS cohens_d,
+                   (dmean / sp) * (1.0 - 3.0 / (4.0 * (n1d + n2d) - 9.0))
+                     AS hedges_g
+            FROM pooled"""))
 
   /** X247 m42: PAIRED SIGN TEST on first-half vs second-half spend per
     * user — the distribution-free cousin of m32's Wilcoxon (signs
@@ -3145,29 +2976,16 @@ object MlQueries {
       val perType = ev.groupBy("event_type")
         .agg(count(lit(1)).as("n_g"), sum("cents").as("s_g"))
         .localCheckpoint()
-      def ng(t: String) =
-        sum(when(col("event_type") === t, col("n_g")).otherwise(0L))
-      def sg(t: String) =
-        sum(when(col("event_type") === t, col("s_g")).otherwise(0L))
       val qAll = ev.agg(sum(col("cents") * col("cents")).as("q_all"))
+      val cellCols = typeCells(
+        t => sum(when(col("event_type") === t, col("n_g")).otherwise(0L)),
+        t => sum(when(col("event_type") === t, col("s_g")).otherwise(0L))) :+
+        min("q_all").as("q_all")
       val pooledRow = perType.crossJoin(broadcast(qAll))
         .groupBy()
-        .agg(ng("click").as("n_cl"), sg("click").as("s_cl"),
-          ng("error").as("n_er"), sg("error").as("s_er"),
-          ng("purchase").as("n_pu"), sg("purchase").as("s_pu"),
-          ng("signup").as("n_si"), sg("signup").as("s_si"),
-          ng("view").as("n_vi"), sg("view").as("s_vi"),
-          min("q_all").as("q_all"))
-      def d(c: String) = col(c).cast("double")
-      val sumSq = d("s_cl") * d("s_cl") / d("n_cl") +
-        d("s_er") * d("s_er") / d("n_er") +
-        d("s_pu") * d("s_pu") / d("n_pu") +
-        d("s_si") * d("s_si") / d("n_si") +
-        d("s_vi") * d("s_vi") / d("n_vi")
-      val nTot = col("n_cl") + col("n_er") + col("n_pu") +
-        col("n_si") + col("n_vi")
+        .agg(cellCols.head, cellCols.tail: _*)
       val pooled = pooledRow.select(
-        ((d("q_all") - sumSq) / (nTot.cast("double") - lit(5.0)))
+        ((dbl("q_all") - typeSumSq) / (typeN.cast("double") - lit(5.0)))
           .as("sp2"))
       val a = perType.select(col("event_type").as("type_a"),
         col("n_g").as("n_a"), col("s_g").as("s_a"))
@@ -3183,7 +3001,7 @@ object MlQueries {
             + lit(1.0) / col("n_b").cast("double"))).as("se_diff"))
         .orderBy("type_a", "type_b")
     },
-    Some("""WITH ev AS (
+    Some(s"""WITH ev AS (
               SELECT event_type,
                      CAST(round(value * 100) AS BIGINT) AS cents
               FROM events),
@@ -3193,36 +3011,11 @@ object MlQueries {
               FROM ev GROUP BY event_type),
             pooled AS (
               SELECT ((SELECT CAST(sum(cents * cents) AS DOUBLE) FROM ev)
-                  - (CAST(max(CASE WHEN event_type = 'click' THEN s_g END)
-                       AS DOUBLE)
-                     * CAST(max(CASE WHEN event_type = 'click' THEN s_g
-                         END) AS DOUBLE)
-                     / CAST(max(CASE WHEN event_type = 'click' THEN n_g
-                         END) AS DOUBLE)
-                   + CAST(max(CASE WHEN event_type = 'error' THEN s_g END)
-                       AS DOUBLE)
-                     * CAST(max(CASE WHEN event_type = 'error' THEN s_g
-                         END) AS DOUBLE)
-                     / CAST(max(CASE WHEN event_type = 'error' THEN n_g
-                         END) AS DOUBLE)
-                   + CAST(max(CASE WHEN event_type = 'purchase' THEN s_g
-                         END) AS DOUBLE)
-                     * CAST(max(CASE WHEN event_type = 'purchase' THEN s_g
-                         END) AS DOUBLE)
-                     / CAST(max(CASE WHEN event_type = 'purchase' THEN n_g
-                         END) AS DOUBLE)
-                   + CAST(max(CASE WHEN event_type = 'signup' THEN s_g
-                         END) AS DOUBLE)
-                     * CAST(max(CASE WHEN event_type = 'signup' THEN s_g
-                         END) AS DOUBLE)
-                     / CAST(max(CASE WHEN event_type = 'signup' THEN n_g
-                         END) AS DOUBLE)
-                   + CAST(max(CASE WHEN event_type = 'view' THEN s_g END)
-                       AS DOUBLE)
-                     * CAST(max(CASE WHEN event_type = 'view' THEN s_g
-                         END) AS DOUBLE)
-                     / CAST(max(CASE WHEN event_type = 'view' THEN n_g
-                         END) AS DOUBLE)))
+                  - (${eventTypes.map { case (t, _) =>
+                      def cell(c: String) =
+                        s"CAST(max(CASE WHEN event_type = '$t' THEN $c END) AS DOUBLE)"
+                      s"${cell("s_g")} * ${cell("s_g")} / ${cell("n_g")}"
+                    }.mkString("\n                   + ")}))
                 / (CAST(sum(n_g) AS DOUBLE) - 5.0) AS sp2
               FROM per_type)
             SELECT a.event_type AS type_a, b.event_type AS type_b,
@@ -3322,115 +3115,7 @@ object MlQueries {
     * step aggregates #groups rows — at 100 TB that is the number of
     * locations, not the number of observations.
     */
-  private val m2b = Q(
-    "m2b_em_mixed_effects",
-    (s, dir) => {
-      val grp = Tables.load(s, dir, "lineitem")
-        .groupBy(col("l_suppkey").as("g"))
-        .agg(count(lit(1)).cast("double").as("n"),
-          (sum(col("l_extendedprice") / 1000.0) / count(lit(1)))
-            .as("ybar"),
-          (sum(col("l_extendedprice") * col("l_extendedprice")
-            / 1000000.0)
-            - sum(col("l_extendedprice") / 1000.0)
-              * sum(col("l_extendedprice") / 1000.0) / count(lit(1)))
-            .as("ssw"))
-        .persist()
-      val t = grp.agg(count(lit(1)).cast("double").as("m"),
-        sum("n").as("nn"),
-        (sum(col("n") * col("ybar")) / sum("n")).as("mu0"),
-        sum("ssw").as("sswTot")).first()
-      val (m, nn, sswTot) =
-        (t.getAs[Double]("m"), t.getAs[Double]("nn"),
-          t.getAs[Double]("sswTot"))
-      var mu = t.getAs[Double]("mu0")
-      var tau = grp.agg(sum((col("ybar") - mu) * (col("ybar") - mu)))
-        .first().getDouble(0) / m
-      var sig = sswTot / nn
-      (1 to 5).foreach { _ =>
-        def bhat = (col("n") * tau * (col("ybar") - mu)
-          / (lit(sig) + col("n") * tau))
-        def vpost = (lit(tau) * sig / (lit(sig) + col("n") * tau))
-        val mu2 = grp.agg(sum(col("n") * (col("ybar") - bhat)) / nn)
-          .first().getDouble(0)
-        val r2 = grp.agg(
-          (sum(bhat * bhat + vpost) / m).as("tau2"),
-          ((sum(col("n") * ((col("ybar") - mu2 - bhat)
-            * (col("ybar") - mu2 - bhat) + vpost)) + sswTot) / nn)
-            .as("sig2")).first()
-        mu = mu2
-        tau = r2.getAs[Double]("tau2")
-        sig = r2.getAs[Double]("sig2")
-      }
-      val out = grp
-        .select(col("g").as("l_suppkey"),
-          round(lit(mu) + col("n") * tau * (col("ybar") - mu)
-            / (lit(sig) + col("n") * tau), 4).as("blup_intercept"),
-          round(col("n") * tau / (lit(sig) + col("n") * tau), 4)
-            .as("shrink_w"),
-          round(lit(mu), 4).as("mu"),
-          round(lit(tau), 6).as("tau2"),
-          round(lit(sig), 6).as("sigma2"))
-        .orderBy("l_suppkey")
-      grp.unpersist()
-      out
-    },
-    Some("""WITH RECURSIVE grp AS (
-              SELECT l_suppkey AS g, CAST(count(*) AS DOUBLE) AS n,
-                     sum(l_extendedprice / 1000.0) / count(*) AS ybar,
-                     sum(l_extendedprice * l_extendedprice / 1000000.0)
-                       - sum(l_extendedprice / 1000.0)
-                         * sum(l_extendedprice / 1000.0) / count(*)
-                       AS ssw
-              FROM lineitem GROUP BY 1),
-            tot AS (
-              SELECT CAST(count(*) AS DOUBLE) AS m, sum(n) AS nn,
-                     sum(n * ybar) / sum(n) AS mu0,
-                     sum(ssw) AS ssw_tot
-              FROM grp),
-            init AS (
-              SELECT 0 AS k, mu0 AS mu,
-                     (SELECT sum((ybar - t.mu0) * (ybar - t.mu0))
-                        FROM grp) / m AS tau,
-                     ssw_tot / nn AS sig
-              FROM tot t),
-            em(k, mu, tau, sig) AS (
-              SELECT k, mu, tau, sig FROM init
-              UNION ALL
-              SELECT e.k + 1, s2.mu2, s2.tau2, s2.sig2
-              FROM em e,
-              LATERAL (
-                SELECT sum(n * (ybar
-                         - n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau)))
-                         / (SELECT nn FROM tot) AS mu2
-                FROM grp) s1,
-              LATERAL (
-                SELECT s1.mu2 AS mu2,
-                       sum((n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau))
-                           * (n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau))
-                           + e.tau * e.sig / (e.sig + n * e.tau))
-                         / (SELECT m FROM tot) AS tau2,
-                       ((SELECT ssw_tot FROM tot)
-                        + sum(n * ((ybar - s1.mu2
-                                    - n * e.tau * (ybar - e.mu)
-                                      / (e.sig + n * e.tau))
-                                   * (ybar - s1.mu2
-                                      - n * e.tau * (ybar - e.mu)
-                                        / (e.sig + n * e.tau))
-                                   + e.tau * e.sig / (e.sig + n * e.tau))))
-                         / (SELECT nn FROM tot) AS sig2
-                FROM grp) s2
-              WHERE e.k < 5),
-            fin AS (SELECT mu, tau, sig FROM em WHERE k = 5)
-            SELECT g AS l_suppkey,
-                   round(f.mu + n * f.tau * (ybar - f.mu)
-                     / (f.sig + n * f.tau), 4) AS blup_intercept,
-                   round(n * f.tau / (f.sig + n * f.tau), 4) AS shrink_w,
-                   round(f.mu, 4) AS mu,
-                   round(f.tau, 6) AS tau2,
-                   round(f.sig, 6) AS sigma2
-            FROM grp CROSS JOIN fin f
-            ORDER BY l_suppkey"""))
+  private val m2b = emMixedEffects("m2b_em_mixed_effects", reml = false)
 
   /** X290 m2c: REML EM variance components — closes the documented m2b
     * delta to statsmodels MixedLM's DEFAULT fit (covid_simulator.py:459
@@ -3450,8 +3135,16 @@ object MlQueries {
     * proven tolerance). Scale: per-iteration work is TWO aggregates
     * over the group-cardinality stats frame; driver holds 4 scalars.
     */
-  private val m2c = Q(
-    "m2c_reml_mixed_effects",
+  private val m2c = emMixedEffects("m2c_reml_mixed_effects", reml = true)
+
+  /** m2b's and m2c's random-intercept EM on per-supplier sufficient
+    * statistics (n, ȳ, within-group SS): the pooled start, five EM
+    * iterations, then the BLUP select. `reml` takes m2c's steps (GLS
+    * mean, its variance C carried into both M-steps, `var_mu` output);
+    * otherwise m2b's ML steps. The oracle replays the same scalar chain
+    * as a recursive CTE. */
+  private def emMixedEffects(name: String, reml: Boolean): Q = Q(
+    name,
     (s, dir) => {
       val grp = Tables.load(s, dir, "lineitem")
         .groupBy(col("l_suppkey").as("g"))
@@ -3477,66 +3170,62 @@ object MlQueries {
       var sig = sswTot / nn
       var c = 0.0
       (1 to 5).foreach { _ =>
-        // pass A: GLS mean + its variance under the current (τ², σ²)
-        val s1 = grp.agg(
-          (sum(col("n") * col("ybar") / (lit(sig) + col("n") * tau))
-            / sum(col("n") / (lit(sig) + col("n") * tau))).as("mu2"),
-          (lit(1.0) / sum(col("n") / (lit(sig) + col("n") * tau)))
-            .as("c2")).first()
-        val mu2 = s1.getAs[Double]("mu2")
-        val c2 = s1.getAs[Double]("c2")
-        // pass B: M-steps with the REML traces d²C and n(1−d)²C
-        def d = (col("n") * tau / (lit(sig) + col("n") * tau))
-        def bhat = (d * (col("ybar") - mu2))
-        def vpost = (lit(tau) * sig / (lit(sig) + col("n") * tau))
-        val r2 = grp.agg(
-          (sum(bhat * bhat + vpost + d * d * c2) / m).as("tau2"),
-          ((sum(col("n") * ((col("ybar") - mu2 - bhat)
-            * (col("ybar") - mu2 - bhat) + vpost
-            + (lit(1.0) - d) * (lit(1.0) - d) * c2)) + sswTot) / nn)
-            .as("sig2")).first()
-        mu = mu2; c = c2
-        tau = r2.getAs[Double]("tau2")
-        sig = r2.getAs[Double]("sig2")
+        if (reml) {
+          // pass A: GLS mean + its variance under the current (τ², σ²)
+          val s1 = grp.agg(
+            (sum(col("n") * col("ybar") / (lit(sig) + col("n") * tau))
+              / sum(col("n") / (lit(sig) + col("n") * tau))).as("mu2"),
+            (lit(1.0) / sum(col("n") / (lit(sig) + col("n") * tau)))
+              .as("c2")).first()
+          val mu2 = s1.getAs[Double]("mu2")
+          val c2 = s1.getAs[Double]("c2")
+          // pass B: M-steps with the REML traces d²C and n(1−d)²C
+          def d = (col("n") * tau / (lit(sig) + col("n") * tau))
+          def bhat = (d * (col("ybar") - mu2))
+          def vpost = (lit(tau) * sig / (lit(sig) + col("n") * tau))
+          val r2 = grp.agg(
+            (sum(bhat * bhat + vpost + d * d * c2) / m).as("tau2"),
+            ((sum(col("n") * ((col("ybar") - mu2 - bhat)
+              * (col("ybar") - mu2 - bhat) + vpost
+              + (lit(1.0) - d) * (lit(1.0) - d) * c2)) + sswTot) / nn)
+              .as("sig2")).first()
+          mu = mu2; c = c2
+          tau = r2.getAs[Double]("tau2")
+          sig = r2.getAs[Double]("sig2")
+        } else {
+          def bhat = (col("n") * tau * (col("ybar") - mu)
+            / (lit(sig) + col("n") * tau))
+          def vpost = (lit(tau) * sig / (lit(sig) + col("n") * tau))
+          val mu2 = grp.agg(sum(col("n") * (col("ybar") - bhat)) / nn)
+            .first().getDouble(0)
+          val r2 = grp.agg(
+            (sum(bhat * bhat + vpost) / m).as("tau2"),
+            ((sum(col("n") * ((col("ybar") - mu2 - bhat)
+              * (col("ybar") - mu2 - bhat) + vpost)) + sswTot) / nn)
+              .as("sig2")).first()
+          mu = mu2
+          tau = r2.getAs[Double]("tau2")
+          sig = r2.getAs[Double]("sig2")
+        }
       }
       val out = grp
-        .select(col("g").as("l_suppkey"),
+        .select(Seq(col("g").as("l_suppkey"),
           round(lit(mu) + col("n") * tau * (col("ybar") - mu)
             / (lit(sig) + col("n") * tau), 4).as("blup_intercept"),
           round(col("n") * tau / (lit(sig) + col("n") * tau), 4)
             .as("shrink_w"),
           round(lit(mu), 4).as("mu"),
           round(lit(tau), 6).as("tau2"),
-          round(lit(sig), 6).as("sigma2"),
-          round(lit(c), 8).as("var_mu"))
+          round(lit(sig), 6).as("sigma2")) ++
+          (if (reml) Seq(round(lit(c), 8).as("var_mu")) else Nil): _*)
         .orderBy("l_suppkey")
       grp.unpersist()
       out
     },
-    Some("""WITH RECURSIVE grp AS (
-              SELECT l_suppkey AS g, CAST(count(*) AS DOUBLE) AS n,
-                     sum(l_extendedprice / 1000.0) / count(*) AS ybar,
-                     sum(l_extendedprice * l_extendedprice / 1000000.0)
-                       - sum(l_extendedprice / 1000.0)
-                         * sum(l_extendedprice / 1000.0) / count(*)
-                       AS ssw
-              FROM lineitem GROUP BY 1),
-            tot AS (
-              SELECT CAST(count(*) AS DOUBLE) AS m, sum(n) AS nn,
-                     sum(n * ybar) / sum(n) AS mu0,
-                     sum(ssw) AS ssw_tot
-              FROM grp),
-            init AS (
-              SELECT 0 AS k, mu0 AS mu,
-                     (SELECT sum((ybar - t.mu0) * (ybar - t.mu0))
-                        FROM grp) / m AS tau,
-                     ssw_tot / nn AS sig,
-                     CAST(0.0 AS DOUBLE) AS c
-              FROM tot t),
-            em(k, mu, tau, sig, c) AS (
-              SELECT k, mu, tau, sig, c FROM init
-              UNION ALL
-              SELECT e.k + 1, s1.mu2, s2.tau2, s2.sig2, s1.c2
+    Some {
+      val c = if (reml) ", c" else ""
+      val step =
+        if (reml) """SELECT e.k + 1, s1.mu2, s2.tau2, s2.sig2, s1.c2
               FROM em e,
               LATERAL (
                 SELECT sum(n * ybar / (e.sig + n * e.tau))
@@ -3567,19 +3256,134 @@ object MlQueries {
                                         - n * e.tau / (e.sig + n * e.tau))
                                      * s1.c2)))
                          / (SELECT nn FROM tot) AS sig2
-                FROM grp) s2
+                FROM grp) s2"""
+        else """SELECT e.k + 1, s2.mu2, s2.tau2, s2.sig2
+              FROM em e,
+              LATERAL (
+                SELECT sum(n * (ybar
+                         - n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau)))
+                         / (SELECT nn FROM tot) AS mu2
+                FROM grp) s1,
+              LATERAL (
+                SELECT s1.mu2 AS mu2,
+                       sum((n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau))
+                           * (n * e.tau * (ybar - e.mu) / (e.sig + n * e.tau))
+                           + e.tau * e.sig / (e.sig + n * e.tau))
+                         / (SELECT m FROM tot) AS tau2,
+                       ((SELECT ssw_tot FROM tot)
+                        + sum(n * ((ybar - s1.mu2
+                                    - n * e.tau * (ybar - e.mu)
+                                      / (e.sig + n * e.tau))
+                                   * (ybar - s1.mu2
+                                      - n * e.tau * (ybar - e.mu)
+                                        / (e.sig + n * e.tau))
+                                   + e.tau * e.sig / (e.sig + n * e.tau))))
+                         / (SELECT nn FROM tot) AS sig2
+                FROM grp) s2"""
+      s"""WITH RECURSIVE grp AS (
+              SELECT l_suppkey AS g, CAST(count(*) AS DOUBLE) AS n,
+                     sum(l_extendedprice / 1000.0) / count(*) AS ybar,
+                     sum(l_extendedprice * l_extendedprice / 1000000.0)
+                       - sum(l_extendedprice / 1000.0)
+                         * sum(l_extendedprice / 1000.0) / count(*)
+                       AS ssw
+              FROM lineitem GROUP BY 1),
+            tot AS (
+              SELECT CAST(count(*) AS DOUBLE) AS m, sum(n) AS nn,
+                     sum(n * ybar) / sum(n) AS mu0,
+                     sum(ssw) AS ssw_tot
+              FROM grp),
+            init AS (
+              SELECT 0 AS k, mu0 AS mu,
+                     (SELECT sum((ybar - t.mu0) * (ybar - t.mu0))
+                        FROM grp) / m AS tau,
+                     ssw_tot / nn AS sig${if (reml) ",\n CAST(0.0 AS DOUBLE) AS c" else ""}
+              FROM tot t),
+            em(k, mu, tau, sig$c) AS (
+              SELECT k, mu, tau, sig$c FROM init
+              UNION ALL
+              $step
               WHERE e.k < 5),
-            fin AS (SELECT mu, tau, sig, c FROM em WHERE k = 5)
+            fin AS (SELECT mu, tau, sig$c FROM em WHERE k = 5)
             SELECT g AS l_suppkey,
                    round(f.mu + n * f.tau * (ybar - f.mu)
                      / (f.sig + n * f.tau), 4) AS blup_intercept,
                    round(n * f.tau / (f.sig + n * f.tau), 4) AS shrink_w,
                    round(f.mu, 4) AS mu,
                    round(f.tau, 6) AS tau2,
-                   round(f.sig, 6) AS sigma2,
-                   round(f.c, 8) AS var_mu
+                   round(f.sig, 6) AS sigma2${if (reml) ",\n round(f.c, 8) AS var_mu" else ""}
             FROM grp CROSS JOIN fin f
-            ORDER BY l_suppkey"""))
+            ORDER BY l_suppkey"""
+    })
+
+  /** m5b/m5c's LSTM weights per (unit j, gate k), order (a, b, c, d) of
+    * the pre-activation ((a·x + b·h1) + c·h2) + d: eighths from
+    * (j·31 + k·17), exact doubles whose literals the oracle prints. */
+  private def lstmW(j: Int, gi: Int): (Double, Double, Double, Double) = {
+    val base = j * 31 + gi * 17
+    (((base * 7) % 9 - 4) / 8.0, ((base * 11) % 9 - 4) / 8.0,
+      ((base * 13) % 9 - 4) / 8.0, ((base * 5) % 9 - 4) / 8.0)
+  }
+  private def lstmSig(z: Double) = 1.0 / (1.0 + math.exp(-z))
+  private def lstmTanh(z: Double) = { val e = math.exp(2 * z); (e - 1) / (e + 1) }
+
+  /** Each supplier's first 8 quantities / 50 in (orderkey, linenumber,
+    * quantity) order, folded by `f` — the input of m5b and m5c. */
+  private def lstmSeries[T: Encoder](s: SparkSession, dir: String)(
+      f: (Long, Array[Double]) => T): Dataset[T] = {
+    import s.implicits._
+    Tables.load(s, dir, "lineitem")
+      .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
+        col("l_quantity"))
+      .as[(Long, Long, Int, Double)]
+      .groupByKey(_._1)
+      .mapGroups { (supp, it) =>
+        f(supp, it.toArray.sortBy(t => (t._2, t._3, t._4))
+          .take(8).map(_._4 / 50.0))
+      }
+  }
+
+  /** The oracle's LATERAL gate row `gt` (i1, f1, g1, o1, i2, f2, g2, o2)
+    * over input `x.x` and the state `<p>.h1`/`<p>.h2`, sigmoid and tanh
+    * spelled via exp() in [[lstmSig]]/[[lstmTanh]]'s op order. */
+  private def duckLstmGates(p: String): String = {
+    def z(j: Int, gi: Int) = {
+      val (a, b, c, d) = lstmW(j, gi)
+      s"((($a * x.x + $b * $p.h1) + $c * $p.h2) + $d)"
+    }
+    val gates = for (j <- 1 to 2; (g, gi) <- Seq("i", "f", "g", "o").zipWithIndex)
+      yield if (g == "g") s"(exp(2 * ${z(j, gi)}) - 1) / (exp(2 * ${z(j, gi)}) + 1) AS g$j"
+      else s"1 / (1 + exp(-${z(j, gi)})) AS $g$j"
+    gates.mkString("LATERAL (\n SELECT ", ",\n ", ") gt")
+  }
+
+  /** The oracle's supplier `series` and its forward recursion `lstm(g, t,
+    * h1, h2, c1, c2)` over 8 steps, shared by m5b and m5c. */
+  private lazy val duckLstmForward: String =
+    s"""WITH RECURSIVE series AS (
+              SELECT l_suppkey AS g, rn, l_quantity / 50.0 AS x
+              FROM (SELECT l_suppkey, l_quantity,
+                           row_number() OVER (PARTITION BY l_suppkey
+                             ORDER BY l_orderkey, l_linenumber,
+                                      l_quantity) AS rn
+                    FROM lineitem)
+              WHERE rn <= 8),
+            lstm(g, t, h1, h2, c1, c2) AS (
+              SELECT g, 0, CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
+                     CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)
+              FROM (SELECT DISTINCT g FROM series)
+              UNION ALL
+              SELECT s.g, s.t + 1,
+                     gt.o1 * ((exp(2 * cn.c1n) - 1) / (exp(2 * cn.c1n) + 1)),
+                     gt.o2 * ((exp(2 * cn.c2n) - 1) / (exp(2 * cn.c2n) + 1)),
+                     cn.c1n, cn.c2n
+              FROM lstm s
+              JOIN series x ON x.g = s.g AND x.rn = s.t + 1,
+              ${duckLstmGates("s")},
+              LATERAL (
+                SELECT (gt.f1 * s.c1) + (gt.i1 * gt.g1) AS c1n,
+                       (gt.f2 * s.c2) + (gt.i2 * gt.g2) AS c2n) cn
+              WHERE s.t < 8)"""
 
   /** X284 m5b: REAL LSTM CELL forward pass — the semantics half of the
     * M5 gap (weather_pred.py:108-116,283-384 trains a Keras LSTM; m5
@@ -3602,38 +3406,20 @@ object MlQueries {
     "m5b_lstm_forward",
     (s, dir) => {
       import s.implicits._
-      // per (unit j, gate k): pre-activation = ((a·x + b·h1) + c·h2) + d
-      // weights in eighths from (j·31 + k·17) — same table in the oracle
-      def w(j: Int, gi: Int): (Double, Double, Double, Double) = {
-        val base = j * 31 + gi * 17
-        (((base * 7) % 9 - 4) / 8.0, ((base * 11) % 9 - 4) / 8.0,
-          ((base * 13) % 9 - 4) / 8.0, ((base * 5) % 9 - 4) / 8.0)
-      }
-      def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
-      def tnh(z: Double) = {
-        val e = math.exp(2 * z); (e - 1) / (e + 1)
-      }
-      Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"))
-        .as[(Long, Long, Int, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (supp, it) =>
-          val xs = it.toArray.sortBy(t => (t._2, t._3, t._4))
-            .take(8).map(_._4 / 50.0)
+      lstmSeries(s, dir) { (supp, xs) =>
           var h1 = 0.0; var h2 = 0.0; var c1 = 0.0; var c2 = 0.0
           xs.foreach { x =>
             def gate(j: Int, gi: Int, hA: Double, hB: Double): Double = {
-              val (a, b, c, d) = w(j, gi)
+              val (a, b, c, d) = lstmW(j, gi)
               ((a * x + b * hA) + c * hB) + d
             }
-            val i1 = sig(gate(1, 0, h1, h2)); val f1 = sig(gate(1, 1, h1, h2))
-            val g1 = tnh(gate(1, 2, h1, h2)); val o1 = sig(gate(1, 3, h1, h2))
-            val i2 = sig(gate(2, 0, h1, h2)); val f2 = sig(gate(2, 1, h1, h2))
-            val g2 = tnh(gate(2, 2, h1, h2)); val o2 = sig(gate(2, 3, h1, h2))
+            val i1 = lstmSig(gate(1, 0, h1, h2)); val f1 = lstmSig(gate(1, 1, h1, h2))
+            val g1 = lstmTanh(gate(1, 2, h1, h2)); val o1 = lstmSig(gate(1, 3, h1, h2))
+            val i2 = lstmSig(gate(2, 0, h1, h2)); val f2 = lstmSig(gate(2, 1, h1, h2))
+            val g2 = lstmTanh(gate(2, 2, h1, h2)); val o2 = lstmSig(gate(2, 3, h1, h2))
             val c1n = (f1 * c1) + (i1 * g1)
             val c2n = (f2 * c2) + (i2 * g2)
-            h1 = o1 * tnh(c1n); h2 = o2 * tnh(c2n)
+            h1 = o1 * lstmTanh(c1n); h2 = o2 * lstmTanh(c2n)
             c1 = c1n; c2 = c2n
           }
           (supp, 0.1 + 0.7 * h1 + -0.4 * h2, h1, h2)
@@ -3643,50 +3429,8 @@ object MlQueries {
           round(col("rh1"), 6).as("h1"), round(col("rh2"), 6).as("h2"))
         .orderBy("l_suppkey")
     },
-    Some("""WITH RECURSIVE series AS (
-              SELECT l_suppkey AS g, rn, l_quantity / 50.0 AS x
-              FROM (SELECT l_suppkey, l_quantity,
-                           row_number() OVER (PARTITION BY l_suppkey
-                             ORDER BY l_orderkey, l_linenumber,
-                                      l_quantity) AS rn
-                    FROM lineitem)
-              WHERE rn <= 8),
-            lstm(g, t, h1, h2, c1, c2) AS (
-              SELECT g, 0, CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-                     CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)
-              FROM (SELECT DISTINCT g FROM series)
-              UNION ALL
-              SELECT s.g, s.t + 1,
-                     gt.o1 * ((exp(2 * cn.c1n) - 1) / (exp(2 * cn.c1n) + 1)),
-                     gt.o2 * ((exp(2 * cn.c2n) - 1) / (exp(2 * cn.c2n) + 1)),
-                     cn.c1n, cn.c2n
-              FROM lstm s
-              JOIN series x ON x.g = s.g AND x.rn = s.t + 1,
-              LATERAL (
-                SELECT 1 / (1 + exp(-(((-0.375 * x.x + 0.5 * s.h1)
-                         + 0.375 * s.h2) + -0.25))) AS i1,
-                       1 / (1 + exp(-(((-0.125 * x.x + 0.25 * s.h1)
-                         + -0.125 * s.h2) + 0.25))) AS f1,
-                       (exp(2 * (((0.125 * x.x + 0.0 * s.h1)
-                          + 0.5 * s.h2) + -0.375)) - 1)
-                         / (exp(2 * (((0.125 * x.x + 0.0 * s.h1)
-                            + 0.5 * s.h2) + -0.375)) + 1) AS g1,
-                       1 / (1 + exp(-(((0.375 * x.x + -0.25 * s.h1)
-                         + 0.0 * s.h2) + 0.125))) AS o1,
-                       1 / (1 + exp(-(((-0.25 * x.x + 0.375 * s.h1)
-                         + 0.125 * s.h2) + 0.0))) AS i2,
-                       1 / (1 + exp(-(((0.0 * x.x + 0.125 * s.h1)
-                         + -0.375 * s.h2) + 0.5))) AS f2,
-                       (exp(2 * (((0.25 * x.x + -0.125 * s.h1)
-                          + 0.25 * s.h2) + -0.125)) - 1)
-                         / (exp(2 * (((0.25 * x.x + -0.125 * s.h1)
-                            + 0.25 * s.h2) + -0.125)) + 1) AS g2,
-                       1 / (1 + exp(-(((0.5 * x.x + -0.375 * s.h1)
-                         + -0.25 * s.h2) + 0.375))) AS o2) gt,
-              LATERAL (
-                SELECT (gt.f1 * s.c1) + (gt.i1 * gt.g1) AS c1n,
-                       (gt.f2 * s.c2) + (gt.i2 * gt.g2) AS c2n) cn
-              WHERE s.t < 8),
+    Some(duckLstmForward +
+      """,
             fin AS (
               SELECT g, h1, h2,
                      row_number() OVER (PARTITION BY g ORDER BY t DESC)
@@ -3726,26 +3470,12 @@ object MlQueries {
     "m5c_lstm_bptt",
     (s, dir) => {
       import s.implicits._
-      def w(j: Int, gi: Int): (Double, Double, Double, Double) = {
-        val base = j * 31 + gi * 17
-        (((base * 7) % 9 - 4) / 8.0, ((base * 11) % 9 - 4) / 8.0,
-          ((base * 13) % 9 - 4) / 8.0, ((base * 5) % 9 - 4) / 8.0)
-      }
-      def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
-      def tnh(z: Double) = { val e = math.exp(2 * z); (e - 1) / (e + 1) }
       // recurrent (b) and h2 (c) weights per gate, order i,f,g,o
-      val bw1 = Array(w(1, 0)._2, w(1, 1)._2, w(1, 2)._2, w(1, 3)._2)
-      val cw1 = Array(w(1, 0)._3, w(1, 1)._3, w(1, 2)._3, w(1, 3)._3)
-      val bw2 = Array(w(2, 0)._2, w(2, 1)._2, w(2, 2)._2, w(2, 3)._2)
-      val cw2 = Array(w(2, 0)._3, w(2, 1)._3, w(2, 2)._3, w(2, 3)._3)
-      Tables.load(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity"))
-        .as[(Long, Long, Int, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (supp, it) =>
-          val xs = it.toArray.sortBy(t => (t._2, t._3, t._4))
-            .take(8).map(_._4 / 50.0)
+      val bw1 = Array(lstmW(1, 0)._2, lstmW(1, 1)._2, lstmW(1, 2)._2, lstmW(1, 3)._2)
+      val cw1 = Array(lstmW(1, 0)._3, lstmW(1, 1)._3, lstmW(1, 2)._3, lstmW(1, 3)._3)
+      val bw2 = Array(lstmW(2, 0)._2, lstmW(2, 1)._2, lstmW(2, 2)._2, lstmW(2, 3)._2)
+      val cw2 = Array(lstmW(2, 0)._3, lstmW(2, 1)._3, lstmW(2, 2)._3, lstmW(2, 3)._3)
+      lstmSeries(s, dir) { (supp, xs) =>
           val tM = xs.length
           // forward, storing per-step states (1-indexed; slot 0 = init)
           val h1 = new Array[Double](tM + 1); val h2 = new Array[Double](tM + 1)
@@ -3758,16 +3488,16 @@ object MlQueries {
           while (t <= tM) {
             val x = xs(t - 1)
             def gate(j: Int, gi: Int): Double = {
-              val (a, b, c, d) = w(j, gi)
+              val (a, b, c, d) = lstmW(j, gi)
               ((a * x + b * h1(t - 1)) + c * h2(t - 1)) + d
             }
-            gi1(t) = sig(gate(1, 0)); gf1(t) = sig(gate(1, 1))
-            gg1(t) = tnh(gate(1, 2)); go1(t) = sig(gate(1, 3))
-            gi2(t) = sig(gate(2, 0)); gf2(t) = sig(gate(2, 1))
-            gg2(t) = tnh(gate(2, 2)); go2(t) = sig(gate(2, 3))
+            gi1(t) = lstmSig(gate(1, 0)); gf1(t) = lstmSig(gate(1, 1))
+            gg1(t) = lstmTanh(gate(1, 2)); go1(t) = lstmSig(gate(1, 3))
+            gi2(t) = lstmSig(gate(2, 0)); gf2(t) = lstmSig(gate(2, 1))
+            gg2(t) = lstmTanh(gate(2, 2)); go2(t) = lstmSig(gate(2, 3))
             c1(t) = (gf1(t) * c1(t - 1)) + (gi1(t) * gg1(t))
             c2(t) = (gf2(t) * c2(t - 1)) + (gi2(t) * gg2(t))
-            h1(t) = go1(t) * tnh(c1(t)); h2(t) = go2(t) * tnh(c2(t))
+            h1(t) = go1(t) * lstmTanh(c1(t)); h2(t) = go2(t) * lstmTanh(c2(t))
             t += 1
           }
           val loss = (h1(tM) - 0.25) * (h1(tM) - 0.25) +
@@ -3779,7 +3509,7 @@ object MlQueries {
           var gaG1 = 0.0; var gdG1 = 0.0; var gaO1 = 0.0; var gdO1 = 0.0
           t = tM
           while (t >= 1) {
-            val tc1 = tnh(c1(t)); val tc2 = tnh(c2(t))
+            val tc1 = lstmTanh(c1(t)); val tc2 = lstmTanh(c2(t))
             val dzO1 = (dh1 * tc1) * (go1(t) * (1 - go1(t)))
             dc1 = dc1 + (dh1 * go1(t)) * (1 - tc1 * tc1)
             val dzI1 = (dc1 * gg1(t)) * (gi1(t) * (1 - gi1(t)))
@@ -3805,7 +3535,7 @@ object MlQueries {
             t -= 1
           }
           (supp, loss, gaI1, gdI1, gaF1, gdF1, gaG1, gdG1, gaO1, gdO1,
-            w(1, 0)._1 - gaI1 / 16.0)
+            lstmW(1, 0)._1 - gaI1 / 16.0)
         }
         .toDF("l_suppkey", "loss", "ga_i1", "gd_i1", "ga_f1", "gd_f1",
           "ga_g1", "gd_g1", "ga_o1", "gd_o1", "a_i1_step")
@@ -3814,50 +3544,8 @@ object MlQueries {
           .map(c => round(col(c), 6).as(c)): _*)
         .orderBy("l_suppkey")
     },
-    Some("""WITH RECURSIVE series AS (
-              SELECT l_suppkey AS g, rn, l_quantity / 50.0 AS x
-              FROM (SELECT l_suppkey, l_quantity,
-                           row_number() OVER (PARTITION BY l_suppkey
-                             ORDER BY l_orderkey, l_linenumber,
-                                      l_quantity) AS rn
-                    FROM lineitem)
-              WHERE rn <= 8),
-            lstm(g, t, h1, h2, c1, c2) AS (
-              SELECT g, 0, CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-                     CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)
-              FROM (SELECT DISTINCT g FROM series)
-              UNION ALL
-              SELECT s.g, s.t + 1,
-                     gt.o1 * ((exp(2 * cn.c1n) - 1) / (exp(2 * cn.c1n) + 1)),
-                     gt.o2 * ((exp(2 * cn.c2n) - 1) / (exp(2 * cn.c2n) + 1)),
-                     cn.c1n, cn.c2n
-              FROM lstm s
-              JOIN series x ON x.g = s.g AND x.rn = s.t + 1,
-              LATERAL (
-                SELECT 1 / (1 + exp(-(((-0.375 * x.x + 0.5 * s.h1)
-                         + 0.375 * s.h2) + -0.25))) AS i1,
-                       1 / (1 + exp(-(((-0.125 * x.x + 0.25 * s.h1)
-                         + -0.125 * s.h2) + 0.25))) AS f1,
-                       (exp(2 * (((0.125 * x.x + 0.0 * s.h1)
-                          + 0.5 * s.h2) + -0.375)) - 1)
-                         / (exp(2 * (((0.125 * x.x + 0.0 * s.h1)
-                            + 0.5 * s.h2) + -0.375)) + 1) AS g1,
-                       1 / (1 + exp(-(((0.375 * x.x + -0.25 * s.h1)
-                         + 0.0 * s.h2) + 0.125))) AS o1,
-                       1 / (1 + exp(-(((-0.25 * x.x + 0.375 * s.h1)
-                         + 0.125 * s.h2) + 0.0))) AS i2,
-                       1 / (1 + exp(-(((0.0 * x.x + 0.125 * s.h1)
-                         + -0.375 * s.h2) + 0.5))) AS f2,
-                       (exp(2 * (((0.25 * x.x + -0.125 * s.h1)
-                          + 0.25 * s.h2) + -0.125)) - 1)
-                         / (exp(2 * (((0.25 * x.x + -0.125 * s.h1)
-                            + 0.25 * s.h2) + -0.125)) + 1) AS g2,
-                       1 / (1 + exp(-(((0.5 * x.x + -0.375 * s.h1)
-                         + -0.25 * s.h2) + 0.375))) AS o2) gt,
-              LATERAL (
-                SELECT (gt.f1 * s.c1) + (gt.i1 * gt.g1) AS c1n,
-                       (gt.f2 * s.c2) + (gt.i2 * gt.g2) AS c2n) cn
-              WHERE s.t < 8),
+    Some(duckLstmForward +
+      s""",
             tmax AS (SELECT g, max(t) AS tm FROM lstm GROUP BY g),
             steps AS (
               SELECT p.g, p.t + 1 AS t, x.x,
@@ -3868,27 +3556,7 @@ object MlQueries {
               FROM lstm p
               JOIN series x ON x.g = p.g AND x.rn = p.t + 1
               JOIN lstm c ON c.g = p.g AND c.t = p.t + 1,
-              LATERAL (
-                SELECT 1 / (1 + exp(-(((-0.375 * x.x + 0.5 * p.h1)
-                         + 0.375 * p.h2) + -0.25))) AS i1,
-                       1 / (1 + exp(-(((-0.125 * x.x + 0.25 * p.h1)
-                         + -0.125 * p.h2) + 0.25))) AS f1,
-                       (exp(2 * (((0.125 * x.x + 0.0 * p.h1)
-                          + 0.5 * p.h2) + -0.375)) - 1)
-                         / (exp(2 * (((0.125 * x.x + 0.0 * p.h1)
-                            + 0.5 * p.h2) + -0.375)) + 1) AS g1,
-                       1 / (1 + exp(-(((0.375 * x.x + -0.25 * p.h1)
-                         + 0.0 * p.h2) + 0.125))) AS o1,
-                       1 / (1 + exp(-(((-0.25 * x.x + 0.375 * p.h1)
-                         + 0.125 * p.h2) + 0.0))) AS i2,
-                       1 / (1 + exp(-(((0.0 * x.x + 0.125 * p.h1)
-                         + -0.375 * p.h2) + 0.5))) AS f2,
-                       (exp(2 * (((0.25 * x.x + -0.125 * p.h1)
-                          + 0.25 * p.h2) + -0.125)) - 1)
-                         / (exp(2 * (((0.25 * x.x + -0.125 * p.h1)
-                            + 0.25 * p.h2) + -0.125)) + 1) AS g2,
-                       1 / (1 + exp(-(((0.5 * x.x + -0.375 * p.h1)
-                         + -0.25 * p.h2) + 0.375))) AS o2) gt),
+              ${duckLstmGates("p")}),
             bwd(g, t, dh1, dh2, dc1, dc2) AS (
               SELECT l.g, m.tm, 2 * (l.h1 - 0.25), 2 * (l.h2 + 0.25),
                      CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -190,6 +190,58 @@ object PipelineQueries {
                    mean_qty, n_obs
             FROM feats CROSS JOIN mu ORDER BY l_suppkey"""))
 
+  /** Unsigned byte `i` of `b`, 0 past its end: how the media rows read
+    * a document's text bytes to synthesize deterministic images and
+    * clips (the oracles read the same bytes with ascii(substr(...))). */
+  private[queries] def byteAt(b: Array[Byte], i: Int): Int =
+    if (i < b.length) b(i) & 0xff else 0
+
+  /** Each document's (doc_id, text bytes). */
+  private[queries] def docBytes(s: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("text").cast("binary"))
+      .as[(Long, Array[Byte])]
+  }
+
+  /** mm7's and src16's BMP: a (byte 0 % 3 + 2) × (byte 1 % 2 + 2) RGB
+    * image whose channel bytes are the document's bytes in order. */
+  private[queries] def bmpOf(raw: Array[Byte]): Array[Byte] = {
+    val w = byteAt(raw, 0) % 3 + 2
+    val h = byteAt(raw, 1) % 2 + 2
+    graft.ops.BmpCodec.encode(w, h,
+      Array.tabulate(3 * w * h)(i => byteAt(raw, i).toByte))
+  }
+
+  /** The oracle of [[bmpOf]]'s pixels `ps` per document (`where` filters
+    * the documents), then the select of doc_id, width, height and the
+    * per-channel sums, left open for more columns. */
+  private[queries] def duckBmpSums(where: String): String =
+    s"""WITH dims AS (
+              SELECT doc_id, text,
+                     ascii(substr(text, 1, 1)) % 3 + 2 AS width,
+                     ascii(substr(text, 2, 1)) % 2 + 2 AS height
+              FROM documents$where),
+            px AS (
+              SELECT doc_id, width, height,
+                     list_transform(range(0, width * height * 3),
+                       i -> ascii(substr(text, CAST(i + 1 AS INT), 1)))
+                       AS ps
+              FROM dims)
+            SELECT doc_id, CAST(width AS INT) AS width,
+                   CAST(height AS INT) AS height,
+                   ${Seq("r", "g", "b").zipWithIndex.map { case (c, i) =>
+                     s"CAST(list_sum(list_transform(range(0, width * height), k -> ps[CAST(3 * k + ${i + 1} AS INT)])) AS BIGINT) AS sum_$c"
+                   }.mkString(",\n                   ")}"""
+
+  /** The oracle's clip length `n` per document, mm6's and mm9's
+    * `byteAt(raw, 0) % 17 + 16`. */
+  private val duckPcmLengths =
+    """WITH d AS (
+              SELECT doc_id, text,
+                     ascii(substr(text, 1, 1)) % 17 + 16 AS n
+              FROM documents)"""
+
   /** Multimodal-column plumbing: text payloads cast to opaque binary
     * (stand-in for image/audio blobs), decoded per partition by a
     * STUBBED decoder — a deterministic fake that reads header bytes
@@ -202,23 +254,19 @@ object PipelineQueries {
     "mm1_media_decode_stub",
     (s, dir) => {
       import s.implicits._
-      val bin = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as[(Long, Array[Byte])]
+      val bin = docBytes(s, dir)
       bin.mapPartitions { it =>
         // one "decoder" per partition (stubbed): a real codec would be
         // instantiated here once and reused across the batch.
         // Contract: payloads are single-byte text (ASCII); missing header
         // bytes read as 0 — the same as the oracle, where DuckDB
         // ascii(substr(...)) past the end returns 0.
-        def at(bytes: Array[Byte], i: Int): Int =
-          if (i < bytes.length) bytes(i) & 0xff else 0
         it.map { case (id, bytes) =>
-          val width = at(bytes, 0) % 64 + 16
-          val height = at(bytes, 1) % 64 + 16
+          val width = byteAt(bytes, 0) % 64 + 16
+          val height = byteAt(bytes, 1) % 64 + 16
           val nFrames = bytes.length % 7 + 1
           val brightness =
-            (0 until 16).map(at(bytes, _).toDouble).sum / 16.0 / 255.0
+            (0 until 16).map(byteAt(bytes, _).toDouble).sum / 16.0 / 255.0
           MediaMeta(id, width, height, nFrames, brightness)
         }
       }.toDF()
@@ -319,19 +367,15 @@ object PipelineQueries {
       val frameBytes = 16
       val stride = 2 // sample every 2nd frame
       val maxFrames = 4
-      val bin = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as[(Long, Array[Byte])]
+      val bin = docBytes(s, dir)
       bin.mapPartitions { it =>
-        def at(bytes: Array[Byte], i: Int): Int =
-          if (i < bytes.length) bytes(i) & 0xff else 0
         it.flatMap { case (id, bytes) =>
           (0 until maxFrames).iterator
             .map(f => (f, f * stride * frameBytes))
             .takeWhile { case (_, off) => off < bytes.length }
             .map { case (f, off) =>
               val b = (0 until frameBytes)
-                .map(k => at(bytes, off + k).toDouble).sum /
+                .map(k => byteAt(bytes, off + k).toDouble).sum /
                 frameBytes / 255.0
               FrameSample(id, f, off, b)
             }
@@ -441,16 +485,12 @@ object PipelineQueries {
     "mm3_media_embedding",
     (s, dir) => {
       import s.implicits._
-      val emb = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as[(Long, Array[Byte])]
+      val emb = docBytes(s, dir)
         .mapPartitions { it =>
           // one "encoder" per partition (stubbed, like mm1's decoder)
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, bytes) =>
             val v = Array.tabulate(16) { d =>
-              (0 until 4).map(k => at(bytes, d + 16 * k)).sum.toDouble
+              (0 until 4).map(k => byteAt(bytes, d + 16 * k)).sum.toDouble
             }
             (id, v.toSeq)
           }
@@ -521,12 +561,8 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.ImageHeader
-      val payloads = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      val payloads = docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           def be32(v: Int): Array[Byte] = Array(
             ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
             ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
@@ -535,8 +571,8 @@ object PipelineQueries {
           it.map { case (id, raw) =>
             if (id % 5 == 0) (id, raw) // every 5th doc: not a PNG
             else {
-              val w = at(raw, 0) * 3 + 100 // exercises the 2nd be32 byte
-              val h = at(raw, 1) * 2 + 50
+              val w = byteAt(raw, 0) * 3 + 100 // exercises the 2nd be32 byte
+              val h = byteAt(raw, 1) * 2 + 50
               val colorType = if (id % 3 == 0) 2 else 6
               (id, sig ++ be32(13) ++ "IHDR".getBytes("US-ASCII") ++
                 be32(w) ++ be32(h) ++
@@ -593,16 +629,12 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.PngCodec
-      val pngs = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      val pngs = docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val w = at(raw, 0) % 8 + 4
-            val h = at(raw, 1) % 6 + 3
-            val px = Array.tabulate(w * h)(i => at(raw, i).toByte)
+            val w = byteAt(raw, 0) % 8 + 4
+            val h = byteAt(raw, 1) % 6 + 3
+            val px = Array.tabulate(w * h)(i => byteAt(raw, i).toByte)
             (id, PngCodec.encodeGray(w, h, px))
           }
         }
@@ -706,15 +738,11 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.WavCodec
-      val wavs = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      val wavs = docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val n = at(raw, 0) % 17 + 16
-            val pcm = Array.tabulate(n)(i => ((at(raw, i) - 80) * 256).toShort)
+            val n = byteAt(raw, 0) % 17 + 16
+            val pcm = Array.tabulate(n)(i => ((byteAt(raw, i) - 80) * 256).toShort)
             (id, WavCodec.encodePcm16Mono(8000, pcm))
           }
         }
@@ -735,10 +763,7 @@ object PipelineQueries {
           "zero_crossings", "sum_samples")
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (
-              SELECT doc_id, text,
-                     ascii(substr(text, 1, 1)) % 17 + 16 AS n
-              FROM documents),
+    Some(duckPcmLengths + """,
             sm AS (
               SELECT doc_id, n,
                      list_transform(range(0, n), i ->
@@ -774,17 +799,10 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.BmpCodec
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val w = at(raw, 0) % 3 + 2
-            val h = at(raw, 1) % 2 + 2
-            val rgb = Array.tabulate(3 * w * h)(i => at(raw, i).toByte)
-            val img = BmpCodec.decode(BmpCodec.encode(w, h, rgb))
+            val img = BmpCodec.decode(bmpOf(raw))
             var sr = 0L; var sg = 0L; var sb = 0L
             var mn = 255; var mx = 0
             var k = 0
@@ -804,25 +822,7 @@ object PipelineQueries {
           "min_px", "max_px")
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
-              SELECT doc_id, text,
-                     ascii(substr(text, 1, 1)) % 3 + 2 AS width,
-                     ascii(substr(text, 2, 1)) % 2 + 2 AS height
-              FROM documents),
-            px AS (
-              SELECT doc_id, width, height,
-                     list_transform(range(0, width * height * 3),
-                       i -> ascii(substr(text, CAST(i + 1 AS INT), 1)))
-                       AS ps
-              FROM dims)
-            SELECT doc_id, CAST(width AS INT) AS width,
-                   CAST(height AS INT) AS height,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 1 AS INT)])) AS BIGINT) AS sum_r,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 2 AS INT)])) AS BIGINT) AS sum_g,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 3 AS INT)])) AS BIGINT) AS sum_b,
+    Some(duckBmpSums("") + """,
                    CAST(list_min(ps) AS INT) AS min_px,
                    CAST(list_max(ps) AS INT) AS max_px
             FROM px ORDER BY doc_id"""))
@@ -939,12 +939,7 @@ object PipelineQueries {
          |  FROM pairs p
          |  JOIN sp sa ON p.doc_a = sa.doc_id
          |  JOIN sp sb ON p.doc_b = sb.doc_id""".stripMargin
-    s"""WITH sets AS (
-       |  SELECT doc_id, ${DedupQueries.duckShingles} AS shs
-       |  FROM documents),
-       |ex AS (
-       |  SELECT doc_id, len(shs) AS nsh, unnest(shs) AS sh
-       |  FROM sets),
+    s"""WITH ${DedupQueries.duckShingleRows},
        |$anchorCtes
        |pairs AS (
        |  ${DedupQueries.duckJaccardHalfPairs(anchored)}),
@@ -1242,16 +1237,12 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.PngCodec
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val w = at(raw, 0) % 8 + 4
-            val h = at(raw, 1) % 6 + 3
-            val px = Array.tabulate(w * h)(i => at(raw, i).toByte)
+            val w = byteAt(raw, 0) % 8 + 4
+            val h = byteAt(raw, 1) % 6 + 3
+            val px = Array.tabulate(w * h)(i => byteAt(raw, i).toByte)
             val g = PngCodec.decodeGray(PngCodec.encodeGray(w, h, px))
             val w2 = math.max(g.width / 2, 1)
             val h2 = math.max(g.height / 2, 1)
@@ -1320,16 +1311,12 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.WavCodec
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val n = at(raw, 0) % 17 + 16
+            val n = byteAt(raw, 0) % 17 + 16
             val pcm = Array.tabulate(n)(i =>
-              ((at(raw, i) - 80) * 256).toShort)
+              ((byteAt(raw, i) - 80) * 256).toShort)
             val w = WavCodec.decode(WavCodec.encodePcm16Mono(8000, pcm))
             val nFrames = (w.samples.length + 7) / 8
             var bestIdx = 0L; var bestE = -1L; var total = 0L
@@ -1352,10 +1339,7 @@ object PipelineQueries {
           "peak_frame", "peak_energy")
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (
-              SELECT doc_id, text,
-                     ascii(substr(text, 1, 1)) % 17 + 16 AS n
-              FROM documents),
+    Some(duckPcmLengths + """,
             sm AS (
               SELECT doc_id, n,
                      list_transform(range(0, n), i ->
@@ -1489,16 +1473,12 @@ object PipelineQueries {
           case _ => 17 * i + 4
         }).toByte
       }
-      Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
-        .as[(Long, Array[Byte])]
+      docBytes(s, dir)
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val w = at(raw, 0) % 5 + 2
-            val h = at(raw, 1) % 4 + 2
-            val idx = Array.tabulate(w * h)(i => (at(raw, i) % 8).toByte)
+            val w = byteAt(raw, 0) % 5 + 2
+            val h = byteAt(raw, 1) % 4 + 2
+            val idx = Array.tabulate(w * h)(i => (byteAt(raw, i) % 8).toByte)
             val img = GifCodec.decode(GifCodec.encode(w, h, pal, idx))
             var sr = 0L; var sg = 0L; var sb = 0L; var n0 = 0L
             var k = 0
@@ -1563,8 +1543,7 @@ object PipelineQueries {
     (s, dir) => {
       import s.implicits._
       import graft.ops.JpegCodec
-      val raw = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("raw"))
+      val raw = docBytes(s, dir)
       // A proof-scale fixture reads as ONE scan split (584 KB parquet),
       // serializing every image's codec work on a single core (measured
       // 3.9 s single-task at sf0.1, ~0.4 s spread). Spread rows ONLY
@@ -1575,14 +1554,11 @@ object PipelineQueries {
       val spread =
         if (raw.rdd.getNumPartitions < par) raw.repartition(par) else raw
       spread
-        .as[(Long, Array[Byte])]
         .mapPartitions { it =>
-          def at(b: Array[Byte], i: Int): Int =
-            if (i < b.length) b(i) & 0xff else 0
           it.map { case (id, raw) =>
-            val w = at(raw, 0) % 9 + 8
-            val h = at(raw, 1) % 9 + 8
-            val a = at(raw, 2)
+            val w = byteAt(raw, 0) % 9 + 8
+            val h = byteAt(raw, 1) % 9 + 8
+            val a = byteAt(raw, 2)
             def src(x: Int, y: Int): Int = (a * 7 + x * 13 + y * 29) % 256
             val img = new java.awt.image.BufferedImage(w, h,
               java.awt.image.BufferedImage.TYPE_BYTE_GRAY)

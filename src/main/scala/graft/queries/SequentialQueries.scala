@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.Q
 import graft.ops.{Sequential, Tables}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.reflect.runtime.universe.TypeTag
 
 /** Encoder case classes for the typed folds (top-level for implicit
   * Encoder derivation). */
@@ -38,6 +40,69 @@ case class KalmanOut(user_id: Long, event_id: Long, xhat: Double,
   * memory-streaming (Iterator in, Iterator out).
   */
 object SequentialQueries {
+
+  /** Each supplier's first 30 lineitems in (shipdate, orderkey,
+    * linenumber) order as [[SirRow]]s, handed sorted to `f`: the SIR
+    * input of w6's Euler recurrence and m3's RK4. */
+  private[queries] def sirSeries[T <: Product: TypeTag](s: SparkSession,
+      dir: String)(f: (Long, IndexedSeq[SirRow]) => Iterator[T]): Dataset[T] = {
+    import s.implicits._
+    val w = Window.partitionBy("l_suppkey")
+      .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
+    Tables.load(s, dir, "lineitem")
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 30)
+      .select(col("l_suppkey").as("key"), col("rn"),
+        col("l_quantity").as("qty"), col("l_discount").as("disc"),
+        col("l_tax").as("tax"))
+      .as[SirRow]
+      .groupByKey(_.key)
+      .flatMapGroups((key, it) => f(key, it.toIndexedSeq.sortBy(_.rn)))
+  }
+
+  /** The oracle's `base` CTE of [[sirSeries]], opening `WITH RECURSIVE`. */
+  private[queries] val duckSirBase: String =
+    """WITH RECURSIVE base AS (
+              SELECT l_suppkey, rn, qty, disc, tax FROM (
+                SELECT l_suppkey,
+                  row_number() OVER (PARTITION BY l_suppkey
+                    ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn,
+                  l_quantity AS qty, l_discount AS disc, l_tax AS tax
+                FROM lineitem)
+              WHERE rn <= 30)"""
+
+  /** A per-user recurrence over the event values: each user's events as
+    * [[EwmaRow]]s in (ts, event_id) order, handed sorted to `fold`, the
+    * output ordered by (user_id, event_id). `rec` is the body of the
+    * oracle's recursive CTE over the numbered events `base`, `out` the
+    * select list over it. w19, w20, w21, w27 and w29 differ only in
+    * these. */
+  private def userFold[T <: Product: TypeTag](name: String,
+      fold: (Long, IndexedSeq[EwmaRow]) => Iterator[T], rec: String,
+      out: String): Q = Q(
+    name,
+    (s, dir) => {
+      import s.implicits._
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      Tables.load(s, dir, "events")
+        .withColumn("rn", row_number().over(w))
+        .select(col("user_id").as("key"), col("rn"),
+          col("event_id").as("id"), col("value").as("v"))
+        .as[EwmaRow]
+        .groupByKey(_.key)
+        .flatMapGroups((key, it) => fold(key, it.toIndexedSeq.sortBy(_.rn)))
+        .toDF()
+        .orderBy("user_id", "event_id")
+    },
+    Some(s"""WITH RECURSIVE base AS (
+              SELECT user_id, event_id, value,
+                     row_number() OVER (PARTITION BY user_id
+                       ORDER BY ts, event_id) AS rn
+              FROM events),
+            rec AS (
+              $rec)
+            SELECT $out
+            FROM rec ORDER BY user_id, event_id"""))
 
   /** W5 sequential neighbor smoothing. Values < 50k are nulled (the
     * "missing" sensor readings), then per-customer order history is
@@ -111,19 +176,7 @@ object SequentialQueries {
   private val w6 = Q(
     "w6_sir_recurrence",
     (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-      val rows = Tables.load(s, dir, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 30)
-        .select(col("l_suppkey").as("key"), col("rn"),
-          col("l_quantity").as("qty"), col("l_discount").as("disc"),
-          col("l_tax").as("tax"))
-        .as[SirRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
+      sirSeries(s, dir) { (key, sorted) =>
           val sim = Sequential.sirSimulate(
             confirmed0 = sorted.head.qty, removed0 = 10.0 * sorted.head.tax,
             n0 = 1000.0, alpha = 1e-5, beta = 0.05,
@@ -135,14 +188,7 @@ object SequentialQueries {
         .toDF()
         .orderBy("l_suppkey", "rn")
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT l_suppkey, rn, qty, disc, tax FROM (
-                SELECT l_suppkey,
-                  row_number() OVER (PARTITION BY l_suppkey
-                    ORDER BY l_shipdate, l_orderkey, l_linenumber) AS rn,
-                  l_quantity AS qty, l_discount AS disc, l_tax AS tax
-                FROM lineitem)
-              WHERE rn <= 30),
+    Some(duckSirBase + """,
             sim AS (
               -- CAST: bare 1000.0 / 10.0 literals are DECIMALs in
               -- DuckDB and would drag the whole recurrence into
@@ -234,42 +280,21 @@ object SequentialQueries {
     * binary doubles and the fold's op order matches the oracle's
     * recursive CTE literally, so the hash match needs no rounding.
     */
-  private val w19 = Q(
-    "w19_ewma",
-    (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val rows = Tables.load(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .select(col("user_id").as("key"), col("rn"),
-          col("event_id").as("id"), col("value").as("v"))
-        .as[EwmaRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
-          val sm = Sequential.ewma(sorted.map(_.v), 0.25, 0.75)
-          sorted.iterator.zip(sm.iterator).map { case (r, e) =>
-            EwmaOut(key, r.id, e)
-          }
-        }
-        .toDF()
-        .orderBy("user_id", "event_id")
+  private val w19 = userFold("w19_ewma",
+    (key, sorted) => {
+      val sm = Sequential.ewma(sorted.map(_.v), 0.25, 0.75)
+      sorted.iterator.zip(sm.iterator).map { case (r, e) =>
+        EwmaOut(key, r.id, e)
+      }
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT user_id, event_id, value,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS rn
-              FROM events),
-            rec AS (
-              SELECT user_id, event_id, rn, value AS e
+    """SELECT user_id, event_id, rn, value AS e
               FROM base WHERE rn = 1
               UNION ALL
               SELECT b.user_id, b.event_id, b.rn,
                      0.25 * b.value + 0.75 * r.e
               FROM rec r JOIN base b
-                ON b.user_id = r.user_id AND b.rn = r.rn + 1)
-            SELECT user_id, event_id, e AS ewma
-            FROM rec ORDER BY user_id, event_id"""))
+                ON b.user_id = r.user_id AND b.rn = r.rn + 1""",
+    "user_id, event_id, e AS ewma")
 
   /** W20 (X160, beyond the reference): HOLT double-exponential
     * smoothing — level + linear trend, the next smoother up from w19's
@@ -283,34 +308,14 @@ object SequentialQueries {
     * identical operands is bit-stable), so the hash match needs no
     * rounding.
     */
-  private val w20 = Q(
-    "w20_holt_trend",
-    (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val rows = Tables.load(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .select(col("user_id").as("key"), col("rn"),
-          col("event_id").as("id"), col("value").as("v"))
-        .as[EwmaRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
-          val sm = Sequential.holt(sorted.map(_.v), 0.25, 0.75, 0.5, 0.5)
-          sorted.iterator.zip(sm.iterator).map { case (r, (l, b, f)) =>
-            HoltOut(key, r.id, l, b, f)
-          }
-        }
-        .toDF()
-        .orderBy("user_id", "event_id")
+  private val w20 = userFold("w20_holt_trend",
+    (key, sorted) => {
+      val sm = Sequential.holt(sorted.map(_.v), 0.25, 0.75, 0.5, 0.5)
+      sorted.iterator.zip(sm.iterator).map { case (r, (l, b, f)) =>
+        HoltOut(key, r.id, l, b, f)
+      }
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT user_id, event_id, value,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS rn
-              FROM events),
-            rec AS (
-              SELECT user_id, event_id, rn, value AS l,
+    """SELECT user_id, event_id, rn, value AS l,
                      CAST(0 AS DOUBLE) AS b
               FROM base WHERE rn = 1
               UNION ALL
@@ -319,10 +324,9 @@ object SequentialQueries {
                      0.5 * ((0.25 * bb.value + 0.75 * (r.l + r.b)) - r.l)
                        + 0.5 * r.b
               FROM rec r JOIN base bb
-                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1)
-            SELECT user_id, event_id, l AS level, b AS trend,
-                   l + b AS forecast
-            FROM rec ORDER BY user_id, event_id"""))
+                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1""",
+    """user_id, event_id, l AS level, b AS trend,
+                   l + b AS forecast""")
 
   /** W21 (beyond the reference): Page's one-sided CUSUM drift detector
     * per user — S_t = max(0, S_{t-1} + (value_t − k)), alarm when
@@ -333,34 +337,14 @@ object SequentialQueries {
     * fold as w19/w20, distributed across users; max/+ are IEEE-exact,
     * so the recursive-CTE oracle matches bit-for-bit unrounded.
     */
-  private val w21 = Q(
-    "w21_cusum_drift",
-    (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val rows = Tables.load(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .select(col("user_id").as("key"), col("rn"),
-          col("event_id").as("id"), col("value").as("v"))
-        .as[EwmaRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
-          val cs = Sequential.cusum(sorted.map(_.v), 64.0, 256.0)
-          sorted.iterator.zip(cs.iterator).map { case (r, (sv, al)) =>
-            CusumOut(key, r.id, sv, al)
-          }
-        }
-        .toDF()
-        .orderBy("user_id", "event_id")
+  private val w21 = userFold("w21_cusum_drift",
+    (key, sorted) => {
+      val cs = Sequential.cusum(sorted.map(_.v), 64.0, 256.0)
+      sorted.iterator.zip(cs.iterator).map { case (r, (sv, al)) =>
+        CusumOut(key, r.id, sv, al)
+      }
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT user_id, event_id, value,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS rn
-              FROM events),
-            rec AS (
-              SELECT user_id, event_id, rn,
+    """SELECT user_id, event_id, rn,
                      greatest(CAST(0 AS DOUBLE),
                        CAST(0 AS DOUBLE) + (value - CAST(64 AS DOUBLE)))
                        AS s
@@ -370,10 +354,9 @@ object SequentialQueries {
                      greatest(CAST(0 AS DOUBLE),
                        r.s + (b.value - CAST(64 AS DOUBLE)))
               FROM rec r JOIN base b
-                ON b.user_id = r.user_id AND b.rn = r.rn + 1)
-            SELECT user_id, event_id, s AS cusum,
-                   s > CAST(256 AS DOUBLE) AS alarm
-            FROM rec ORDER BY user_id, event_id"""))
+                ON b.user_id = r.user_id AND b.rn = r.rn + 1""",
+    """user_id, event_id, s AS cusum,
+                   s > CAST(256 AS DOUBLE) AS alarm""")
 
   /** W27 (X202, beyond the reference): HOLT–WINTERS additive seasonal
     * smoothing per user — the triple-exponential forecaster that
@@ -384,35 +367,15 @@ object SequentialQueries {
     * carries the seasonal ring as a LIST column updated in the
     * IDENTICAL op order — bit-for-bit hash match, no tolerance.
     */
-  private val w27 = Q(
-    "w27_holt_winters",
-    (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val rows = Tables.load(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .select(col("user_id").as("key"), col("rn"),
-          col("event_id").as("id"), col("value").as("v"))
-        .as[EwmaRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
-          val hw = Sequential.holtWinters(sorted.map(_.v), 4,
-            0.25, 0.75, 0.5, 0.5, 0.125, 0.875)
-          sorted.iterator.zip(hw.iterator).map { case (r, (l, sn, f)) =>
-            HwOut(key, r.id, l, sn, f)
-          }
-        }
-        .toDF()
-        .orderBy("user_id", "event_id")
+  private val w27 = userFold("w27_holt_winters",
+    (key, sorted) => {
+      val hw = Sequential.holtWinters(sorted.map(_.v), 4,
+        0.25, 0.75, 0.5, 0.5, 0.125, 0.875)
+      sorted.iterator.zip(hw.iterator).map { case (r, (l, sn, f)) =>
+        HwOut(key, r.id, l, sn, f)
+      }
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT user_id, event_id, value,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS rn
-              FROM events),
-            rec AS (
-              SELECT user_id, event_id, rn, value AS lnew,
+    """SELECT user_id, event_id, rn, value AS lnew,
                      CAST(0 AS DOUBLE) AS bnew,
                      CAST(0 AS DOUBLE) AS snew,
                      [CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
@@ -426,10 +389,9 @@ object SequentialQueries {
                      0.125 * (bb.value - ln2) + 0.875 * r.ring[1] AS sn2,
                      r.ring[2:4] || [sn2] AS ring2
               FROM rec r JOIN base bb
-                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1)
-            SELECT user_id, event_id, lnew AS level, snew AS seasonal,
-                   lnew + bnew + ring[1] AS forecast
-            FROM rec ORDER BY user_id, event_id"""))
+                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1""",
+    """user_id, event_id, lnew AS level, snew AS seasonal,
+                   lnew + bnew + ring[1] AS forecast""")
 
   /** X210 w29: 1-D Kalman filter (local-level model) per user over the
     * event-value series — the probabilistic cousin of the w19 EWMA
@@ -441,34 +403,14 @@ object SequentialQueries {
     * three outputs hash bit-exact. Scale: one shuffle on user_id, then
     * task-local typed folds — identical cost envelope to w19/w20/w27.
     */
-  private val w29 = Q(
-    "w29_kalman_filter",
-    (s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val rows = Tables.load(s, dir, "events")
-        .withColumn("rn", row_number().over(w))
-        .select(col("user_id").as("key"), col("rn"),
-          col("event_id").as("id"), col("value").as("v"))
-        .as[EwmaRow]
-      rows.groupByKey(_.key)
-        .flatMapGroups { (key, it) =>
-          val sorted = it.toIndexedSeq.sortBy(_.rn)
-          val kf = Sequential.kalman1d(sorted.map(_.v), 0.25, 1.0)
-          sorted.iterator.zip(kf.iterator).map { case (r, (x, k, p)) =>
-            KalmanOut(key, r.id, x, k, p)
-          }
-        }
-        .toDF()
-        .orderBy("user_id", "event_id")
+  private val w29 = userFold("w29_kalman_filter",
+    (key, sorted) => {
+      val kf = Sequential.kalman1d(sorted.map(_.v), 0.25, 1.0)
+      sorted.iterator.zip(kf.iterator).map { case (r, (x, k, p)) =>
+        KalmanOut(key, r.id, x, k, p)
+      }
     },
-    Some("""WITH RECURSIVE base AS (
-              SELECT user_id, event_id, value,
-                     row_number() OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id) AS rn
-              FROM events),
-            rec AS (
-              SELECT user_id, event_id, rn, value AS xh,
+    """SELECT user_id, event_id, rn, value AS xh,
                      CAST(1 AS DOUBLE) AS gain, CAST(1 AS DOUBLE) AS p
               FROM base WHERE rn = 1
               UNION ALL
@@ -479,9 +421,8 @@ object SequentialQueries {
                      (1.0 - (r.p + 0.25) / ((r.p + 0.25) + 1.0))
                        * (r.p + 0.25) AS p2
               FROM rec r JOIN base bb
-                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1)
-            SELECT user_id, event_id, xh AS xhat, gain, p AS pvar
-            FROM rec ORDER BY user_id, event_id"""))
+                ON bb.user_id = r.user_id AND bb.rn = r.rn + 1""",
+    "user_id, event_id, xh AS xhat, gain, p AS pvar")
 
   /** X285 w37: DYNAMIC TIME WARPING distance — the elastic series
     * similarity measure (alignment-invariant: two series tracing the

@@ -84,17 +84,18 @@ object SimilarityQueries {
 
   /** The search tail every cosine row shares: over query × candidate
     * pairs (query_id, qv, qn against vec_id, v, nrm), each query's
-    * top 3 other vectors by rounded cosine, ties to the lower id, with
-    * `keep` columns between query_id and neighbor_id.
+    * top 3 other vectors by rounded cosine (named `score`), ties to the
+    * lower id, with `keep` columns between query_id and neighbor_id.
     */
-  private def cosineTop3(pairs: DataFrame, keep: String*): DataFrame = {
+  private def cosineTop3(pairs: DataFrame, keep: Seq[String] = Nil,
+      score: String = "cosine"): DataFrame = {
     val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
+      .orderBy(col(score).desc, col("neighbor_id"))
     pairs.filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
+      .withColumn(score,
         round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 4))
       .select((col("query_id") +: keep.map(col)) ++
-        Seq(col("vec_id").as("neighbor_id"), col("cosine")): _*)
+        Seq(col("vec_id").as("neighbor_id"), col(score)): _*)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .orderBy("query_id", "rank")
@@ -104,21 +105,37 @@ object SimilarityQueries {
     * qv, qn and the `keep` columns) to the candidates as `n` (vec_id, v,
     * nrm).
     */
-  private def duckTop3(from: String, keep: String*): String = {
+  private def duckTop3(from: String, keep: Seq[String] = Nil,
+      score: String = "cosine"): String = {
     val k = keep.map(_ + ", ").mkString
     val qk = keep.map("q." + _ + ", ").mkString
     s"""scored AS (
        |  SELECT q.query_id, ${qk}n.vec_id AS neighbor_id,
        |         round(${duckDot.format("q.qv", "n.v")} / (q.qn * n.nrm), 4)
-       |           AS cosine
+       |           AS $score
        |  FROM $from WHERE n.vec_id <> q.query_id),
        |ranked AS (
-       |  SELECT query_id, ${k}neighbor_id, cosine,
+       |  SELECT query_id, ${k}neighbor_id, $score,
        |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
+       |      ORDER BY $score DESC, neighbor_id) AS rank
        |  FROM scored)
-       |SELECT query_id, ${k}neighbor_id, cosine, rank FROM ranked
+       |SELECT query_id, ${k}neighbor_id, $score, rank FROM ranked
        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** The oracle's corpus `n` (vec_id, v, nrm) and its first 10 vectors
+    * as queries `q` (query_id, qv, qn) — [[corpus]] and [[queriesOf]];
+    * with `bucket`, both carry [[withBucket]]'s LSH bucket. */
+  private def duckCorpusQueries(bucket: Boolean): String = {
+    val b = if (bucket) ", bucket" else ""
+    s"""e AS (
+               SELECT vec_id, $duckVec AS v, label FROM embeddings),
+             n AS (
+               SELECT vec_id, v, $duckNorm AS nrm${if (bucket) s", $duckBucket AS bucket" else ""}
+               FROM e),
+             q AS (
+               SELECT vec_id AS query_id, v AS qv, nrm AS qn$b FROM n
+               WHERE vec_id < 10)"""
   }
 
   /** Brute-force cosine top-3 for the first 10 query vectors — the
@@ -130,13 +147,7 @@ object SimilarityQueries {
       val e = corpus(s, dir)
       cosineTop3(broadcast(queriesOf(e)).crossJoin(e))
     },
-    Some(s"""WITH e AS (
-               SELECT vec_id, $duckVec AS v, label FROM embeddings),
-             n AS (
-               SELECT vec_id, v, $duckNorm AS nrm FROM e),
-             q AS (
-               SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
-               WHERE vec_id < 10),
+    Some(s"""WITH ${duckCorpusQueries(bucket = false)},
              ${duckTop3("q CROSS JOIN n")}"""))
 
   /** Random-hyperplane LSH ANN: 4 sign bits → 16 buckets; the query
@@ -148,17 +159,10 @@ object SimilarityQueries {
     (s, dir) => {
       val e = withBucket(corpus(s, dir))
       cosineTop3(broadcast(queriesOf(e, "bucket")).join(e, Seq("bucket")),
-        "bucket")
+        Seq("bucket"))
     },
-    Some(s"""WITH e AS (
-               SELECT vec_id, $duckVec AS v, label FROM embeddings),
-             n AS (
-               SELECT vec_id, v, $duckNorm AS nrm, $duckBucket AS bucket
-               FROM e),
-             q AS (
-               SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket FROM n
-               WHERE vec_id < 10),
-             ${duckTop3("q JOIN n USING (bucket)", "bucket")}"""))
+    Some(s"""WITH ${duckCorpusQueries(bucket = true)},
+             ${duckTop3("q JOIN n USING (bucket)", Seq("bucket"))}"""))
 
   /** IVF over per-label cells: the per-label mean vectors are the cells
     * (stand-in for k-means centroids), each query probes its `nProbe`
@@ -186,7 +190,7 @@ object SimilarityQueries {
         .filter(col("crk") <= nProbe)
         .select(col("query_id"), col("qv"), col("qn"),
           col("label").as("cell"))
-      cosineTop3(probe.join(e, probe("cell") === e("label")), "cell")
+      cosineTop3(probe.join(e, probe("cell") === e("label")), Seq("cell"))
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v, label FROM embeddings),
@@ -212,7 +216,7 @@ object SimilarityQueries {
                      c.label) AS crk
                  FROM q CROSS JOIN centn c)
                WHERE crk <= $nProbe),
-             ${duckTop3("probe q JOIN n ON n.label = q.cell", "cell")}"""))
+             ${duckTop3("probe q JOIN n ON n.label = q.cell", Seq("cell"))}"""))
 
   /** IVF with probe 1: each query searches its one nearest cell. */
   private val s3 = ivfLabelCells("s3_ivf_centroid", nProbe = 1)
@@ -231,7 +235,7 @@ object SimilarityQueries {
     * their own cell's members.
     */
   private def ivfServe(e: DataFrame): DataFrame =
-    cosineTop3(broadcast(queriesOf(e, "cell")).join(e, Seq("cell")), "cell")
+    cosineTop3(broadcast(queriesOf(e, "cell")).join(e, Seq("cell")), Seq("cell"))
 
   /** IVF over CONVERGED k-means cells: the cell list is the centroid
     * set after [[KMeansOps.iters]] Lloyd iterations (not the per-label
@@ -270,7 +274,7 @@ object SimilarityQueries {
        |qry AS (
        |  SELECT vec_id AS query_id, v AS qv, nrm AS qn, cell FROM af
        |  WHERE vec_id < 10),
-       |${duckTop3("qry q JOIN af n USING (cell)", "cell")}""".stripMargin
+       |${duckTop3("qry q JOIN af n USING (cell)", Seq("cell"))}""".stripMargin
 
   /** The shared s5/s14 oracle: DuckDB recomputes the converged k-means
     * assignment and the in-cell top-3 from scratch — s14's persistence
@@ -404,14 +408,7 @@ object SimilarityQueries {
             col("bucket").bitwiseXOR(lit(1L << p))): _*)).as("bucket"))
       cosineTop3(broadcast(probes).join(e, Seq("bucket")))
     },
-    Some(s"""WITH e AS (
-               SELECT vec_id, $duckVec AS v, label FROM embeddings),
-             n AS (
-               SELECT vec_id, v, $duckNorm AS nrm, $duckBucket AS bucket
-               FROM e),
-             q AS (
-               SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket FROM n
-               WHERE vec_id < 10),
+    Some(s"""WITH ${duckCorpusQueries(bucket = true)},
              probes AS (
                SELECT query_id, qv, qn,
                  unnest([bucket,
@@ -506,22 +503,9 @@ object SimilarityQueries {
           val amax = v.map(math.abs).max
           val sc = if (amax == 0.0) 0.0 else 127.0 / amax
           (id, v.map(x => math.floor(x * sc)))
-        }).toDF("vec_id", "q")
-        .withColumn("qn", norm(col("q")))
-      val queries = qz.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("q").as("qq"),
-          col("qn").as("qqn"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("qcosine").desc, col("neighbor_id"))
-      broadcast(queries).crossJoin(qz)
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("qcosine",
-          round(dot(col("qq"), col("q")) / (col("qqn") * col("qn")), 4))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          col("qcosine"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .orderBy("query_id", "rank")
+        }).toDF("vec_id", "v")
+        .withColumn("nrm", norm(col("v")))
+      cosineTop3(broadcast(queriesOf(qz)).crossJoin(qz), score = "qcosine")
     },
     Some(s"""WITH e AS (
                SELECT vec_id, $duckVec AS v FROM embeddings),
@@ -532,24 +516,13 @@ object SimilarityQueries {
                         AS q
                FROM e),
              n AS (
-               SELECT vec_id, q,
-                      sqrt(list_sum(list_transform(q, x -> x * x))) AS qn
+               SELECT vec_id, q AS v,
+                      sqrt(list_sum(list_transform(q, x -> x * x))) AS nrm
                FROM qz),
-             qs AS (
-               SELECT vec_id AS query_id, q AS qq, qn AS qqn FROM n
+             q AS (
+               SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
                WHERE vec_id < 10),
-             scored AS (
-               SELECT qs.query_id, n.vec_id AS neighbor_id,
-                      round(${duckDot.format("qq", "q")} / (qqn * qn), 4)
-                        AS qcosine
-               FROM qs CROSS JOIN n WHERE n.vec_id <> qs.query_id),
-             ranked AS (
-               SELECT query_id, neighbor_id, qcosine,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY qcosine DESC, neighbor_id) AS rank
-               FROM scored)
-             SELECT query_id, neighbor_id, qcosine, rank FROM ranked
-             WHERE rank <= 3 ORDER BY query_id, rank"""))
+             ${duckTop3("q CROSS JOIN n", score = "qcosine")}"""))
 
   /** Centroid-distance outlier filter — the embedding-space quality
     * gate of a training pipeline (drop vectors far from the corpus
@@ -723,10 +696,7 @@ object SimilarityQueries {
     "s11_metric_sensitivity",
     (s, dir) => {
       val e = corpus(s, dir)
-      val q = e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("nrm").as("qn"))
-      val scored = broadcast(q).crossJoin(e)
+      val scored = broadcast(queriesOf(e)).crossJoin(e)
         .filter(col("vec_id") =!= col("query_id"))
         .withColumn("dotp", round(dot(col("qv"), col("v")), 4))
         .withColumn("cosine",
@@ -750,13 +720,7 @@ object SimilarityQueries {
           when(col("top1_dot") === col("top1_cos"), 1L).otherwise(0L))
         .orderBy("query_id")
     },
-    Some(s"""WITH e AS (
-               SELECT vec_id, $duckVec AS v, label FROM embeddings),
-             n AS (
-               SELECT vec_id, v, $duckNorm AS nrm FROM e),
-             q AS (
-               SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n
-               WHERE vec_id < 10),
+    Some(s"""WITH ${duckCorpusQueries(bucket = false)},
              scored AS (
                SELECT q.query_id, n.vec_id AS neighbor_id,
                       round(${duckDot.format("qv", "v")}, 4) AS dotp,

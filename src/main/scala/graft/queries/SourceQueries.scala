@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Source/sink operators (SURVEY.md §2.1 S1-S3). The reference is
@@ -648,6 +649,23 @@ object SourceQueries {
             FROM documents WHERE doc_id % 89 <> 0
             GROUP BY 1 ORDER BY 1"""))
 
+  /** Writes supplier as src15's copybook text lines into a fresh temp
+    * dir named `name` and returns its path: key 1-10 and nationkey 36-40
+    * space-LPAD, name 11-35 space-RPAD, signed acctbal cents 41-55. */
+  private def writeFixedWidthSuppliers(s: SparkSession, dir: String,
+      name: String): String = {
+    val out = tmpDir(name)
+    Tables.load(s, dir, "supplier")
+      .select(concat(
+        lpad(col("s_suppkey").cast("string"), 10, " "),
+        rpad(col("s_name"), 25, " "),
+        lpad(col("s_nationkey").cast("string"), 5, " "),
+        lpad(expr("cast(floor(s_acctbal * 100 + 0.5) as bigint)")
+          .cast("string"), 15, " ")).as("value"))
+      .write.mode("overwrite").text(out)
+    out
+  }
+
   /** S15 (X276, beyond the reference): FIXED-WIDTH text roundtrip —
     * the mainframe/COBOL-copybook interchange format that has no Spark
     * connector and never will: every record is a fixed-length line,
@@ -665,15 +683,7 @@ object SourceQueries {
   private val s15 = Q(
     "src15_fixed_width_roundtrip",
     (s, dir) => {
-      val out = tmpDir("supplier_fixedwidth_s15")
-      Tables.load(s, dir, "supplier")
-        .select(concat(
-          lpad(col("s_suppkey").cast("string"), 10, " "),
-          rpad(col("s_name"), 25, " "),
-          lpad(col("s_nationkey").cast("string"), 5, " "),
-          lpad(expr("cast(floor(s_acctbal * 100 + 0.5) as bigint)")
-            .cast("string"), 15, " ")).as("value"))
-        .write.mode("overwrite").text(out)
+      val out = writeFixedWidthSuppliers(s, dir, "supplier_fixedwidth_s15")
       s.read.text(out)
         .select(
           trim(substring(col("value"), 1, 10)).cast("bigint")
@@ -719,13 +729,9 @@ object SourceQueries {
         .as[(Long, Array[Byte])]
         .foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
           it.foreach { case (id, raw) =>
-            def at(i: Int): Int = if (i < raw.length) raw(i) & 0xff else 0
-            val w = at(0) % 3 + 2
-            val h = at(1) % 2 + 2
-            val rgb = Array.tabulate(3 * w * h)(i => at(i).toByte)
             java.nio.file.Files.write(
               java.nio.file.Paths.get(s"$out/doc_$id.bmp"),
-              BmpCodec.encode(w, h, rgb))
+              PipelineQueries.bmpOf(raw))
           }
         }
       s.read.format("binaryFile").load(out)
@@ -747,25 +753,7 @@ object SourceQueries {
         .toDF("doc_id", "width", "height", "sum_r", "sum_g", "sum_b")
         .orderBy("doc_id")
     },
-    Some("""WITH dims AS (
-              SELECT doc_id, text,
-                     ascii(substr(text, 1, 1)) % 3 + 2 AS width,
-                     ascii(substr(text, 2, 1)) % 2 + 2 AS height
-              FROM documents WHERE doc_id < 100),
-            px AS (
-              SELECT doc_id, width, height,
-                     list_transform(range(0, width * height * 3),
-                       i -> ascii(substr(text, CAST(i + 1 AS INT), 1)))
-                       AS ps
-              FROM dims)
-            SELECT doc_id, CAST(width AS INT) AS width,
-                   CAST(height AS INT) AS height,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 1 AS INT)])) AS BIGINT) AS sum_r,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 2 AS INT)])) AS BIGINT) AS sum_g,
-                   CAST(list_sum(list_transform(range(0, width * height),
-                     k -> ps[CAST(3 * k + 3 AS INT)])) AS BIGINT) AS sum_b
+    Some(PipelineQueries.duckBmpSums(" WHERE doc_id < 100") + """
             FROM px ORDER BY doc_id"""))
 
   /** S17 (X278, beyond the reference): COMPRESSION-CODEC matrix —
@@ -840,15 +828,7 @@ object SourceQueries {
   private val s18 = Q(
     "src18_dsv2_fixed_width",
     (s, dir) => {
-      val out = tmpDir("supplier_fixedwidth_s18")
-      Tables.load(s, dir, "supplier")
-        .select(concat(
-          lpad(col("s_suppkey").cast("string"), 10, " "),
-          rpad(col("s_name"), 25, " "),
-          lpad(col("s_nationkey").cast("string"), 5, " "),
-          lpad(expr("cast(floor(s_acctbal * 100 + 0.5) as bigint)")
-            .cast("string"), 15, " ")).as("value"))
-        .write.mode("overwrite").text(out)
+      val out = writeFixedWidthSuppliers(s, dir, "supplier_fixedwidth_s18")
       s.read.format("graft-fixedwidth")
         .option("columns",
           "s_suppkey:1:10:long,s_name:11:25:string," +

@@ -82,6 +82,20 @@ object TextQueries {
                         ELSE 'ok' END AS quality_band
             FROM documents ORDER BY doc_id"""))
 
+  /** The oracle's `scored` CTE: each document's lang and its stopword
+    * hit counts s_en, s_es and s_fr, as t3 scores them (m16 grades t3's
+    * predictions). */
+  private[queries] val duckLangScores =
+    """WITH scored AS (
+              SELECT lang,
+                len(list_filter(list_filter(string_split(lower(text), ' '),
+                  x -> x <> ''), x -> x IN ('the','a','and','of'))) AS s_en,
+                len(list_filter(list_filter(string_split(lower(text), ' '),
+                  x -> x <> ''), x -> x IN ('el','la','de','que'))) AS s_es,
+                len(list_filter(list_filter(string_split(lower(text), ' '),
+                  x -> x <> ''), x -> x IN ('le','les','et','de'))) AS s_fr
+              FROM documents)"""
+
   /** Marker-word language ID (n-gram heuristic): score each doc against
     * per-language marker sets, argmax with a fixed tie order; rolled up
     * as a lang × predicted confusion count.
@@ -105,15 +119,7 @@ object TextQueries {
           round(avg("s_en"), 4).as("avg_s_en"))
         .orderBy("lang", "pred_lang")
     },
-    Some("""WITH scored AS (
-              SELECT lang,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('the','a','and','of'))) AS s_en,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('el','la','de','que'))) AS s_es,
-                len(list_filter(list_filter(string_split(lower(text), ' '),
-                  x -> x <> ''), x -> x IN ('le','les','et','de'))) AS s_fr
-              FROM documents)
+    Some(duckLangScores + """
             SELECT lang,
                    CASE WHEN s_en >= s_es AND s_en >= s_fr THEN 'en'
                         WHEN s_es >= s_fr THEN 'es'
@@ -169,6 +175,18 @@ object TextQueries {
               WHERE word <> '' GROUP BY 1, 2)
             WHERE rk <= 5 ORDER BY lang, rk"""))
 
+  /** The oracle's `toks` CTE: each document's lowercased non-empty
+    * words `w1` with their 1-based position `pos` — the bigram input of
+    * t6 and t12. */
+  private val duckPositionedTokens =
+    """WITH toks AS (
+              SELECT doc_id, t.pos, t.w1 FROM documents,
+                LATERAL (SELECT unnest(list_filter(
+                  string_split(lower(text), ' '), x -> x <> '')) AS w1,
+                  generate_subscripts(list_filter(
+                    string_split(lower(text), ' '), x -> x <> ''), 1) AS pos)
+                  t)"""
+
   /** Bigram conditional-probability table — the n-gram LM statistic a
     * corpus pipeline extracts: P(w2|w1) = c(w1 w2)/c(w1 ·) for the
     * most frequent head words, top-3 successors each. Bigrams are
@@ -203,13 +221,7 @@ object TextQueries {
         .select("w1", "w2", "c12", "c1", "p", "rk")
         .orderBy("w1", "rk")
     },
-    Some("""WITH toks AS (
-              SELECT doc_id, t.pos, t.w1 FROM documents,
-                LATERAL (SELECT unnest(list_filter(
-                  string_split(lower(text), ' '), x -> x <> '')) AS w1,
-                  generate_subscripts(list_filter(
-                    string_split(lower(text), ' '), x -> x <> ''), 1) AS pos)
-                  t),
+    Some(duckPositionedTokens + """,
             bigrams AS (
               SELECT w1, lead(w1) OVER (PARTITION BY doc_id ORDER BY pos)
                 AS w2
@@ -592,13 +604,7 @@ object TextQueries {
           round(avg("lp"), 4).as("avg_logprob"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (
-              SELECT doc_id, t.pos, t.w1 FROM documents,
-                LATERAL (SELECT unnest(list_filter(
-                  string_split(lower(text), ' '), x -> x <> '')) AS w1,
-                  generate_subscripts(list_filter(
-                    string_split(lower(text), ' '), x -> x <> ''), 1) AS pos)
-                  t),
+    Some(duckPositionedTokens + """,
             bigrams AS (
               SELECT doc_id, w1,
                 lead(w1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
@@ -1010,10 +1016,7 @@ object TextQueries {
           .as("cum_distinct"))
         .orderBy("bucket")
     },
-    Some(s"""WITH sets AS (
-               SELECT doc_id, ${DedupQueries.duckShingles} AS shs
-               FROM documents),
-             ex AS (SELECT doc_id, unnest(shs) AS sh FROM sets),
+    Some(s"""WITH ${DedupQueries.duckShingleRows},
              firsts AS (
                SELECT sh, min(doc_id) AS first_doc FROM ex GROUP BY 1),
              j AS (
@@ -1866,7 +1869,7 @@ object TextQueries {
     * it would nest the whole recursion exponentially.
     */
   private def t32IterBlock(i: Int, prevVocab: String, prevTotal: String,
-      wordsName: String = "words") =
+      wordsName: String) =
     s"""cand$i AS MATERIALIZED (
        |  SELECT w.w AS cw, CAST(ts.s - 1 AS BIGINT) AS cpos,
        |         CAST(tl.l AS BIGINT) AS cl, v.piece AS cpiece,
@@ -1909,16 +1912,19 @@ object TextQueries {
        |        FROM m$i)
        |  WHERE rk <= 10)""".stripMargin
 
-  private val t32Oracle =
-    s"""WITH RECURSIVE
-       |wpos AS MATERIALIZED (
+  /** The oracle's unigram-LM training replay after `WITH RECURSIVE`:
+    * the cross-word unit table (named `units`), the seed vocabulary and
+    * the three EM rounds m1…m3 with their top-10 traces tr1…tr3 — t32's
+    * whole answer and t33's trained table. */
+  private def duckUnigramEm(units: String): String =
+    s"""wpos AS MATERIALIZED (
        |  SELECT doc_id, j, lower(ws[j]) AS w
        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
        |        FROM documents) t,
        |       unnest(range(1, len(ws) + 1)) AS u(j)
        |  WHERE regexp_matches(lower(ws[j]), '^[a-z]+$$')
        |    AND len(ws[j]) >= 2),
-       |words AS MATERIALIZED (
+       |$units AS MATERIALIZED (
        |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
        |    SELECT a.w || '_' || b.w AS w
        |    FROM wpos a JOIN wpos b
@@ -1927,7 +1933,7 @@ object TextQueries {
        |subs AS MATERIALIZED (
        |  SELECT substring(w.w, CAST(ts.s AS INT), CAST(tl.l AS INT)) AS piece,
        |         CAST(sum(w.cnt) AS BIGINT) AS c
-       |  FROM words w, range(1, 13) ts(s), range(1, 7) tl(l)
+       |  FROM $units w, range(1, 13) ts(s), range(1, 7) tl(l)
        |  WHERE ts.s + tl.l <= len(w.w) + 1
        |  GROUP BY 1),
        |vocab0 AS MATERIALIZED (
@@ -1937,9 +1943,13 @@ object TextQueries {
        |  UNION ALL
        |  SELECT piece, c FROM subs WHERE len(piece) = 1),
        |t0 AS MATERIALIZED (SELECT CAST(sum(c) AS BIGINT) AS total FROM vocab0),
-       |${t32IterBlock(1, "vocab0", "t0")},
-       |${t32IterBlock(2, "m1", "t1")},
-       |${t32IterBlock(3, "m2", "t2")}
+       |${t32IterBlock(1, "vocab0", "t0", units)},
+       |${t32IterBlock(2, "m1", "t1", units)},
+       |${t32IterBlock(3, "m2", "t2", units)}""".stripMargin
+
+  private val t32Oracle =
+    s"""WITH RECURSIVE
+       |${duckUnigramEm("words")}
        |SELECT * FROM (SELECT * FROM tr1 UNION ALL SELECT * FROM tr2
        |               UNION ALL SELECT * FROM tr3)
        |ORDER BY iter, cnt DESC, piece""".stripMargin
@@ -2014,35 +2024,7 @@ object TextQueries {
        |bseg AS MATERIALIZED (
        |  SELECT w, CAST(len(string_split(s, ' ')) AS BIGINT) AS bpe_tokens
        |  FROM w$bpeMerges),
-       |wpos AS MATERIALIZED (
-       |  SELECT doc_id, j, lower(ws[j]) AS w
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS ws
-       |        FROM documents) t,
-       |       unnest(range(1, len(ws) + 1)) AS u(j)
-       |  WHERE regexp_matches(lower(ws[j]), '^[a-z]+$$')
-       |    AND len(ws[j]) >= 2),
-       |units AS MATERIALIZED (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-       |    SELECT a.w || '_' || b.w AS w
-       |    FROM wpos a JOIN wpos b
-       |      ON a.doc_id = b.doc_id AND b.j = a.j + 1)
-       |  WHERE len(w) <= 12 GROUP BY 1),
-       |subs AS MATERIALIZED (
-       |  SELECT substring(w.w, CAST(ts.s AS INT), CAST(tl.l AS INT)) AS piece,
-       |         CAST(sum(w.cnt) AS BIGINT) AS c
-       |  FROM units w, range(1, 13) ts(s), range(1, 7) tl(l)
-       |  WHERE ts.s + tl.l <= len(w.w) + 1
-       |  GROUP BY 1),
-       |vocab0 AS MATERIALIZED (
-       |  SELECT piece, c FROM (
-       |    SELECT piece, c, row_number() OVER (ORDER BY c DESC, piece) AS rk
-       |    FROM subs WHERE len(piece) >= 2) WHERE rk <= 500
-       |  UNION ALL
-       |  SELECT piece, c FROM subs WHERE len(piece) = 1),
-       |t0 AS MATERIALIZED (SELECT CAST(sum(c) AS BIGINT) AS total FROM vocab0),
-       |${t32IterBlock(1, "vocab0", "t0", "units")},
-       |${t32IterBlock(2, "m1", "t1", "units")},
-       |${t32IterBlock(3, "m2", "t2", "units")},
+       |${duckUnigramEm("units")},
        |candw AS MATERIALIZED (
        |  SELECT w.w AS cw, CAST(ts.s - 1 AS BIGINT) AS cpos,
        |         CAST(tl.l AS BIGINT) AS cl,

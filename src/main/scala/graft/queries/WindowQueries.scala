@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.ops.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -877,6 +878,28 @@ object WindowQueries {
             WHERE rn >= 3 AND rn <= n - 2
             ORDER BY user_id, event_id"""))
 
+  /** Each event's cents, its rank `rk` in (cents, event_id) order
+    * within its user and the user's event count `n`: the order
+    * statistics w31 and w32 read by rank. */
+  private def rankedCents(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events")
+      .withColumn("cents", round(col("value") * 100).cast("long"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("user_id").orderBy("cents", "event_id")))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("user_id")))
+
+  /** The oracle's `base` CTE of [[rankedCents]]. */
+  private val duckRankedCents =
+    """WITH base AS (
+              SELECT user_id, event_id,
+                     CAST(round(value * 100) AS BIGINT) AS cents,
+                     row_number() OVER wo AS rk,
+                     count(*) OVER wa AS n
+              FROM events
+              WINDOW wo AS (PARTITION BY user_id ORDER BY
+                              CAST(round(value * 100) AS BIGINT), event_id),
+                     wa AS (PARTITION BY user_id))"""
+
   /** X220 w31: WINSORIZED mean per user (clamp at the discrete p5/p95
     * order statistics, then average) — the robust-mean companion to
     * dq6's IQR fencing: instead of DROPPING outliers it CLAMPS them,
@@ -890,12 +913,8 @@ object WindowQueries {
   private val w31 = Q(
     "w31_winsorized_mean",
     (s, dir) => {
-      val wOrd = Window.partitionBy("user_id").orderBy("cents", "event_id")
       val wAll = Window.partitionBy("user_id")
-      Tables.load(s, dir, "events")
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-        .withColumn("rk", row_number().over(wOrd))
-        .withColumn("n", count(lit(1)).over(wAll))
+      rankedCents(s, dir)
         .withColumn("lo_c",
           max(when(col("rk") === expr("(n + 19) div 20"), col("cents")))
             .over(wAll))
@@ -916,15 +935,7 @@ object WindowQueries {
             .as("win_mean"))
         .orderBy("user_id")
     },
-    Some("""WITH base AS (
-              SELECT user_id, event_id,
-                     CAST(round(value * 100) AS BIGINT) AS cents,
-                     row_number() OVER wo AS rk,
-                     count(*) OVER wa AS n
-              FROM events
-              WINDOW wo AS (PARTITION BY user_id ORDER BY
-                              CAST(round(value * 100) AS BIGINT), event_id),
-                     wa AS (PARTITION BY user_id)),
+    Some(duckRankedCents + """,
             bounds AS (
               SELECT user_id, event_id, cents, n,
                      max(CASE WHEN rk = (n + 19) // 20 THEN cents END)
@@ -960,11 +971,7 @@ object WindowQueries {
     "w32_mad_anomaly",
     (s, dir) => {
       val wAll = Window.partitionBy("user_id")
-      val wOrd = Window.partitionBy("user_id").orderBy("cents", "event_id")
-      val base = Tables.load(s, dir, "events")
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-        .withColumn("rk", row_number().over(wOrd))
-        .withColumn("n", count(lit(1)).over(wAll))
+      val base = rankedCents(s, dir)
         .withColumn("med_c",
           max(when(col("rk") === expr("(n + 1) div 2"), col("cents")))
             .over(wAll))
@@ -984,15 +991,7 @@ object WindowQueries {
             .as("n_anomalies"))
         .orderBy("user_id")
     },
-    Some("""WITH base AS (
-              SELECT user_id, event_id,
-                     CAST(round(value * 100) AS BIGINT) AS cents,
-                     row_number() OVER wo AS rk,
-                     count(*) OVER wa AS n
-              FROM events
-              WINDOW wo AS (PARTITION BY user_id ORDER BY
-                              CAST(round(value * 100) AS BIGINT), event_id),
-                     wa AS (PARTITION BY user_id)),
+    Some(duckRankedCents + """,
             med AS (
               SELECT user_id, event_id, cents, n,
                      max(CASE WHEN rk = (n + 1) // 2 THEN cents END)

@@ -314,6 +314,25 @@ class PipelinesSpec extends AnyFunSuite with TempDirs {
     negative.foreach(st => assert(close(imputed(st), mean, 1e-12), st))
   }
 
+  /** With every state's removals falling — each generated state's daily
+    * removal change negated, as NM's removals fall, and NM itself left
+    * out — no fitted β is positive, so there is no mean to impute the
+    * negative ones with: the imputation fails naming the states instead
+    * of emitting NULL β that `simulate` would crash on. */
+  test("negative-beta imputation fails loudly when no fitted beta is positive") {
+    import spark.implicits._
+    val falling = CovidSimulator.features(spark,
+        CovidSimulator.loadPopDataset(spark, fixtureDir))
+      .filter(!col("state").endsWith("-NM"))
+      .withColumn("d_removed", -col("d_removed"))
+    val raw = CovidSimulator.coefficients(falling, imputeNegative = false)
+      .select("state", "lag_confirmed").as[(String, Double)].collect()
+    assert(raw.nonEmpty && raw.forall(_._2 < 0), raw.toSeq)
+    val e = intercept[IllegalArgumentException](
+      CovidSimulator.coefficients(falling))
+    raw.foreach { case (st, _) => assert(e.getMessage.contains(st), e.getMessage) }
+  }
+
   /** R₀ is model-free arithmetic (covid_simulator.py:393-410) but is not
     * part of any committed reference artifact (input_data.csv lives under
     * the uncommitted output/ tree) — so the strongest available check is

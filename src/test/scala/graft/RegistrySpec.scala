@@ -64,6 +64,64 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stale.isEmpty, s"named groups that no longer share an oracle: $stale")
   }
 
+  /** Row groups allowed to share a code window, each with its reason
+    * (a benchmark row whose code must stay byte-identical, say). Empty
+    * while no two rows share one: a family of near-clone rows shares a
+    * private builder instead. */
+  private val sharedWindows: Map[Set[String], String] = Map()
+
+  /** Each registry row's body in the query files, keyed by row name:
+    * the lines after its `val … = Q(` head and name, up to the next
+    * member of its object, whitespace-normalised, with comment lines,
+    * block comments and trailing `//` comments dropped, blanks skipped.
+    * Rows built by a shared builder are one line and share nothing. */
+  private def rowBodies(): Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val head = """^  (?:private )?(?:lazy )?val \w+ = Q\($""".r
+    val member = """^(  \S|\S)""".r
+    val quoted = "\"([^\"]+)\"".r
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val files = java.nio.file.Files.list(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    files.flatMap { f =>
+      val rows = Map.newBuilder[String, Seq[String]]
+      var row: Option[(Option[String], scala.collection.mutable.Builder[String, Seq[String]])] = None
+      var inBlock = false
+      def close(): Unit =
+        row.foreach { case (n, b) => n.foreach(rows += _ -> b.result()) }
+      java.nio.file.Files.readAllLines(f).asScala.foreach { l =>
+        val t = l.trim
+        if (head.matches(l)) { close(); row = Some((None, Seq.newBuilder[String])) }
+        else if (member.findPrefixOf(l).isDefined) { close(); row = None }
+        else row.foreach {
+          case (None, b) if quoted.findFirstIn(l).isDefined =>
+            row = Some((quoted.findFirstMatchIn(l).map(_.group(1)), b))
+          case (_, b) =>
+            if (inBlock) inBlock = !t.contains("*/")
+            else if (t.startsWith("/*") && !t.contains("*/")) inBlock = true
+            else if (!t.startsWith("/*") && !t.startsWith("*")) {
+              val s = l.replaceAll("(^|\\s)//.*$", "").trim.split("\\s+").mkString(" ")
+              if (s.nonEmpty) b += s
+            }
+        }
+      }
+      close()
+      rows.result()
+    }.toMap
+  }
+
+  test("no two rows share an 8-line code window unless the group is named") {
+    val windows = rowBodies().toSeq.flatMap { case (row, lines) =>
+      lines.sliding(8).filter(_.size == 8).map(_.mkString("\n"))
+        .filter(_.length >= 150).map(_ -> row)
+    }.groupBy(_._1).values.map(_.map(_._2).toSet)
+    val groups = windows.filter(_.size > 1).toSet
+    val unnamed = groups -- sharedWindows.keySet
+    assert(unnamed.isEmpty, s"rows sharing code with no named reason: $unnamed")
+    val stale = sharedWindows.keySet -- groups
+    assert(stale.isEmpty, s"named groups that no longer share code: $stale")
+  }
+
   test("entry returns rows on sf0.001 (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object CCProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession(32)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

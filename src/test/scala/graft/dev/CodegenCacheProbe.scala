@@ -1,5 +1,5 @@
 package graft.dev
-import graft.GraftSession
+import graft.{GraftSession, Runner}
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Dev-only: measures what Spark's whole-stage-codegen compile cache
@@ -30,26 +30,17 @@ object CodegenCacheProbe {
     }
     def runOne(name: String): Double = {
       val fn = graft.SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
-    }
-    def drainStreaming(): Unit = {
-      spark.streams.active.foreach(q => try q.stop() catch { case _: Throwable => () })
-      try spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
+      Runner.run(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }.fold(why => sys.error(s"$name failed: $why"), identity)
     }
     for (pass <- 1 to 2) {
       val c0 = compileCount; val m0 = compileMsApprox
       val t0 = System.nanoTime()
       val times = rows.map(n => n -> runOne(n))
-      drainStreaming()
+      Runner.drainStreams(spark)
       val wall = (System.nanoTime() - t0) / 1e9
       val sum = times.map(_._2).sum
       println(f"CGPROBE maxEntries=$maxEntries pass=$pass sum=$sum%.2f wall=$wall%.2f " +

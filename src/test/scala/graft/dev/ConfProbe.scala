@@ -1,5 +1,5 @@
 package graft.dev
-import graft.GraftSession
+import graft.{GraftSession, Runner}
 
 /** Dev-only: interleaved A/B of a runtime SQL conf over registry rows
   * inside ONE JVM — the only valid perf methodology on hosts with
@@ -18,13 +18,11 @@ object ConfProbe {
     spark.sparkContext.setLogLevel("ERROR")
     def runOne(name: String): Double = {
       val fn = graft.SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
+      Runner.run(spark) {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        (System.nanoTime() - t0) / 1e9
+      }.fold(why => sys.error(s"$name failed: $why"), identity)
     }
     var sumA = 0.0
     var sumB = 0.0

@@ -1,5 +1,5 @@
 package graft.dev
-import graft.GraftSession
+import graft.{GraftSession, Runner}
 
 /** Dev-only: isolate the per-execution FIXED floor every registry row
   * pays (round-17 "Not yet optimized" item: ~0.1-0.2 s/row × 383 rows
@@ -59,10 +59,8 @@ object FloorProbe {
     rows.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       bench(s"row:$name", reps) {
-        fn(spark, sfDir).count()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Runner.run(spark)(fn(spark, sfDir).count())
+          .left.foreach(why => sys.error(s"$name failed: $why"))
       }
     }
     spark.stop()

@@ -15,7 +15,7 @@ object G5AB {
     val dir = args.headOption.getOrElse(
       System.getProperty("java.io.tmpdir") + "/graft_decade_m30")
     val order = args.drop(1).headOption.getOrElse("BA")
-    val spark = GraftSession(32)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

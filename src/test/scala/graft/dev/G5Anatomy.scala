@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 object G5Anatomy {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession(32)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -2,7 +2,7 @@ package graft.dev
 import graft.GraftSession
 object ReuseCheck {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession(32)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     for (n <- args.drop(1)) {
       val df = graft.SparkEntry.queries(n)(spark, args(0))

@@ -195,7 +195,7 @@ object ScaleProbe {
   // ---- the time-a-row step -------------------------------------------
 
   private def session(): SparkSession = {
-    val spark = GraftSession(32)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
