@@ -442,7 +442,7 @@ object EventQueries {
     // stateless passthrough sink: no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       val out = StreamReplay.dirs(s, "graft_e15").out
-      StreamReplay.runToEnd(EventStreams.sinkViaForeachBatch(
+      StreamReplay.runToEnd(s, EventStreams.sinkViaForeachBatch(
         passthrough(StreamReplay.tableStream(s, dir, "events")), out))
       // single-file source + AvailableNow = one micro-batch; assert it
       // so the redelivery below provably replays batch 0's exact content
@@ -472,7 +472,7 @@ object EventQueries {
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
       val d = StreamReplay.dirs(s, "graft_e16")
       val ev = passthrough(Tables.load(s, dir, "events"))
-      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(s, EventStreams
         .sinkViaForeachBatch(s.readStream.schema(ev.schema).parquet(d.in), d.out)
         .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(ev.filter(col("event_id") % 2 === 0), s"${d.in}/half0.parquet")
@@ -525,7 +525,7 @@ object EventQueries {
         s"late-drop proof precondition broken: watermark " +
           s"${maxTs.getTime - hourMs} ms < latest late window end " +
           s"$ceilCutoffMs ms — the events fixture must span ≥ 3 hours")
-      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(s, EventStreams
         .sinkViaForeachBatch(EventStreams.tumblingCounts(
           s.readStream.schema(ev.schema).parquet(d.in)), d.out)
         .option("checkpointLocation", d.ckpt))
@@ -864,7 +864,7 @@ object EventQueries {
       val ev = passthrough(Tables.load(s, dir, "events"))
       for (i <- 0 to 3)
         StreamReplay.stage(ev.filter(col("event_id") % 4 === i), s"${d.in}/q$i.parquet")
-      StreamReplay.runToEnd(EventStreams.sinkViaForeachBatch(
+      StreamReplay.runToEnd(s, EventStreams.sinkViaForeachBatch(
           s.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1).parquet(d.in), d.out)
         .option("checkpointLocation", d.ckpt))
@@ -904,7 +904,7 @@ object EventQueries {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(s, EventStreams
         .sinkViaForeachBatch(StreamReplay.attributionJoin(
           s.readStream.schema(ev.schema).parquet(d.in), "left_outer"), d.out)
         .outputMode("append") // stream-stream joins run only in append
@@ -1562,7 +1562,7 @@ object EventQueries {
       import org.apache.hadoop.fs.Path
       val d = StreamReplay.dirs(s, "graft_e37")
       val ev = passthrough(Tables.load(s, dir, "events"))
-      def runOnce(): Unit = StreamReplay.runToEnd(
+      def runOnce(): Unit = StreamReplay.runToEnd(s, 
         s.readStream.schema(ev.schema).parquet(d.in)
           .writeStream.format("parquet")
           .option("path", d.out)
@@ -1633,7 +1633,7 @@ object EventQueries {
         "append-withhold proof is vacuous: need all three deliveries")
       def stageAndRun(part: DataFrame, name: String): Unit = {
         StreamReplay.stage(part, s"${d.in}/$name.parquet")
-        StreamReplay.runToEnd(EventStreams.tumblingCounts(
+        StreamReplay.runToEnd(s, EventStreams.tumblingCounts(
             s.readStream.schema(ev.schema).parquet(d.in))
           .writeStream.format("parquet")
           .option("path", d.out)

@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 /** The one way the streaming proofs and probes stage and replay files:
   * a clean `in/out/ckpt` layout, fixtures staged as single flat parquet
   * files a file-source stream lists, a base table as a stream, the
+  * start (without artifact isolation, see [[start]]) and the
   * run-to-end of a replay and its memory-sink and batch-id read-backs,
   * the click→purchase attribution join they replay with its eviction
   * sentinels, and the session confs a replay pins around its body.
@@ -69,11 +70,26 @@ object StreamReplay {
       .option("pathGlobFilter", s"$name.parquet")
       .parquet(dir))
 
-  /** Starts `w` under an AvailableNow trigger (every file present at
-    * start, then stop) and blocks until it is done. The finished query
-    * is returned for its `recentProgress`, one entry per micro-batch. */
-  def runToEnd(w: DataStreamWriter[_]): StreamingQuery = {
-    val q = w.trigger(Trigger.AvailableNow()).start()
+  /** Starts `w`, a writer over a stream of session `s`, with artifact
+    * isolation off for the stream. Every streaming query runs on a
+    * clone of its session, made inside `start()` with a copy of the
+    * session's conf, and each clone has a new session UUID. Under
+    * isolation (`spark.sql.artifact.isolation.enabled`, on by default)
+    * the clone's tasks carry that UUID, the executor builds a fresh
+    * classloader for each UUID it sees, and the codegen cache is keyed
+    * on (context classloader, code), so every stream start would
+    * compile all its generated classes again. graft adds no artifacts,
+    * so isolation guards nothing here. The pin covers the `start()`
+    * call alone: the clone copies it, and `s` gets its own value back. */
+  def start(s: SparkSession, w: DataStreamWriter[_]): StreamingQuery =
+    withConf(s, "spark.sql.artifact.isolation.enabled", "false")(w.start())
+
+  /** [[start]]s `w` under an AvailableNow trigger (every file present
+    * at start, then stop) and blocks until it is done. The finished
+    * query is returned for its `recentProgress`, one entry per
+    * micro-batch. */
+  def runToEnd(s: SparkSession, w: DataStreamWriter[_]): StreamingQuery = {
+    val q = start(s, w.trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     q
   }
@@ -90,8 +106,8 @@ object StreamReplay {
     * [[graft.Runner.drainStreams]] drops it. */
   def toMemory(stream: DataFrame, tag: String, mode: String): MemoryReplay = {
     val name = s"stream_${tag}_${sinkRun.incrementAndGet()}"
-    val q = runToEnd(stream.writeStream.format("memory").queryName(name)
-      .outputMode(mode))
+    val q = runToEnd(stream.sparkSession, stream.writeStream.format("memory")
+      .queryName(name).outputMode(mode))
     MemoryReplay(stream.sparkSession.table(name), q)
   }
 
@@ -165,9 +181,10 @@ object StreamReplay {
     withConf(s, "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
-  /** Runs `body` with session conf `key` = `value`, then restores it. */
+  /** Runs `body` with session conf `key` = `value`, then restores it:
+    * the prior explicit value, or unset if `key` was unset. */
   def withConf[A](s: SparkSession, key: String, value: String)(body: => A): A = {
-    val prior = s.conf.getOption(key)
+    val prior = s.conf.getAll.get(key)
     s.conf.set(key, value)
     try body
     finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))

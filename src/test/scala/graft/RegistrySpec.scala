@@ -154,7 +154,8 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("table streams and run-to-end triggers live in StreamReplay alone") {
     val home = "src/main/scala/graft/streaming/StreamReplay.scala"
-    val sites = Seq("pathGlob" + "Filter", "Trigger." + "AvailableNow")
+    // ".start()" too: every stream starts through StreamReplay.start
+    val sites = Seq("pathGlob" + "Filter", "Trigger." + "AvailableNow", "." + "start()")
       .flatMap(sitesOf).filter(_.startsWith("src/main/"))
     assert(sites.nonEmpty && sites.forall(_.startsWith(home + ":")), sites.mkString("\n"))
   }

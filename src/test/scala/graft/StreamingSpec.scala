@@ -96,10 +96,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = EventStreams.runningUserTotals(mem.toDF()).writeStream
-      .format("memory").queryName("st_spec")
-      .outputMode("update")
-      .start()
+    val q = StreamReplay.start(spark, EventStreams.runningUserTotals(mem.toDF())
+      .writeStream.format("memory").queryName("st_spec").outputMode("update"))
     mem.addData(events.take(2): _*) // user 1: 2 events, 3.0 total
     q.processAllAvailable()
     mem.addData(events.drop(2): _*) // +1 user-1 event, 2 user-2 events
@@ -121,10 +119,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     StreamReplay.withRocksDbStateStore(spark) {
       val mem = MemoryStream[Ev]
-      val q = EventStreams.runningUserTotalsTws(mem.toDF()).writeStream
-        .format("memory").queryName("tws_spec")
-        .outputMode("update")
-        .start()
+      val q = StreamReplay.start(spark, EventStreams.runningUserTotalsTws(mem.toDF())
+        .writeStream.format("memory").queryName("tws_spec").outputMode("update"))
       mem.addData(events.take(2): _*) // user 1: 2 events, 3.0 total
       q.processAllAvailable()
       mem.addData(events.drop(2): _*) // +1 user-1 event, 2 user-2 events
@@ -154,6 +150,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       throw new IllegalStateException("row failed")
     })
     assert(spark.conf.getOption(store) == priorStore)
+    // a stream start pins artifact isolation off on the session for the
+    // start alone; the session's own setting, explicit or unset, is back
+    // after a start that returns and after one that throws
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val iso = "spark.sql.artifact.isolation.enabled"
+    val ckpt = StreamReplay.dirs(spark, "graft_spec_iso").ckpt
+    for (prior <- Seq(None, Some("true"))) {
+      prior.fold(spark.conf.unset(iso))(spark.conf.set(iso, _))
+      val mem = MemoryStream[Ev]
+      StreamReplay.start(spark, mem.toDF().writeStream.format("noop")).stop()
+      assert(spark.conf.getAll.get(iso) == prior)
+      // a file sink with no path fails inside start()
+      intercept[IllegalArgumentException](StreamReplay.start(spark,
+        mem.toDF().writeStream.format("parquet").option("checkpointLocation", ckpt)))
+      assert(spark.conf.getAll.get(iso) == prior)
+    }
+    spark.conf.unset(iso)
+  }
+
+  test("a streaming row run again compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // e15's foreachBatch writes run on the stream's cloned session
+    val rows = Seq("e21_stream_static_enrich", "e15_foreachbatch_sink_equiv")
+    rows.foreach(runRow) // the first run compiles every generated class
+    // the count is JVM-wide: a compile anywhere in this JVM moves it
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val again = rows.map { r =>
+      val before = compiles
+      runRow(r)
+      r -> (compiles - before)
+    }
+    assert(again.forall(_._2 == 0L), again.mkString(", "))
   }
 
   test("foreachBatch sink lands every micro-batch in parquet with batch ids") {
@@ -161,8 +190,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val out = StreamReplay.dirs(spark, "graft_spec_fb").out
     val mem = MemoryStream[Ev]
-    val q = EventStreams.sinkViaForeachBatch(
-      EventStreams.tumblingCounts(mem.toDF()), out).start()
+    val q = StreamReplay.start(spark, EventStreams.sinkViaForeachBatch(
+      EventStreams.tumblingCounts(mem.toDF()), out))
     mem.addData(events.take(2): _*)
     q.processAllAvailable()
     mem.addData(events.drop(2): _*)
@@ -214,10 +243,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         else mem.toDF()
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-      val q = agg.writeStream.format("memory")
+      val q = StreamReplay.start(spark, agg.writeStream.format("memory")
         .queryName(s"state_probe_$withWm")
-        .outputMode(if (withWm) "update" else "complete")
-        .start()
+        .outputMode(if (withWm) "update" else "complete"))
       val sizes = (0 until 12).map { h =>
         mem.addData(Ev(h, ts(f"2024-01-01 $h%02d:15:00"), h, "click", 1.0))
         q.processAllAvailable()

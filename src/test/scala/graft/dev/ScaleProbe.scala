@@ -718,7 +718,8 @@ object ScaleProbe {
         f"${d.in}/chunk_$cid%04d.parquet")
     staged.unpersist()
     val schema = staged.drop("chunk").schema
-    (ckpt, mode, xform) => StreamReplay.runToEnd(xform(spark.readStream.schema(schema)
+    (ckpt, mode, xform) => StreamReplay.runToEnd(spark,
+      xform(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(d.in)).writeStream
       .format("noop").outputMode(mode)
       .option("checkpointLocation", s"${d.base}/$ckpt")).recentProgress
@@ -849,7 +850,7 @@ object ScaleProbe {
         StreamReplay.stage(tsUs.filter(col("tsus") >= bounds(i) &&
           col("tsus") < bounds(i + 1)).drop("tsus"), s"${d.in}/c$i.parquet")
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
-      def runOnce(): Unit = StreamReplay.runToEnd(EventStreams
+      def runOnce(): Unit = StreamReplay.runToEnd(spark, EventStreams
         .sinkViaForeachBatch(StreamReplay.attributionJoin(spark.readStream
           .schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(d.in),
           "left_outer"), d.out)

@@ -107,9 +107,10 @@ class LocalFsSpec extends AnyFunSuite with graft.TempDirs {
       val d = StreamReplay.dirs(spark, "graft_localfs_ckpt")
       val rows = spark.range(0, 100).select(col("id").as("event_id"))
       StreamReplay.stage(rows, s"${d.in}/part0.parquet")
-      StreamReplay.runToEnd(spark.readStream.schema(rows.schema).parquet(d.in)
-        .writeStream.format("parquet").option("path", d.out)
-        .option("checkpointLocation", d.ckpt))
+      StreamReplay.runToEnd(spark,
+        spark.readStream.schema(rows.schema).parquet(d.in)
+          .writeStream.format("parquet").option("path", d.out)
+          .option("checkpointLocation", d.ckpt))
       val log = Paths.get(d.ckpt, "offsets", "0")
       assert(Files.exists(Paths.get(d.ckpt, "offsets", ".0.crc")))
       val raf = new RandomAccessFile(log.toFile, "rw")

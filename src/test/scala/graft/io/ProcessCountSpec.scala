@@ -87,7 +87,7 @@ object ProcessCountProbe {
       val d = StreamReplay.dirs(spark, "graft_proc_count")
       val ev = spark.range(0, 1500).select(col("id").as("event_id"),
         timestamp_seconds(lit(1700000000L) + col("id")).as("ts"))
-      def runOnce(): Unit = StreamReplay.runToEnd(
+      def runOnce(): Unit = StreamReplay.runToEnd(spark, 
         spark.readStream.schema(ev.schema).parquet(d.in)
           .withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark("event_id")
           .writeStream.format("parquet").option("path", d.out)
