@@ -1,11 +1,13 @@
 package graft.ops
 
-/** Full-gradient LSTM training kernel — the driver-loop completion of
-  * the registry's m5b (forward, hash-proven) and m5c (one BPTT step on
-  * the unit-1 input weights, hash-proven) rows: all 32 parameters of
-  * the 2-unit cell (per unit j, per gate k ∈ {i,f,g,o}: input weight a,
-  * recurrent weights b (h1) and c (h2), bias d), trained by plain SGD
-  * on the m5b loss L = (h1_T − 1/4)² + (h2_T + 1/4)².
+/** Full-gradient LSTM training kernel — the one copy of the 2-unit
+  * cell and its BPTT. The registry's m5b runs [[forward]] and m5c runs
+  * [[lossAndGrad]] (one BPTT step on the unit-1 gates), both at
+  * [[initEighths]] and both hash-proven against DuckDB recursive-CTE
+  * replays; here they extend to all 32 parameters of the 2-unit cell
+  * (per unit j, per gate k ∈ {i,f,g,o}: input weight a, recurrent
+  * weights b (h1) and c (h2), bias d), trained by plain SGD on the m5b
+  * loss L = (h1_T − 1/4)² + (h2_T + 1/4)².
   *
   * This is the piece the reference's Keras `fit` provides
   * (weather_pred.py:283-384): repeated gradient steps. Each step is a
@@ -15,9 +17,9 @@ package graft.ops
   * gradients reduce through one `treeAggregate` of 32 doubles for a
   * shared model. LstmTrainingSpec proves the gradient against central
   * finite differences (the autodiff ground truth) and that the loop
-  * actually trains (orders-of-magnitude loss reduction); the
-  * cross-engine bit-level proof of the same backward chain lives in
-  * m5c's DuckDB replay.
+  * actually trains (orders-of-magnitude loss reduction); m5c's DuckDB
+  * replay proves the same backward chain bit for bit on the unit-1
+  * gradients.
   */
 object Lstm {
 
@@ -25,7 +27,8 @@ object Lstm {
     * 3=o; component 0=a(x) 1=b(h1) 2=c(h2) 3=d(bias). */
   def idx(j: Int, gate: Int, comp: Int): Int = ((j - 1) * 4 + gate) * 4 + comp
 
-  /** m5b's fixed eighth-valued init (MlQueries w(j, gi)). */
+  /** m5b/m5c's fixed eighth-valued weights (exact doubles whose
+    * literals their DuckDB oracles print). */
   def initEighths: Array[Double] = {
     val p = new Array[Double](32)
     for (j <- 1 to 2; g <- 0 until 4) {
@@ -41,14 +44,15 @@ object Lstm {
   private def sig(z: Double) = 1.0 / (1.0 + math.exp(-z))
   private def tnh(z: Double) = { val e = math.exp(2 * z); (e - 1) / (e + 1) }
 
-  /** Forward + full BPTT: returns (loss, gradient over all 32 params).
-    * Targets fixed at (1/4, −1/4) as in m5b/m5c.
-    */
-  def lossAndGrad(xs: Array[Double], p: Array[Double])
-      : (Double, Array[Double]) = {
+  /** Per-step states of the forward pass, 1-indexed by step with slot
+    * 0 the zero init: `h(j-1)(t)`, `c(j-1)(t)` and the activated gate
+    * `gates(j-1)(gate)(t)` of unit j. */
+  final case class Forward(h: Array[Array[Double]], c: Array[Array[Double]],
+      gates: Array[Array[Array[Double]]])
+
+  /** The 2-unit cell run over `xs` from a zero state at parameters `p`. */
+  def forward(xs: Array[Double], p: Array[Double]): Forward = {
     val tM = xs.length
-    require(tM >= 1, "empty series")
-    // forward, storing per-step states
     val h = Array.ofDim[Double](2, tM + 1)
     val c = Array.ofDim[Double](2, tM + 1)
     val gates = Array.ofDim[Double](2, 4, tM + 1) // (unit-1, gate, t)
@@ -71,6 +75,17 @@ object Lstm {
       }
       t += 1
     }
+    Forward(h, c, gates)
+  }
+
+  /** Forward + full BPTT: returns (loss, gradient over all 32 params).
+    * Targets fixed at (1/4, −1/4) as in m5b/m5c.
+    */
+  def lossAndGrad(xs: Array[Double], p: Array[Double])
+      : (Double, Array[Double]) = {
+    val tM = xs.length
+    require(tM >= 1, "empty series")
+    val Forward(h, c, gates) = forward(xs, p)
     val y = Array(0.25, -0.25)
     val loss = (h(0)(tM) - y(0)) * (h(0)(tM) - y(0)) +
       (h(1)(tM) - y(1)) * (h(1)(tM) - y(1))
@@ -78,7 +93,7 @@ object Lstm {
     val grad = new Array[Double](32)
     val dh = Array(2 * (h(0)(tM) - y(0)), 2 * (h(1)(tM) - y(1)))
     val dc = Array(0.0, 0.0)
-    t = tM
+    var t = tM
     while (t >= 1) {
       val x = xs(t - 1)
       val dz = Array.ofDim[Double](2, 4)

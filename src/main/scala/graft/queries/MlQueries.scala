@@ -2,8 +2,9 @@ package graft.queries
 
 import graft.Q
 import graft.ops.LinAlg.dot
-import graft.ops.{Integrators, Tables}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import graft.ops.{Integrators, Irls, Lstm, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -19,8 +20,11 @@ case class KmOut(t_hours: Long, n_risk: Long, d: Long, survival: Double)
   * (mixed-effects shrinkage, AR(1) fit, RMSE, z-score, bias
   * correction) are expressed as pure DataFrame aggregates — fully
   * distributed, map-side-combined, and DuckDB-oracle-checked. The
-  * iterative kernels (Poisson GLM via MLlib IRLS, RK4 integration) get
-  * rows-only checks plus unit specs.
+  * iterative kernels are DuckDB-oracle-checked too: the Poisson GLM
+  * (m1's MLlib fit and m1d's trace of [[graft.ops.Irls]]) against a
+  * chained-CTE IRLS replay, RK4 (m3) and the LSTM rows (m5b/m5c, which
+  * run [[graft.ops.Lstm]]) against recursive CTEs. The GLM and LSTM
+  * kernels live once, in `graft.ops`, and these rows call them.
   */
 object MlQueries {
 
@@ -33,10 +37,10 @@ object MlQueries {
     * doubles per group); the DuckDB oracle replays the closed-form IRLS
     * to its fixed point (the m1d CTE chain) and reads the converged
     * coefficients — so this row hash-proves MLLIB ITSELF against an
-    * independent engine, not just our re-derivation. IrlsSpec is the
-    * unit-level cross-check, and the multivariate (discount, tax,
-    * is_return) variant of this kernel is covered by the distributed
-    * normal-equations solver [[graft.ops.Irls.poissonFit]] + IrlsSpec.
+    * independent engine, not just our re-derivation. m1d's trace runs
+    * the engine's own IRLS kernel ([[graft.ops.Irls]]); IrlsSpec checks
+    * that kernel against MLlib, per group and on the multivariate
+    * (discount, tax, is_return) fit.
     * Ref: covid_simulator.py:60-94.
     */
   private val m1 = Q(
@@ -145,27 +149,27 @@ object MlQueries {
   }
 
   /** M1d — the closed-form IRLS of the Poisson GLM (log link) per
-    * l_returnflag group, run TO CONVERGENCE as a driver loop. Round 1
-    * cold-starts at mu0 = y + 0.5 (the classic GLM initializer) with
-    * working weights w = mu and working response
-    * z = ln(mu) + (y − mu)/mu; every later round rebuilds mu from the
-    * previous round's unrounded (a, b) as exp(a + b·x), and each round
-    * is one weighted least squares of z on (1, l_discount) via five
-    * sum-aggregates. The trace's `iter` 1 and 2 rows are the single
-    * and the chained step. Per iteration one
-    * map-side-combined aggregate shuffle produces the five WLS sums per
-    * l_returnflag group, the driver turns them into the next (slope,
-    * intercept) — 3 groups × 2 doubles of driver state, never
-    * corpus-sized — and the coefficients re-enter the next round as
-    * broadcast literals (which also truncates the lineage: no
-    * localCheckpoint needed because each round's plan roots at the
-    * persisted scan + a 3-row literal table). The emitted table is the
-    * full per-iteration trace with a max-|Δcoef| delta column that
-    * decays to exactly 0.0000 — the convergence proof lives INSIDE the
-    * hash-checked rows. The DuckDB oracle replays all 8 rounds as a
-    * chained CTE (the m10/m12 pattern); IrlsSpec separately asserts the
-    * converged fixed point equals MLlib's IRLS fit to 4 decimals, which
-    * closes the m1 kernel cross-engine.
+    * l_returnflag group, stepped [[irlsIters]] rounds as a driver loop
+    * over [[graft.ops.Irls.step]], the one IRLS kernel (`poissonFit`
+    * steps the same round to a tolerance). Round 1 cold-starts at
+    * mu0 = y + 0.5 (the classic GLM initializer) with working weights
+    * w = mu and working response z = ln(mu) + (y − mu)/mu; every later
+    * round rebuilds mu from the previous round's unrounded (a, b) as
+    * exp(a + b·x). Each round is one weighted least squares of z on
+    * (1, l_discount): one map-side-combined aggregate per l_returnflag
+    * group builds XᵀWX and XᵀWz, the driver solves each group's 2×2
+    * system — 3 groups × 2 doubles of driver state, never
+    * corpus-sized — and the coefficients re-enter the next round as a
+    * broadcast 3-row table (which also truncates the lineage: each
+    * round's plan roots at the persisted scan). The trace's `iter` 1
+    * and 2 rows are the single and the chained step; its max-|Δcoef|
+    * delta column decays to exactly 0.0000, so the convergence proof
+    * lives INSIDE the hash-checked rows. The DuckDB oracle replays all
+    * 8 rounds as a chained CTE (the m10/m12 pattern) with the 2×2
+    * solved in closed form, ~1e-13 from the elimination and far below
+    * the 4-dp rounding; IrlsSpec separately asserts the converged fixed
+    * point equals MLlib's IRLS fit to 4 decimals, which closes the m1
+    * kernel cross-engine.
     * Ref: covid_simulator.py:60-94 (GLM protocol).
     */
   private val m1d = Q(
@@ -177,57 +181,18 @@ object MlQueries {
         .select(col("l_returnflag"),
           round(col("l_quantity")).as("y"), col("l_discount").as("x"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      def wls(rows: org.apache.spark.sql.DataFrame)
-          : Array[(String, Double, Double)] = rows
-        .groupBy("l_returnflag")
-        .agg(sum("w").as("sw"),
-          sum(col("w") * col("x")).as("swx"),
-          sum(col("w") * col("z")).as("swz"),
-          sum(col("w") * col("x") * col("z")).as("swxz"),
-          sum(col("w") * col("x") * col("x")).as("swxx"))
-        .withColumn("b",
-          (col("swxz") - col("swx") * col("swz") / col("sw"))
-            / (col("swxx") - col("swx") * col("swx") / col("sw")))
-        .withColumn("a",
-          col("swz") / col("sw") - (col("swxz") - col("swx") * col("swz")
-            / col("sw"))
-            / (col("swxx") - col("swx") * col("swx") / col("sw"))
-            * col("swx") / col("sw"))
-        .select("l_returnflag", "a", "b")
-        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-      val trace =
-        scala.collection.mutable.ListBuffer
-          .empty[(Int, String, Double, Double, Option[Double])]
-      var coefs = Map.empty[String, (Double, Double)]
-      try {
-        for (it <- 1 to irlsIters) {
-          val z =
-            if (it == 1) d
-              .withColumn("mu", col("y") + lit(0.5))
-              .withColumn("w", col("mu"))
-              .withColumn("z",
-                log(col("mu")) + (col("y") - col("mu")) / col("mu"))
-            else {
-              val cdf = broadcast(coefs.toSeq.map { case (f, (a, b)) =>
-                (f, a, b)
-              }.toDF("l_returnflag", "a", "b"))
-              d.join(cdf, Seq("l_returnflag"))
-                .withColumn("mu", exp(col("a") + col("b") * col("x")))
-                .withColumn("w", col("mu"))
-                .withColumn("z",
-                  log(col("mu")) + (col("y") - col("mu")) / col("mu"))
-            }
-          val next = wls(z)
-          trace ++= next.map { case (f, a, b) =>
-            val delta = coefs.get(f).map { case (pa, pb) =>
-              math.max(math.abs(a - pa), math.abs(b - pb))
-            }
-            (it, f, b, a, delta)
-          }
-          coefs = next.map { case (f, a, b) => f -> (a, b) }.toMap
+      // fits(i) = each flag's (intercept, slope) after round i; fits(0) empty
+      val fits =
+        try (1 to irlsIters).scanLeft(Map.empty[Row, Array[Double]]) {
+          (beta, _) => Irls.step(d, Seq("l_returnflag"), "y", Seq("x"), beta)
+        } finally d.unpersist()
+      val trace = fits.zip(fits.tail).zipWithIndex.flatMap {
+        case ((prev, next), i) => next.map { case (k, b) =>
+          (i + 1, k.getString(0), b(1), b(0),
+            prev.get(k).map(Irls.maxDelta(b, _)))
         }
-      } finally d.unpersist()
-      trace.toSeq
+      }
+      trace
         .toDF("iter", "l_returnflag", "slope", "intercept", "delta")
         .withColumn("slope", round(col("slope"), 4))
         .withColumn("intercept", round(col("intercept"), 4))
@@ -3316,17 +3281,6 @@ object MlQueries {
             ORDER BY l_suppkey"""
     })
 
-  /** m5b/m5c's LSTM weights per (unit j, gate k), order (a, b, c, d) of
-    * the pre-activation ((a·x + b·h1) + c·h2) + d: eighths from
-    * (j·31 + k·17), exact doubles whose literals the oracle prints. */
-  private def lstmW(j: Int, gi: Int): (Double, Double, Double, Double) = {
-    val base = j * 31 + gi * 17
-    (((base * 7) % 9 - 4) / 8.0, ((base * 11) % 9 - 4) / 8.0,
-      ((base * 13) % 9 - 4) / 8.0, ((base * 5) % 9 - 4) / 8.0)
-  }
-  private def lstmSig(z: Double) = 1.0 / (1.0 + math.exp(-z))
-  private def lstmTanh(z: Double) = { val e = math.exp(2 * z); (e - 1) / (e + 1) }
-
   /** Each supplier's first 8 quantities / 50 in (orderkey, linenumber,
     * quantity) order, folded by `f` — the input of m5b and m5c. */
   private def lstmSeries[T: Encoder](s: SparkSession, dir: String)(
@@ -3344,17 +3298,35 @@ object MlQueries {
   }
 
   /** The oracle's LATERAL gate row `gt` (i1, f1, g1, o1, i2, f2, g2, o2)
-    * over input `x.x` and the state `<p>.h1`/`<p>.h2`, sigmoid and tanh
-    * spelled via exp() in [[lstmSig]]/[[lstmTanh]]'s op order. */
+    * over input `x.x` and the state `<p>.h1`/`<p>.h2`, with the
+    * literals of [[graft.ops.Lstm.initEighths]], sigmoid and tanh
+    * spelled via exp() in [[graft.ops.Lstm]]'s op order. */
   private def duckLstmGates(p: String): String = {
+    val w = Lstm.initEighths
     def z(j: Int, gi: Int) = {
-      val (a, b, c, d) = lstmW(j, gi)
-      s"((($a * x.x + $b * $p.h1) + $c * $p.h2) + $d)"
+      def wt(comp: Int) = w(Lstm.idx(j, gi, comp))
+      s"(((${wt(0)} * x.x + ${wt(1)} * $p.h1) + ${wt(2)} * $p.h2) + ${wt(3)})"
     }
-    val gates = for (j <- 1 to 2; (g, gi) <- Seq("i", "f", "g", "o").zipWithIndex)
-      yield if (g == "g") s"(exp(2 * ${z(j, gi)}) - 1) / (exp(2 * ${z(j, gi)}) + 1) AS g$j"
+    val gates = lstmGates.map { case (j, g, gi) =>
+      if (g == "g")
+        s"(exp(2 * ${z(j, gi)}) - 1) / (exp(2 * ${z(j, gi)}) + 1) AS g$j"
       else s"1 / (1 + exp(-${z(j, gi)})) AS $g$j"
+    }
     gates.mkString("LATERAL (\n SELECT ", ",\n ", ") gt")
+  }
+
+  /** (unit j, gate name, gate index) in the oracle's column order. */
+  private def lstmGates: Seq[(Int, String, Int)] =
+    for (j <- 1 to 2; (g, gi) <- Seq("i", "f", "g", "o").zipWithIndex)
+      yield (j, g, gi)
+
+  /** m5c's oracle: the state gradient dh1 (`comp` 1) or dh2 (`comp` 2)
+    * carried to t−1, the sum over the eight gates of `dz.dz<gate>` times
+    * the gate's [[graft.ops.Lstm.initEighths]] weight on that state. */
+  private def duckLstmDh(comp: Int): String = {
+    val w = Lstm.initEighths
+    lstmGates.map { case (j, g, gi) =>
+      s"dz.dz$g$j * ${w(Lstm.idx(j, gi, comp))}" }.mkString(" + ")
   }
 
   /** The oracle's supplier `series` and its forward recursion `lstm(g, t,
@@ -3392,36 +3364,25 @@ object MlQueries {
     * sigmoid gates, tanh candidate, c_t = f⊙c + i⊙g, h_t = o⊙tanh(c) —
     * per supplier over its first 8 quantity observations, hidden size
     * 2, with FIXED integer-derived weights (eighths: exactly
-    * representable doubles, identical literals in both engines).
-    * TRAINING stays out of scope (no autodiff dependency — documented);
-    * what this proves is that the recurrent cell itself runs
-    * distributed (one typed mapGroups fold per key, the W5/W6/W7
-    * sequential-kernel discipline) and matches a DuckDB recursive-CTE
-    * + LATERAL replay of the IDENTICAL op chain (sigmoid/tanh spelled
-    * via exp() the same way on both sides; the m27 pinned-IEEE-chain
-    * device) at 6 dp. Scale: embarrassingly parallel per key; state is
-    * 4 doubles per group.
+    * representable doubles, identical literals in both engines). The
+    * cell is [[graft.ops.Lstm.forward]] at [[graft.ops.Lstm.initEighths]]
+    * — the forward pass `Lstm.lossAndGrad` and `Lstm.train` run — and
+    * this row proves that it runs distributed (one typed mapGroups
+    * fold per key, the W5/W6/W7 sequential-kernel discipline) and
+    * matches a DuckDB recursive-CTE + LATERAL replay of the IDENTICAL
+    * op chain (sigmoid/tanh spelled via exp() the same way on both
+    * sides; the m27 pinned-IEEE-chain device) at 6 dp. Scale:
+    * embarrassingly parallel per key; state is O(T·units) doubles per
+    * group.
     */
   private val m5b = Q(
     "m5b_lstm_forward",
     (s, dir) => {
       import s.implicits._
+      val w = Lstm.initEighths
       lstmSeries(s, dir) { (supp, xs) =>
-          var h1 = 0.0; var h2 = 0.0; var c1 = 0.0; var c2 = 0.0
-          xs.foreach { x =>
-            def gate(j: Int, gi: Int, hA: Double, hB: Double): Double = {
-              val (a, b, c, d) = lstmW(j, gi)
-              ((a * x + b * hA) + c * hB) + d
-            }
-            val i1 = lstmSig(gate(1, 0, h1, h2)); val f1 = lstmSig(gate(1, 1, h1, h2))
-            val g1 = lstmTanh(gate(1, 2, h1, h2)); val o1 = lstmSig(gate(1, 3, h1, h2))
-            val i2 = lstmSig(gate(2, 0, h1, h2)); val f2 = lstmSig(gate(2, 1, h1, h2))
-            val g2 = lstmTanh(gate(2, 2, h1, h2)); val o2 = lstmSig(gate(2, 3, h1, h2))
-            val c1n = (f1 * c1) + (i1 * g1)
-            val c2n = (f2 * c2) + (i2 * g2)
-            h1 = o1 * lstmTanh(c1n); h2 = o2 * lstmTanh(c2n)
-            c1 = c1n; c2 = c2n
-          }
+          val h = Lstm.forward(xs, w).h
+          val (h1, h2) = (h(0)(xs.length), h(1)(xs.length))
           (supp, 0.1 + 0.7 * h1 + -0.4 * h2, h1, h2)
         }
         .toDF("l_suppkey", "p", "rh1", "rh2")
@@ -3444,14 +3405,15 @@ object MlQueries {
   /** X291 m5c: LSTM TRAINING — one full BPTT gradient step, closing
     * the last declared out-of-scope capability (weather_pred.py:283-384
     * trains with Keras adam; m5b proved the forward cell, this row
-    * proves the BACKWARD pass): per supplier, m5b's exact forward
-    * recurrence (2 units, 8 steps, the same eighth-valued weights) is
-    * replayed storing per-step states, the loss
+    * proves the BACKWARD pass): per supplier,
+    * [[graft.ops.Lstm.lossAndGrad]] at m5b's eighth-valued weights runs
+    * m5b's exact forward recurrence (2 units, 8 steps) storing
+    * per-step states, the loss
     * L = (h1_T−1/4)² + (h2_T+1/4)² is differentiated through time —
     * dz_gate = upstream · gate′ at each step, cell/hidden derivatives
     * propagated t→t−1 through the forget gates and the recurrent
-    * weight matrix — and the input-weight/bias gradients of all four
-    * unit-1 gates are accumulated over time plus an SGD step
+    * weight matrix — and the row emits the input-weight/bias gradients
+    * of all four unit-1 gates, accumulated over time, plus an SGD step
     * (η = 1/16) on the i1 input weight. Hash-proven against a DuckDB
     * replay: the backward recursion is a second recursive CTE walking
     * t = T..1 carrying (dh1, dh2, dc1, dc2), re-deriving each step's
@@ -3459,83 +3421,26 @@ object MlQueries {
     * LATERAL chains; gradients are 6-dp-rounded sums over the per-step
     * dz emissions (the only order-free float sums — everything
     * sequential matches bit-for-bit, the m5b/m27 pinned-IEEE-chain
-    * device). Full training = this step in a driver loop (the m1/IRLS
-    * discipline); adam's moment bookkeeping is 8 more scalars per
-    * weight — bookkeeping, not semantics. Scale: one typed mapGroups
-    * per key, state is O(T·units) doubles per group, embarrassingly
-    * parallel — gradient ACCUMULATION across groups would be one
-    * treeAggregate of 32 doubles (the batch-training shape).
+    * device). Full training = this step in a loop (`Lstm.train`,
+    * which LstmTrainingSpec drives); adam's moment bookkeeping is 8
+    * more scalars per weight — bookkeeping, not semantics. Scale: one
+    * typed mapGroups per key, state is O(T·units) doubles per group,
+    * embarrassingly parallel — gradient ACCUMULATION across groups
+    * would be one treeAggregate of 32 doubles (the batch-training
+    * shape).
     */
   private val m5c = Q(
     "m5c_lstm_bptt",
     (s, dir) => {
       import s.implicits._
-      // recurrent (b) and h2 (c) weights per gate, order i,f,g,o
-      val bw1 = Array(lstmW(1, 0)._2, lstmW(1, 1)._2, lstmW(1, 2)._2, lstmW(1, 3)._2)
-      val cw1 = Array(lstmW(1, 0)._3, lstmW(1, 1)._3, lstmW(1, 2)._3, lstmW(1, 3)._3)
-      val bw2 = Array(lstmW(2, 0)._2, lstmW(2, 1)._2, lstmW(2, 2)._2, lstmW(2, 3)._2)
-      val cw2 = Array(lstmW(2, 0)._3, lstmW(2, 1)._3, lstmW(2, 2)._3, lstmW(2, 3)._3)
+      val w = Lstm.initEighths
       lstmSeries(s, dir) { (supp, xs) =>
-          val tM = xs.length
-          // forward, storing per-step states (1-indexed; slot 0 = init)
-          val h1 = new Array[Double](tM + 1); val h2 = new Array[Double](tM + 1)
-          val c1 = new Array[Double](tM + 1); val c2 = new Array[Double](tM + 1)
-          val gi1 = new Array[Double](tM + 1); val gf1 = new Array[Double](tM + 1)
-          val gg1 = new Array[Double](tM + 1); val go1 = new Array[Double](tM + 1)
-          val gi2 = new Array[Double](tM + 1); val gf2 = new Array[Double](tM + 1)
-          val gg2 = new Array[Double](tM + 1); val go2 = new Array[Double](tM + 1)
-          var t = 1
-          while (t <= tM) {
-            val x = xs(t - 1)
-            def gate(j: Int, gi: Int): Double = {
-              val (a, b, c, d) = lstmW(j, gi)
-              ((a * x + b * h1(t - 1)) + c * h2(t - 1)) + d
-            }
-            gi1(t) = lstmSig(gate(1, 0)); gf1(t) = lstmSig(gate(1, 1))
-            gg1(t) = lstmTanh(gate(1, 2)); go1(t) = lstmSig(gate(1, 3))
-            gi2(t) = lstmSig(gate(2, 0)); gf2(t) = lstmSig(gate(2, 1))
-            gg2(t) = lstmTanh(gate(2, 2)); go2(t) = lstmSig(gate(2, 3))
-            c1(t) = (gf1(t) * c1(t - 1)) + (gi1(t) * gg1(t))
-            c2(t) = (gf2(t) * c2(t - 1)) + (gi2(t) * gg2(t))
-            h1(t) = go1(t) * lstmTanh(c1(t)); h2(t) = go2(t) * lstmTanh(c2(t))
-            t += 1
-          }
-          val loss = (h1(tM) - 0.25) * (h1(tM) - 0.25) +
-            (h2(tM) + 0.25) * (h2(tM) + 0.25)
-          // backward through time
-          var dh1 = 2 * (h1(tM) - 0.25); var dh2 = 2 * (h2(tM) + 0.25)
-          var dc1 = 0.0; var dc2 = 0.0
-          var gaI1 = 0.0; var gdI1 = 0.0; var gaF1 = 0.0; var gdF1 = 0.0
-          var gaG1 = 0.0; var gdG1 = 0.0; var gaO1 = 0.0; var gdO1 = 0.0
-          t = tM
-          while (t >= 1) {
-            val tc1 = lstmTanh(c1(t)); val tc2 = lstmTanh(c2(t))
-            val dzO1 = (dh1 * tc1) * (go1(t) * (1 - go1(t)))
-            dc1 = dc1 + (dh1 * go1(t)) * (1 - tc1 * tc1)
-            val dzI1 = (dc1 * gg1(t)) * (gi1(t) * (1 - gi1(t)))
-            val dzF1 = (dc1 * c1(t - 1)) * (gf1(t) * (1 - gf1(t)))
-            val dzG1 = (dc1 * gi1(t)) * (1 - gg1(t) * gg1(t))
-            val dzO2 = (dh2 * tc2) * (go2(t) * (1 - go2(t)))
-            dc2 = dc2 + (dh2 * go2(t)) * (1 - tc2 * tc2)
-            val dzI2 = (dc2 * gg2(t)) * (gi2(t) * (1 - gi2(t)))
-            val dzF2 = (dc2 * c2(t - 1)) * (gf2(t) * (1 - gf2(t)))
-            val dzG2 = (dc2 * gi2(t)) * (1 - gg2(t) * gg2(t))
-            val x = xs(t - 1)
-            gaI1 += dzI1 * x; gdI1 += dzI1
-            gaF1 += dzF1 * x; gdF1 += dzF1
-            gaG1 += dzG1 * x; gdG1 += dzG1
-            gaO1 += dzO1 * x; gdO1 += dzO1
-            dh1 = dzI1 * bw1(0) + dzF1 * bw1(1) + dzG1 * bw1(2) +
-              dzO1 * bw1(3) + dzI2 * bw2(0) + dzF2 * bw2(1) +
-              dzG2 * bw2(2) + dzO2 * bw2(3)
-            dh2 = dzI1 * cw1(0) + dzF1 * cw1(1) + dzG1 * cw1(2) +
-              dzO1 * cw1(3) + dzI2 * cw2(0) + dzF2 * cw2(1) +
-              dzG2 * cw2(2) + dzO2 * cw2(3)
-            dc1 = dc1 * gf1(t); dc2 = dc2 * gf2(t)
-            t -= 1
-          }
-          (supp, loss, gaI1, gdI1, gaF1, gdF1, gaG1, gdG1, gaO1, gdO1,
-            lstmW(1, 0)._1 - gaI1 / 16.0)
+          val (loss, g) = Lstm.lossAndGrad(xs, w)
+          // unit 1's input-weight (a) and bias (d) gradient per gate
+          def ga(gate: Int) = g(Lstm.idx(1, gate, 0))
+          def gd(gate: Int) = g(Lstm.idx(1, gate, 3))
+          (supp, loss, ga(0), gd(0), ga(1), gd(1), ga(2), gd(2), ga(3), gd(3),
+            w(Lstm.idx(1, 0, 0)) - ga(0) / 16.0)
         }
         .toDF("l_suppkey", "loss", "ga_i1", "gd_i1", "ga_f1", "gd_f1",
           "ga_g1", "gd_g1", "ga_o1", "gd_o1", "a_i1_step")
@@ -3563,14 +3468,8 @@ object MlQueries {
               FROM lstm l JOIN tmax m ON l.g = m.g AND l.t = m.tm
               UNION ALL
               SELECT b.g, b.t - 1,
-                     dz.dzi1 * 0.5 + dz.dzf1 * 0.25 + dz.dzg1 * 0.0
-                       + dz.dzo1 * -0.25 + dz.dzi2 * 0.375
-                       + dz.dzf2 * 0.125 + dz.dzg2 * -0.125
-                       + dz.dzo2 * -0.375,
-                     dz.dzi1 * 0.375 + dz.dzf1 * -0.125 + dz.dzg1 * 0.5
-                       + dz.dzo1 * 0.0 + dz.dzi2 * 0.125
-                       + dz.dzf2 * -0.375 + dz.dzg2 * 0.25
-                       + dz.dzo2 * -0.25,
+                     ${duckLstmDh(1)},
+                     ${duckLstmDh(2)},
                      du.dc1u * s.f1, du.dc2u * s.f2
               FROM bwd b JOIN steps s ON s.g = b.g AND s.t = b.t,
               LATERAL (
@@ -3622,7 +3521,8 @@ object MlQueries {
                    round(r.ga_f1, 6) AS ga_f1, round(r.gd_f1, 6) AS gd_f1,
                    round(r.ga_g1, 6) AS ga_g1, round(r.gd_g1, 6) AS gd_g1,
                    round(r.ga_o1, 6) AS ga_o1, round(r.gd_o1, 6) AS gd_o1,
-                   round(-0.375 - r.ga_i1 / 16, 6) AS a_i1_step
+                   round(${Lstm.initEighths(Lstm.idx(1, 0, 0))}
+                     - r.ga_i1 / 16, 6) AS a_i1_step
             FROM lossq q JOIN grads r ON r.g = q.g
             ORDER BY l_suppkey"""))
 

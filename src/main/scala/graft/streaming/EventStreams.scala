@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
@@ -301,21 +300,4 @@ object EventStreams {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(outDir)
-
-  /** Runnable demo: stream the events parquet through the tumbling
-    * aggregation with an availableNow trigger (process-everything-
-    * then-stop) into an in-memory table, and print the row count.
-    * Usage: runMain graft.streaming.EventStreams <sfDir>
-    */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession()
-    val streamed = StreamReplay.toMemory(tumblingCounts(
-      StreamReplay.tableStream(spark, sfDir, "events")), "tumbling", "complete")
-      .rows.count()
-    val batched = tumblingCounts(graft.ops.Tables.load(spark, sfDir, "events")).count()
-    println(s"STREAM tumbling_rows=$streamed batch_rows=$batched " +
-      (if (streamed == batched) "OK" else "MISMATCH"))
-    spark.stop()
-  }
 }

@@ -1,16 +1,19 @@
 package graft
 
 import graft.ops.{Irls, Tables}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-engine convergence proof for the Poisson GLM kernel (m1):
-  * the closed-form IRLS implementations (the hash-checked m1d trace and
-  * the multivariate normal-equations loop in [[Irls]]) must land on the
-  * SAME fixed point MLlib's GeneralizedLinearRegression IRLS finds —
-  * three independent solvers (graft closed form, DuckDB CTE replay via
-  * the m1d oracle, MLlib) agreeing to 4 decimals.
+  * the one closed-form IRLS, [[Irls]], must land on the SAME fixed
+  * point MLlib's GeneralizedLinearRegression IRLS finds — per
+  * l_returnflag group through m1d's trace, whose rounds are
+  * [[Irls.step]] and which the DuckDB oracle replays, and on the
+  * multivariate fit through [[Irls.poissonFit]]. Three independent
+  * solvers (graft, DuckDB CTE replay via the m1d oracle, MLlib) agree
+  * to 4 decimals.
   */
 class IrlsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -82,6 +85,27 @@ class IrlsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r4(fit.beta(i + 1)) == r4(model.coefficients(i)),
         s"coef ${feats(i)}: closed-form ${fit.beta(i + 1)} " +
           s"vs MLlib ${model.coefficients(i)}")
+    }
+  }
+
+  test("a grouped IRLS round sums each key's rows alone") {
+    val df = Tables.load(spark, sfDir, "lineitem")
+      .select(col("l_returnflag"), round(col("l_quantity")).as("y"),
+        col("l_discount"), col("l_tax"))
+    val feats = Seq("l_discount", "l_tax")
+    def rounds(d: DataFrame, keys: Seq[String]): Map[Row, Array[Double]] =
+      (1 to 4).foldLeft(Map.empty[Row, Array[Double]])(
+        (beta, _) => Irls.step(d, keys, "y", feats, beta))
+    val grouped = rounds(df, Seq("l_returnflag"))
+    val flags = df.select("l_returnflag").distinct().collect().toSet
+    assert(grouped.keySet == flags)
+    grouped.foreach { case (k, beta) =>
+      val flag = k.getString(0)
+      val alone =
+        rounds(df.filter(col("l_returnflag") === flag), Nil)(Row())
+      assert(Irls.maxDelta(beta, alone) < 1e-9,
+        s"flag $flag: grouped ${beta.mkString(", ")} vs " +
+          s"alone ${alone.mkString(", ")}")
     }
   }
 }

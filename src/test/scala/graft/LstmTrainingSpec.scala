@@ -11,8 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     every one of the 32 parameters — the standard autodiff ground
   *     truth; any sign/indexing/chain-rule error in the backward pass
   *     fails here before it could hide in a plausible-looking loss
-  *     curve. (Cross-engine bit-level correctness of the same backward
-  *     chain is m5c's DuckDB replay; this is the math-level check.)
+  *     curve. (The registry's m5b and m5c run this kernel's `forward`
+  *     and `lossAndGrad`, and their DuckDB replays check it bit for bit
+  *     on the hidden states and the unit-1 gradients; this is the
+  *     math-level check on all 32.)
   *  2. SGD on that gradient actually TRAINS: loss is monotone
   *     non-increasing at a stable learning rate and drops by orders of
   *     magnitude, with the final hidden state at the fitted targets —
@@ -185,8 +187,8 @@ class LstmTrainingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("init matches m5b/m5c's eighth-valued weight table") {
     val p = Lstm.initEighths
-    // spot-pin the four unit-1 i-gate weights against the literals the
-    // m5b/m5c oracles hard-code (w(1,0) = (-0.375, 0.5, 0.375, -0.25))
+    // spot-pin the four unit-1 i-gate weights: the m5b/m5c oracles print
+    // their literals from this table (w(1,0) = (-0.375, 0.5, 0.375, -0.25))
     assert(p(Lstm.idx(1, 0, 0)) == -0.375)
     assert(p(Lstm.idx(1, 0, 1)) == 0.5)
     assert(p(Lstm.idx(1, 0, 2)) == 0.375)

@@ -160,6 +160,19 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sites.nonEmpty && sites.forall(_.startsWith(home + ":")), sites.mkString("\n"))
   }
 
+  test("the LSTM cell and the IRLS round are written in their ops kernels alone") {
+    // the sigmoid spelling and the IRLS working response
+    val strays = Seq(
+      "math.exp" + "(-" -> "src/main/scala/graft/ops/Lstm.scala",
+      "/ col(\"" + "mu\")" -> "src/main/scala/graft/ops/Irls.scala")
+      .flatMap { case (needle, home) =>
+        val sites = sitesOf(needle).filter(_.startsWith("src/main/"))
+        assert(sites.exists(_.startsWith(home + ":")), s"$needle left $home")
+        sites.filterNot(_.startsWith(home + ":"))
+      }
+    assert(strays.isEmpty, strays.mkString("\n"))
+  }
+
   test("the file: filesystem is installed by graft.io.LocalFs alone, never by a session conf") {
     val home = "src/main/scala/graft/io/LocalFs.scala"
     val sites = Seq("fs." + "file.impl", "fs.AbstractFileSystem." + "file.impl")
