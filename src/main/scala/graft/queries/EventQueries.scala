@@ -435,7 +435,10 @@ object EventQueries {
     * and commit). The dynamic partition overwrite rewrites the
     * `batch_id=0` partition instead of appending, so the re-read
     * aggregate still hash-matches the batch oracle: at-least-once
-    * redelivery + idempotent writes = exactly-once output.
+    * redelivery + idempotent writes = exactly-once output. The
+    * single-batch check lists the sink's partition directories
+    * ([[StreamReplay.batchIds]]) and the re-read declares the written
+    * schema ([[StreamReplay.readBatchSink]]): neither starts a job.
     */
   private val e15 = Q(
     "e15_foreachbatch_sink_equiv",
@@ -446,11 +449,11 @@ object EventQueries {
         passthrough(StreamReplay.tableStream(s, dir, "events")), out))
       // single-file source + AvailableNow = one micro-batch; assert it
       // so the redelivery below provably replays batch 0's exact content
-      val nb = StreamReplay.batchIds(s, out).count()
-      require(nb == 1, s"expected a single micro-batch, got $nb")
-      EventStreams.writeBatchIdempotent(
-        passthrough(Tables.load(s, dir, "events")), 0L, out)
-      typeRollup(s.read.parquet(out))
+      val bids = StreamReplay.batchIds(s, out)
+      require(bids == Set(0L), s"expected the single micro-batch 0, got $bids")
+      val ev = passthrough(Tables.load(s, dir, "events"))
+      EventStreams.writeBatchIdempotent(ev, 0L, out)
+      typeRollup(StreamReplay.readBatchSink(s, out, ev.schema))
     },
     Some(typeRollupSql))
 
@@ -464,7 +467,8 @@ object EventQueries {
     * process ONLY file 2 (as batch 1; a broken checkpoint would
     * re-process file 1 as a duplicate or skip file 2). The re-read
     * aggregate hash-matches the whole-table batch oracle, and the
-    * batch-id set {0,1} is asserted loudly.
+    * batch-id set {0,1}, listed from the sink's partition directories,
+    * is asserted loudly.
     */
   private val e16 = Q(
     "e16_stream_checkpoint_resume",
@@ -479,10 +483,10 @@ object EventQueries {
       runOnce() // processes half0 as batch 0, commits offsets
       StreamReplay.stage(ev.filter(col("event_id") % 2 =!= 0), s"${d.in}/half1.parquet")
       runOnce() // RESUMES: only half1, as batch 1
-      val bids = StreamReplay.batchIds(s, d.out).collect().toSet
+      val bids = StreamReplay.batchIds(s, d.out)
       require(bids == Set(0L, 1L),
         s"checkpoint resume broken: batch ids $bids (expected {0, 1})")
-      typeRollup(s.read.parquet(d.out))
+      typeRollup(StreamReplay.readBatchSink(s, d.out, ev.schema))
     },
     Some(typeRollupSql))
 
@@ -525,9 +529,9 @@ object EventQueries {
         s"late-drop proof precondition broken: watermark " +
           s"${maxTs.getTime - hourMs} ms < latest late window end " +
           s"$ceilCutoffMs ms — the events fixture must span ≥ 3 hours")
+      val counts = EventStreams.tumblingCounts(s.readStream.schema(ev.schema).parquet(d.in))
       def runOnce(): Unit = StreamReplay.runToEnd(s, EventStreams
-        .sinkViaForeachBatch(EventStreams.tumblingCounts(
-          s.readStream.schema(ev.schema).parquet(d.in)), d.out)
+        .sinkViaForeachBatch(counts, d.out)
         .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(onTime, s"${d.in}/a_ontime.parquet")
       runOnce() // batch 0: on-time; commits watermark = max(ts) - 1h
@@ -535,7 +539,7 @@ object EventQueries {
       runOnce() // batch 1: every row is below the watermark -> dropped
       val w = Window.partitionBy("event_type", "window_start")
         .orderBy(col("batch_id").cast("long").desc)
-      s.read.parquet(d.out)
+      StreamReplay.readBatchSink(s, d.out, counts.schema)
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1) // last update per window (batch 0's)
         .select(col("event_type"),
@@ -852,7 +856,8 @@ object EventQueries {
     * as ONE batch and OOMs; with it, state and shuffle per trigger
     * stay sized to one file). Proof: 4 staged files under
     * maxFilesPerTrigger=1 + AvailableNow must produce EXACTLY 4
-    * micro-batches (require on the idempotent sink's batch ids), and
+    * micro-batches (require on the idempotent sink's batch ids, listed
+    * from its partition directories), and
     * the concatenated output must equal the batch rollup — both the
     * pacing contract and the no-loss/no-dup contract, hash-verified.
     */
@@ -868,11 +873,11 @@ object EventQueries {
           s.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1).parquet(d.in), d.out)
         .option("checkpointLocation", d.ckpt))
-      val bids = StreamReplay.batchIds(s, d.out).collect().toSet
+      val bids = StreamReplay.batchIds(s, d.out)
       require(bids == Set(0L, 1L, 2L, 3L),
         s"rate limit broken: batch ids $bids (expected {0,1,2,3} — " +
           "one micro-batch per staged file)")
-      typeRollup(s.read.parquet(d.out))
+      typeRollup(StreamReplay.readBatchSink(s, d.out, ev.schema))
     },
     Some(typeRollupSql))
 
@@ -904,16 +909,17 @@ object EventQueries {
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
       val maxTs = ev.agg(max(col("ts"))).first().getTimestamp(0)
+      val joined = StreamReplay.attributionJoin(
+        s.readStream.schema(ev.schema).parquet(d.in), "left_outer")
       def runOnce(): Unit = StreamReplay.runToEnd(s, EventStreams
-        .sinkViaForeachBatch(StreamReplay.attributionJoin(
-          s.readStream.schema(ev.schema).parquet(d.in), "left_outer"), d.out)
+        .sinkViaForeachBatch(joined, d.out)
         .outputMode("append") // stream-stream joins run only in append
         .option("checkpointLocation", d.ckpt))
       StreamReplay.stage(ev, s"${d.in}/a_events.parquet")
       runOnce() // inner matches emit as found; outer rows still held
       // eviction: every real unmatched click emits its null-extended row
       StreamReplay.sentinelRounds(s, d.in, maxTs)(runOnce())
-      s.read.parquet(d.out)
+      StreamReplay.readBatchSink(s, d.out, joined.schema)
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("p_ts")) - unix_micros(col("click_ts")))
@@ -1545,8 +1551,8 @@ object EventQueries {
     * completion on half the events, stops, and restarts from the same
     * checkpoint after the second half lands, so the sink accumulates
     * each row exactly once across two separately-committed batches;
-    * (b) orphan exclusion — a VALID duplicate parquet file (a rewrite
-    * of half0, exactly what a killed task leaves behind) is dropped
+    * (b) orphan exclusion — a VALID duplicate parquet file (a byte
+    * copy of half0, what a killed task leaves behind) is dropped
     * into the sink directory BYPASSING the log, and the read-back —
     * which goes through `_spark_metadata` — must exclude it: if the
     * log were ignored, every half0 row would count twice and the hash
@@ -1559,7 +1565,7 @@ object EventQueries {
     "e37_file_sink_txn_log",
     // stateless passthrough: commit-log proof, no keyed state -> rule floor
     (s, dir) => withStateSizedPartitions(s, expectedStateRows = 0L) {
-      import org.apache.hadoop.fs.Path
+      import org.apache.hadoop.fs.{FileUtil, Path}
       val d = StreamReplay.dirs(s, "graft_e37")
       val ev = passthrough(Tables.load(s, dir, "events"))
       def runOnce(): Unit = StreamReplay.runToEnd(s, 
@@ -1568,20 +1574,22 @@ object EventQueries {
           .option("path", d.out)
           .option("checkpointLocation", d.ckpt)
           .outputMode("append"))
-      val half0 = ev.filter(col("event_id") % 2 === 0)
-      StreamReplay.stage(half0, s"${d.in}/half0.parquet")
+      val half0 = new Path(s"${d.in}/half0.parquet")
+      StreamReplay.stage(ev.filter(col("event_id") % 2 === 0), half0.toString)
       runOnce() // batch 0 commits half0 into the sink's metadata log
       StreamReplay.stage(ev.filter(col("event_id") % 2 =!= 0), s"${d.in}/half1.parquet")
       runOnce() // resume: batch 1 appends only half1
       // Simulate a failed task's leftover: a VALID duplicate data file
-      // in the sink dir that no batch ever committed.
-      StreamReplay.stage(half0, s"${d.out}/orphan_uncommitted.parquet")
-      val meta = new Path(s"${d.out}/_spark_metadata")
-      require(meta.getFileSystem(s.sparkContext.hadoopConfiguration).exists(meta),
+      // in the sink dir that no batch ever committed — a byte copy of
+      // half0, no Spark write.
+      val conf = s.sparkContext.hadoopConfiguration
+      val fs = half0.getFileSystem(conf)
+      FileUtil.copy(fs, half0, fs, new Path(s"${d.out}/orphan_uncommitted.parquet"), false, conf)
+      require(fs.exists(new Path(s"${d.out}/_spark_metadata")),
         "file sink wrote no _spark_metadata commit log")
       // Read THROUGH the sink (Spark detects _spark_metadata and lists
       // from the log, not the directory) — the orphan must not count.
-      typeRollup(s.read.parquet(d.out))
+      typeRollup(StreamReplay.readSink(s, d.out, ev.schema))
     },
     Some(typeRollupSql))
 
@@ -1631,10 +1639,10 @@ object EventQueries {
       require(nonEmpty.getLong(0) > 0 && nonEmpty.getLong(1) > 0 &&
         nonEmpty.getLong(2) > 0,
         "append-withhold proof is vacuous: need all three deliveries")
+      val counts = EventStreams.tumblingCounts(s.readStream.schema(ev.schema).parquet(d.in))
       def stageAndRun(part: DataFrame, name: String): Unit = {
         StreamReplay.stage(part, s"${d.in}/$name.parquet")
-        StreamReplay.runToEnd(s, EventStreams.tumblingCounts(
-            s.readStream.schema(ev.schema).parquet(d.in))
+        StreamReplay.runToEnd(s, counts
           .writeStream.format("parquet")
           .option("path", d.out)
           .option("checkpointLocation", d.ckpt)
@@ -1643,7 +1651,7 @@ object EventQueries {
       stageAndRun(early, "a_early")
       stageAndRun(mid, "b_mid")
       stageAndRun(sentinel, "c_sentinel")
-      val sink = s.read.parquet(d.out)
+      val sink = StreamReplay.readSink(s, d.out, counts.schema)
       // The withhold half of the proof: open tail windows must be absent.
       val nAll = ev.select(date_trunc("hour", col("ts")), col("event_type"))
         .distinct().count()

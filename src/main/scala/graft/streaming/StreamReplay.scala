@@ -4,9 +4,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.ops.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** The one way the streaming proofs and probes stage and replay files:
   * a clean `in/out/ckpt` layout, fixtures staged as single flat parquet
@@ -15,6 +16,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * run-to-end of a replay and its memory-sink and batch-id read-backs,
   * the click→purchase attribution join they replay with its eviction
   * sentinels, and the session confs a replay pins around its body.
+  *
+  * A proof's bookkeeping starts no Spark job: a parquet sink is read
+  * back with the schema it was written with ([[readSink]]), and a
+  * foreachBatch sink's batch ids come from its directory listing
+  * ([[batchIds]]).
   */
 object StreamReplay {
 
@@ -111,12 +117,32 @@ object StreamReplay {
     MemoryReplay(stream.sparkSession.table(name), q)
   }
 
-  /** The distinct batch ids an idempotent foreachBatch sink under `out`
-    * holds, as longs (partition inference types `batch_id` as int on
-    * read-back). */
-  def batchIds(s: SparkSession, out: String): Dataset[Long] =
-    s.read.parquet(out).select(col("batch_id").cast("long")).distinct()
-      .as(Encoders.scalaLong)
+  /** The parquet sink under `out` read with `written`, the schema its
+    * writer wrote. An inferring `read.parquet` runs a footer-merge job to
+    * build the frame, even over one file; a declared schema plans with
+    * none. A file sink is still listed through its `_spark_metadata`
+    * log. */
+  def readSink(s: SparkSession, out: String, written: StructType): DataFrame =
+    s.read.schema(written).parquet(out)
+
+  /** [[readSink]] for an [[EventStreams.sinkViaForeachBatch]] sink, whose
+    * rows are `written` plus the `batch_id` partition column, typed int
+    * as partition inference types it. */
+  def readBatchSink(s: SparkSession, out: String, written: StructType): DataFrame =
+    readSink(s, out, written.add("batch_id", IntegerType))
+
+  /** The batch ids an idempotent foreachBatch sink under `out` holds,
+    * parsed from its `batch_id=N` partition directory names. Every other
+    * entry (`_SUCCESS`, `_temporary`, `.spark-staging-*`, `.crc` files)
+    * is ignored. A listing starts no Spark job; the parquet read plus
+    * `distinct()` it replaces started three or four. */
+  def batchIds(s: SparkSession, out: String): Set[Long] = {
+    val dir = new Path(out)
+    dir.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(dir).iterator
+      .map(_.getPath.getName).collect { case BatchDir(id) => id.toLong }.toSet
+  }
+
+  private val BatchDir = "batch_id=(\\d+)".r
 
   /** Clicks joined to the purchases of the same user within 30 minutes
     * AFTER the click, both sides watermarked at 1 hour: only the

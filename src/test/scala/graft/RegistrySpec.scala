@@ -160,6 +160,17 @@ class RegistrySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sites.nonEmpty && sites.forall(_.startsWith(home + ":")), sites.mkString("\n"))
   }
 
+  test("streaming proofs read their sinks back with a declared schema, through StreamReplay") {
+    val home = "src/main/scala/graft/streaming/StreamReplay.scala"
+    def inScope(site: String) = site.startsWith("src/main/scala/graft/streaming/") ||
+      site.startsWith("src/main/scala/graft/queries/EventQueries.scala:")
+    // an inferring read runs a footer-merge job; the typed one plans without
+    val inferring = sitesOf(".read" + ".parquet(").filter(inScope)
+    val typed = sitesOf(".read" + ".schema(").filter(inScope)
+    assert(inferring.isEmpty && typed.nonEmpty && typed.forall(_.startsWith(home + ":")),
+      (inferring ++ typed.filterNot(_.startsWith(home + ":"))).mkString("\n"))
+  }
+
   test("the LSTM cell and the IRLS round are written in their ops kernels alone") {
     // the sigmoid spelling and the IRLS working response
     val strays = Seq(

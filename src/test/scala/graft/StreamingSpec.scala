@@ -198,8 +198,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     q.processAllAvailable()
     q.stop()
     val landed = spark.read.parquet(out)
-    // both micro-batches landed, tagged distinctly
-    assert(StreamReplay.batchIds(spark, out).count() == 2)
+    // both micro-batches landed, tagged distinctly; the second is batch
+    // 1, or batch 2 when the watermark's no-data batch ran in between
+    val ids = StreamReplay.batchIds(spark, out)
+    assert(ids.size == 2 && ids.contains(0L), ids)
     // the LAST update per (window, type) equals the batch answer
     val last = landed
       .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
@@ -214,6 +216,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy("window_start", "event_type")
       .collect().map(_.toSeq).toSeq
     assert(last == batched)
+  }
+
+  test("batchIds lists the batch_id=N directories alone and starts no Spark job") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val out = StreamReplay.dirs(spark, "graft_spec_bids").out
+    for (b <- Seq(0L, 7L))
+      EventStreams.writeBatchIdempotent(events.toDF(), b, out)
+    // what a sink directory holds besides its partitions: the job's
+    // marker, a commit's scratch dirs, whose own batch_id=N children
+    // must not count, and checksum sidecars
+    val fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("_temporary/0/batch_id=9", ".spark-staging-1/batch_id=9")
+      .foreach(p => fs.mkdirs(new Path(s"$out/$p")))
+    Seq("_SUCCESS", ".batch_id=8.crc").foreach(f => fs.create(new Path(s"$out/$f")).close())
+    val (ids, jobs) = SparkJobs.during(spark)(StreamReplay.batchIds(spark, out))
+    assert(ids == Set(0L, 7L))
+    assert(jobs == 0, s"$jobs Spark jobs to list batch ids")
+  }
+
+  test("e37's orphan is a live copy of half0 that only the sink log excludes") {
+    import org.apache.spark.sql.functions.col
+    runRow("e37_file_sink_txn_log")
+    val d = StreamReplay.Dirs(s"${System.getProperty("java.io.tmpdir")}/graft_e37")
+    val half0 = graft.ops.Tables.load(spark, sfDir, "events")
+      .filter(col("event_id") % 2 === 0)
+      .select("event_id", "user_id", "event_type", "value")
+    val n = half0.count()
+    val orphan = spark.read.parquet(s"${d.out}/orphan_uncommitted.parquet")
+    assert(n > 0 && orphan.count() == n)
+    assert(orphan.exceptAll(half0).isEmpty && half0.exceptAll(orphan).isEmpty)
+    // a glob read lists the directory, not the _spark_metadata log
+    val listed = spark.read.parquet(s"${d.out}/*.parquet")
+    assert(listed.filter(col("event_id") % 2 === 0).count() == 2 * n)
   }
 
   test("sessionCounts groups by 30-min gaps per user") {

@@ -860,7 +860,7 @@ object ScaleProbe {
       runOnce() // 8 event-time-ordered micro-batches, watermark advancing
       StreamReplay.sentinelRounds(spark, d.in, maxTs)(runOnce())
       val sec = (System.nanoTime() - t0) / 1e9
-      val nBatches = StreamReplay.batchIds(spark, d.out).count()
+      val nBatches = StreamReplay.batchIds(spark, d.out).size.toLong
       val got = spark.read.parquet(d.out).filter(col("user_id") >= 0).count()
       // sanity: the streamed outer join must emit exactly the batch
       // left-join's row count at the same scale
